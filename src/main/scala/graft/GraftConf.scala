@@ -9,8 +9,6 @@ object GraftConf {
   val FirstYear = 1995
   /** Last year of the temporal scaffold. */
   val LastYear = 2001
-  /** Surrogate year for undated evidence (reset to NULL on output). */
-  def SurrogateYear: Int = LastYear + 1
   /** Top-K scores kept in the harmonic sum. */
   val TopK = 50
   /** Harmonic-sum normalizer: Σ 1/i² as i→∞ (π²/6). */

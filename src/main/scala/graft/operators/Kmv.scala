@@ -66,7 +66,7 @@ object Kmv {
     * estimates approximate.
     */
   def overlap(df: DataFrame, segCol: String, id: Column, k: Int): DataFrame = {
-    val sk = sketch(df, segCol, id, k).cache()
+    val sk = sketch(df, segCol, id, k).localCheckpoint() // feeds both pair sides
     val a = sk.select(col(segCol).as("seg_a"), col("sk").as("ska"),
       col("n_exact").as("n_a"))
     val b = sk.select(col(segCol).as("seg_b"), col("sk").as("skb"),

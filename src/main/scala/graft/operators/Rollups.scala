@@ -47,13 +47,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
   def attachWindowAgg(df: DataFrame, partCols: Seq[String], agg: Column, out: String): DataFrame =
     df.withColumn(out, agg.over(Window.partitionBy(partCols.map(col): _*)))
 
-  /** Distinct-count rollup per group (count-distinct shuffles once per
-    * grouping; composite keys are concatenated for engine portability).
-    */
-  def distinctRollup(df: DataFrame, groupCols: Seq[String], distinctCol: Column, out: String): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(countDistinct(distinctCol).as(out))
-
   /** Conditional-aggregation crosstab: one column per pivot value
     * (static pivot list keeps the plan a single aggregate — no
     * two-phase pivot scan).
@@ -143,7 +136,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     val gcols = groupCols.map(col)
     val binned = df.withColumn("__bin",
       least(greatest(
-          floor((col(valueCol).cast("double") - lo) / width), lit(0L)),
+          floor((d(col(valueCol)) - lo) / width), lit(0L)),
         lit(bins - 1L)))
     val counts = binned.groupBy(gcols :+ col("__bin"): _*)
       .agg(count(lit(1)).as("__cnt"))
@@ -184,8 +177,8 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       yearCol: String = "year",
       valCol: String = "v"): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(yearCol))
-    val frac = (col("__yo") - col(yearCol)).cast("double") /
-      (col("__ny") - col(yearCol)).cast("double")
+    val frac = d(col("__yo") - col(yearCol)) /
+      d(col("__ny") - col(yearCol))
     df
       .withColumn("__ny", lead(col(yearCol), 1).over(w))
       .withColumn("__nv", lead(col(valCol), 1).over(w))
@@ -193,9 +186,9 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         coalesce(col("__ny") - 1, col(yearCol)))))
       .withColumn("interpolated", col("__yo") =!= col(yearCol))
       .withColumn("__v",
-        when(!col("interpolated"), col(valCol).cast("double"))
-          .otherwise(col(valCol).cast("double") +
-            (col("__nv") - col(valCol)).cast("double") * frac))
+        when(!col("interpolated"), d(col(valCol)))
+          .otherwise(d(col(valCol)) +
+            d(col("__nv") - col(valCol)) * frac))
       .select(keys.map(col) ++ Seq(col("__yo").as(yearCol),
         round(col("__v"), 4).as(valCol), col("interpolated")): _*)
   }
@@ -223,7 +216,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_cats"),
         sum(col("__c")).as("n_rows"),
-        sum(col("__c").cast("double") * log(col("__c"))).as("__cl"))
+        sum(d(col("__c")) * log(col("__c"))).as("__cl"))
       .select(keys.map(col) ++ Seq(col("n_cats"), col("n_rows"),
         round(h, 4).as("entropy"),
         round(exp(h), 4).as("eff_cats")): _*)
@@ -251,9 +244,9 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       variantB: Column,
       success: Column,
       variantA: Option[Column] = None): DataFrame = {
-    val na = col("n_a").cast("double")
-    val nb = col("n_b").cast("double")
-    val p = (col("x_a") + col("x_b")).cast("double") / (na + nb)
+    val na = d(col("n_a"))
+    val nb = d(col("n_b"))
+    val p = d(col("x_a") + col("x_b")) / (na + nb)
     val z = (col("x_b") / nb - col("x_a") / na) /
       sqrt(p * (lit(1.0) - p) * (lit(1.0) / na + lit(1.0) / nb))
     val armA = variantA.getOrElse(!variantB)
@@ -338,7 +331,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       tsCol: String,
       periods: Seq[Int] = Seq(7, 30)): DataFrame = {
     require(periods.nonEmpty && periods.forall(p => p >= 2 && p < 1024))
-    val dec = "decimal(38,0)"
     val daily = events
       .groupBy(keys.map(col) :+
         expr(s"unix_micros($tsCol) div 86400000000").as("__day"): _*)
@@ -350,7 +342,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .groupBy(keys.map(col) ++ Seq(col("period"), col("__r")): _*)
       .agg(sum("__n").as("__s"), count(lit(1)).as("__c"))
       .withColumn("__m",
-        floor(col("__s").cast("double") * 1e6 / col("__c")).cast("long"))
+        floor(d(col("__s")) * 1e6 / col("__c")).cast("long"))
     val w = Window.partitionBy(keys.map(col) :+ col("period"): _*)
     phase
       .withColumn("__Ct", sum("__m").over(w))
@@ -364,14 +356,13 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .groupBy(keys.map(col) :+ col("period"): _*)
       .agg(
         first(col("__P")).as("n_phases"),
-        sum(col("__cr").cast(dec) * col("__cw")).as("__A"),
-        sum(col("__cr").cast(dec) * col("__sw")).as("__B"),
+        sum(dec(col("__cr")) * col("__cw")).as("__A"),
+        sum(dec(col("__cr")) * col("__sw")).as("__B"),
         min(when(col("__m") === col("__mx"), col("__r"))).as("peak_phase"))
       .select(keys.map(col) ++ Seq(col("period"), col("n_phases"),
         round(
-          sqrt((col("__A") * col("__A") + col("__B") * col("__B"))
-            .cast("double")) * 2 /
-            (col("n_phases") * col("n_phases")).cast("double") / 1e9, 4)
+          sqrt(d(col("__A") * col("__A") + col("__B") * col("__B"))) * 2 /
+            d(col("n_phases") * col("n_phases")) / 1e9, 4)
           .as("amp"),
         col("peak_phase")): _*)
   }
@@ -419,14 +410,13 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valCol: String = "v"): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(yearCol))
     val wAll = Window.partitionBy(keys.map(col): _*)
-    val firstV = min_by(col(valCol), col(yearCol)).over(wAll).cast("double")
-    val lastV = max_by(col(valCol), col(yearCol)).over(wAll).cast("double")
-    val span = (max(col(yearCol)).over(wAll) - min(col(yearCol)).over(wAll))
-      .cast("double")
+    val firstV = d(min_by(col(valCol), col(yearCol)).over(wAll))
+    val lastV = d(max_by(col(valCol), col(yearCol)).over(wAll))
+    val span = d(max(col(yearCol)).over(wAll) - min(col(yearCol)).over(wAll))
     df
       .withColumn("__prev", lag(col(valCol), 1).over(w))
       .withColumn("yoy",
-        round(col(valCol).cast("double") / col("__prev") - 1, 4))
+        round(d(col(valCol)) / col("__prev") - 1, 4))
       .withColumn("cagr",
         when(span > 0 && firstV > 0,
           round(pow(lastV / firstV, lit(1.0) / span) - 1, 4)))
@@ -608,7 +598,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .withColumn("__i", count(lit(1)).over(run))
       .withColumn("__dev",
         col(valCol).cast("long") * 1000000L -
-          floor(col("__S").cast("double") * 1e6 / col("__i").cast("double"))
+          floor(d(col("__S")) * 1e6 / d(col("__i")))
             .cast("long"))
       .withColumn("__m", sum("__dev").over(run))
       .withColumn("ph", col("__m") - min("__m").over(run))
@@ -640,16 +630,15 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       d.withColumn(s"__x$k", lag(col(valCol), k).over(w))
         .withColumn(s"__t$k", lag(col(yearCol), k).over(w))
     }
-    val dec = "decimal(38,0)"
     val stacked = lagged
       .select(keys.map(col) ++ Seq(col(yearCol).as("__t"),
-        col(valCol).cast(dec).as("__x"),
+        dec(col(valCol)).as("__x"),
         explode(array((1 to maxLag).map(k =>
-          struct(lit(k).as("k"), col(s"__x$k").cast(dec).as("xp"),
+          struct(lit(k).as("k"), dec(col(s"__x$k")).as("xp"),
             col(s"__t$k").as("tp"))): _*)).as("__l")): _*)
       .filter(col("__l.tp").isNotNull &&
         col("__t") - col("__l.tp") === col("__l.k"))
-    val n = col("__n").cast(dec)
+    val n = dec(col("__n"))
     val varx = n * col("__sxx") - col("__sx") * col("__sx")
     val vary = n * col("__syy") - col("__sy") * col("__sy")
     val num = n * col("__sxy") - col("__sx") * col("__sy")
@@ -663,8 +652,8 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .select(keys.map(col) ++ Seq(col("lag"),
         col("__n").cast("long").as("n_pairs"),
         when(varx > 0 && vary > 0,
-          round(num.cast("double") /
-            sqrt(varx.cast("double") * vary.cast("double")), 4))
+          round(d(num) /
+            sqrt(d(varx) * d(vary)), 4))
           .as("acf")): _*)
   }
 
@@ -702,29 +691,27 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valCol: String,
       maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1)
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
     val base = df
       .select(keys.map(col) ++ Seq(col(tCol).cast("long").as("__t"),
         col(valCol).cast("long").as("__x")): _*)
       .localCheckpoint() // feeds totals, probes, and the lag partner
     val tot = base.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"),
-        sum(col("__x").cast(dec)).as("__sx"),
-        sum(col("__x").cast(dec) * col("__x").cast(dec)).as("__sxx"))
+        sum(dec(col("__x"))).as("__sx"),
+        sum(dec(col("__x")) * dec(col("__x"))).as("__sxx"))
     val part = base.select(
       (keys.map(col) :+ col("__t").as("__tp") :+ col("__x").as("__xp")): _*)
     val perLag = base
-      .select(keys.map(col) ++ Seq(col("__t"), col("__x").cast(dec).as("__xc"),
+      .select(keys.map(col) ++ Seq(col("__t"), dec(col("__x")).as("__xc"),
         explode(array((1 to maxLag).map(k => lit(k.toLong)): _*)).as("__k")): _*)
       .withColumn("__tp", col("__t") - col("__k"))
       .join(part, (keys :+ "__tp").toSeq)
       .groupBy(keys.map(col) :+ col("__k"): _*)
-      .agg(count(lit(1)).cast(dec).as("__m"),
-        sum(col("__xc") * col("__xp").cast(dec)).as("__sxy"),
+      .agg(dec(count(lit(1))).as("__m"),
+        sum(col("__xc") * dec(col("__xp"))).as("__sxy"),
         sum(col("__xc")).as("__sxt"),
-        sum(col("__xp").cast(dec)).as("__sxp"))
-    val n = col("__n").cast(dec)
+        sum(dec(col("__xp"))).as("__sxp"))
+    val n = dec(col("__n"))
     val num = n * n * col("__sxy") -
       n * col("__sx") * (col("__sxt") + col("__sxp")) +
       col("__m") * col("__sx") * col("__sx")
@@ -808,14 +795,13 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       keys: Seq[String],
       xCol: String,
       yCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val x = col(xCol).cast(dec)
-    val y = col(yCol).cast(dec)
-    val n = col("__n").cast(dec)
+    val x = dec(col(xCol))
+    val y = dec(col(yCol))
+    val n = dec(col("__n"))
     val num = n * col("__sxy") - col("__sx") * col("__sy")
     val varx = n * col("__sxx") - col("__sx") * col("__sx")
     val vary = n * col("__syy") - col("__sy") * col("__sy")
-    val slope = num.cast("double") / varx.cast("double")
+    val slope = d(num) / d(varx)
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"),
         sum(x).as("__sx"), sum(y).as("__sy"),
@@ -826,14 +812,14 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .select(keys.map(col) ++ Seq(
         col("__n").cast("long").as("n_points"),
         round(slope, 4).as("slope"),
-        round((col("__sy").cast("double") - slope * col("__sx").cast("double"))
-          / col("__n").cast("double"), 4).as("intercept"),
+        round((d(col("__sy")) - slope * d(col("__sx")))
+          / d(col("__n")), 4).as("intercept"),
         // r2 in doubles: num*num in decimal(38,0) can overflow the
         // 38-digit cap for extreme sums where the closed form is still
         // finite in doubles (oracle SQL mirrors the same float math).
         when(vary > 0,
-          round(num.cast("double") * num.cast("double")
-            / (varx.cast("double") * vary.cast("double")), 4))
+          round(d(num) * d(num)
+            / (d(varx) * d(vary)), 4))
           .as("r2")): _*)
   }
 
@@ -884,10 +870,10 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .groupBy("datasourceIdA", "datasourceIdB")
       .agg(
         count(lit(1)).as("n"),
-        corr(col("yearA").cast("double"), col("yearB").cast("double")).as("r"))
+        corr(d(col("yearA")), d(col("yearB"))).as("r"))
       .filter(col("n") >= 3)
       .withColumn("r",
-        when(isnan(col("r")), lit(null).cast("double")).otherwise(round(col("r"), 2)))
+        when(isnan(col("r")), d(lit(null))).otherwise(round(col("r"), 2)))
       // p from the PUBLISHED 2dp r, so any engine derives the same
       // value from the same inputs (analysis.ipynb cell 1 reports
       // scipy pearsonr's p next to each r)
@@ -936,12 +922,11 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       salt: String = "boot",
       alphaPct: Int = 5): DataFrame = {
     require(reps > 0 && alphaPct > 0 && alphaPct < 100)
-    val cents = round(col(valueCol) * 100).cast("long")
     // spread(): the md5-heavy scan must not run on the driver tables'
     // 1-2 parquet splits (r16: q173 single-task at 6.8 s min-6)
     val rows = spread(df
       .filter(col(valueCol).isNotNull && col(idCol).isNotNull)
-      .select((keys.map(col) :+ cents.as("_cents")
+      .select((keys.map(col) :+ cents(col(valueCol)).as("_cents")
         :+ col(idCol).cast("string").as("_id")): _*))
     // r17 (guide §2.3/§4): the ×reps row explode is gone — one native
     // RepWeightVec eval per row computes every rep's Poisson weight
@@ -968,7 +953,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
           element_at(col("_st"), r + reps + 1).as("_wn")))).as("_r")): _*)
       .filter(col("_r._wn") > 0)
       .withColumn("_mean",
-        col("_r._ws").cast("double") / col("_r._wn").cast("double") / 100.0)
+        d(col("_r._ws")) / d(col("_r._wn")) / 100.0)
 
     val lo = alphaPct / 200.0
     val hi = 1.0 - lo
@@ -979,7 +964,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         round(expr(s"percentile(_mean, $hi)"), 4).as("ci_hi"))
     agg0.join(ci, keys)
       .select((keys.map(col) :+ col("n")
-        :+ round(col("_sc").cast("double") / col("n").cast("double") / 100.0, 4)
+        :+ round(d(col("_sc")) / d(col("n")) / 100.0, 4)
           .as("mean")
         :+ col("n_reps") :+ col("ci_lo") :+ col("ci_hi")): _*)
   }
@@ -1083,7 +1068,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("n_ab"))
-    val d = (c: Column) => c.cast("double")
     val e = d(col("_na")) * d(col("_nb")) / d(col("_n"))
     cells
       .withColumn("_na", sum(col("n_ab")).over(Window.partitionBy(aCol)))
@@ -1103,7 +1087,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         // a 1×c (or r×1) table has no association to normalize
         when(col("dof") > 0,
           round(sqrt(col("chi2") / (d(col("n")) *
-            least(col("r_levels") - 1, col("c_levels") - 1).cast("double"))), 4)))
+            d(least(col("r_levels") - 1, col("c_levels") - 1)))), 4)))
       .select(col("n"), col("r_levels"), col("c_levels"), col("dof"),
         col("chi2"), col("cramers_v"))
   }
@@ -1179,7 +1163,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     val byA = Window.partitionBy(aCol)
     val byB = Window.partitionBy(bCol)
     val all = Window.partitionBy()
-    val d = (c: Column) => c.cast("double")
     val ratio = d(col("n_ab")) * d(col("_n")) / (d(col("_na")) * d(col("_nb")))
     cells
       .withColumn("_na", sum(col("n_ab")).over(byA))
@@ -1211,18 +1194,17 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
     val all = Window.partitionBy()
     val arms = df
       .filter(col(valueCol).isNotNull)
       .groupBy(col(armCol).as("arm"))
-      .agg(count(lit(1)).as("n"), sum(cents).as("__c"))
+      .agg(count(lit(1)).as("n"), sum(cents(col(valueCol))).as("__c"))
       .withColumn("total_n", sum(col("n")).over(all))
       .withColumn("mean_reward",
-        round(col("__c").cast("double") / col("n") / 100.0, 4))
+        round(d(col("__c")) / col("n") / 100.0, 4))
       .withColumn("bonus",
-        round(sqrt(lit(2.0) * log(col("total_n").cast("double"))
-          / col("n").cast("double")), 6))
+        round(sqrt(lit(2.0) * log(d(col("total_n")))
+          / d(col("n"))), 6))
       .withColumn("ucb", round(col("mean_reward") + col("bonus"), 6))
     arms
       .withColumn("rank", rank().over(
@@ -1287,7 +1269,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         (col("nb") - col("__mb")).as("b"))
     val lags = events.sparkSession.range(-maxLag.toLong, maxLag + 1L)
       .select(col("id").as("lag"))
-    val d = (c: Column) => c.cast("double")
     centered.select(col("day"), col("a"))
       .crossJoin(broadcast(lags))
       .join(broadcast(centered.select(col("day").as("__yd"), col("b"))),
@@ -1358,7 +1339,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         coalesce(col("na"), lit(0L)).as("a"),
         coalesce(col("nb"), lit(0L)).as("b"))
       .localCheckpoint()
-    val d = (c: Column) => c.cast("double")
     val conc = (col("__a1") < col("__a2") && col("__b1") < col("__b2")) ||
       (col("__a1") > col("__a2") && col("__b1") > col("__b2"))
     val disc = (col("__a1") < col("__a2") && col("__b1") > col("__b2")) ||
@@ -1404,55 +1384,17 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     *
     * Output: one row (n1, n2, d, lambda, p_value).
     */
-  /** Loud scale guard for the partitionless value-grain window family
-    * ([[ksTest]] / [[mannWhitney]] / [[rocAuc]] / [[giniConcentration]]):
-    * each of those collapses the corpus to distinct quantized values
-    * before a single-partition cumulative window, which is safe only
-    * while the VALUE RANGE is bounded. That contract was documented
-    * ("bucket upstream for unbounded metrics") but unenforced — an
-    * unbounded 100 TB metric would silently materialize a billion-row
-    * single-task sort. This enforces it: a row_number riding the SAME
-    * sort the cumulative sum needs (no extra exchange, no extra job)
-    * raises past [[GraftConf.ValueGrainCap]] with the operator's name.
-    * Under the cap the filter keeps every row — results untouched.
-    */
-  private[operators] def grainGuarded(
-      pts: DataFrame,
-      ordered: org.apache.spark.sql.expressions.WindowSpec,
-      op: String): DataFrame = {
-    val cap = GraftConf.ValueGrainCap
-    pts
-      .withColumn("__gg",
-        when(row_number().over(ordered) > cap,
-          raise_error(lit(s"graft.$op: distinct-value grain exceeds " +
-            s"ValueGrainCap=$cap — quantize or bucket the metric upstream")))
-          .otherwise(lit(0)))
-      .filter(col("__gg") === 0).drop("__gg")
-  }
-
   def ksTest(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    // value-grain collapse feeds both the CDF window and the totals;
-    // the eager cut keeps the corpus at ONE scan (see laggedCrossCorr)
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val totals = pts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val d = (c: Column) => c.cast("double")
-    grainGuarded(pts, w, "ksTest")
-      .withColumn("__f1", sum("c1").over(w))
-      .withColumn("__f2", sum("c2").over(w))
+    grainGuarded(pts, cumRows, "ksTest")
+      .withColumn("__f1", sum("c1").over(cumRows))
+      .withColumn("__f2", sum("c2").over(cumRows))
       .crossJoin(broadcast(totals))
       .groupBy("n1", "n2")
       .agg(max(abs(col("__f1") * col("n2") - col("__f2") * col("n1"))).as("__dn"))
@@ -1491,24 +1433,12 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLead = Window.orderBy("v")
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val totals = pts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d = (c: Column) => c.cast("double")
-    grainGuarded(pts, w, "wasserstein1")
-      .withColumn("__f1", sum("c1").over(w))
-      .withColumn("__f2", sum("c2").over(w))
-      .withColumn("__dx", lead(col("v"), 1).over(wLead) - col("v"))
+    grainGuarded(pts, cumRows, "wasserstein1")
+      .withColumn("__f1", sum("c1").over(cumRows))
+      .withColumn("__f2", sum("c2").over(cumRows))
+      .withColumn("__dx", lead(col("v"), 1).over(byValue) - col("v"))
       // the last value row has no gap (and |F1·n2−F2·n1| = 0 there)
       .filter(col("__dx").isNotNull)
       .crossJoin(broadcast(totals))
@@ -1533,12 +1463,11 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     * Output: one row (k, n, f_stat, eta_sq) — null F when SSW = 0.
     */
   def anovaF(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
+    val x = cents(col(valueCol))
     val g = df.filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("__n"), sum(cents).as("__s"),
-        sum(cents * cents).as("__q"))
+      .agg(count(lit(1)).as("__n"), sum(x).as("__s"),
+        sum(x * x).as("__q"))
     g.agg(
         count(lit(1)).as("k"), sum(col("__n")).as("n"),
         sum(d(col("__s")) * d(col("__s")) / col("__n")).as("__sb"),
@@ -1575,7 +1504,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       successCol: Column,
       z: Double = 1.959963984540054): DataFrame = {
     require(z > 0)
-    val d = (c: Column) => c.cast("double")
     df.groupBy(col(groupCol).as("g"))
       .agg(count(lit(1)).as("trials"),
         sum(when(successCol, 1L).otherwise(0L)).as("successes"))
@@ -1615,7 +1543,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       groupB: String,
       z: Double = 1.959963984540054): DataFrame = {
     require(z > 0)
-    val d = (c: Column) => c.cast("double")
     def wilson(n: Column, x: Column) = {
       val p = d(x) / n
       val den = lit(1.0) + lit(z * z) / n
@@ -1666,7 +1593,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       groupB: String,
       z: Double = 1.959963984540054): DataFrame = {
     require(z > 0)
-    val d = (c: Column) => c.cast("double")
     df.filter(col(groupCol).isin(groupA, groupB))
       .agg(
         sum(when(col(groupCol) === groupA && successCol, 1L).otherwise(0L))
@@ -1713,9 +1639,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     * deviation variance vanishes.
     */
   def brownForsythe(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val cents2 = (round(col(valueCol) * 100).cast("long") * 2L).as("__c2")
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
+    val cents2 = (cents(col(valueCol)) * 2L).as("__c2")
     val in = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
     val med = in
       .groupBy(col(groupCol).as("__g"))
@@ -1725,8 +1649,8 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .join(broadcast(med), "__g")
       .withColumn("__z", abs(col("__c2") - col("__m2")))
     z.groupBy("__g")
-      .agg(count(lit(1)).as("__n"), sum(col("__z").cast(dec)).as("__s"),
-        sum(col("__z").cast(dec) * col("__z")).as("__q"))
+      .agg(count(lit(1)).as("__n"), sum(dec(col("__z"))).as("__s"),
+        sum(dec(col("__z")) * col("__z")).as("__q"))
       .agg(
         count(lit(1)).as("k"), sum(col("__n")).as("n"),
         sum(d(col("__s")) * d(col("__s")) / col("__n")).as("__sb"),
@@ -1756,16 +1680,15 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
+    val x = cents(col(valueCol))
     df.filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
       .agg(
         sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("n1"),
-        sum(when(col(groupCol) === groupA, cents).otherwise(0L)).as("__s1"),
-        sum(when(col(groupCol) === groupA, cents * cents).otherwise(0L)).as("__q1"),
+        sum(when(col(groupCol) === groupA, x).otherwise(0L)).as("__s1"),
+        sum(when(col(groupCol) === groupA, x * x).otherwise(0L)).as("__q1"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("n2"),
-        sum(when(col(groupCol) === groupB, cents).otherwise(0L)).as("__s2"),
-        sum(when(col(groupCol) === groupB, cents * cents).otherwise(0L)).as("__q2"))
+        sum(when(col(groupCol) === groupB, x).otherwise(0L)).as("__s2"),
+        sum(when(col(groupCol) === groupB, x * x).otherwise(0L)).as("__q2"))
       .filter(col("n1") > 1 && col("n2") > 1)
       .withColumn("__v1",
         (d(col("__q1")) - d(col("__s1")) * d(col("__s1")) / col("n1")) / (col("n1") - 1))
@@ -1806,16 +1729,15 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
+    val x = cents(col(valueCol))
     df.filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
       .agg(
         sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("n1"),
-        sum(when(col(groupCol) === groupA, cents).otherwise(0L)).as("__s1"),
-        sum(when(col(groupCol) === groupA, cents * cents).otherwise(0L)).as("__q1"),
+        sum(when(col(groupCol) === groupA, x).otherwise(0L)).as("__s1"),
+        sum(when(col(groupCol) === groupA, x * x).otherwise(0L)).as("__q1"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("n2"),
-        sum(when(col(groupCol) === groupB, cents).otherwise(0L)).as("__s2"),
-        sum(when(col(groupCol) === groupB, cents * cents).otherwise(0L)).as("__q2"))
+        sum(when(col(groupCol) === groupB, x).otherwise(0L)).as("__s2"),
+        sum(when(col(groupCol) === groupB, x * x).otherwise(0L)).as("__q2"))
       .filter(col("n1") > 1 && col("n2") > 1)
       .withColumn("__md",
         d(col("__s1")) / col("n1") - d(col("__s2")) / col("n2"))
@@ -1861,15 +1783,13 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       salt: String = "boot",
       alphaPct: Int = 5): DataFrame = {
     require(reps > 0 && alphaPct > 0 && alphaPct < 100)
-    val cents = round(col(valueCol) * 100).cast("long")
     // spread(): the md5-heavy scan must not run on the driver tables'
     // 1-2 parquet splits (the q173 single-task measurement, r16).
     val rows = spread(df
       .filter(col(valueCol).isNotNull && col(idCol).isNotNull &&
         col(groupCol).isin(groupA, groupB))
-      .select(col(groupCol).as("__g"), cents.as("__c"),
+      .select(col(groupCol).as("__g"), cents(col(valueCol)).as("__c"),
         col(idCol).cast("string").as("__id")))
-    val d = (c: Column) => c.cast("double")
     val isA = col("__g") === groupA
     // r17 (guide §2.3/§4): ONE aggregate pass replaces the ×reps
     // explode + separate base pass — RepWeightVec emits every rep's
@@ -1933,17 +1853,16 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
+    val x = cents(col(valueCol))
     val zSum = 1.959964 + 0.841621
     df.filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
       .agg(
         sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("n1"),
-        sum(when(col(groupCol) === groupA, cents).otherwise(0L)).as("__s1"),
-        sum(when(col(groupCol) === groupA, cents * cents).otherwise(0L)).as("__q1"),
+        sum(when(col(groupCol) === groupA, x).otherwise(0L)).as("__s1"),
+        sum(when(col(groupCol) === groupA, x * x).otherwise(0L)).as("__q1"),
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("n2"),
-        sum(when(col(groupCol) === groupB, cents).otherwise(0L)).as("__s2"),
-        sum(when(col(groupCol) === groupB, cents * cents).otherwise(0L)).as("__q2"))
+        sum(when(col(groupCol) === groupB, x).otherwise(0L)).as("__s2"),
+        sum(when(col(groupCol) === groupB, x * x).otherwise(0L)).as("__q2"))
       .filter(col("n1") > 1 && col("n2") > 1)
       .withColumn("__v1",
         (d(col("__q1")) - d(col("__s1")) * d(col("__s1")) / col("n1")) / (col("n1") - 1))
@@ -1983,7 +1902,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       keys: Seq[String],
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     series
       .select(keys.map(col) :+
         struct(col(xCol).as("x"),
@@ -2050,7 +1968,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       keys: Seq[String],
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(xCol))
     series
       .withColumn("__gu",
@@ -2111,7 +2028,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       yCol: String,
       period: Int = 14): DataFrame = {
     require(period >= 1)
-    val d = (c: Column) => c.cast("double")
     val p = period
     def seedSum(gain: Boolean): String = {
       val diff = if (gain) "element_at(__ys, i) - element_at(__ys, i - 1)"
@@ -2177,7 +2093,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       slow: Int = 26,
       signalP: Int = 9): DataFrame = {
     require(fast >= 1 && slow > fast && signalP >= 1)
-    val d = (c: Column) => c.cast("double")
     def ema(prev: String, y: String, n: Int): String =
       s"CAST(floor(($prev * ${n - 1}L + 2L * $y) / ${n + 1}.0) AS BIGINT)"
     series
@@ -2233,7 +2148,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       yCol: String,
       period: Int = 7): DataFrame = {
     require(period >= 1)
-    val d = (c: Column) => c.cast("double")
     val holt = holtBacktest(series, keys, xCol, yCol)
       .select(keys.map(col) :+ col("n_forecasts") :+ col("mae").as("mae_model"): _*)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(xCol))
@@ -2273,7 +2187,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       xCol: String,
       yCol: String): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(xCol))
-    val d = (c: Column) => c.cast("double")
     ewmaHalf(series, keys, xCol, yCol, out = "__s")
       .withColumn("__f", lag(col("__s"), 1).over(w))
       .filter(col("__f").isNotNull)
@@ -2314,16 +2227,14 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     */
   def corrMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "corrMatrix needs at least two columns")
-    val dec = "decimal(38,0)"
     val kept = df.filter(cols.map(col(_).isNotNull).reduce(_ && _))
-    def v(c: String) = round(col(c) * 100).cast("long").cast(dec)
+    def v(c: String) = dec(cents(col(c)))
     val aggs = count(lit(1)).as("__n") +:
       (cols.map(c => sum(v(c)).as(s"__s_$c")) ++
         (for (i <- cols.indices; j <- i until cols.size)
           yield sum(v(cols(i)) * v(cols(j))).as(s"__p_${cols(i)}_${cols(j)}")))
     val one = kept.agg(aggs.head, aggs.tail: _*)
-    val n = col("__n").cast(dec)
-    def d(c: Column) = c.cast("double")
+    val n = dec(col("__n"))
     val pairs = for (i <- cols.indices; j <- (i + 1) until cols.size) yield {
       val (a, b) = (cols(i), cols(j))
       val num = n * col(s"__p_${a}_$b") - col(s"__s_$a") * col(s"__s_$b")
@@ -2366,14 +2277,13 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     val trend = linearTrend(s, keys, xCol, yCol)
       .select((keys.map(col) :+ col("slope") :+ col("intercept")): _*)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(xCol)
-    val d = (c: Column) => c.cast("double")
     s.join(broadcast(trend), keys)
       .withColumn("__e",
         round((d(col(yCol)) - (col("intercept") + col("slope") * d(col(xCol)))) * 1e6)
           .cast("long"))
       .withColumn("__de",
-        (col("__e") - lag(col("__e"), 1).over(w)).cast("decimal(38,0)"))
-      .withColumn("__ed", col("__e").cast("decimal(38,0)"))
+        dec(col("__e") - lag(col("__e"), 1).over(w)))
+      .withColumn("__ed", dec(col("__e")))
       .groupBy(keys.map(col): _*)
       .agg(
         count(lit(1)).as("n_points"),
@@ -2394,8 +2304,9 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     * Exactness: values collapse to integer-cent grain with per-group
     * counts, average ranks are carried as the INTEGER 2·rank (r2 =
     * 2·cum_before + ties + 1), so 2U₁ = Σc₁·r2 − n₁(n₁+1) is an
-    * exact long; the tie-correction Σ(t³−t) is an exact long too
-    * (t = per-value tie count; longs hold to ~2M ties per value).
+    * exact long; the tie-correction Σ(t³−t) (t = per-value tie count)
+    * rides decimal(38,0), exact past the ~2.1M ties of one value where
+    * t³ leaves long range.
     * Doubles enter only in σ and the final z, same op order both
     * engines, 4dp.
     *
@@ -2411,25 +2322,14 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
-    grainGuarded(pts, w, "mannWhitney")
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
+    grainGuarded(pts, cumRows, "mannWhitney")
       .withColumn("__t", col("c1") + col("c2"))
-      .withColumn("__r2",
-        lit(2L) * (sum(col("__t")).over(w) - col("__t")) + col("__t") + 1L)
+      .withColumn("__r2", midrank2(byValue, col("__t"), col("__t")))
       .agg(
         sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
         sum(col("c1") * col("__r2")).as("__r2sum1"),
-        sum(col("__t") * col("__t") * col("__t") - col("__t")).as("__ties"))
+        tieCube(col("__t")).as("__ties"))
       .withColumn("__twoU1",
         col("__r2sum1") - col("n1") * (col("n1") + 1L))
       .withColumn("__n", col("n1") + col("n2"))
@@ -2472,22 +2372,10 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d = (c: Column) => c.cast("double")
-    grainGuarded(pts, w, "cliffsDelta")
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
+    grainGuarded(pts, cumRows, "cliffsDelta")
       .withColumn("__t", col("c1") + col("c2"))
-      .withColumn("__r2",
-        lit(2L) * (sum(col("__t")).over(w) - col("__t")) + col("__t") + 1L)
+      .withColumn("__r2", midrank2(byValue, col("__t"), col("__t")))
       .agg(
         sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
         sum(dec(col("c1")) * dec(col("__r2"))).as("__r2sum1"))
@@ -2531,28 +2419,20 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     * the whole pooled sample.
     */
   def kruskalWallis(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
     val pts = df
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .groupBy(cents.as("v"), col(groupCol).as("g"))
+      .groupBy(cents(col(valueCol)).as("v"), col(groupCol).as("g"))
       .agg(count(lit(1)).as("n"))
       .localCheckpoint()
-    val ord = Window.orderBy("v")
-    val ranked = grainGuarded(pts, ord, "kruskalWallis")
+    val ranked = grainGuarded(pts, byValue, "kruskalWallis")
       // peers of v across ALL groups = the value's pooled tie count
-      .withColumn("__t",
-        sum("n").over(ord.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__cumb", coalesce(
-        sum("n").over(ord.rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__cumb") + col("__t") + 1L)
+      .withColumn("__t", tieCount(byValue, col("n")))
+      .withColumn("__r2", midrank2(byValue, col("n"), col("__t")))
     val perG = ranked.groupBy("g")
       .agg(sum("n").as("__ng"),
-        sum(col("n").cast("decimal(38,0)") * col("__r2")).as("__s2"))
+        sum(dec(col("n")) * col("__r2")).as("__s2"))
     val ties = pts.groupBy("v").agg(sum("n").as("__t"))
-      .agg(coalesce(
-        sum(col("__t").cast("decimal(38,0)") * col("__t") * col("__t") - col("__t")),
-        lit(0).cast("decimal(38,0)")).as("__tie3"))
+      .agg(tieCube(col("__t")).as("__tie3"))
     perG
       .agg(
         count(lit(1)).as("k"), sum("__ng").as("n"),
@@ -2602,23 +2482,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       df: DataFrame,
       blockCol: Column,
       treatCol: Column): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val cells = df
-      .groupBy(blockCol.as("b"), treatCol.as("g"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val dense = cells.select("b").distinct()
-      .crossJoin(broadcast(cells.select("g").distinct()))
-      .join(cells, Seq("b", "g"), "left")
-      .select(col("b"), col("g"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val w = Window.partitionBy("b").orderBy("cnt")
-    val ranked = dense
-      .withColumn("__t",
-        count(lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__cumb", coalesce(
-        count(lit(1)).over(w.rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__cumb") + col("__t") + 1L)
-      .localCheckpoint() // feeds the treatment rollup AND the tie rollup
+    val ranked = blockMidranks(df, blockCol, treatCol)
     val perT = ranked.groupBy("g").agg(sum("__r2").as("__s2"))
       .agg(count(lit(1)).as("k"),
         sum(col("__s2") * col("__s2")).as("__rr4")) // 4·ΣR² exactly
@@ -2673,7 +2537,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     arr
       .withColumn("__s", sort_array(flatten(transform(col("__a"), (p, i) =>
         transform(slice(col("__a"), i + lit(2), size(col("__a"))), q =>
-          (q.getField("y") - p.getField("y")).cast("double") /
+          d(q.getField("y") - p.getField("y")) /
             (q.getField("x") - p.getField("x")))))))
       .withColumn("n_slopes", size(col("__s")).cast("long"))
       .filter(col("n_slopes") > 0)
@@ -2718,7 +2582,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       .select((keys.map(col) :+ col(xCol).cast("long").as("__x") :+
         col(yCol).cast("long").as("__y")): _*)
       .localCheckpoint()
-    val d = (c: Column) => c.cast("double")
     val arr = s0
       .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(col("__x").as("x"), col("__y").as("y"))))
@@ -2771,16 +2634,10 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       aCol: String,
       bCol: String): DataFrame = {
     val ranked = df
-      .withColumn("__ra",
-        lit(2L) * rank().over(Window.partitionBy(keys.map(col): _*).orderBy(aCol)) +
-          count(lit(1)).over(Window.partitionBy((keys :+ aCol).map(col): _*)) - 1L)
-      .withColumn("__rb",
-        lit(2L) * rank().over(Window.partitionBy(keys.map(col): _*).orderBy(bCol)) +
-          count(lit(1)).over(Window.partitionBy((keys :+ bCol).map(col): _*)) - 1L)
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val ra = col("__ra").cast(dec)
-    val rb = col("__rb").cast(dec)
+      .withColumn("__ra", rowMidrank2(keys.map(col), col(aCol)))
+      .withColumn("__rb", rowMidrank2(keys.map(col), col(bCol)))
+    val ra = dec(col("__ra"))
+    val rb = dec(col("__rb"))
     ranked
       .groupBy(keys.map(col): _*)
       .agg(
@@ -2792,10 +2649,10 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         sum(rb * rb).as("__sbb"),
         sum(ra * rb).as("__sab"))
       .withColumn("__den",
-        sqrt(d(col("n").cast(dec) * col("__saa") - col("__sa") * col("__sa")) *
-          d(col("n").cast(dec) * col("__sbb") - col("__sb") * col("__sb"))))
+        sqrt(d(dec(col("n")) * col("__saa") - col("__sa") * col("__sa")) *
+          d(dec(col("n")) * col("__sbb") - col("__sb") * col("__sb"))))
       .select(keys.map(col) ++ Seq(col("n"),
-        round(d(col("n").cast("decimal(38,0)") * col("__sab") -
+        round(d(dec(col("n")) * col("__sab") -
             col("__sa") * col("__sb")) /
           when(col("__den") === 0, lit(null)).otherwise(col("__den")), 4).as("rho")): _*)
   }
@@ -2823,7 +2680,6 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
     val byKey = Window.partitionBy(keys.map(col): _*)
     val ord = byKey.orderBy(xCol)
     val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
     series
       .withColumn("__y", col(yCol).cast("long"))
       .withColumn("__cy", sum(col("__y")).over(cum))
@@ -2864,21 +2720,10 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       valueCol: String,
       posGroup: String,
       negGroup: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(posGroup, negGroup))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === posGroup, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === negGroup, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
-    grainGuarded(pts, w, "rocAuc")
+    val pts = twoGroupGrain(df, groupCol, valueCol, posGroup, negGroup)
+    grainGuarded(pts, cumRows, "rocAuc")
       .withColumn("__t", col("c1") + col("c2"))
-      .withColumn("__r2",
-        lit(2L) * (sum(col("__t")).over(w) - col("__t")) + col("__t") + 1L)
+      .withColumn("__r2", midrank2(byValue, col("__t"), col("__t")))
       .agg(
         sum(col("c1")).as("n_pos"), sum(col("c2")).as("n_neg"),
         sum(col("c1") * col("__r2")).as("__r2sum1"))
@@ -2913,9 +2758,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       yCol: String,
       x1Col: String,
       x2Col: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    def v(c: String) = round(col(c) * 100).cast("long").cast(dec)
-    val d = (c: Column) => c.cast("double")
+    def v(c: String) = dec(cents(col(c)))
     df.filter(col(yCol).isNotNull && col(x1Col).isNotNull && col(x2Col).isNotNull)
       .agg(
         count(lit(1)).as("n"),
@@ -2978,9 +2821,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
       xCol: String,
       yCol: String,
       zCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    def v(c: String) = round(col(c) * 100).cast("long").cast(dec)
-    val d = (c: Column) => c.cast("double")
+    def v(c: String) = dec(cents(col(c)))
     val one = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull && col(zCol).isNotNull)
       .agg(
@@ -2991,7 +2832,7 @@ object Rollups extends RollupsInference with RollupsEval with RollupsScaleForms
         sum(v(xCol) * v(yCol)).as("__sxy"), sum(v(xCol) * v(zCol)).as("__sxz"),
         sum(v(yCol) * v(zCol)).as("__syz"))
     def r(sab: String, sa: String, sb: String, saa: String, sbb: String) = {
-      val n = col("n").cast(dec)
+      val n = dec(col("n"))
       val num = n * col(sab) - col(sa) * col(sb)
       val da = n * col(saa) - col(sa) * col(sa)
       val db = n * col(sbb) - col(sb) * col(sb)

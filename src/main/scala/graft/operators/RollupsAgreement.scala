@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * ordinal association, Hosmer–Lemeshow. Mixed into the `Rollups`
   * object so call sites read `Rollups.<op>`.
   */
-private[operators] trait RollupsAgreement {
+private[operators] trait RollupsAgreement extends RollupsScaleForms {
 
   /** Kuiper two-sample statistic (F123) — V = D⁺ + D⁻, the sum of the
     * largest CDF exceedances in EACH direction. Where F25's KS takes
@@ -33,21 +33,11 @@ private[operators] trait RollupsAgreement {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val totals = pts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val d = (c: Column) => c.cast("double")
-    Rollups.grainGuarded(pts, w, "kuiperTest")
-      .withColumn("__f1", sum("c1").over(w))
-      .withColumn("__f2", sum("c2").over(w))
+    grainGuarded(pts, cumRows, "kuiperTest")
+      .withColumn("__f1", sum("c1").over(cumRows))
+      .withColumn("__f2", sum("c2").over(cumRows))
       .crossJoin(broadcast(totals))
       .groupBy("n1", "n2")
       .agg(
@@ -81,26 +71,24 @@ private[operators] trait RollupsAgreement {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val x = col("__x").cast(dec)
+    val x = dec(col("__x"))
     df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol), round(col(valueCol) * 100).cast("long").as("__x"))
+      .select(col(groupCol), cents(col(valueCol)).as("__x"))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"),
         sum(x).as("__s1"), sum(x * x).as("__s2"),
         sum(x * x * x).as("__s3"), sum(x * x * x * x).as("__s4"))
-      .withColumn("__n", col("n").cast(dec))
+      .withColumn("__n", dec(col("n")))
       .withColumn("__m2", col("__n") * col("__s2") - col("__s1") * col("__s1"))
       .withColumn("__m3",
         col("__n") * col("__n") * col("__s3") -
-          lit(3L).cast(dec) * col("__n") * col("__s1") * col("__s2") +
-          lit(2L).cast(dec) * col("__s1") * col("__s1") * col("__s1"))
+          dec(lit(3L)) * col("__n") * col("__s1") * col("__s2") +
+          dec(lit(2L)) * col("__s1") * col("__s1") * col("__s1"))
       .withColumn("__m4",
         col("__n") * col("__n") * col("__n") * col("__s4") -
-          lit(4L).cast(dec) * col("__n") * col("__n") * col("__s1") * col("__s3") +
-          lit(6L).cast(dec) * col("__n") * col("__s1") * col("__s1") * col("__s2") -
-          lit(3L).cast(dec) * col("__s1") * col("__s1") * col("__s1") * col("__s1"))
+          dec(lit(4L)) * col("__n") * col("__n") * col("__s1") * col("__s3") +
+          dec(lit(6L)) * col("__n") * col("__s1") * col("__s1") * col("__s2") -
+          dec(lit(3L)) * col("__s1") * col("__s1") * col("__s1") * col("__s1"))
       // m2 = M2/n², m3 = M3/n³, m4 = M4/n⁴ — the n powers cancel
       // exactly in both ratios: S = M3/M2^1.5, K = M4/M2² − 3
       .withColumn("__skew",
@@ -150,7 +138,7 @@ private[operators] trait RollupsAgreement {
           .otherwise(row_number().over(ord)).cast("long"))
       .withColumn("_m", count(lit(1)).over(all))
       .withColumn("_cm", aggregate(sequence(lit(1L), col("_m")),
-        lit(0.0), (acc, i) => acc + lit(1.0) / i.cast("double")))
+        lit(0.0), (acc, i) => acc + lit(1.0) / d(i)))
       .withColumn("p_adj",
         round(least(lit(1.0),
           min(col(pCol) * col("_m") * col("_cm") / col("p_rank"))
@@ -179,17 +167,15 @@ private[operators] trait RollupsAgreement {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
       .agg(count(lit(1)).as("n"),
-        sum(col("__x").cast(dec)).as("__sx"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__x").cast(dec) * col("__x")).as("__sxx"),
-        sum(col("__y").cast(dec) * col("__y")).as("__syy"),
-        sum(col("__x").cast(dec) * col("__y")).as("__sxy"))
-      .withColumn("__n", col("n").cast(dec))
+        sum(dec(col("__x"))).as("__sx"),
+        sum(dec(col("__y"))).as("__sy"),
+        sum(dec(col("__x")) * col("__x")).as("__sxx"),
+        sum(dec(col("__y")) * col("__y")).as("__syy"),
+        sum(dec(col("__x")) * col("__y")).as("__sxy"))
+      .withColumn("__n", dec(col("n")))
       .withColumn("__cxx", col("__n") * col("__sxx") - col("__sx") * col("__sx"))
       .withColumn("__cyy", col("__n") * col("__syy") - col("__sy") * col("__sy"))
       .withColumn("__cxy", col("__n") * col("__sxy") - col("__sx") * col("__sy"))
@@ -197,7 +183,7 @@ private[operators] trait RollupsAgreement {
       .withColumn("__sd2",
         when(col("n") > 1L,
           sqrt(d(col("__n") * (col("__syy") -
-            lit(2L).cast(dec) * col("__sxy") + col("__sxx")) -
+            dec(lit(2L)) * col("__sxy") + col("__sxx")) -
             col("__dd") * col("__dd")) /
             (d(col("n")) * d(col("n") - 1L)))))
       .withColumn("__bias", d(col("__dd")) / d(col("n")))
@@ -236,16 +222,7 @@ private[operators] trait RollupsAgreement {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long")
-    val base = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
+    val base = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val a = base.filter(col("c1") > 0).select(col("v"), col("c1"))
     // the broadcast-nested-loop cross expands V1·V2 rows out of the
     // STREAM side's partitions — post-checkpoint the value-grain table
@@ -262,13 +239,13 @@ private[operators] trait RollupsAgreement {
     val diffs = b.crossJoin(broadcast(a))
       .groupBy((col("w") - col("v")).as("__d"))
       .agg(sum(col("c1") * col("c2")).as("__wl"))
-      .select(col("__d"), col("__wl").cast(dec).as("__wt"))
+      .select(col("__d"), dec(col("__wl")).as("__wt"))
     val wCum = Window.orderBy("__d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = Rollups.grainGuarded(diffs, wCum, "hodgesLehmann")
+    val cum = grainGuarded(diffs, wCum, "hodgesLehmann")
       .withColumn("__cum", sum("__wt").over(wCum))
       .crossJoin(broadcast(totals))
-      .withColumn("__t", col("n1").cast(dec) * col("n2").cast(dec))
+      .withColumn("__t", dec(col("n1")) * dec(col("n2")))
       .localCheckpoint()
     val lo = cum.filter(col("__cum") * 2 >= col("__t"))
       .agg(min("__d").as("__dlo"))
@@ -305,36 +282,25 @@ private[operators] trait RollupsAgreement {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long")
     // value-grain collapse (the ksTest contract): the placement of an
     // A-observation at value v is 2·#{B below} + #{B tied} — one
     // cumulative window over the grain, never a data-grain rank
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("__v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val q = Rollups.grainGuarded(pts, w, "brunnerMunzel")
-      .withColumn("__f1p", sum("c1").over(w) - col("c1"))
-      .withColumn("__f2p", sum("c2").over(w) - col("c2"))
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
+    val q = grainGuarded(pts, cumRows, "brunnerMunzel")
+      .withColumn("__f1p", sum("c1").over(cumRows) - col("c1"))
+      .withColumn("__f2p", sum("c2").over(cumRows) - col("c2"))
       .withColumn("__qa", lit(2L) * col("__f2p") + col("c2"))
       .withColumn("__qb", lit(2L) * col("__f1p") + col("c1"))
     val agg = q.groupBy()
       .agg(sum("c1").as("n1"), sum("c2").as("n2"),
-        sum(col("c1").cast(dec) * col("__qa").cast(dec)).as("__sqa"),
-        sum(col("c1").cast(dec) * col("__qa").cast(dec) * col("__qa").cast(dec))
+        sum(dec(col("c1")) * dec(col("__qa"))).as("__sqa"),
+        sum(dec(col("c1")) * dec(col("__qa")) * dec(col("__qa")))
           .as("__sqqa"),
-        sum(col("c2").cast(dec) * col("__qb").cast(dec)).as("__sqb"),
-        sum(col("c2").cast(dec) * col("__qb").cast(dec) * col("__qb").cast(dec))
+        sum(dec(col("c2")) * dec(col("__qb"))).as("__sqb"),
+        sum(dec(col("c2")) * dec(col("__qb")) * dec(col("__qb")))
           .as("__sqqb"))
     def s2(n: Column, sq: Column, sqq: Column): Column =
-      d(n.cast(dec) * sqq - sq * sq) / (lit(4.0) * d(n) * d(n - 1L))
+      d(dec(n) * sqq - sq * sq) / (lit(4.0) * d(n) * d(n - 1L))
     agg
       .withColumn("__s2a", when(col("n1") > 1L, s2(col("n1"), col("__sqa"), col("__sqqa"))))
       .withColumn("__s2b", when(col("n2") > 1L, s2(col("n2"), col("__sqb"), col("__sqqb"))))
@@ -376,45 +342,33 @@ private[operators] trait RollupsAgreement {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long")
     // value-grain collapse: every observation at value v carries the
     // SAME doubled midrank R2(v) = 2·F_prev + c + 1 and AB score, so
     // score moments are c-weighted sums over the grain — one
     // cumulative window, never a data-grain rank
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("__v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val totals = pts.agg((sum("c1") + sum("c2")).as("__N"))
-    val scored = Rollups.grainGuarded(pts, w, "ansariLepage")
+    val scored = grainGuarded(pts, cumRows, "ansariLepage")
       .withColumn("__c", col("c1") + col("c2"))
-      .withColumn("__fp", sum(col("__c")).over(w) - col("__c"))
+      .withColumn("__R2", midrank2(byValue, col("__c"), col("__c")))
       .crossJoin(broadcast(totals))
-      .withColumn("__R2", lit(2L) * col("__fp") + col("__c") + 1L)
       .withColumn("__a2",
         least(col("__R2"), lit(2L) * (col("__N") + 1L) - col("__R2")))
     val agg = scored.groupBy()
       .agg(max("__N").as("__N"),
         sum("c1").as("n1"), sum("c2").as("n2"),
-        sum(col("c1").cast(dec) * col("__R2").cast(dec)).as("__tw"),
-        sum(col("__c").cast(dec) * col("__R2").cast(dec)).as("__sw"),
-        sum(col("__c").cast(dec) * col("__R2").cast(dec) * col("__R2").cast(dec))
+        sum(dec(col("c1")) * dec(col("__R2"))).as("__tw"),
+        sum(dec(col("__c")) * dec(col("__R2"))).as("__sw"),
+        sum(dec(col("__c")) * dec(col("__R2")) * dec(col("__R2")))
           .as("__sww"),
-        sum(col("c1").cast(dec) * col("__a2").cast(dec)).as("__ta"),
-        sum(col("__c").cast(dec) * col("__a2").cast(dec)).as("__sa"),
-        sum(col("__c").cast(dec) * col("__a2").cast(dec) * col("__a2").cast(dec))
+        sum(dec(col("c1")) * dec(col("__a2"))).as("__ta"),
+        sum(dec(col("__c")) * dec(col("__a2"))).as("__sa"),
+        sum(dec(col("__c")) * dec(col("__a2")) * dec(col("__a2")))
           .as("__saa"))
     def z(t: Column, s: Column, ss: Column): Column = {
-      val nn = col("__N").cast(dec)
-      val num = nn * t - col("n1").cast(dec) * s
-      val v = col("n1").cast(dec) * col("n2").cast(dec) * (nn * ss - s * s)
+      val nn = dec(col("__N"))
+      val num = nn * t - dec(col("n1")) * s
+      val v = dec(col("n1")) * dec(col("n2")) * (nn * ss - s * s)
       when(v > 0,
         d(num) / sqrt(d(v) / d(col("__N") - 1L)))
     }
@@ -453,8 +407,6 @@ private[operators] trait RollupsAgreement {
       blockCol: String,
       treatmentCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val cell = df.select(col(blockCol).as("__b"), col(treatmentCol).as("__tr"),
       col(valueCol).cast("long").as("__v"))
     val k = cell.select(countDistinct("__tr").as("__k"))
@@ -463,22 +415,17 @@ private[operators] trait RollupsAgreement {
       .crossJoin(broadcast(k))
       .filter(col("__bk") === col("__k"))
       .localCheckpoint() // feeds the rank frame and the range frame
-    val wIn = Window.partitionBy("__b").orderBy("__v")
-    val wInT = Window.partitionBy("__b", "__v")
-    val ranked = full.withColumn("__r2",
-      lit(2L) * rank().over(wIn) + count(lit(1)).over(wInT) - 1L)
+    val ranked = full.withColumn("__r2", rowMidrank2(Seq(col("__b")), col("__v")))
     val ranges = full.groupBy("__b")
       .agg(max("__v").as("__hi"), min("__v").as("__lo"), max("__k").as("__kk"))
       .withColumn("__rng", col("__hi") - col("__lo"))
-      .withColumn("__q2",
-        lit(2L) * rank().over(Window.orderBy("__rng")) +
-          count(lit(1)).over(Window.partitionBy("__rng")) - 1L)
+      .withColumn("__q2", rowMidrank2(Nil, col("__rng")))
       .select(col("__b"), col("__q2"), col("__kk"))
     val s4 = ranked.join(ranges, "__b")
       .withColumn("__s4", col("__q2") * (col("__r2") - (col("__kk") + 1L)))
     val perTr = s4.groupBy("__tr")
-      .agg(sum(col("__s4").cast(dec)).as("__sj"),
-        sum(col("__s4").cast(dec) * col("__s4").cast(dec)).as("__sjj"),
+      .agg(sum(dec(col("__s4"))).as("__sj"),
+        sum(dec(col("__s4")) * dec(col("__s4"))).as("__sjj"),
         countDistinct("__b").as("__nb"))
     perTr.groupBy()
       .agg(max("__nb").as("n_blocks"), count(lit(1)).as("k"),
@@ -486,9 +433,9 @@ private[operators] trait RollupsAgreement {
         sum(col("__sjj")).as("__asum"))
       .select(col("n_blocks"), col("k"),
         round(when(
-          col("n_blocks").cast(dec) * col("__asum") - col("__bsum") > 0,
+          dec(col("n_blocks")) * col("__asum") - col("__bsum") > 0,
           d(col("n_blocks") - 1L) * d(col("__bsum")) /
-            d(col("n_blocks").cast(dec) * col("__asum") - col("__bsum"))), 4)
+            d(dec(col("n_blocks")) * col("__asum") - col("__bsum"))), 4)
           .as("f_quade"))
   }
 
@@ -516,8 +463,6 @@ private[operators] trait RollupsAgreement {
       catCol: String,
       raters: Int): DataFrame = {
     require(raters >= 2)
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val cells = df.groupBy(col(unitCol).as("__u"), col(catCol).as("__c"))
       .agg(count(lit(1)).as("__n"))
       .localCheckpoint() // feeds the unit rollup AND the marginals
@@ -525,16 +470,16 @@ private[operators] trait RollupsAgreement {
       .agg(sum("__n").as("__r"), sum(col("__n") * col("__n")).as("__sq"))
       .filter(col("__r") === raters.toLong)
     val perUnit = units.agg(count(lit(1)).as("__nu"),
-      sum(col("__sq").cast(dec)).as("__a0"))
+      sum(dec(col("__sq"))).as("__a0"))
     val marg = cells.join(units.select("__u"), "__u")
       .groupBy("__c").agg(sum("__n").as("__cj"))
-      .agg(sum(col("__cj").cast(dec) * col("__cj").cast(dec)).as("__b"))
+      .agg(sum(dec(col("__cj")) * dec(col("__cj"))).as("__b"))
     perUnit.crossJoin(broadcast(marg))
-      .withColumn("__n", col("__nu").cast(dec))
-      .withColumn("__r", lit(raters.toLong).cast(dec))
+      .withColumn("__n", dec(col("__nu")))
+      .withColumn("__r", dec(lit(raters.toLong)))
       .withColumn("__nr", col("__n") * col("__r"))
       .withColumn("__a", col("__a0") - col("__nr"))
-      .withColumn("__d", col("__n") * col("__r") * (col("__r") - lit(1L).cast(dec)))
+      .withColumn("__d", col("__n") * col("__r") * (col("__r") - dec(lit(1L))))
       .select(col("__nu").as("n_units"), lit(raters.toLong).as("n_raters"),
         round(d(col("__a")) / d(col("__d")), 4).as("p_bar"),
         round(d(col("__b")) / d(col("__nr") * col("__nr")), 4).as("p_e"),
@@ -565,38 +510,36 @@ private[operators] trait RollupsAgreement {
       valueCol: String,
       k: Int): DataFrame = {
     require(k >= 2)
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val units = df
       .select(col(unitCol).as("__u"), col(valueCol).cast("long").as("__y"))
       .groupBy("__u")
       .agg(count(lit(1)).as("__r"), sum("__y").as("__t"),
-        sum(col("__y").cast(dec) * col("__y")).as("__v"))
+        sum(dec(col("__y")) * col("__y")).as("__v"))
       .filter(col("__r") === k.toLong)
     units
       .agg(count(lit(1)).as("__n"),
-        sum(col("__t").cast(dec)).as("__g"),
-        sum(col("__t").cast(dec) * col("__t")).as("__uu"),
+        sum(dec(col("__t"))).as("__g"),
+        sum(dec(col("__t")) * col("__t")).as("__uu"),
         sum(col("__v")).as("__vv"))
-      .withColumn("__nn", col("__n").cast(dec))
-      .withColumn("__kk", lit(k.toLong).cast(dec))
+      .withColumn("__nn", dec(col("__n")))
+      .withColumn("__kk", dec(lit(k.toLong)))
       .withColumn("__a",
         (col("__nn") * col("__uu") - col("__g") * col("__g")) *
-          (col("__kk") - lit(1L).cast(dec)))
+          (col("__kk") - dec(lit(1L))))
       .withColumn("__b",
         (col("__kk") * col("__vv") - col("__uu")) *
-          (col("__nn") - lit(1L).cast(dec)))
+          (col("__nn") - dec(lit(1L))))
       .select(col("__n").as("n_units"), lit(k.toLong).as("k"),
         round(when(col("__n") > 1L,
           d(col("__nn") * col("__uu") - col("__g") * col("__g")) /
-            d(col("__nn") * col("__kk") * (col("__nn") - lit(1L).cast(dec)))), 4)
+            d(col("__nn") * col("__kk") * (col("__nn") - dec(lit(1L))))), 4)
           .as("msb"),
         round(d(col("__kk") * col("__vv") - col("__uu")) /
-          d(col("__kk") * col("__nn") * (col("__kk") - lit(1L).cast(dec))), 4)
+          d(col("__kk") * col("__nn") * (col("__kk") - dec(lit(1L)))), 4)
           .as("msw"),
-        round(when(col("__a") + (col("__kk") - lit(1L).cast(dec)) * col("__b") > 0,
+        round(when(col("__a") + (col("__kk") - dec(lit(1L))) * col("__b") > 0,
           d(col("__a") - col("__b")) /
-            d(col("__a") + (col("__kk") - lit(1L).cast(dec)) * col("__b"))), 4)
+            d(col("__a") + (col("__kk") - dec(lit(1L))) * col("__b"))), 4)
           .as("icc"))
   }
 
@@ -621,28 +564,26 @@ private[operators] trait RollupsAgreement {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val cells = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
       .groupBy("__x", "__y").agg(count(lit(1)).as("__c"))
       .localCheckpoint() // feeds both sides of the cell cross
     val a = cells.select(col("__x").as("x1"), col("__y").as("y1"),
-      col("__c").as("c1"))
+      col("__c").as("w1"))
     val b = cells.select(col("__x").as("x2"), col("__y").as("y2"),
-      col("__c").as("c2"))
-    val w = col("c1").cast(dec) * col("c2").cast(dec)
+      col("__c").as("w2"))
+    val w = dec(col("w1")) * dec(col("w2"))
     val pairs = a.crossJoin(broadcast(b))
       .agg(
         sum(when(col("x2") > col("x1") && col("y2") > col("y1"), w)
-          .otherwise(lit(0L).cast(dec))).as("__cc"),
+          .otherwise(dec(lit(0L)))).as("__cc"),
         sum(when(col("x2") > col("x1") && col("y2") < col("y1"), w)
-          .otherwise(lit(0L).cast(dec))).as("__dd"),
+          .otherwise(dec(lit(0L)))).as("__dd"),
         sum(when(col("x2") === col("x1") && col("y2") > col("y1"), w)
-          .otherwise(lit(0L).cast(dec))).as("__tx"),
+          .otherwise(dec(lit(0L)))).as("__tx"),
         sum(when(col("y2") === col("y1") && col("x2") > col("x1"), w)
-          .otherwise(lit(0L).cast(dec))).as("__ty"))
+          .otherwise(dec(lit(0L)))).as("__ty"))
     val tot = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .agg(count(lit(1)).as("n"))
     tot.crossJoin(broadcast(pairs))
@@ -685,8 +626,6 @@ private[operators] trait RollupsAgreement {
       yCol: String,
       bins: Int = 10): DataFrame = {
     require(bins >= 3)
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val perBin = df
       .withColumn("__bin",
         least(floor(col(pCol) * bins).cast("int"), lit(bins - 1)))
@@ -695,12 +634,12 @@ private[operators] trait RollupsAgreement {
         sum(when(col(yCol), 1L).otherwise(0L)).as("__og"),
         sum(round(col(pCol) * 10000).cast("long")).as("__sq"))
       .filter(col("__sq") > 0 && col("__sq") < col("__ng") * 10000L)
-    val diff = col("__og").cast(dec) * 10000L - col("__sq").cast(dec)
+    val diff = dec(col("__og")) * 10000L - dec(col("__sq"))
     perBin
       .withColumn("__term",
-        floor(d(diff * diff * col("__ng").cast(dec)) /
-          d(col("__sq").cast(dec) *
-            (col("__ng").cast(dec) * 10000L - col("__sq").cast(dec))) *
+        floor(d(diff * diff * dec(col("__ng"))) /
+          d(dec(col("__sq")) *
+            (dec(col("__ng")) * 10000L - dec(col("__sq")))) *
           1e9 + 0.5).cast("long"))
       .groupBy()
       .agg(sum("__ng").as("n"), count(lit(1)).as("g"),
@@ -731,7 +670,6 @@ private[operators] trait RollupsAgreement {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     // no checkpoint: the windows chain linearly over the one cell
     // aggregate (and PlanLint must SEE that aggregate below the
     // global window to classify it cell-grain)

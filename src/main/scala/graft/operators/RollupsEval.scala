@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * calibration error, Gini concentration. Mixed into the `Rollups`
   * object, so every call site and registry entry is unchanged.
   */
-private[operators] trait RollupsEval {
+private[operators] trait RollupsEval extends RollupsScaleForms {
   /** Krippendorff's alpha for BINARY ratings, any number of raters
     * per unit, missing data handled the canonical way (units with
     * fewer than 2 ratings drop; raters need not overlap) — the
@@ -32,8 +32,6 @@ private[operators] trait RollupsEval {
       ratings: DataFrame,
       itemCol: String,
       ratingCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
     val units = ratings
       .filter(col(ratingCol).isNotNull)
       .groupBy(col(itemCol))
@@ -53,13 +51,13 @@ private[operators] trait RollupsEval {
       .withColumn("do_rate",
         round(d(col("__o01")) / 1e6 / col("n_ratings"), 4))
       .withColumn("de_rate", round(
-        lit(2.0) * d(col("__n0").cast(dec) * col("__n1").cast(dec))
-          / d(col("n_ratings").cast(dec) * (col("n_ratings") - 1).cast(dec)), 4))
+        lit(2.0) * d(dec(col("__n0")) * dec(col("__n1")))
+          / d(dec(col("n_ratings")) * dec(col("n_ratings") - 1)), 4))
       .withColumn("alpha",
         when(col("__n0") === 0 || col("__n1") === 0, lit(null))
           .otherwise(round(lit(1.0) -
             (d(col("__o01")) / 1e6) * (col("n_ratings") - 1)
-              / (lit(2.0) * d(col("__n0").cast(dec) * col("__n1").cast(dec))), 4)))
+              / (lit(2.0) * d(dec(col("__n0")) * dec(col("__n1")))), 4)))
       .select(col("n_units"), col("n_ratings"), col("do_rate"),
         col("de_rate"), col("alpha"))
   }
@@ -80,7 +78,6 @@ private[operators] trait RollupsEval {
       judgeBCol: String): DataFrame = {
     val a = col(judgeACol).cast("boolean")
     val b = col(judgeBCol).cast("boolean")
-    val d = (c: Column) => c.cast("double")
     df.filter(a.isNotNull && b.isNotNull)
       .agg(
         count(lit(1)).as("n"),
@@ -124,7 +121,6 @@ private[operators] trait RollupsEval {
       labelCol: String): DataFrame = {
     val u = round(col(confCol) * 10000).cast("long")
     val y = when(col(labelCol).cast("boolean"), 1L).otherwise(0L)
-    val d = (c: Column) => c.cast("double")
     df.filter(col(confCol).isNotNull)
       .select(u.as("__u"), y.as("__y"))
       .agg(
@@ -168,23 +164,7 @@ private[operators] trait RollupsEval {
       df: DataFrame,
       blockCol: Column,
       treatCol: Column): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val cells = df
-      .groupBy(blockCol.as("b"), treatCol.as("g"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val dense = cells.select("b").distinct()
-      .crossJoin(broadcast(cells.select("g").distinct()))
-      .join(cells, Seq("b", "g"), "left")
-      .select(col("b"), col("g"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val w = Window.partitionBy("b").orderBy("cnt")
-    val ranked = dense
-      .withColumn("__t",
-        count(lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__cumb", coalesce(
-        count(lit(1)).over(w.rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__cumb") + col("__t") + 1L)
-      .localCheckpoint() // feeds the treatment rollup AND the tie rollup
+    val ranked = blockMidranks(df, blockCol, treatCol)
     val perT = ranked.groupBy("g").agg(sum("__r2").as("__s2"))
       .agg(count(lit(1)).as("k"),
         sum(col("__s2") * col("__s2")).as("__rr4")) // 4·ΣR² exactly
@@ -231,7 +211,6 @@ private[operators] trait RollupsEval {
     val u = greatest(lit(1L), least(lit(9999L),
       round(col(confCol) * 10000).cast("long")))
     val y = when(col(labelCol).cast("boolean"), 1L).otherwise(0L)
-    val d = (c: Column) => c.cast("double")
     df.filter(col(confCol).isNotNull)
       .select(u.as("__u"), y.as("__y"))
       .withColumn("__t",
@@ -277,7 +256,6 @@ private[operators] trait RollupsEval {
       keys: Seq[String],
       tCol: String,
       valCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val wKey = Window.partitionBy(keys.map(col): _*)
     val byV = wKey.orderBy(col("__v"))
     val byT = wKey.orderBy(col("__t"))
@@ -286,12 +264,7 @@ private[operators] trait RollupsEval {
     val ranked = df
       .select(keys.map(col) ++ Seq(col(tCol).cast("long").as("__t"),
         col(valCol).cast("long").as("__v")): _*)
-      .withColumn("__lt", coalesce(
-        count(lit(1)).over(byV.rangeBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("__eq",
-        count(lit(1)).over(byV.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__r2", lit(2L) * col("__lt") + col("__eq") + 1L)
+      .withColumn("__r2", midrank2(byV, lit(1L), tieCount(byV, lit(1L))))
       .withColumn("__n", count(lit(1)).over(wKey))
       .withColumn("__idx", row_number().over(byT))
       .withColumn("__u",
@@ -327,8 +300,6 @@ private[operators] trait RollupsEval {
       labelCol: String): DataFrame = {
     val p = col(predCol).cast("boolean")
     val y = col(labelCol).cast("boolean")
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
     df.filter(p.isNotNull && y.isNotNull)
       .agg(
         count(lit(1)).as("n"),
@@ -338,11 +309,11 @@ private[operators] trait RollupsEval {
         sum(when(!p && !y, 1L).otherwise(0L)).as("tn"))
       .filter(col("n") > 0)
       .withColumn("__num",
-        col("tp").cast(dec) * col("tn").cast(dec) -
-          col("fp").cast(dec) * col("fn").cast(dec))
+        dec(col("tp")) * dec(col("tn")) -
+          dec(col("fp")) * dec(col("fn")))
       .withColumn("__den", sqrt(
-        d((col("tp") + col("fp")).cast(dec) * (col("tp") + col("fn")).cast(dec) *
-          (col("tn") + col("fp")).cast(dec) * (col("tn") + col("fn")).cast(dec))))
+        d(dec(col("tp") + col("fp")) * dec(col("tp") + col("fn")) *
+          dec(col("tn") + col("fp")) * dec(col("tn") + col("fn")))))
       .select(col("n"), col("tp"), col("fp"), col("fn"), col("tn"),
         round(d(col("__num")) /
           when(col("__den") === 0, lit(null)).otherwise(col("__den")), 4)
@@ -377,7 +348,6 @@ private[operators] trait RollupsEval {
     val all = Window.partitionBy()
     val desc = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
     rows.crossJoin(broadcast(bounds))
       .withColumn("__bin",
         aggregate(col("__bs"), lit(0),
@@ -425,7 +395,6 @@ private[operators] trait RollupsEval {
     val all = Window.partitionBy()
     val desc = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
     rows.crossJoin(broadcast(bounds))
       .withColumn("__bin",
         aggregate(col("__bs"), lit(0),
@@ -503,7 +472,6 @@ private[operators] trait RollupsEval {
       .select(transform(col("__p"), b => round(b, 4)).as("__bs"))
     val desc = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
     rows.crossJoin(broadcast(bounds))
       .withColumn("__bin",
         aggregate(col("__bs"), lit(0),
@@ -550,10 +518,8 @@ private[operators] trait RollupsEval {
       keys: Seq[String],
       valueCol: String,
       idCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
     val base = df.filter(col(valueCol).isNotNull)
-      .select((keys.map(col) :+ col(idCol) :+ cents.as("__c")): _*)
+      .select((keys.map(col) :+ col(idCol) :+ cents(col(valueCol)).as("__c")): _*)
     val med = base.groupBy(keys.map(col): _*)
       .agg(round(percentile(col("__c"), lit(0.5)), 4).as("__med"))
     val mad = base.join(broadcast(med), keys)
@@ -602,7 +568,6 @@ private[operators] trait RollupsEval {
     val all = Window.partitionBy()
     val desc = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
     rows.crossJoin(broadcast(bounds))
       .withColumn("__bin",
         aggregate(col("__bs"), lit(0),
@@ -642,7 +607,6 @@ private[operators] trait RollupsEval {
       armB: String,
       expectedShareA: Double = 0.5): DataFrame = {
     require(expectedShareA > 0 && expectedShareA < 1)
-    val d = (c: Column) => c.cast("double")
     df.filter(col(groupCol).isin(armA, armB))
       .agg(
         sum(when(col(groupCol) === armA, 1L).otherwise(0L)).as("n_a"),
@@ -691,10 +655,8 @@ private[operators] trait RollupsEval {
       period: Int = 7,
       halfWindow: Int = 3): DataFrame = {
     require(period >= 2 && halfWindow >= 1)
-    val dec = "decimal(38,0)"
     val byKey = Window.partitionBy(keys.map(col): _*)
     val fr = byKey.orderBy(col(xCol)).rowsBetween(-halfWindow, halfWindow)
-    val d = (c: Column) => c.cast("double")
     val base = series
       .withColumn("__tu",
         round(d(sum(round(col(yCol)).cast("long")).over(fr)) /
@@ -704,13 +666,13 @@ private[operators] trait RollupsEval {
       .localCheckpoint()
     val seas = base
       .groupBy((keys.map(col) :+ col("phase")): _*)
-      .agg(count(lit(1)).as("n"), sum(col("__du").cast(dec)).as("__sd"))
+      .agg(count(lit(1)).as("n"), sum(dec(col("__du"))).as("__sd"))
       .withColumn("__su", round(d(col("__sd")) / col("n")).cast("long"))
     val resid = base
       .join(broadcast(seas.select(
         (keys.map(col) :+ col("phase") :+ col("__su")): _*)),
         keys :+ "phase")
-      .withColumn("__r", (col("__du") - col("__su")).cast(dec))
+      .withColumn("__r", dec(col("__du") - col("__su")))
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__rn"), sum(col("__r")).as("__rs"),
         sum(col("__r") * col("__r")).as("__rq"))
@@ -749,10 +711,8 @@ private[operators] trait RollupsEval {
       halfWindow: Int = 3,
       nSigma: Double = 3.0): DataFrame = {
     require(period >= 2 && halfWindow >= 1 && nSigma > 0)
-    val dec = "decimal(38,0)"
     val byKey = Window.partitionBy(keys.map(col): _*)
     val fr = byKey.orderBy(col(xCol)).rowsBetween(-halfWindow, halfWindow)
-    val d = (c: Column) => c.cast("double")
     val base = series
       .withColumn("__tu",
         round(d(sum(round(col(yCol)).cast("long")).over(fr)) /
@@ -762,11 +722,11 @@ private[operators] trait RollupsEval {
       .localCheckpoint()
     val seas = base
       .groupBy((keys.map(col) :+ col("phase")): _*)
-      .agg(sum(col("__du").cast(dec)).as("__sd"), count(lit(1)).as("__pn"))
+      .agg(sum(dec(col("__du"))).as("__sd"), count(lit(1)).as("__pn"))
       .select((keys.map(col) :+ col("phase") :+
         round(d(col("__sd")) / col("__pn")).cast("long").as("__su")): _*)
     val withSeas = base.join(broadcast(seas), keys :+ "phase")
-      .withColumn("__r", (col("__du") - col("__su")).cast(dec))
+      .withColumn("__r", dec(col("__du") - col("__su")))
       .localCheckpoint()
     val sd = withSeas
       .groupBy(keys.map(col): _*)
@@ -811,10 +771,8 @@ private[operators] trait RollupsEval {
       period: Int = 7,
       halfWindow: Int = 3): DataFrame = {
     require(period >= 2 && halfWindow >= 1)
-    val dec = "decimal(38,0)"
     val byKey = Window.partitionBy(keys.map(col): _*)
     val fr = byKey.orderBy(col(xCol)).rowsBetween(-halfWindow, halfWindow)
-    val d = (c: Column) => c.cast("double")
     val base = series
       .withColumn("__tu",
         round(d(sum(round(col(yCol)).cast("long")).over(fr)) /
@@ -824,7 +782,7 @@ private[operators] trait RollupsEval {
       .localCheckpoint()
     val seas = base
       .groupBy((keys.map(col) :+ col("phase")): _*)
-      .agg(sum(col("__du").cast(dec)).as("__sd"), count(lit(1)).as("__pn"))
+      .agg(sum(dec(col("__du"))).as("__sd"), count(lit(1)).as("__pn"))
       .select((keys.map(col) :+ col("phase") :+
         round(d(col("__sd")) / col("__pn")).cast("long").as("__su")): _*)
     def strength(q: Column, s: Column, rq: Column, rs: Column, n: Column) = {
@@ -836,10 +794,10 @@ private[operators] trait RollupsEval {
         .otherwise(greatest(lit(0.0), lit(1.0) - varR / varX)), 4)
     }
     base.join(broadcast(seas), keys :+ "phase")
-      .withColumn("__r", (col("__du") - col("__su")).cast(dec))
-      .withColumn("__sr", col("__du").cast(dec))
+      .withColumn("__r", dec(col("__du") - col("__su")))
+      .withColumn("__sr", dec(col("__du")))
       .withColumn("__tr",
-        (round(col(yCol)).cast("long") * 1000000L - col("__su")).cast(dec))
+        dec(round(col(yCol)).cast("long") * 1000000L - col("__su")))
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_points"),
         sum(col("__r")).as("__rs"), sum(col("__r") * col("__r")).as("__rq"),
@@ -876,7 +834,6 @@ private[operators] trait RollupsEval {
       confCol: String,
       labelCol: String): DataFrame = {
     val all = Window.partitionBy()
-    val d = (c: Column) => c.cast("double")
     df.filter(col(confCol).isNotNull)
       .select(
         least(floor(col(confCol) * 10).cast("long"), lit(9L)).as("bin"),
@@ -915,23 +872,19 @@ private[operators] trait RollupsEval {
     * Output: one row (n, total, gini).
     */
   def giniConcentration(df: DataFrame, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = df
       .filter(col(valueCol).isNotNull && col(valueCol) >= 0)
       .groupBy(col(valueCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d = (c: Column) => c.cast("double")
-    Rollups.grainGuarded(pts, w, "giniConcentration")
-      .withColumn("__cb", sum(col("c")).over(w) - col("c"))
+    grainGuarded(pts, cumRows, "giniConcentration")
+      .withColumn("__cb", sum(col("c")).over(cumRows) - col("c"))
       .withColumn("__s",
-        col("v").cast(dec) * (col("c").cast(dec) * col("__cb").cast(dec) +
-          expr("(c * (c + 1)) div 2").cast(dec)))
+        dec(col("v")) * (dec(col("c")) * dec(col("__cb")) +
+          dec(expr("(c * (c + 1)) div 2"))))
       .agg(
         sum(col("c")).as("n"),
-        sum(col("v").cast(dec) * col("c").cast(dec)).as("__T"),
+        sum(dec(col("v")) * dec(col("c"))).as("__T"),
         sum(col("__s")).as("__S"))
       .select(col("n"),
         col("__T").cast("long").as("total"),

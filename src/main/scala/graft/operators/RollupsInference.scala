@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * always-valid family. Mixed into the `Rollups` object, so every
   * call site and registry entry is unchanged.
   */
-private[operators] trait RollupsInference {
+private[operators] trait RollupsInference extends RollupsScaleForms {
   /** Randomization (permutation) test for an A/B mean difference —
     * the assumption-free p-value: relabel every row's arm by a
     * seeded md5 coin `reps` times, and p = (1 + #{|d_perm| ≥
@@ -53,8 +53,6 @@ private[operators] trait RollupsInference {
       ordered: Seq[String]): DataFrame = {
     val G = ordered.size
     require(G >= 2, s"need >= 2 ordered groups, got $G")
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val score = ordered.zipWithIndex.foldLeft(lit(null).cast("int")) {
       case (acc, (g, i)) => when(col(groupCol) === g, lit(i + 1)).otherwise(acc)
     }
@@ -64,9 +62,9 @@ private[operators] trait RollupsInference {
       .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__r"))
       .agg(
         sum(col("__n")).as("n"), sum(col("__r")).as("successes"),
-        sum(col("__w").cast(dec) * col("__n")).as("__wn"),
-        sum(col("__w").cast(dec) * col("__w") * col("__n")).as("__wwn"),
-        sum(col("__w").cast(dec) * col("__r")).as("__wr"))
+        sum(dec(col("__w")) * col("__n")).as("__wn"),
+        sum(dec(col("__w")) * col("__w") * col("__n")).as("__wwn"),
+        sum(dec(col("__w")) * col("__r")).as("__wr"))
       .withColumn("__t",
         col("__wr") * col("n") - col("__wn") * col("successes"))
       .withColumn("__var",
@@ -108,31 +106,26 @@ private[operators] trait RollupsInference {
       ordered: Seq[String]): DataFrame = {
     val G = ordered.size
     require(G >= 2, s"need >= 2 ordered groups, got $G")
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long")
     val pts = df
       .filter(col(valueCol).isNotNull && col(groupCol).isin(ordered: _*))
-      .groupBy(cents.as("v"))
+      .groupBy(cents(col(valueCol)).as("v"))
       .agg(ordered.zipWithIndex.map { case (g, i) =>
         sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"c${i + 1}")
       }.head, ordered.zipWithIndex.tail.map { case (g, i) =>
         sum(when(col(groupCol) === g, 1L).otherwise(0L)).as(s"c${i + 1}")
       }: _*)
       .localCheckpoint() // feeds the CDF window AND the totals
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = pts.agg(
       sum(col("c1")).as("n1"),
       (2 to G).map(i => sum(col(s"c$i")).as(s"n$i")): _*)
-    var t = Rollups.grainGuarded(pts, w, "jonckheereTerpstra")
-    for (i <- 1 to G) t = t.withColumn(s"f$i", sum(col(s"c$i")).over(w))
+    var t = grainGuarded(pts, cumRows, "jonckheereTerpstra")
+    for (i <- 1 to G) t = t.withColumn(s"f$i", sum(col(s"c$i")).over(cumRows))
     // doubled per-row contribution: Σ_{i<j} 2·c_i·(n_j − F_j) + c_i·c_j
     val rowTerm = (for { i <- 1 to G; j <- (i + 1) to G } yield
-      col(s"c$i").cast(dec) * (col(s"n$j") - col(s"f$j")) * 2 +
-        col(s"c$i").cast(dec) * col(s"c$j")).reduce(_ + _)
+      dec(col(s"c$i")) * (col(s"n$j") - col(s"f$j")) * 2 +
+        dec(col(s"c$i")) * col(s"c$j")).reduce(_ + _)
     val nSum = (1 to G).map(i => col(s"n$i")).reduce(_ + _)
-    val sqSum = (1 to G).map(i => col(s"n$i").cast(dec) * col(s"n$i"))
+    val sqSum = (1 to G).map(i => dec(col(s"n$i")) * col(s"n$i"))
       .reduce(_ + _)
     val varSum = (1 to G).map(i =>
       d(col(s"n$i")) * d(col(s"n$i")) * (lit(2.0) * d(col(s"n$i")) + 3))
@@ -141,7 +134,7 @@ private[operators] trait RollupsInference {
       .groupBy((1 to G).map(i => col(s"n$i")): _*)
       .agg(sum(rowTerm).as("__jt2"))
       .withColumn("n", nSum.cast("long"))
-      .withColumn("__e2", col("n").cast(dec) * col("n") - sqSum)
+      .withColumn("__e2", dec(col("n")) * col("n") - sqSum)
       .withColumn("__var",
         (d(col("n")) * d(col("n")) * (lit(2.0) * d(col("n")) + 3) - varSum)
           / 72.0)
@@ -162,14 +155,12 @@ private[operators] trait RollupsInference {
       reps: Int = 64,
       salt: String = "perm"): DataFrame = {
     require(reps > 0)
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
     // spread(): the md5-heavy scan must not run on the driver tables'
     // 1-2 parquet splits (the q173 single-task measurement, r16).
     val rows = graft.operators.spread(df
       .filter(col(valueCol).isNotNull && col(idCol).isNotNull &&
         col(groupCol).isin(armA, armB))
-      .select((col(groupCol) === armB).as("__b"), cents.as("__c"),
+      .select((col(groupCol) === armB).as("__b"), cents(col(valueCol)).as("__c"),
         col(idCol).cast("string").as("__id")))
     // r17 (guide §2.3/§4): ONE aggregate pass replaces the ×reps
     // explode + separate observed-diff pass. RepWeightVec with the
@@ -217,7 +208,7 @@ private[operators] trait RollupsInference {
     obs.crossJoin(broadcast(tail))
       .select(col("n_a"), col("n_b"),
         round(col("__obs") / 100.0, 4).as("diff"), col("n_reps"),
-        round((lit(1L) + col("__ge")).cast("double") /
+        round(d(lit(1L) + col("__ge")) /
           (col("n_reps") + 1L), 4).as("p_value"))
   }
 
@@ -244,11 +235,9 @@ private[operators] trait RollupsInference {
       armB: String,
       trim: Double = 0.2): DataFrame = {
     require(trim > 0 && trim < 0.5)
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
     val rows = df
       .filter(col(valueCol).isNotNull && col(groupCol).isin(armA, armB))
-      .select(col(groupCol).as("__g"), cents.as("__c"))
+      .select(col(groupCol).as("__g"), cents(col(valueCol)).as("__c"))
       .localCheckpoint()
     val th = rows.groupBy("__g")
       .agg(percentile(col("__c"), typedLit(Seq(trim, 1 - trim))).as("__p"))
@@ -316,21 +305,19 @@ private[operators] trait RollupsInference {
       valueCol: String,
       armA: String,
       armB: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long").cast(dec)
-    val zero = lit(0L).cast(dec)
-    val d = (c: Column) => c.cast("double")
+    val x = dec(cents(col(valueCol)))
+    val zero = dec(lit(0L))
     val all = Window.partitionBy()
     val seg = df
       .filter(col(valueCol).isNotNull && col(groupCol).isin(armA, armB))
       .groupBy(col(segmentCol).as("segment"))
       .agg(
         sum(when(col(groupCol) === armA, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col(groupCol) === armA, cents).otherwise(zero)).as("__sa"),
-        sum(when(col(groupCol) === armA, cents * cents).otherwise(zero)).as("__qa"),
+        sum(when(col(groupCol) === armA, x).otherwise(zero)).as("__sa"),
+        sum(when(col(groupCol) === armA, x * x).otherwise(zero)).as("__qa"),
         sum(when(col(groupCol) === armB, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col(groupCol) === armB, cents).otherwise(zero)).as("__sb"),
-        sum(when(col(groupCol) === armB, cents * cents).otherwise(zero)).as("__qb"))
+        sum(when(col(groupCol) === armB, x).otherwise(zero)).as("__sb"),
+        sum(when(col(groupCol) === armB, x * x).otherwise(zero)).as("__qb"))
       .filter(col("n_a") > 1 && col("n_b") > 1)
       .withColumn("__va",
         (d(col("__qa")) - d(col("__sa")) * d(col("__sa")) / col("n_a")) / (col("n_a") - 1))
@@ -380,17 +367,15 @@ private[operators] trait RollupsInference {
       covariateCol: String,
       armA: String,
       armB: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val y = round(col(metricCol) * 100).cast("long").cast(dec)
-    val x = round(col(covariateCol) * 100).cast("long").cast(dec)
-    val d = (c: Column) => c.cast("double")
+    val y = dec(cents(col(metricCol)))
+    val x = dec(cents(col(covariateCol)))
     def arm(a: String, pfx: String) = Seq(
       sum(when(col(groupCol) === a, lit(1L)).otherwise(0L)).as(s"n_$pfx"),
-      sum(when(col(groupCol) === a, y).otherwise(lit(0L).cast(dec))).as(s"__sy_$pfx"),
-      sum(when(col(groupCol) === a, x).otherwise(lit(0L).cast(dec))).as(s"__sx_$pfx"),
-      sum(when(col(groupCol) === a, y * y).otherwise(lit(0L).cast(dec))).as(s"__syy_$pfx"),
-      sum(when(col(groupCol) === a, x * x).otherwise(lit(0L).cast(dec))).as(s"__sxx_$pfx"),
-      sum(when(col(groupCol) === a, x * y).otherwise(lit(0L).cast(dec))).as(s"__sxy_$pfx"))
+      sum(when(col(groupCol) === a, y).otherwise(dec(lit(0L)))).as(s"__sy_$pfx"),
+      sum(when(col(groupCol) === a, x).otherwise(dec(lit(0L)))).as(s"__sx_$pfx"),
+      sum(when(col(groupCol) === a, y * y).otherwise(dec(lit(0L)))).as(s"__syy_$pfx"),
+      sum(when(col(groupCol) === a, x * x).otherwise(dec(lit(0L)))).as(s"__sxx_$pfx"),
+      sum(when(col(groupCol) === a, x * y).otherwise(dec(lit(0L)))).as(s"__sxy_$pfx"))
     val aggs = arm(armA, "a") ++ arm(armB, "b")
     val one = df
       .filter(col(metricCol).isNotNull && col(covariateCol).isNotNull &&
@@ -477,19 +462,17 @@ private[operators] trait RollupsInference {
       yCol: String,
       armA: String,
       armB: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
     def arm(a: String, p: String) = {
       val in = col(groupCol) === a
-      val x = col(xCol).cast("long").cast(dec)
-      val y = col(yCol).cast("long").cast(dec)
+      val x = dec(col(xCol).cast("long"))
+      val y = dec(col(yCol).cast("long"))
       Seq(
         sum(when(in, 1L).otherwise(0L)).as(s"n_$p"),
-        sum(when(in, x).otherwise(lit(0L).cast(dec))).as(s"__sx_$p"),
-        sum(when(in, y).otherwise(lit(0L).cast(dec))).as(s"__sy_$p"),
-        sum(when(in, x * x).otherwise(lit(0L).cast(dec))).as(s"__sxx_$p"),
-        sum(when(in, y * y).otherwise(lit(0L).cast(dec))).as(s"__syy_$p"),
-        sum(when(in, x * y).otherwise(lit(0L).cast(dec))).as(s"__sxy_$p"))
+        sum(when(in, x).otherwise(dec(lit(0L)))).as(s"__sx_$p"),
+        sum(when(in, y).otherwise(dec(lit(0L)))).as(s"__sy_$p"),
+        sum(when(in, x * x).otherwise(dec(lit(0L)))).as(s"__sxx_$p"),
+        sum(when(in, y * y).otherwise(dec(lit(0L)))).as(s"__syy_$p"),
+        sum(when(in, x * y).otherwise(dec(lit(0L)))).as(s"__sxy_$p"))
     }
     val aggs = arm(armA, "a") ++ arm(armB, "b")
     def stats(p: String): (Column, Column) = {
@@ -537,13 +520,11 @@ private[operators] trait RollupsInference {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
-    val cents = round(col(valueCol) * 100).cast("long").cast(dec)
+    val x = dec(cents(col(valueCol)))
     val g = df.filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol).as("g"))
-      .agg(count(lit(1)).as("n"), sum(cents).as("s"),
-        sum(cents * cents).as("q"))
+      .agg(count(lit(1)).as("n"), sum(x).as("s"),
+        sum(x * x).as("q"))
       .filter(col("n") >= 2)
       .withColumn("__ssw", d(col("q")) - d(col("s")) * d(col("s")) / col("n"))
       .localCheckpoint() // feeds the MSW total AND both pair sides
@@ -589,8 +570,6 @@ private[operators] trait RollupsInference {
       df: DataFrame,
       keyCol: String,
       successCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
     val keys = df
       .groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
@@ -600,7 +579,7 @@ private[operators] trait RollupsInference {
     val moments = keys.agg(
       count(lit(1)).as("__k"),
       sum(col("__ru")).as("__sr"),
-      sum(col("__ru").cast(dec) * col("__ru").cast(dec)).as("__qr"))
+      sum(dec(col("__ru")) * dec(col("__ru"))).as("__qr"))
     keys.crossJoin(broadcast(moments))
       .withColumn("__m", d(col("__sr")) / col("__k") / 1e6)
       .withColumn("__v",
@@ -644,7 +623,6 @@ private[operators] trait RollupsInference {
       tauSq: Double = 1e-4,
       alpha: Double = 0.05): DataFrame = {
     require(p0 > 0 && p0 < 1 && tauSq > 0)
-    val d = (c: Column) => c.cast("double")
     val byDay = df
       .groupBy(col(dayCol).as("day"))
       .agg(
@@ -697,20 +675,18 @@ private[operators] trait RollupsInference {
       dayCol: String,
       tauSq: Double = 1.0,
       alpha: Double = 0.05): DataFrame = {
-    val dec = "decimal(38,0)"
-    val d = (c: Column) => c.cast("double")
-    val cents = round(col(valueCol) * 100).cast("long").cast(dec)
-    val zero = lit(0L).cast(dec)
+    val x = dec(cents(col(valueCol)))
+    val zero = dec(lit(0L))
     val byDay = df
       .filter(col(valueCol).isNotNull && col(groupCol).isin(armA, armB))
       .groupBy(col(dayCol).as("day"))
       .agg(
         sum(when(col(groupCol) === armA, 1L).otherwise(0L)).as("__na"),
-        sum(when(col(groupCol) === armA, cents).otherwise(zero)).as("__sa"),
-        sum(when(col(groupCol) === armA, cents * cents).otherwise(zero)).as("__qa"),
+        sum(when(col(groupCol) === armA, x).otherwise(zero)).as("__sa"),
+        sum(when(col(groupCol) === armA, x * x).otherwise(zero)).as("__qa"),
         sum(when(col(groupCol) === armB, 1L).otherwise(0L)).as("__nb"),
-        sum(when(col(groupCol) === armB, cents).otherwise(zero)).as("__sb"),
-        sum(when(col(groupCol) === armB, cents * cents).otherwise(zero)).as("__qb"))
+        sum(when(col(groupCol) === armB, x).otherwise(zero)).as("__sb"),
+        sum(when(col(groupCol) === armB, x * x).otherwise(zero)).as("__qb"))
     val w = Window.partitionBy().orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = byDay
@@ -769,22 +745,11 @@ private[operators] trait RollupsInference {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val totals = pts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d = (c: Column) => c.cast("double")
-    Rollups.grainGuarded(pts, w, "cramerVonMises")
-      .withColumn("__f1", sum("c1").over(w))
-      .withColumn("__f2", sum("c2").over(w))
+    grainGuarded(pts, cumRows, "cramerVonMises")
+      .withColumn("__f1", sum("c1").over(cumRows))
+      .withColumn("__f2", sum("c2").over(cumRows))
       .crossJoin(broadcast(totals))
       .withColumn("__dv",
         dec(col("__f1")) * dec(col("n2")) - dec(col("__f2")) * dec(col("n1")))
@@ -825,24 +790,11 @@ private[operators] trait RollupsInference {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d = (c: Column) => c.cast("double")
-    val wAll = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Rollups.grainGuarded(pts, w, "moodTest")
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
+    val wAll = byValue.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    grainGuarded(pts, cumRows, "moodTest")
       .withColumn("__t", col("c1") + col("c2"))
-      .withColumn("__r2",
-        lit(2L) * (sum(col("__t")).over(w) - col("__t")) + col("__t") + 1L)
+      .withColumn("__r2", midrank2(byValue, col("__t"), col("__t")))
       .withColumn("__D", dec(col("__r2")) - dec(sum(col("__t")).over(wAll) + 1L))
       .agg(
         sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
@@ -887,25 +839,13 @@ private[operators] trait RollupsInference {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint()
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val med = broadcast(Rollups.grainGuarded(pts, w, "moodMedianTest")
-      .withColumn("__cum", sum(col("c1") + col("c2")).over(w))
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
+    val wAll = byValue.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val med = broadcast(grainGuarded(pts, cumRows, "moodMedianTest")
+      .withColumn("__cum", sum(col("c1") + col("c2")).over(cumRows))
       .withColumn("__n", sum(col("c1") + col("c2")).over(wAll))
       .filter(col("__cum") * 2L >= col("__n"))
       .agg(min(col("v")).as("__med")))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d = (c: Column) => c.cast("double")
     pts.crossJoin(med)
       .agg(
         sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
@@ -952,7 +892,6 @@ private[operators] trait RollupsInference {
   def mcnemar(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val a = col(aCol).cast("long")
     val b = col(bCol).cast("long")
-    val d = (c: Column) => c.cast("double")
     pairs
       .agg(
         count(lit(1)).as("n"),
@@ -987,14 +926,11 @@ private[operators] trait RollupsInference {
     * Output: one row (k, n, t_stat) — null when k < 2.
     */
   def bartlett(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long").as("__c")
     df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol).as("__g"), cents)
+      .select(col(groupCol).as("__g"), cents(col(valueCol)).as("__c"))
       .groupBy("__g")
-      .agg(count(lit(1)).as("__n"), sum(col("__c").cast(dec)).as("__s"),
-        sum(col("__c").cast(dec) * col("__c")).as("__q"))
+      .agg(count(lit(1)).as("__n"), sum(dec(col("__c"))).as("__s"),
+        sum(dec(col("__c")) * col("__c")).as("__q"))
       .filter(col("__n") >= 2)
       .withColumn("__v",
         (d(col("__q")) - d(col("__s")) * d(col("__s")) / col("__n")) /
@@ -1029,15 +965,12 @@ private[operators] trait RollupsInference {
     * vanishes.
     */
   def levene(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val cents = round(col(valueCol) * 100).cast("long").as("__c")
     val in = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol).as("__g"), cents)
+      .select(col(groupCol).as("__g"), cents(col(valueCol)).as("__c"))
     val sums = in.groupBy("__g")
-      .agg(count(lit(1)).as("__n"), sum(col("__c").cast(dec)).as("__s"))
+      .agg(count(lit(1)).as("__n"), sum(dec(col("__c"))).as("__s"))
     in.join(broadcast(sums), "__g")
-      .withColumn("__u", abs(col("__c").cast(dec) * col("__n") - col("__s")))
+      .withColumn("__u", abs(dec(col("__c")) * col("__n") - col("__s")))
       .groupBy("__g")
       .agg(max(col("__n")).as("__n"), sum(col("__u")).as("__us"),
         sum(col("__u") * col("__u")).as("__uq"))
@@ -1078,8 +1011,6 @@ private[operators] trait RollupsInference {
       blockCol: Column,
       treatCol: Column,
       hit: Column): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val cells = df
       .groupBy(blockCol.as("b"), treatCol.as("g"))
       .agg(max(when(hit, 1L).otherwise(0L)).as("x"))
@@ -1090,11 +1021,11 @@ private[operators] trait RollupsInference {
       .select(col("b"), col("g"), coalesce(col("x"), lit(0L)).as("x"))
       .localCheckpoint() // feeds the column totals AND the row totals
     val colT = dense.groupBy("g").agg(sum("x").as("__cj"))
-      .agg(count(lit(1)).as("k"), sum(col("__cj").cast(dec) * col("__cj")).as("__cc"),
+      .agg(count(lit(1)).as("k"), sum(dec(col("__cj")) * col("__cj")).as("__cc"),
         sum("__cj").as("__N"))
     val rowT = dense.groupBy("b").agg(sum("x").as("__ru"))
       .agg(count(lit(1)).as("b"), sum("__ru").as("__R"),
-        sum(col("__ru").cast(dec) * col("__ru")).as("__rr"))
+        sum(dec(col("__ru")) * col("__ru")).as("__rr"))
     colT.crossJoin(broadcast(rowT))
       .withColumn("__den", d(col("k")) * d(col("__R")) - d(col("__rr")))
       .select(col("k"), col("b"),
@@ -1124,23 +1055,7 @@ private[operators] trait RollupsInference {
       df: DataFrame,
       blockCol: Column,
       treatCol: Column): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val cells = df
-      .groupBy(blockCol.as("b"), treatCol.as("g"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val dense = cells.select("b").distinct()
-      .crossJoin(broadcast(cells.select("g").distinct()))
-      .join(cells, Seq("b", "g"), "left")
-      .select(col("b"), col("g"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val w = Window.partitionBy("b").orderBy("cnt")
-    val ranked = dense
-      .withColumn("__t",
-        count(lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__cumb", coalesce(
-        count(lit(1)).over(w.rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__cumb") + col("__t") + 1L)
-      .localCheckpoint() // feeds the treatment rollup AND the block count
+    val ranked = blockMidranks(df, blockCol, treatCol)
     val perT = ranked.groupBy("g").agg(sum("__r2").as("__s2"))
       .withColumn("__w",
         row_number().over(Window.orderBy("g")).cast("long"))
@@ -1184,7 +1099,6 @@ private[operators] trait RollupsInference {
       keys: Seq[String],
       orderCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val v2 = (col(valueCol).cast("long") * 2L).as("__v2")
     val med = df.groupBy(keys.map(col): _*)
       .agg(round(percentile(col(valueCol).cast("long") * 2L, lit(0.5)))
@@ -1236,8 +1150,6 @@ private[operators] trait RollupsInference {
       tsCol: String,
       periods: Seq[Int] = Seq(2, 3, 4, 5, 6, 7, 14, 30)): DataFrame = {
     require(periods.nonEmpty && periods.forall(p => p >= 2 && p < 1024))
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val daily = events
       .groupBy(keys.map(col) :+
         expr(s"unix_micros($tsCol) div 86400000000").as("__day"): _*)
@@ -1249,7 +1161,7 @@ private[operators] trait RollupsInference {
       .groupBy(keys.map(col) ++ Seq(col("period"), col("__r")): _*)
       .agg(sum("__n").as("__s"), count(lit(1)).as("__c"))
       .withColumn("__m",
-        floor(col("__s").cast("double") * 1e6 / col("__c")).cast("long"))
+        floor(d(col("__s")) * 1e6 / col("__c")).cast("long"))
     val w = Window.partitionBy(keys.map(col) :+ col("period"): _*)
     val power = phase
       .withColumn("__Ct", sum("__m").over(w))
@@ -1261,8 +1173,8 @@ private[operators] trait RollupsInference {
         expr("CAST(round(sin(2 * pi() * __r / period) * 1000) AS BIGINT)"))
       .groupBy(keys.map(col) :+ col("period"): _*)
       .agg(first(col("__P")).as("__np"),
-        sum(col("__cr").cast(dec) * col("__cw")).as("__A"),
-        sum(col("__cr").cast(dec) * col("__sw")).as("__B"))
+        sum(dec(col("__cr")) * col("__cw")).as("__A"),
+        sum(dec(col("__cr")) * col("__sw")).as("__B"))
       .withColumn("__pw",
         d(col("__A") * col("__A") + col("__B") * col("__B")) * 4.0 /
           (d(col("__np")) * col("__np") * col("__np") * col("__np")) / 1e18)
@@ -1301,7 +1213,6 @@ private[operators] trait RollupsInference {
     * Output (one row): n, r_levels, c_levels, dof, g_stat.
     */
   def gTest(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol), col(bCol)).agg(count(lit(1)).as("n_ab"))
@@ -1347,7 +1258,6 @@ private[operators] trait RollupsInference {
       strata: Column,
       exposed: Column,
       success: Column): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val cellTab = df
       .groupBy(strata.as("__t"))
       .agg(
@@ -1401,30 +1311,21 @@ private[operators] trait RollupsInference {
     * n_b, z — z null when σ² degenerates (all values tied).
     */
   def dunn(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val pts = df
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .groupBy(cents.as("v"), col(groupCol).as("g"))
+      .groupBy(cents(col(valueCol)).as("v"), col(groupCol).as("g"))
       .agg(count(lit(1)).as("n"))
       .localCheckpoint()
-    val ord = Window.orderBy("v")
-    val ranked = Rollups.grainGuarded(pts, ord, "dunn")
-      .withColumn("__t",
-        sum("n").over(ord.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__cumb", coalesce(
-        sum("n").over(ord.rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__cumb") + col("__t") + 1L)
+    val ranked = grainGuarded(pts, byValue, "dunn")
+      .withColumn("__t", tieCount(byValue, col("n")))
+      .withColumn("__r2", midrank2(byValue, col("n"), col("__t")))
     val perG = ranked.groupBy("g")
       .agg(sum("n").as("__ng"),
-        sum(col("n").cast(dec) * col("__r2")).as("__s2"))
+        sum(dec(col("n")) * col("__r2")).as("__s2"))
       .localCheckpoint()
     val tot = perG.agg(sum("__ng").as("__N")).crossJoin(
       pts.groupBy("v").agg(sum("n").as("__t"))
-        .agg(coalesce(
-          sum(col("__t").cast(dec) * col("__t") * col("__t") - col("__t")),
-          lit(0).cast(dec)).as("__tie3")))
+        .agg(tieCube(col("__t")).as("__tie3")))
     val a = perG.select(col("g").as("g_a"), col("__ng").as("n_a"),
       col("__s2").as("__sa"))
     val b = perG.select(col("g").as("g_b"), col("__ng").as("n_b"),
@@ -1469,22 +1370,11 @@ private[operators] trait RollupsInference {
       valueCol: String,
       groupA: String,
       groupB: String): DataFrame = {
-    val cents = round(col(valueCol) * 100).cast("long")
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val pts = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isin(groupA, groupB))
-      .groupBy(cents.as("v"))
-      .agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("c1"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("c2"))
-      .localCheckpoint() // feeds the CDF window and the totals
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val pts = twoGroupGrain(df, groupCol, valueCol, groupA, groupB)
     val totals = pts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    Rollups.grainGuarded(pts, w, "ad2Test")
-      .withColumn("__F1", sum("c1").over(w))
-      .withColumn("__F2", sum("c2").over(w))
+    grainGuarded(pts, cumRows, "ad2Test")
+      .withColumn("__F1", sum("c1").over(cumRows))
+      .withColumn("__F2", sum("c2").over(cumRows))
       .crossJoin(broadcast(totals))
       .withColumn("__N", col("n1") + col("n2"))
       .withColumn("__l", col("c1") + col("c2"))
@@ -1493,12 +1383,12 @@ private[operators] trait RollupsInference {
       .withColumn("__M21", lit(2L) * col("__F1") - col("c1"))
       .withColumn("__M22", lit(2L) * col("__F2") - col("c2"))
       .withColumn("__num1",
-        col("__M21").cast(dec) * col("__N") - col("__B2").cast(dec) * col("n1"))
+        dec(col("__M21")) * col("__N") - dec(col("__B2")) * col("n1"))
       .withColumn("__num2",
-        col("__M22").cast(dec) * col("__N") - col("__B2").cast(dec) * col("n2"))
+        dec(col("__M22")) * col("__N") - dec(col("__B2")) * col("n2"))
       .withColumn("__den",
-        col("__B2").cast(dec) * (lit(2L) * col("__N") - col("__B2")) -
-          col("__N").cast(dec) * col("__l"))
+        dec(col("__B2")) * (lit(2L) * col("__N") - col("__B2")) -
+          dec(col("__N")) * col("__l"))
       .withColumn("__t",
         when(col("__den") > 0,
           d(col("__N") - 1L) * col("__l") *
@@ -1534,9 +1424,7 @@ private[operators] trait RollupsInference {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val c2 = (round(col(valueCol) * 100).cast("long") * 2L).as("__c2")
+    val c2 = (cents(col(valueCol)) * 2L).as("__c2")
     val rows = df
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).as("g"), c2)
@@ -1547,16 +1435,13 @@ private[operators] trait RollupsInference {
       .groupBy("u", "g").agg(count(lit(1)).as("n"))
       .localCheckpoint() // feeds the rank window and the tie grain
     val ord = Window.orderBy("u")
-    val ranked = Rollups.grainGuarded(pts, ord, "squaredRanks")
-      .withColumn("__t",
-        sum("n").over(ord.rangeBetween(Window.currentRow, Window.currentRow)))
-      .withColumn("__cumb", coalesce(
-        sum("n").over(ord.rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__cumb") + col("__t") + 1L)
+    val ranked = grainGuarded(pts, ord, "squaredRanks")
+      .withColumn("__t", tieCount(ord, col("n")))
+      .withColumn("__r2", midrank2(ord, col("n"), col("__t")))
     val perG = ranked.groupBy("g")
       .agg(sum("n").as("__ng"),
-        sum(col("n").cast(dec) * col("__r2") * col("__r2")).as("__s4"),
-        sum(col("n").cast(dec) * col("__r2") * col("__r2") * col("__r2") *
+        sum(dec(col("n")) * col("__r2") * col("__r2")).as("__s4"),
+        sum(dec(col("n")) * col("__r2") * col("__r2") * col("__r2") *
           col("__r2")).as("__q16"))
     perG
       .agg(count(lit(1)).as("k"), sum("__ng").as("n"),
@@ -1595,8 +1480,6 @@ private[operators] trait RollupsInference {
       keys: Seq[String],
       orderCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCol)
     val base = series
       .select(keys.map(col) ++ Seq(col(orderCol),
@@ -1604,10 +1487,10 @@ private[operators] trait RollupsInference {
       .withColumn("__t", row_number().over(w).cast("long"))
     val mom = base.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"),
-        sum(col("__t").cast(dec)).as("__st"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__t").cast(dec) * col("__y")).as("__sty"),
-        sum(col("__t").cast(dec) * col("__t")).as("__stt"))
+        sum(dec(col("__t"))).as("__st"),
+        sum(dec(col("__y"))).as("__sy"),
+        sum(dec(col("__t")) * col("__y")).as("__sty"),
+        sum(dec(col("__t")) * col("__t")).as("__stt"))
       .filter(col("__n") >= 3)
       // micro-unit OLS coefficients, floor(x+0.5)-pinned
       .withColumn("__bu",
@@ -1668,8 +1551,6 @@ private[operators] trait RollupsInference {
       valueCol: String,
       sizes: Seq[Int] = Seq(4, 8, 16)): DataFrame = {
     require(sizes == Seq(4, 8, 16), "fixed size bank (output schema)")
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCol)
     val base = series
       .select(keys.map(col) ++ Seq(col(orderCol),
@@ -1684,7 +1565,7 @@ private[operators] trait RollupsInference {
     val wb = Window.partitionBy(bkeys: _*).orderBy(col("__t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val blocks = base.join(btot, keys :+ "__m" :+ "__b")
-      .withColumn("__e", col("__y").cast(dec) * col("__m") - col("__s"))
+      .withColumn("__e", dec(col("__y")) * col("__m") - col("__s"))
       .withColumn("__P", sum("__e").over(wb))
       .groupBy(bkeys: _*)
       .agg(max(col("__P")).as("__mx"), min(col("__P")).as("__mn"),
@@ -1734,7 +1615,6 @@ private[operators] trait RollupsInference {
       keys: Seq[String],
       orderCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     df.groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
         col(valueCol).cast("long").as("x")))).as("__s"))
@@ -1780,7 +1660,6 @@ private[operators] trait RollupsInference {
       keys: Seq[String],
       orderCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCol)
     df.select(keys.map(col) ++ Seq(col(orderCol),
       col(valueCol).cast("long").as("__x")): _*)
@@ -1835,20 +1714,17 @@ private[operators] trait RollupsInference {
       alpha: Double = 0.1,
       salt: String = "conf"): DataFrame = {
     require(alpha > 0 && alpha < 1)
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val pctNum = math.round((1 - alpha) * 10).toInt // tenths of (1-α)
     require(pctNum > 0 && pctNum < 10, "alpha in tenths")
-    val cents = round(col(valueCol) * 100).cast("long")
     val u = conv(substring(md5(concat(col(idCol).cast("string"),
       lit(":" + salt))), 1, 6), 16, 10).cast("long")
     val base = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol).as("g"), cents.as("__c"), (u % 2 === 0).as("__cal"))
+      .select(col(groupCol).as("g"), cents(col(valueCol)).as("__c"), (u % 2 === 0).as("__cal"))
     val tot = base.filter(col("__cal"))
       .groupBy("g")
-      .agg(count(lit(1)).as("__nc"), sum(col("__c").cast(dec)).as("__sc"))
+      .agg(count(lit(1)).as("__nc"), sum(dec(col("__c"))).as("__sc"))
     val scored = base.join(broadcast(tot), "g")
-      .withColumn("__s", abs(col("__c").cast(dec) * col("__nc") - col("__sc")))
+      .withColumn("__s", abs(dec(col("__c")) * col("__nc") - col("__sc")))
     val calGrain = scored.filter(col("__cal"))
       .groupBy("g", "__s").agg(count(lit(1)).as("__n"))
     val wCum = Window.partitionBy("g").orderBy("__s")
@@ -1892,16 +1768,14 @@ private[operators] trait RollupsInference {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
       .agg(count(lit(1)).as("n"),
-        sum(col("__x").cast(dec)).as("__sx"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__x").cast(dec) * col("__x")).as("__sxx"),
-        sum(col("__y").cast(dec) * col("__y")).as("__syy"),
-        sum(col("__x").cast(dec) * col("__y")).as("__sxy"))
+        sum(dec(col("__x"))).as("__sx"),
+        sum(dec(col("__y"))).as("__sy"),
+        sum(dec(col("__x")) * col("__x")).as("__sxx"),
+        sum(dec(col("__y")) * col("__y")).as("__syy"),
+        sum(dec(col("__x")) * col("__y")).as("__sxy"))
       .withColumn("__cxx", d(col("__sxx") * col("n") - col("__sx") * col("__sx")))
       .withColumn("__cyy", d(col("__syy") * col("n") - col("__sy") * col("__sy")))
       .withColumn("__cxy", d(col("__sxy") * col("n") - col("__sx") * col("__sy")))
@@ -1939,8 +1813,6 @@ private[operators] trait RollupsInference {
       keys: Seq[String],
       orderCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCol)
     df.select(keys.map(col) ++ Seq(col(orderCol),
       col(valueCol).cast("long").as("__x")): _*)
@@ -1949,11 +1821,11 @@ private[operators] trait RollupsInference {
       .withColumn("__y", col("__x") - col("__z"))
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__m"),
-        sum(col("__z").cast(dec)).as("__sz"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__z").cast(dec) * col("__y")).as("__szy"),
-        sum(col("__z").cast(dec) * col("__z")).as("__szz"),
-        sum(col("__y").cast(dec) * col("__y")).as("__syy"))
+        sum(dec(col("__z"))).as("__sz"),
+        sum(dec(col("__y"))).as("__sy"),
+        sum(dec(col("__z")) * col("__y")).as("__szy"),
+        sum(dec(col("__z")) * col("__z")).as("__szz"),
+        sum(dec(col("__y")) * col("__y")).as("__syy"))
       .withColumn("__Czz", col("__szz") * col("__m") - col("__sz") * col("__sz"))
       .withColumn("__Czy", col("__szy") * col("__m") - col("__sz") * col("__sy"))
       .withColumn("__Cyy", col("__syy") * col("__m") - col("__sy") * col("__sy"))
@@ -1991,8 +1863,6 @@ private[operators] trait RollupsInference {
       keys: Seq[String],
       orderCol: String,
       valueCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val base = df.select(keys.map(col) ++ Seq(col(orderCol),
       col(valueCol).cast("long").as("__x")): _*)
     val tot = base.groupBy(keys.map(col): _*)
@@ -2000,7 +1870,7 @@ private[operators] trait RollupsInference {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     base.join(broadcast(tot), keys)
-      .withColumn("__e", col("__x").cast(dec) * col("__n") - col("__sx"))
+      .withColumn("__e", dec(col("__x")) * col("__n") - col("__sx"))
       .withColumn("__P", sum("__e").over(w))
       .groupBy(keys.map(col): _*)
       .agg(max(col("__n")).as("n"),

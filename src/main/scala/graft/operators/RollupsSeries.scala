@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * cent sums — the D-family contract): every moment below is exact in
   * long/decimal(38,0), and each statistic is ONE pinned double chain.
   */
-private[operators] trait RollupsSeries {
+private[operators] trait RollupsSeries extends RollupsScaleForms {
 
   /** Bartels rank test of randomness per keyed series (D41) — the
     * rank von Neumann ratio: RVN = Σ(R_t − R_{t+1})² / Σ(R_t − R̄)²
@@ -40,26 +40,21 @@ private[operators] trait RollupsSeries {
       keys: Seq[String],
       tCol: String,
       valCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val wRank = Window.partitionBy(keys.map(col): _*).orderBy("__x")
-    val wTies = Window.partitionBy((keys :+ "__x").map(col): _*)
     val wNext = Window.partitionBy(keys.map(col): _*).orderBy("__t")
     val base = df.select(keys.map(col) ++ Seq(
       col(tCol).cast("long").as("__t"), col(valCol).cast("long").as("__x")): _*)
-      .withColumn("__r2",
-        lit(2L) * rank().over(wRank) + count(lit(1)).over(wTies) - 1L)
+      .withColumn("__r2", rowMidrank2(keys.map(col), col("__x")))
       .withColumn("__r2n", lead("__r2", 1).over(wNext))
     base.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"),
-        sum(col("__r2").cast(dec) * col("__r2").cast(dec)).as("__ss"),
+        sum(dec(col("__r2")) * dec(col("__r2"))).as("__ss"),
         sum(when(col("__r2n").isNotNull,
-          (col("__r2") - col("__r2n")).cast(dec) *
-            (col("__r2") - col("__r2n")).cast(dec)).otherwise(lit(0L).cast(dec)))
+          dec(col("__r2") - col("__r2n")) *
+            dec(col("__r2") - col("__r2n"))).otherwise(dec(lit(0L))))
           .as("__sd"))
       .withColumn("__den",
-        col("__ss") - col("n").cast(dec) * (col("n") + 1L).cast(dec) *
-          (col("n") + 1L).cast(dec))
+        col("__ss") - dec(col("n")) * dec(col("n") + 1L) *
+          dec(col("n") + 1L))
       .withColumn("__rvn", when(col("__den") > 0, d(col("__sd")) / d(col("__den"))))
       .select(keys.map(col) ++ Seq(col("n"),
         round(col("__rvn"), 4).as("rvn"),
@@ -92,8 +87,6 @@ private[operators] trait RollupsSeries {
       valCol: String,
       q: Int = 5): DataFrame = {
     require(q >= 2)
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val base = df.select(keys.map(col) ++ Seq(
       col(tCol).cast("long").as("__t"), col(valCol).cast("long").as("__x")): _*)
       .localCheckpoint() // feeds both diff joins
@@ -105,16 +98,16 @@ private[operators] trait RollupsSeries {
       .withColumn("__d", col("__x") - col("__xp"))
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as(s"__m$tag"),
-        sum(col("__d").cast(dec)).as(s"__s$tag"),
-        sum(col("__d").cast(dec) * col("__d").cast(dec)).as(s"__ss$tag"))
-    val v1 = col("__m1").cast(dec) * col("__ss1") - col("__s1") * col("__s1")
-    val vq = col("__mq").cast(dec) * col("__ssq") - col("__sq") * col("__sq")
+        sum(dec(col("__d"))).as(s"__s$tag"),
+        sum(dec(col("__d")) * dec(col("__d"))).as(s"__ss$tag"))
+    val v1 = dec(col("__m1")) * col("__ss1") - col("__s1") * col("__s1")
+    val vq = dec(col("__mq")) * col("__ssq") - col("__sq") * col("__sq")
     diffs(1, "1").join(diffs(q, "q"), keys)
       .withColumn("__vr",
         when(v1 > 0 && col("__mq") > 1L,
-          d(vq * col("__m1").cast(dec) * col("__m1").cast(dec)) /
-            (lit(q.toDouble) * d(v1 * col("__mq").cast(dec) *
-              col("__mq").cast(dec)))))
+          d(vq * dec(col("__m1")) * dec(col("__m1"))) /
+            (lit(q.toDouble) * d(v1 * dec(col("__mq")) *
+              dec(col("__mq"))))))
       .select(keys.map(col) ++ Seq(
         col("__m1").as("n1"), col("__mq").as("nq"),
         round(col("__vr"), 4).as("vr"),
@@ -147,8 +140,6 @@ private[operators] trait RollupsSeries {
       keys: Seq[String],
       tCol: String,
       valCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val base = df.select(keys.map(col) ++ Seq(
       col(tCol).cast("long").as("__t"), col(valCol).cast("long").as("__y")): _*)
       .localCheckpoint() // feeds the extent probe and the moment pass
@@ -162,14 +153,14 @@ private[operators] trait RollupsSeries {
     def moments(g: DataFrame, gk: Seq[String]): DataFrame = g
       .groupBy(gk.map(col): _*)
       .agg(count(lit(1)).as("__m"),
-        sum(col("__tr").cast(dec)).as("__st"),
-        sum(col("__y").cast(dec)).as("__sy"),
-        sum(col("__tr").cast(dec) * col("__tr")).as("__stt"),
-        sum(col("__tr").cast(dec) * col("__y")).as("__sty"),
-        sum(col("__y").cast(dec) * col("__y")).as("__syy"))
+        sum(dec(col("__tr"))).as("__st"),
+        sum(dec(col("__y"))).as("__sy"),
+        sum(dec(col("__tr")) * col("__tr")).as("__stt"),
+        sum(dec(col("__tr")) * col("__y")).as("__sty"),
+        sum(dec(col("__y")) * col("__y")).as("__syy"))
     // RSS numerator/denominator as exact decimals; null when C_tt = 0
     def rss(pre: String): Column = {
-      val m = col(s"${pre}m").cast(dec)
+      val m = dec(col(s"${pre}m"))
       val ctt = m * col(s"${pre}stt") - col(s"${pre}st") * col(s"${pre}st")
       val cty = m * col(s"${pre}sty") - col(s"${pre}st") * col(s"${pre}sy")
       val cyy = m * col(s"${pre}syy") - col(s"${pre}sy") * col(s"${pre}sy")
@@ -230,8 +221,6 @@ private[operators] trait RollupsSeries {
       keys: Seq[String],
       tCol: String,
       valCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     val maxLag = 3
     val base = df
       .select(keys.map(col) ++ Seq(col(tCol).cast("long").as("__t"),
@@ -239,21 +228,21 @@ private[operators] trait RollupsSeries {
       .localCheckpoint()
     val tot = base.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"),
-        sum(col("__x").cast(dec)).as("__sx"),
-        sum(col("__x").cast(dec) * col("__x").cast(dec)).as("__sxx"))
+        sum(dec(col("__x"))).as("__sx"),
+        sum(dec(col("__x")) * dec(col("__x"))).as("__sxx"))
     val part = base.select(
       (keys.map(col) :+ col("__t").as("__tp") :+ col("__x").as("__xp")): _*)
     val perLag = base
-      .select(keys.map(col) ++ Seq(col("__t"), col("__x").cast(dec).as("__xc"),
+      .select(keys.map(col) ++ Seq(col("__t"), dec(col("__x")).as("__xc"),
         explode(array((1 to maxLag).map(k => lit(k.toLong)): _*)).as("__k")): _*)
       .withColumn("__tp", col("__t") - col("__k"))
       .join(part, (keys :+ "__tp").toSeq)
       .groupBy(keys.map(col) :+ col("__k"): _*)
-      .agg(count(lit(1)).cast(dec).as("__m"),
-        sum(col("__xc") * col("__xp").cast(dec)).as("__sxy"),
+      .agg(dec(count(lit(1))).as("__m"),
+        sum(col("__xc") * dec(col("__xp"))).as("__sxy"),
         sum(col("__xc")).as("__sxt"),
-        sum(col("__xp").cast(dec)).as("__sxp"))
-    val n = col("__n").cast(dec)
+        sum(dec(col("__xp"))).as("__sxp"))
+    val n = dec(col("__n"))
     val num = n * n * col("__sxy") -
       n * col("__sx") * (col("__sxt") + col("__sxp")) +
       col("__m") * col("__sx") * col("__sx")
@@ -304,8 +293,6 @@ private[operators] trait RollupsSeries {
       tCol: String,
       xCol: String,
       yCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
     // no checkpoint: the caller's series IS an aggregate (day grain),
     // and PlanLint must SEE that aggregate below the DF lag window to
     // classify the residual frame grain-collapsed; the dual read
@@ -314,21 +301,21 @@ private[operators] trait RollupsSeries {
       col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
     val m = base.agg(count(lit(1)).as("__n"),
-      sum(col("__x").cast(dec)).as("__sx"),
-      sum(col("__y").cast(dec)).as("__sy"),
-      sum(col("__x").cast(dec) * col("__x")).as("__sxx"),
-      sum(col("__x").cast(dec) * col("__y")).as("__sxy"))
+      sum(dec(col("__x"))).as("__sx"),
+      sum(dec(col("__y"))).as("__sy"),
+      sum(dec(col("__x")) * col("__x")).as("__sxx"),
+      sum(dec(col("__x")) * col("__y")).as("__sxy"))
       .withColumn("__cxx",
-        col("__n").cast(dec) * col("__sxx") - col("__sx") * col("__sx"))
+        dec(col("__n")) * col("__sxx") - col("__sx") * col("__sx"))
       .withColumn("__cxy",
-        col("__n").cast(dec) * col("__sxy") - col("__sx") * col("__sy"))
+        dec(col("__n")) * col("__sxy") - col("__sx") * col("__sy"))
     val res = base.crossJoin(broadcast(m))
       .filter(col("__cxx") > 0)
       .withColumn("__e",
-        col("__cxx") * (col("__n").cast(dec) * col("__y") - col("__sy")) -
-          col("__cxy") * (col("__n").cast(dec) * col("__x") - col("__sx")))
+        col("__cxx") * (dec(col("__n")) * col("__y") - col("__sy")) -
+          col("__cxy") * (dec(col("__n")) * col("__x") - col("__sx")))
       .withColumn("__ru",
-        floor(d(col("__e")) / d(col("__n").cast(dec) * col("__cxx")) * 1e6 +
+        floor(d(col("__e")) / d(dec(col("__n")) * col("__cxx")) * 1e6 +
           0.5).cast("long"))
       .withColumn("__k", lit(1))
     val df0 = Rollups.dickeyFuller(res, Seq("__k"), "__t", "__ru")
@@ -370,7 +357,6 @@ private[operators] trait RollupsSeries {
       valCol: String,
       period: Int = 7): DataFrame = {
     require(period >= 2)
-    val d = (c: Column) => c.cast("double")
     val s0 = df
       .select((keys.map(col) :+ col(tCol).cast("long").as("__x") :+
         col(valCol).cast("long").as("__y")): _*)
@@ -430,7 +416,6 @@ private[operators] trait RollupsSeries {
       keys: Seq[String],
       tCol: String,
       flowCol: String): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val wCum = Window.partitionBy(keys.map(col): _*).orderBy("__t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val base = df.select(keys.map(col) ++ Seq(

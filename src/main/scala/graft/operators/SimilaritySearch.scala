@@ -532,11 +532,11 @@ object SimilaritySearch {
     // corpus via `corpus` itself only to ivfTrain-style pipelines —
     // here the train set is the full prepared corpus, which is fine
     // up to the scale where sampling becomes necessary.
-    val centroids = (1 to lloydIters).foldLeft(seeds) { (cs, _) => lloydStep(c, cs) }
+    val trained = (1 to lloydIters).foldLeft(seeds) { (cs, _) => lloydStep(c, cs) }
     // the trained table is nCentroids rows but its lineage scans the
-    // corpus lloydIters times — cache it so the corpus and query
+    // corpus lloydIters times — cut it eagerly so the corpus and query
     // assignment joins don't re-train
-    if (lloydIters > 0) centroids.persist()
+    val centroids = if (lloydIters > 0) trained.localCheckpoint() else trained
 
     // Scan-local assignment: one-row broadcast centroid array, top-r
     // cells computed in-row — the corpus reaches the cell equi-join

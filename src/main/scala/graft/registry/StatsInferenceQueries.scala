@@ -919,7 +919,8 @@ private[graft] object StatsInferenceQueries {
         |                           * CAST(n * sbb - sb * sb AS DOUBLE)), 0), 4) AS rho
         |FROM s""".stripMargin,
     // Rank-sum replay: identical 2·avg-rank integers at value grain,
-    // exact 2U₁ and tie sums, same double-op order for z.,
+    // exact 2U₁, tie sums in HUGEINT (Rollups.tieCube's decimal), same
+    // double-op order for z.,
     "q199_mann_whitney" ->
       """WITH p AS (
         |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
@@ -938,7 +939,7 @@ private[graft] object StatsInferenceQueries {
         |s AS (
         |  SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2,
         |         CAST(sum(c1 * r2) AS BIGINT) AS r2sum1,
-        |         CAST(sum(t * t * t - t) AS BIGINT) AS ties
+        |         sum(CAST(t AS HUGEINT) * t * t - t) AS ties
         |  FROM r
         |),
         |m AS (

@@ -6,7 +6,10 @@ package graft
   * (graft.plans.PlanLint — the registry-wide guarantee that the plan
   * classes the sf1 bench caught as instances, q12's
   * distinct-over-window and q13's multi-distinct Expand, cannot be
-  * reintroduced silently; fixtures in PlanLintSpec).
+  * reintroduced silently; fixtures in PlanLintSpec). No query may
+  * leave an entry in the session's CacheManager: a cached plan is
+  * substituted into every later plan with the same subtree, so the
+  * next bench rep would read a cached result.
   */
 class QueriesSmokeSpec extends SparkSpec {
 
@@ -68,6 +71,7 @@ class QueriesSmokeSpec extends SparkSpec {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs on sf0.001") {
+      spark.catalog.clearCache() // judge this query's entries only
       val df = fn(spark, sfDir)
       val allowed = sanctioned.getOrElse(name, Map.empty).keySet
       val bad = graft.plans.PlanLint.lint(df).filterNot(f => allowed(f.rule))
@@ -75,6 +79,8 @@ class QueriesSmokeSpec extends SparkSpec {
         s"scale-lint findings (rewrite or sanction with justification): " +
           s"${bad.mkString("; ")}")
       assert(df.count() >= 0)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name left a cached plan (persist()/cache() on a query path)")
     }
   }
 }

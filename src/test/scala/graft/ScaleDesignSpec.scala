@@ -925,7 +925,9 @@ class ScaleDesignSpec extends SparkSpec {
   }
 
   test("q113 KMV: bounded sketch aggregate, no window, no value-grain reshuffle") {
-    val df = SparkEntry.queries("q113_kmv_overlap")(spark, sfDir)
+    // q113's overlap starts from an eager cut of this sketch, so the
+    // sketch's own plan is the one that carries the claim
+    val df = graft.operators.Kmv.sketch(tables.events, "event_type", col("user_id"), 64)
     assert(df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.isEmpty, "k-smallest must be the bounded aggregate, never a ranked window")
