@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Unique suffix for observe() metric names (CollectMetrics names
-    * must be unique within one query plan).
+  /** Unique suffix for [[clusters]]' convergence-probe observe() names
+    * (CollectMetrics names must be unique within one query plan).
     */
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
@@ -133,10 +133,8 @@ object Dedup {
       copyCap: Int = graft.GraftConf.ExactCopyCap): DataFrame = {
     val fp = TextAnalysis.fingerprint(df, textCol)
     val counts = fp.groupBy("fp").agg(count(lit(1)).as("n_copies"))
-    fp.join(counts, "fp")
-      .observe(s"graft_exact_copy_cap_${obsId.incrementAndGet()}",
-        sum(when(col("n_copies") > copyCap, 1L).otherwise(0L)).as("dropped_rows"))
-      .filter(col("n_copies") <= copyCap)
+    PairForms.capDrop(fp.join(counts, "fp"), "exact_copy", col("n_copies"), copyCap,
+        largest = None, dropped = "dropped_rows", singletons = true)
       .withColumn("dup_rank",
         row_number().over(Window.partitionBy("fp").orderBy(idCol)))
   }
@@ -165,7 +163,8 @@ object Dedup {
     * verification. Output: (idA, idB, jaccard) with idA < idB.
     *
     * @param k      signature length
-    * @param bands  number of LSH bands (k % bands == 0)
+    * @param bands  number of LSH bands (k % bands == 0, or the call
+    *               raises IllegalArgumentException)
     * @param minJaccard verification threshold on exact shingle-set Jaccard
     */
   def minhashLshPairs(
@@ -176,60 +175,37 @@ object Dedup {
       bands: Int = 3,
       shingleSize: Int = 3,
       minJaccard: Double = 0.8,
-      bucketCap: Int = graft.GraftConf.LshBucketCap): DataFrame = {
-    val rows = k / bands
-    val withSig = spread(df)
-      .select(col(idCol).as("id"),
-        graft.functions.NativeText.wordShingles(col(textCol), shingleSize).as("set"))
-      .filter(size(col("set")) > 0)
+      bucketCap: Int = graft.GraftConf.LshBucketCap): DataFrame =
+    lshPairs(
+      spread(df)
+        .select(col(idCol).as("id"),
+          graft.functions.NativeText.wordShingles(col(textCol), shingleSize).as("set"))
+        .filter(size(col("set")) > 0),
+      "lsh_bucket", k, bands, minJaccard, bucketCap)
+
+  /** The banded MinHash-LSH pipeline of [[minhashLshPairs]] and
+    * [[stoplistedMinhashPairs]] over non-empty (id, set) rows. Only
+    * (id, band, bucket) shuffles; sets re-join for the few surviving
+    * candidates. Candidates come from a bucket groupBy + in-row pair
+    * expansion, so the signature chain runs ONCE (a banded self-join
+    * would re-run it per side). `bucketCap` bounds buckets by
+    * construction: a degenerate bucket is dropped (and reported) BEFORE
+    * it enters a collect_list buffer — the count window shares the
+    * (band, bucket) partitioning with the groupBy, so the guard adds no
+    * exchange, and a window spills where an aggregation buffer would not.
+    */
+  private def lshPairs(sets: DataFrame, site: String, k: Int, bands: Int,
+      minJaccard: Double, bucketCap: Int): DataFrame = {
+    val sized = sets
       .withColumn("sig", graft.functions.NativeText.minhashSig(col("set"), k))
-
-    // One row per (doc, band) — bucket key is the md5 of the band slice.
-    // Only (id, band, bucket) is shuffled; shingle sets stay behind and
-    // are re-joined for the (few) surviving candidate pairs.
-    val banded = withSig.select(
-      col("id"),
-      posexplode(
-        transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => md5(concat_ws("|", slice(col("sig"), b * rows + 1, lit(rows))))))
-        .as(Seq("band", "bucket")))
-
-    // Candidate pairs from shared buckets via groupBy + in-row pair
-    // expansion — the signature chain is computed ONCE (a banded
-    // self-join would re-evaluate it per join side). Band tuning bounds
-    // bucket sizes probabilistically; `bucketCap` bounds them by
-    // construction: a degenerate bucket (> cap docs with identical band
-    // hashes) is dropped BEFORE its rows ever enter a collect_list
-    // buffer or a pair expansion — the window count below shares the
-    // (band, bucket) partitioning with the groupBy, so the guard adds
-    // no exchange, and window operators spill where an aggregation
-    // buffer would not. Drops are never silent: observe() metrics
-    // report dropped posting rows and the largest bucket seen.
-    val bucketWin = Window.partitionBy("band", "bucket")
-    val candidates = banded
-      .withColumn("bn", count(lit(1)).over(bucketWin))
-      .observe(s"graft_lsh_bucket_cap_${obsId.incrementAndGet()}",
-        sum(when(col("bn") > bucketCap, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("bn")), lit(0L)).as("max_bucket_size"))
-      .filter(col("bn") > 1 && col("bn") <= bucketCap)
-      .groupBy("band", "bucket")
-      .agg(collect_list(col("id")).as("ids"))
-      .select(explode(col("ids")).as("idA"), col("ids"))
-      .select(col("idA"), explode(col("ids")).as("idB"))
-      .filter(col("idA") < col("idB"))
+      .select(col("id"),
+        posexplode(PairForms.bandKeys(col("sig"), k, bands)).as(Seq("band", "bucket")))
+      .withColumn("bn", count(lit(1)).over(Window.partitionBy("band", "bucket")))
+    val candidates = PairForms.memberPairs(
+        PairForms.capDrop(sized, site, col("bn"), bucketCap),
+        Seq("band", "bucket"), col("id"), pair = _ < _, as = ("idA", "idB"))
       .distinct()
-
-    val sets = withSig.select(col("id"), col("set"))
-    candidates
-      .join(sets.select(col("id").as("idA"), col("set").as("setA")), Seq("idA"))
-      .join(sets.select(col("id").as("idB"), col("set").as("setB")), Seq("idB"))
-      .withColumn("jaccard",
-        round(
-          size(array_intersect(col("setA"), col("setB"))).cast("double") /
-            size(array_union(col("setA"), col("setB"))), 3))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("idA"), col("idB"), col("jaccard"))
+    PairForms.jaccardVerify(candidates, sets, minJaccard)
   }
 
   /** Boilerplate-robust near-dup pairs — [[minhashLshPairs]] with the
@@ -260,7 +236,6 @@ object Dedup {
       shingleSize: Int = 3,
       minJaccard: Double = 0.8,
       bucketCap: Int = graft.GraftConf.LshBucketCap): DataFrame = {
-    val rows = k / bands
     val kept = spread(df)
       .select(col(idCol).as("id"),
         explode(graft.functions.NativeText.wordShingles(col(textCol), shingleSize))
@@ -270,36 +245,7 @@ object Dedup {
       .groupBy("id")
       .agg(array_distinct(collect_list(col("s"))).as("set"))
       .filter(size(col("set")) > 0)
-      .withColumn("sig", graft.functions.NativeText.minhashSig(col("set"), k))
-    val banded = kept.select(
-      col("id"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => md5(concat_ws("|", slice(col("sig"), b * rows + 1, lit(rows))))))
-        .as(Seq("band", "bucket")))
-    val bucketWin = Window.partitionBy("band", "bucket")
-    val candidates = banded
-      .withColumn("bn", count(lit(1)).over(bucketWin))
-      .observe(s"graft_stoplsh_bucket_cap_${obsId.incrementAndGet()}",
-        sum(when(col("bn") > bucketCap, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("bn")), lit(0L)).as("max_bucket_size"))
-      .filter(col("bn") > 1 && col("bn") <= bucketCap)
-      .groupBy("band", "bucket")
-      .agg(collect_list(col("id")).as("ids"))
-      .select(explode(col("ids")).as("idA"), col("ids"))
-      .select(col("idA"), explode(col("ids")).as("idB"))
-      .filter(col("idA") < col("idB"))
-      .distinct()
-    val sets = kept.select(col("id"), col("set"))
-    candidates
-      .join(sets.select(col("id").as("idA"), col("set").as("setA")), Seq("idA"))
-      .join(sets.select(col("id").as("idB"), col("set").as("setB")), Seq("idB"))
-      .withColumn("jaccard",
-        round(
-          size(array_intersect(col("setA"), col("setB"))).cast("double") /
-            size(array_union(col("setA"), col("setB"))), 3))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("idA"), col("idB"), col("jaccard"))
+    lshPairs(kept, "stoplsh_bucket", k, bands, minJaccard, bucketCap)
   }
 
   /** INCREMENTAL near-dup pairs — the steady-state production shape
@@ -326,7 +272,6 @@ object Dedup {
       shingleSize: Int = 3,
       minJaccard: Double = 0.8,
       bucketCap: Int = graft.GraftConf.LshBucketCap): DataFrame = {
-    val rows = k / bands
     def withSig(df: DataFrame, isNew: Boolean) = spread(df)
       .select(col(idCol).as("id"),
         graft.functions.NativeText.wordShingles(col(textCol), shingleSize).as("set"))
@@ -334,39 +279,21 @@ object Dedup {
       .withColumn("sig", graft.functions.NativeText.minhashSig(col("set"), k))
       .withColumn("__new", lit(isNew))
     val all = withSig(base, isNew = false).unionByName(withSig(delta, isNew = true))
-    val banded = all.select(
-      col("id"), col("__new"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => md5(concat_ws("|", slice(col("sig"), b * rows + 1, lit(rows))))))
-        .as(Seq("band", "bucket")))
-    val bucketWin = Window.partitionBy("band", "bucket")
-    val candidates = banded
-      .withColumn("bn", count(lit(1)).over(bucketWin))
-      .observe(s"graft_inc_bucket_cap_${obsId.incrementAndGet()}",
-        sum(when(col("bn") > bucketCap, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("bn")), lit(0L)).as("max_bucket_size"))
-      .filter(col("bn") > 1 && col("bn") <= bucketCap)
+    val sized = all
+      .select(col("id"), col("__new"),
+        posexplode(PairForms.bandKeys(col("sig"), k, bands)).as(Seq("band", "bucket")))
+      .withColumn("bn", count(lit(1)).over(Window.partitionBy("band", "bucket")))
+    val buckets = PairForms.capDrop(sized, "inc_bucket", col("bn"), bucketCap)
       .groupBy("band", "bucket")
       .agg(collect_list(struct(col("id"), col("__new"))).as("ids"))
       // the incremental win: buckets with no delta member never expand
       .filter(exists(col("ids"), x => x.getField("__new")))
-      .select(explode(col("ids")).as("a"), col("ids"))
-      .select(col("a"), explode(col("ids")).as("b"))
-      .filter(col("a.id") < col("b.id") &&
-        (col("a.__new") || col("b.__new")))
+    val candidates = PairForms
+      .listPairs(buckets, "ids",
+        pair = (a, b) => a("id") < b("id") && (a("__new") || b("__new")))
       .select(col("a.id").as("idA"), col("b.id").as("idB"))
       .distinct()
-    val sets = all.select(col("id"), col("set"))
-    candidates
-      .join(sets.select(col("id").as("idA"), col("set").as("setA")), Seq("idA"))
-      .join(sets.select(col("id").as("idB"), col("set").as("setB")), Seq("idB"))
-      .withColumn("jaccard",
-        round(
-          size(array_intersect(col("setA"), col("setB"))).cast("double") /
-            size(array_union(col("setA"), col("setB"))), 3))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("idA"), col("idB"), col("jaccard"))
+    PairForms.jaccardVerify(candidates, all.select(col("id"), col("set")), minJaccard)
   }
 
   /** Near-dup CLUSTERS from a pair graph: connected components via
@@ -531,58 +458,16 @@ object Dedup {
       idCol: String = "doc_id",
       shingleSize: Int = 3,
       minContainment: Double = 0.8,
-      maxDf: Int = graft.GraftConf.NgramMaxDf): DataFrame = {
-    val docs = spread(df)
-      .select(
-        col(blockCol).as("block"), col(idCol).as("id"),
+      maxDf: Int = graft.GraftConf.NgramMaxDf): DataFrame =
+    commonShingles(df, blockCol, idCol,
         array_distinct(
-          graft.functions.NativeText.wordShingles(col(textCol), shingleSize)).as("sh"))
-      .select(col("block"), col("id"), col("sh"), size(col("sh")).as("sz"))
-    val inv = docs.select(
-      col("block"), col("id"), col("sz"), explode(col("sh")).as("s"))
-    val dfCounts = inv.groupBy("block", "s").agg(count(lit(1)).as("df"))
-    inv
-      .join(dfCounts, Seq("block", "s"))
-      .observe(s"graft_containment_df_cap_${obsId.incrementAndGet()}",
-        sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("df")), lit(0L)).as("max_shingle_df"))
-      .filter(col("df") > 1 && col("df") <= maxDf)
-      .groupBy("block", "s")
-      .agg(collect_list(struct(col("id"), col("sz"))).as("ds"))
-      .select(col("block"), explode(col("ds")).as("a"), col("ds"))
-      .select(col("block"), col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      .groupBy(
-        col("block"),
-        col("a.id").as("idA"), col("b.id").as("idB"),
-        col("a.sz").as("szA"), col("b.sz").as("szB"))
-      .agg(count(lit(1)).as("common"))
+          graft.functions.NativeText.wordShingles(col(textCol), shingleSize)),
+        "containment_df", maxDf)
       .withColumn("c_ab", round(col("common").cast("double") / col("szA"), 3))
       .withColumn("c_ba", round(col("common").cast("double") / col("szB"), 3))
       .filter(greatest(col("c_ab"), col("c_ba")) >= minContainment)
       .select(col("block"), col("idA"), col("idB"), col("c_ab"), col("c_ba"))
-  }
 
-  /** n-gram Jaccard similarity above a threshold, within a blocking
-    * key, via an inverted shingle index: explode distinct shingles,
-    * equi-join on (block, shingle), count common shingles per pair,
-    * then |A∩B| / (|A| + |B| − |A∩B|).
-    *
-    * Work scales with the number of *sharing* pairs, never O(n²) per
-    * block — except through hot shingles: a shingle present in d
-    * documents of a block emits d² pair rows before any filter, the
-    * one quadratic scale-killer of the inverted-index form. `maxDf`
-    * caps it: shingles shared by more than `maxDf` documents are
-    * stop-shingles (no similarity signal) and are excluded from the
-    * common-shingle COUNT on both the engine and oracle side (set
-    * sizes |A|, |B| stay exact), making the approximation identical
-    * and deterministic in both engines. Dropped posting rows are
-    * reported via observe() metrics, never silently.
-    *
-    * With no hot shingles (df ≤ maxDf everywhere) the output is
-    * identical to the naive all-pairs form (a pair with zero common
-    * shingles has Jaccard 0 < threshold).
-    */
   /** MERGEABLE MinHash slice state + pairwise slice-overlap estimate —
     * the sketch-grain companion to G55's exact vocabulary Jaccard: the
     * per-slice state is the elementwise MIN of every member document's
@@ -629,6 +514,26 @@ object Dedup {
         round(col("n_agree").cast("double") / col("k"), 4).as("jaccard_est"))
   }
 
+  /** n-gram Jaccard similarity above a threshold, within a blocking
+    * key, via an inverted shingle index: explode distinct shingles,
+    * equi-join on (block, shingle), count common shingles per pair,
+    * then |A∩B| / (|A| + |B| − |A∩B|).
+    *
+    * Work scales with the number of *sharing* pairs, never O(n²) per
+    * block — except through hot shingles: a shingle present in d
+    * documents of a block emits d² pair rows before any filter, the
+    * one quadratic scale-killer of the inverted-index form. `maxDf`
+    * caps it: shingles shared by more than `maxDf` documents are
+    * stop-shingles (no similarity signal) and are excluded from the
+    * common-shingle COUNT on both the engine and oracle side (set
+    * sizes |A|, |B| stay exact), making the approximation identical
+    * and deterministic in both engines. Dropped posting rows are
+    * reported via observe() metrics, never silently.
+    *
+    * With no hot shingles (df ≤ maxDf everywhere) the output is
+    * identical to the naive all-pairs form (a pair with zero common
+    * shingles has Jaccard 0 < threshold).
+    */
   def ngramJaccard(
       df: DataFrame,
       blockCol: String,
@@ -636,50 +541,38 @@ object Dedup {
       idCol: String = "doc_id",
       shingleSize: Int = 3,
       minJaccard: Double = 0.5,
-      maxDf: Int = graft.GraftConf.NgramMaxDf): DataFrame = {
-    val docs = spread(df)
-      .select(
-        col(blockCol).as("block"), col(idCol).as("id"),
-        graft.functions.NativeText.wordShingles(col(textCol), shingleSize).as("sh"))
-      .select(col("block"), col("id"), col("sh"), size(col("sh")).as("sz"))
-    // explode drops empty shingle arrays, so no pre-filter is needed
-    // (a filter would be pushed below the projection and re-evaluate
-    // the shingling)
-    val inv = docs.select(
-      col("block"), col("id"), col("sz"), explode(col("sh")).as("s"))
-    // Group the posting list per (block, shingle) and expand pairs
-    // in-row. The document-frequency guard is a groupBy on the
-    // (block, shingle) key joined back onto the postings — NOT a
-    // shingle-partitioned window: a stop-shingle's window partition is
-    // one row per document containing it (≈ the corpus, under Zipf) in
-    // ONE task with no map-side combine and no AQE split, while the
-    // groupBy absorbs the skew map-side (vocabulary-sized output) and
-    // the join back on the shingle key is AQE-skew-splittable. Hot
-    // postings are dropped by the filter BEFORE their rows enter the
-    // pair-expansion collect_list buffer, whose partitioning the join
-    // already established (no further exchange).
-    val dfCounts = inv.groupBy("block", "s").agg(count(lit(1)).as("df"))
-    inv
-      .join(dfCounts, Seq("block", "s"))
-      .observe(s"graft_ngram_df_cap_${obsId.incrementAndGet()}",
-        sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("df")), lit(0L)).as("max_shingle_df"))
-      .filter(col("df") > 1 && col("df") <= maxDf)
-      .groupBy("block", "s")
-      .agg(collect_list(struct(col("id"), col("sz"))).as("ds"))
-      .select(col("block"), explode(col("ds")).as("a"), col("ds"))
-      .select(col("block"), col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      .groupBy(
-        col("block"),
-        col("a.id").as("idA"), col("b.id").as("idB"),
-        col("a.sz").as("szA"), col("b.sz").as("szB"))
-      .agg(count(lit(1)).as("common"))
+      maxDf: Int = graft.GraftConf.NgramMaxDf): DataFrame =
+    commonShingles(df, blockCol, idCol,
+        graft.functions.NativeText.wordShingles(col(textCol), shingleSize),
+        "ngram_df", maxDf)
       .withColumn("jaccard",
         round(col("common").cast("double") /
           (col("szA") + col("szB") - col("common")), 3))
       .filter(col("jaccard") >= minJaccard)
       .select(col("block"), col("idA"), col("idB"), col("jaccard"))
+
+  /** Shared-shingle counts of within-block pairs — the body of
+    * [[ngramJaccard]] and [[shingleContainment]]: (block, shingle)
+    * postings df-capped by [[PairForms.postingPairs]], one pair-grain
+    * count; set sizes stay exact. explode drops empty shingle arrays, so
+    * no pre-filter (one would be pushed below the projection and
+    * re-run the shingling). Output: (block, idA, idB, szA, szB, common).
+    */
+  private def commonShingles(df: DataFrame, blockCol: String, idCol: String,
+      shingles: Column, site: String, maxDf: Int): DataFrame = {
+    val docs = spread(df)
+      .select(col(blockCol).as("block"), col(idCol).as("id"), shingles.as("sh"))
+      .select(col("block"), col("id"), col("sh"), size(col("sh")).as("sz"))
+    val inv = docs.select(
+      col("block"), col("id"), col("sz"), explode(col("sh")).as("s"))
+    PairForms
+      .postingPairs(inv, Seq("block", "s"), struct(col("id"), col("sz")),
+        site, maxDf, "max_shingle_df", keep = Seq("block"))
+      .groupBy(
+        col("block"),
+        col("a.id").as("idA"), col("b.id").as("idB"),
+        col("a.sz").as("szA"), col("b.sz").as("szB"))
+      .agg(count(lit(1)).as("common"))
   }
 
   /** EXACT set-similarity self-join via prefix filtering (AllPairs /
@@ -765,7 +658,6 @@ object Dedup {
       .agg(array_sort(collect_list(col("k"))).as("ks"))
       .withColumn("p",
         col("sz") - ((col("sz") * tNum + (cd - 1)) / cd).cast("int") + 1)
-    val bucketWin = Window.partitionBy("k")
     // PPJoin POSITIONAL filter (Xiao et al. WWW'08) on top of the
     // prefix filter: a posting carries its 0-based position `pos` in
     // the doc's rarity-sorted shingle list, and a candidate generated
@@ -781,21 +673,18 @@ object Dedup {
     // token must carry the pair, where the bound is genuinely tighter
     // — the oracle replays the same positional arithmetic, so the cap
     // + positional semantics stay engine-identical.)
-    val cand = sorted
+    val postings = sorted
       .select(col("fk"), col("f"), col("sz"),
         posexplode(slice(col("ks"), lit(1), col("p"))).as(Seq("pos", "k")))
-      .withColumn("bn", sum(col("f")).over(bucketWin))
-      .observe(s"graft_prefix_posting_cap_${obsId.incrementAndGet()}",
-        sum(when(col("bn") > postingCap, col("f")).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("bn")), lit(0L)).as("max_bucket_size"))
-      .filter(col("bn") > 1 && col("bn") <= postingCap)
-      .groupBy("k").agg(collect_list(struct(col("fk"), col("f"), col("sz"), col("pos"))).as("fs"))
-      .select(explode(col("fs")).as("a"), col("fs"))
-      .select(col("a"), explode(col("fs")).as("b"))
-      // cross-family candidates, plus each multi-doc family once
-      // (its docs pair with each other at jaccard 1)
-      .filter(col("a.fk") < col("b.fk") ||
-        (col("a.fk") === col("b.fk") && col("a.f") >= 2))
+      .withColumn("bn", sum(col("f")).over(Window.partitionBy("k")))
+    val cand = PairForms
+      .memberPairs(
+        PairForms.capDrop(postings, "prefix_posting", col("bn"), postingCap,
+          weight = col("f")),
+        Seq("k"), struct(col("fk"), col("f"), col("sz"), col("pos")),
+        // cross-family candidates, plus each multi-doc family once
+        // (its docs pair with each other at jaccard 1)
+        pair = (a, b) => a("fk") < b("fk") || (a("fk") === b("fk") && a("f") >= 2))
       .filter((lit(1) + least(col("a.sz") - 1 - col("a.pos"),
           col("b.sz") - 1 - col("b.pos"))) * cd >=
         (col("a.sz") + col("b.sz")) * tNum)
@@ -861,13 +750,11 @@ object Dedup {
     val variants = expr(
       """transform(sequence(0, length(nm)),
         |  i -> concat(substr(nm, 1, i), substr(nm, i + 2, length(nm))))""".stripMargin)
-    val cand = c
+    val buckets = c
       .select(col("blk"), col("id"), explode(array_distinct(variants)).as("v"))
       .groupBy("blk", "v").agg(collect_list("id").as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(col("ids")).as("idA"), col("ids"))
-      .select(col("idA"), explode(col("ids")).as("idB"))
-      .filter(col("idA") < col("idB"))
+    val cand = PairForms.listPairs(buckets, "ids", pair = _ < _, as = ("idA", "idB"))
       .distinct()
     cand
       .join(c.select(col("id").as("idA"), col("nm").as("nmA")), Seq("idA"))
@@ -1128,25 +1015,6 @@ object Dedup {
       .drop("__pd_id", "__kept_pos", "__chunks")
   }
 
-  /** Blocked-Levenshtein entity resolution — the classic record-
-    * linkage shape (Fellegi & Sunter framing): a cheap blocking key
-    * (caller-chosen — a token, a phonetic code, a length band)
-    * restricts candidates, then exact edit distance verifies each
-    * within-block pair. Complements G43's FastSS (which guarantees
-    * distance ≤ 1 corpus-wide): blocking reaches any `maxDist` but
-    * only finds pairs the block key co-locates — the standard ER
-    * recall/cost trade, made explicit here.
-    *
-    * Scale shape: the pair expansion is a self-join on the block key
-    * — O(block²) per block, so blocks above `blockCap` are dropped
-    * BEFORE the join and reported via observe() (the G2/G41 cap
-    * contract), never silently quadratic. Spark's codegen'd
-    * `levenshtein` runs only on co-blocked pairs. Input should be at
-    * entity grain (one row per distinct name); output pairs order
-    * (a < b) so both engines emit the same rows.
-    *
-    * Output: (name_a, name_b, lev).
-    */
   /** Per-slice near-duplicate shares — G82's corpus-wide dup number
     * broken down by a slice column (source, language): which feeds
     * contribute the duplication? The table that redirects a crawl
@@ -1221,10 +1089,10 @@ object Dedup {
     * boundary is leaked signal (a test doc whose near-copy was
     * trained on scores as memorization, not generalization).
     *
-    * Scale shape: the split is a pure projection (no shuffle); pairs
-    * come from the G2 machinery unchanged; two id-keyed joins attach
-    * splits; the unordered split-pair matrix is a tiny combine over
-    * an eager-cut pair table (the pair pipeline must not replay per
+    * Scale shape: pairs come from the G2 machinery unchanged; the
+    * split attach and matrix are [[PairForms.straddleMatrix]] — a pure
+    * projection split, two id-keyed joins, and a tiny combine over an
+    * eager-cut pair table (the pair pipeline must not replay per
     * output branch).
     *
     * Output: (split_a, split_b, n_pairs, leak, share) — split_a <=
@@ -1234,22 +1102,9 @@ object Dedup {
   def nearDupLeakage(
       df: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val splits = Sampling.hashSplit(df, idCol = idCol)
-      .select(col(idCol), col("split"))
-    val joined = minhashLshPairs(df, textCol = textCol, idCol = idCol)
-      .join(splits.select(col(idCol).as("idA"), col("split").as("__sa")), Seq("idA"))
-      .join(splits.select(col(idCol).as("idB"), col("split").as("__sb")), Seq("idB"))
-      .select(least(col("__sa"), col("__sb")).as("split_a"),
-        greatest(col("__sa"), col("__sb")).as("split_b"))
-      .localCheckpoint() // feeds the matrix AND the total
-    joined
-      .groupBy("split_a", "split_b").agg(count(lit(1)).as("n_pairs"))
-      .crossJoin(broadcast(joined.agg(count(lit(1)).as("__n_total"))))
-      .select(col("split_a"), col("split_b"), col("n_pairs"),
-        (col("split_a") =!= col("split_b")).as("leak"),
-        round(col("n_pairs").cast("double") / col("__n_total"), 4).as("share"))
-  }
+      idCol: String = "doc_id"): DataFrame =
+    PairForms.straddleMatrix(
+      minhashLshPairs(df, textCol = textCol, idCol = idCol), df, idCol)
 
   /** LSH banding PLANNER — the design-time companion to
     * [[bandingEval]]'s measurement: for every (bands, rows) factoring
@@ -1419,24 +1274,32 @@ object Dedup {
       minSim: Double = 0.9,
       blockCap: Int = graft.GraftConf.ErBlockCap): DataFrame = {
     require(minSim > 0 && minSim <= 1, s"minSim must be in (0,1], got $minSim")
-    val capped = spread(df)
-      .select(col(textCol).as("__t"), col(blockCol).as("__b"))
-      .withColumn("__bn", count(lit(1)).over(Window.partitionBy("__b")))
-      .observe(s"graft_jw_block_cap_${obsId.incrementAndGet()}",
-        sum(when(col("__bn") > blockCap, 1L).otherwise(0L)).as("dropped_rows"),
-        coalesce(max(col("__bn")), lit(0L)).as("max_block_size"))
-      .filter(col("__bn") <= blockCap)
-      .select(col("__t"), col("__b"))
-      .localCheckpoint()
-    capped.as("x")
-      .join(capped.as("y"),
-        col("x.__b") === col("y.__b") && col("x.__t") < col("y.__t"))
+    blockedPairs(df, textCol, blockCol, blockCap, "jw_block")
       .withColumn("jw",
         round(graft.functions.jaroWinkler(col("x.__t"), col("y.__t")), 4))
       .filter(col("jw") >= minSim)
       .select(col("x.__t").as("name_a"), col("y.__t").as("name_b"), col("jw"))
   }
 
+  /** Blocked-Levenshtein entity resolution — the classic record-
+    * linkage shape (Fellegi & Sunter framing): a cheap blocking key
+    * (caller-chosen — a token, a phonetic code, a length band)
+    * restricts candidates, then exact edit distance verifies each
+    * within-block pair. Complements G43's FastSS (which guarantees
+    * distance ≤ 1 corpus-wide): blocking reaches any `maxDist` but
+    * only finds pairs the block key co-locates — the standard ER
+    * recall/cost trade, made explicit here.
+    *
+    * Scale shape: the pair expansion is a self-join on the block key
+    * — O(block²) per block, so blocks above `blockCap` are dropped
+    * BEFORE the join and reported via observe() (the G2/G41 cap
+    * contract), never silently quadratic. Spark's codegen'd
+    * `levenshtein` runs only on co-blocked pairs. Input should be at
+    * entity grain (one row per distinct name); output pairs order
+    * (a < b) so both engines emit the same rows.
+    *
+    * Output: (name_a, name_b, lev).
+    */
   def blockedLevenshtein(
       df: DataFrame,
       textCol: String,
@@ -1444,23 +1307,31 @@ object Dedup {
       maxDist: Int = 3,
       blockCap: Int = graft.GraftConf.ErBlockCap): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
-    val capped = spread(df)
+    blockedPairs(df, textCol, blockCol, blockCap, "er_block")
+      .withColumn("lev", levenshtein(col("x.__t"), col("y.__t")))
+      .filter(col("lev") <= maxDist)
+      .select(col("x.__t").as("name_a"), col("y.__t").as("name_b"), col("lev"))
+  }
+
+  /** The capped blocked self-join of [[blockedLevenshtein]] and
+    * [[blockedJaroWinkler]]: blocks over `blockCap` drop (reported as
+    * dropped_rows / max_block_size) BEFORE the O(block²) join; the
+    * capped table is an eager cut, as it joins itself. Output: (x, y)
+    * rows, x.__t < y.__t in one block; the caller adds its verifier.
+    */
+  private def blockedPairs(df: DataFrame, textCol: String, blockCol: String,
+      blockCap: Int, site: String): DataFrame = {
+    val sized = spread(df)
       .select(col(textCol).as("__t"), col(blockCol).as("__b"))
       .withColumn("__bn", count(lit(1)).over(Window.partitionBy("__b")))
-      .observe(s"graft_er_block_cap_${obsId.incrementAndGet()}",
-        sum(when(col("__bn") > blockCap, 1L).otherwise(0L)).as("dropped_rows"),
-        coalesce(max(col("__bn")), lit(0L)).as("max_block_size"))
-      .filter(col("__bn") <= blockCap)
+    val capped = PairForms
+      .capDrop(sized, site, col("__bn"), blockCap, Some("max_block_size"),
+        dropped = "dropped_rows", singletons = true)
       .select(col("__t"), col("__b"))
-      // the capped entity table joins itself — the eager cut stops the
-      // scan + cap window from computing once per join side
       .localCheckpoint()
     capped.as("x")
       .join(capped.as("y"),
         col("x.__b") === col("y.__b") && col("x.__t") < col("y.__t"))
-      .withColumn("lev", levenshtein(col("x.__t"), col("y.__t")))
-      .filter(col("lev") <= maxDist)
-      .select(col("x.__t").as("name_a"), col("y.__t").as("name_b"), col("lev"))
   }
 
   /** Content-defined chunking dedup report per source (G122) — the

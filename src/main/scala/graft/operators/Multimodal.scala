@@ -354,8 +354,6 @@ object Multimodal {
     }
   }
 
-  private val obsId = new java.util.concurrent.atomic.AtomicLong()
-
   /** Near-duplicate image pairs by dHash hamming distance — the image
     * counterpart of MinHash-LSH text dedup: split the 64-bit hash
     * into four 16-bit bands, bucket-join on any shared band, then
@@ -384,18 +382,11 @@ object Multimodal {
         col("dhash_hi").bitwiseAND(lit(65535L)),
         shiftright(col("dhash_lo"), 16),
         col("dhash_lo").bitwiseAND(lit(65535L)))).as(Seq("band", "bv")))
-    val bucketWin = Window.partitionBy("band", "bv")
-    val candidates = bands
-      .withColumn("bn", count(lit(1)).over(bucketWin))
-      .observe(s"graft_dhash_bucket_cap_${obsId.incrementAndGet()}",
-        sum(when(col("bn") > bucketCap, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("bn")), lit(0L)).as("max_bucket_size"))
-      .filter(col("bn") > 1 && col("bn") <= bucketCap)
-      .groupBy("band", "bv")
-      .agg(collect_list(col("id")).as("ids"))
-      .select(explode(col("ids")).as("idA"), col("ids"))
-      .select(col("idA"), explode(col("ids")).as("idB"))
-      .filter(col("idA") < col("idB"))
+    val sized = bands
+      .withColumn("bn", count(lit(1)).over(Window.partitionBy("band", "bv")))
+    val candidates = PairForms
+      .memberPairs(PairForms.capDrop(sized, "dhash_bucket", col("bn"), bucketCap),
+        Seq("band", "bv"), col("id"), pair = _ < _, as = ("idA", "idB"))
       .distinct()
     val h = hashes.select(col("doc_id"), col("dhash_hi"), col("dhash_lo"))
     candidates
@@ -683,14 +674,10 @@ object Multimodal {
     val sizes = ff.groupBy("id").agg(count(lit(1)).as("nf"))
     val posting = ff.groupBy("sig")
       .agg(count(lit(1)).as("dfc"), collect_list(struct(col("id"), col("pos"))).as("vs"))
-      .observe(s"graft_video_df_cap_${obsId.incrementAndGet()}",
-        sum(when(col("dfc") > dfCap, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("dfc")), lit(0L)).as("max_df"))
-      .filter(col("dfc") > 1 && col("dfc") <= dfCap)
-    val pairs = posting
-      .select(explode(col("vs")).as("a"), col("vs"))
-      .select(col("a"), explode(col("vs")).as("b"))
-      .filter(col("a.id") < col("b.id"))
+    val pairs = PairForms
+      .listPairs(
+        PairForms.capDrop(posting, "video_df", col("dfc"), dfCap, largest = Some("max_df")),
+        "vs")
       .select(col("a.id").as("idA"), col("b.id").as("idB"),
         (col("b.pos") - col("a.pos")).as("off"))
     val w = Window.partitionBy("idA", "idB")

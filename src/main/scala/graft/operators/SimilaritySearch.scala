@@ -594,15 +594,16 @@ object SimilaritySearch {
     // window would funnel the whole corpus through ≤256 tasks with no
     // map-side combine; the groupBy ships per-task partial counts and
     // the cap filter then runs scan-side, so only the ≤256·bucketCap
-    // surviving rows ever shuffle (for the pair-expansion collect)
-    val counts = c.groupBy("bucket").agg(count(lit(1)).as("bn"))
-    c.join(broadcast(counts), "bucket")
-      .filter(col("bn") > 1 && col("bn") <= bucketCap)
-      .groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("qv"), col("nrm"))).as("vs"))
-      .select(explode(col("vs")).as("a"), col("vs"))
-      .select(col("a"), explode(col("vs")).as("b"))
-      .filter(col("a.id") < col("b.id"))
+    // surviving rows ever shuffle (for the pair-expansion collect).
+    // The cap is observed on the bucket-grain counts, so each dropped
+    // bucket reports its bn rows (weight) — the same dropped-row total
+    // a row-grain guard would report.
+    val counts = PairForms.capDrop(
+      c.groupBy("bucket").agg(count(lit(1)).as("bn")),
+      "cosine_bucket", col("bn"), bucketCap, weight = col("bn"))
+    PairForms
+      .memberPairs(c.join(broadcast(counts), "bucket"),
+        Seq("bucket"), struct(col("id"), col("qv"), col("nrm")))
       .withColumn("cos",
         quantizedDot(col("a.qv"), col("b.qv")).cast("double") /
           (col("a.nrm") * col("b.nrm")))
@@ -619,11 +620,9 @@ object SimilaritySearch {
     * A real decontamination pass runs BOTH; this completes the pair.
     *
     * Scale shape: the G5b bucket-capped pair chain (never all-pairs)
-    * plus two id-keyed split joins — the split frame is a pure
-    * projection of the corpus, so nothing here exceeds the pair
-    * chain's own cost. The (split, split) matrix is ≤ 6 rows; the
-    * one-row total broadcasts; localCheckpoint() truncates the pair
-    * plan before it feeds both the matrix and the total.
+    * plus [[PairForms.straddleMatrix]] — two id-keyed joins to a split
+    * that is a pure projection of the corpus, so nothing here exceeds
+    * the pair chain's own cost; the (split, split) matrix is ≤ 6 rows.
     *
     * Output: (split_a, split_b, n_pairs, leak, share 4dp).
     */
@@ -631,25 +630,10 @@ object SimilaritySearch {
       corpus: DataFrame,
       minCos: Double = 0.35,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val splits = Sampling.hashSplit(corpus, idCol = idCol)
-      .select(col(idCol), col("split"))
-    val joined = cosineNearDupPairs(corpus, minCos = minCos,
-      idCol = idCol, embCol = embCol)
-      .join(splits.select(col(idCol).as("idA"), col("split").as("__sa")),
-        Seq("idA"))
-      .join(splits.select(col(idCol).as("idB"), col("split").as("__sb")),
-        Seq("idB"))
-      .select(least(col("__sa"), col("__sb")).as("split_a"),
-        greatest(col("__sa"), col("__sb")).as("split_b"))
-      .localCheckpoint() // feeds the matrix AND the total
-    joined
-      .groupBy("split_a", "split_b").agg(count(lit(1)).as("n_pairs"))
-      .crossJoin(broadcast(joined.agg(count(lit(1)).as("__n_total"))))
-      .select(col("split_a"), col("split_b"), col("n_pairs"),
-        (col("split_a") =!= col("split_b")).as("leak"),
-        round(col("n_pairs").cast("double") / col("__n_total"), 4).as("share"))
-  }
+      embCol: String = "embedding"): DataFrame =
+    PairForms.straddleMatrix(
+      cosineNearDupPairs(corpus, minCos = minCos, idCol = idCol, embCol = embCol),
+      corpus, idCol)
 
   /** LSH-bucketed ANN: score only candidates in the query's bucket.
     * Approximate — recall depends on `planes`; at 100 TB this replaces

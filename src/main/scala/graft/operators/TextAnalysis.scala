@@ -719,8 +719,6 @@ object TextAnalysis {
           .otherwise(lit("tail")).as("bucket"))
   }
 
-  private val obsId = new java.util.concurrent.atomic.AtomicLong()
-
   /** Sparse lexical cosine similarity join — TF-vector cosine over an
     * inverted index of word 3-gram SHINGLES, the embedding-free
     * complement of `SimilaritySearch.cosineNearDupPairs` (and the
@@ -770,18 +768,9 @@ object TextAnalysis {
       .groupBy("id", "word").agg(count(lit(1)).as("tf"))
       .localCheckpoint()
     val nrm = tf.groupBy("id").agg(sum(col("tf") * col("tf")).as("n2"))
-    val dfc = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    val pairs = tf
-      .join(dfc, Seq("word"))
-      .observe(s"graft_lexcos_df_cap_${obsId.incrementAndGet()}",
-        sum(when(col("df") > maxDf, 1L).otherwise(0L)).as("dropped_postings"),
-        coalesce(max(col("df")), lit(0L)).as("max_word_df"))
-      .filter(col("df") > 1 && col("df") <= maxDf)
-      .groupBy("word")
-      .agg(collect_list(struct(col("id"), col("tf"))).as("ps"))
-      .select(explode(col("ps")).as("a"), col("ps"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .filter(col("a.id") < col("b.id"))
+    val pairs = PairForms
+      .postingPairs(tf, Seq("word"), struct(col("id"), col("tf")),
+        "lexcos_df", maxDf, "max_word_df")
       .groupBy(col("a.id").as("idA"), col("b.id").as("idB"))
       .agg(sum(col("a.tf") * col("b.tf")).as("dot"))
     pairs

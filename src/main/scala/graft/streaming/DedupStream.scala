@@ -70,18 +70,13 @@ object DedupStream {
       k: Int = 12,
       bands: Int = 3,
       shingleSize: Int = 3): DataFrame = {
-    require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
-    val rows = k / bands
     docs
       .select(col(idCol).cast("long").as("doc_id"),
         graft.functions.NativeText.wordShingles(col(textCol), shingleSize).as("set"))
       .filter(size(col("set")) > 0)
       .withColumn("sig", graft.functions.NativeText.minhashSig(col("set"), k))
       .select(col("doc_id"),
-        posexplode(
-          transform(
-            sequence(lit(0), lit(bands - 1)),
-            b => md5(concat_ws("|", slice(col("sig"), b * rows + 1, lit(rows))))))
+        posexplode(graft.operators.PairForms.bandKeys(col("sig"), k, bands))
           .as(Seq("band", "bucket")))
       // band index folds into the state key (different bands of a
       // degenerate constant signature share the md5 — keep them apart)

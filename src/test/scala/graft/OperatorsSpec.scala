@@ -252,6 +252,94 @@ class OperatorsSpec extends SparkSpec {
     assert(uncapped == Set((100L, 101L)))
   }
 
+  test("every other pair-operator cap forces a drop and reports it") {
+    // each fixture puts more members in one bucket / block / posting list
+    // than its cap allows, next to a pair that survives (as the cap tests
+    // above do); the site's metric must report exactly the dropped rows
+    val same = (1 to 20).map(j => s"w$j").mkString(" ")
+    val degenerate = (1 to 10).map(i => (i.toLong, same))
+    val base = (1 to 40).map(i => s"u$i").mkString(" ")
+    val near = Seq((100L, base), (101L, base.replace("u40", "zz")))
+    val docs = (degenerate ++ near).toDF("doc_id", "text")
+    val hot = ((1 to 12).map(i => (i.toLong, s"the quick brown a$i b$i c$i d$i")) ++
+      Seq((100L, "alpha beta gamma delta"), (101L, "alpha beta gamma delta")))
+      .toDF("doc_id", "text").withColumn("block", lit("b"))
+    val names = Seq(("cold anvil", "anvil"), ("old anvil", "anvil"),
+      ("hot anvil", "anvil"), ("cold gear", "gear"), ("cold geer", "gear"))
+      .toDF("name", "block")
+    val band1 = (1L << 16) | 1L
+    val hashes = ((1 to 3).map(i => (i.toLong, 0L, 0L)) ++
+      Seq((10L, band1, band1), (11L, band1, band1 | 2L)))
+      .toDF("doc_id", "dhash_hi", "dhash_lo")
+    def blk(c: Char) = c.toString * 16
+    val clips = ((1 to 3).map(i => (i.toLong, blk('c') * 4)) ++
+      Seq(10L, 11L).map(i => (i, blk('x') + blk('y') + blk('z'))))
+      .toDF("doc_id", "text")
+    val cases = Seq[(String, String, Long, () => org.apache.spark.sql.DataFrame)](
+      // 10 docs × 3 bands in one bucket each
+      ("graft_stoplsh_bucket_cap", "dropped_postings", 30L, () =>
+        Dedup.stoplistedMinhashPairs(docs, Seq("no such shingle").toDF("shingle"),
+          bucketCap = 5)),
+      ("graft_inc_bucket_cap", "dropped_postings", 30L, () =>
+        Dedup.incrementalPairs(docs.filter(!col("doc_id").isin(1L, 101L)),
+          docs.filter(col("doc_id").isin(1L, 101L)), bucketCap = 5)),
+      // the hot shingle's 12 postings
+      ("graft_containment_df_cap", "dropped_postings", 12L, () =>
+        Dedup.shingleContainment(hot, "block", maxDf = 5)),
+      // the 3-name block
+      ("graft_jw_block_cap", "dropped_rows", 3L, () =>
+        Dedup.blockedJaroWinkler(names, "name", "block", minSim = 0.8, blockCap = 2)),
+      // 3 flat images × 4 bands
+      ("graft_dhash_bucket_cap", "dropped_postings", 12L, () =>
+        Multimodal.dhashPairs(hashes, bucketCap = 2)),
+      // one distinct frame held by 3 videos: video's postings are
+      // frame-grain lists (inline aggregate), so it counts 1 list
+      ("graft_video_df_cap", "dropped_postings", 1L, () =>
+        Multimodal.videoNearDup(clips, dfCap = 2)))
+    for ((prefix, field, dropped, build) <- cases) {
+      var rows = 0
+      val report = observedMetric(prefix) { rows = build().collect().length }(
+        _.getAs[Long](field) > 0L)
+      assert(rows == 1, s"$prefix: the surviving pair must come through, got $rows rows")
+      assert(report.isRight, s"$prefix must report its drop, saw $report")
+      assert(report.toOption.get.getAs[Long](field) == dropped, s"$prefix: $report")
+    }
+  }
+
+  test("cosineNearDupPairs bucket cap drops a hot bucket and reports it") {
+    // 100/101 near-identical (one bucket of 2); 200–202 identical (one
+    // bucket of 3). At cap 2 the 3-bucket is dropped and reported as
+    // graft_cosine_bucket_cap
+    val mk = (s: Seq[Double]) => s.map(_.toFloat)
+    val emb = (Seq(
+      (100L, mk(Seq(1, 0.9, 1, 1, 0, 0, 0, 0))),
+      (101L, mk(Seq(1, 1.0, 1, 1, 0, 0, 0, 0)))) ++
+      (200L to 202L).map(i => (i, mk(Seq(0, 0, 0, 0, 1, 1, 1, 0.5))))
+      ).toDF("vec_id", "embedding")
+    val out = SimilaritySearch.cosineNearDupPairs(emb, minCos = 0.9, dims = 8, bucketCap = 2)
+    val pairs = out.collect().map(r =>
+      (r.getAs[Long]("idA"), r.getAs[Long]("idB"))).toSet
+    assert(pairs == Set((100L, 101L)), s"the 3-vector bucket must be dropped, got $pairs")
+    val metrics = out.queryExecution.observedMetrics
+      .collectFirst { case (k, v) if k.startsWith("graft_cosine_bucket_cap") => v }
+    assert(metrics.isDefined, "bucket-cap observe metrics missing from the plan")
+    assert(metrics.get.getAs[Long]("dropped_postings") == 3L)
+    assert(metrics.get.getAs[Long]("max_bucket_size") == 3L)
+  }
+
+  test("batch MinHash-LSH rejects a band count that does not divide k") {
+    // k=12, bands=5 would band components 1–10 and silently ignore 11–12
+    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val stop = Seq("x y z").toDF("shingle")
+    for (build <- Seq[() => Any](
+        () => Dedup.minhashLshPairs(docs, k = 12, bands = 5),
+        () => Dedup.stoplistedMinhashPairs(docs, stop, k = 12, bands = 5),
+        () => Dedup.incrementalPairs(docs, docs, k = 12, bands = 5))) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("k=12 must be divisible by bands=5"), e.getMessage)
+    }
+  }
+
   test("RangeJoin.binned equals the naive range join, including bin-crossing intervals") {
     def ts(min: Int) = new java.sql.Timestamp(min * 60000L)
     val left = Seq((1L, 10L, ts(5)), (1L, 11L, ts(65)), (1L, 12L, ts(200)), (2L, 13L, ts(65)))
@@ -1675,10 +1763,16 @@ class OperatorsSpec extends SparkSpec {
       .collect()
     assert(out.map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq ==
       Seq(("cold anvil", "old anvil", 1)))
-    // a block over the cap contributes no pairs at all
-    val capped = Dedup.blockedLevenshtein(names, "name", "block",
-      maxDist = 2, blockCap = 2).collect()
-    assert(capped.isEmpty, "3-name block must be dropped at cap 2")
+    // a block over the cap contributes no pairs at all — and is
+    // reported: the cap runs inside the eager cut, so its metric comes
+    // from the cut's own query, taken while the frame is built
+    val report = observedMetric("graft_er_block_cap") {
+      val capped = Dedup.blockedLevenshtein(names, "name", "block",
+        maxDist = 2, blockCap = 2).collect()
+      assert(capped.isEmpty, "3-name block must be dropped at cap 2")
+    }(_.getAs[Long]("dropped_rows") == 3L)
+    assert(report.isRight, s"3 dropped rows must be reported, saw $report")
+    assert(report.toOption.get.getAs[Long]("max_block_size") == 3L)
   }
 
   test("Rollups.theilSen: one outlier point cannot move the slope") {

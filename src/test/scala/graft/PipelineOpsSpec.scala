@@ -198,9 +198,22 @@ class PipelineOpsSpec extends SparkSpec {
     val out = TextAnalysis.lexicalCosinePairs(docs, minCos = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.toSeq == Seq((1L, 2L, 3L, 1.0)))
-    // with maxDf = 1 every shared shingle is "boilerplate": no pairs
+    // with maxDf = 1 every shared shingle is "boilerplate": no pairs.
+    // (No metric either: no pair can clear df > 1 AND df <= 1, Spark
+    // folds that filter to an empty relation, and nothing runs.)
     val capped = TextAnalysis.lexicalCosinePairs(docs, minCos = 0.1, maxDf = 1)
     assert(capped.count() == 0)
+    // at maxDf = 2 the shingle "a b c" held by 3 docs is capped out of
+    // the dot and its 3 postings reported; docs 4/5 still pair
+    val boiler = Seq((1L, "a b c p q"), (2L, "a b c r s"), (3L, "a b c t u"),
+      (4L, "k l m n o"), (5L, "k l m n o")).toDF("doc_id", "text")
+    val report = observedMetric("graft_lexcos_df_cap") {
+      val kept = TextAnalysis.lexicalCosinePairs(boiler, minCos = 0.1, maxDf = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(kept == Seq((4L, 5L)), s"got $kept")
+    }(_.getAs[Long]("dropped_postings") == 3L)
+    assert(report.isRight, s"3 dropped postings must be reported, saw $report")
+    assert(report.toOption.get.getAs[Long]("max_word_df") == 3L)
     // repeated shingles weigh: "a b a b a" has shingles (a b a),(b a b),(a b a)
     val rep = Seq((1L, "a b a b a"), (2L, "a b a b a")).toDF("doc_id", "text")
     val r = TextAnalysis.lexicalCosinePairs(rep, minCos = 0.5).head()

@@ -53,4 +53,18 @@ class SurveySyncSpec extends AnyFunSuite {
     assert(over.isEmpty,
       s"files over the 3k cap (split at a family seam): ${over.mkString(", ")}")
   }
+
+  test("cap guards are built only by PairForms.capDrop") {
+    // one cap shape, one metric shape: a hand-rolled cap observe() is
+    // how a cap ends up unreported or under a second naming scheme
+    import scala.jdk.CollectionConverters._
+    val capObserve = """\.observe\(\s*s?"[^"]*_cap_""".r
+    val handRolled = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "PairForms.scala")
+      .filter(p => capObserve.findFirstIn(Files.readString(p)).isDefined)
+      .toSeq
+    assert(handRolled.isEmpty,
+      s"cap observe() outside PairForms (use PairForms.capDrop): ${handRolled.mkString(", ")}")
+  }
 }
