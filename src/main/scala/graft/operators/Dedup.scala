@@ -1366,7 +1366,6 @@ object Dedup {
       mask: Int = 64,
       window: Int = 8): DataFrame = {
     require(window >= 2 && mask >= 2 && maxChars >= window)
-    val d = (c: Column) => c.cast("double")
     val txt = substring(col("text"), 1, maxChars)
     // r16 hot-path rewrite (same boundaries, same chunks, same md5s —
     // oracle-identical): the original HOF formulation exploded a

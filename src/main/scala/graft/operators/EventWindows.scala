@@ -186,7 +186,6 @@ object EventWindows {
     val w = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy()
-    val d = (c: Column) => c.cast("double")
     val terms = Rollups.grainGuarded(grain, w, "logRank")
       .withColumn("__N1", sum("l1").over(wAll))
       .withColumn("__N2", sum("l2").over(wAll))
@@ -269,7 +268,6 @@ object EventWindows {
       catCol: String = "event_type",
       tsCol: String = "ts"): DataFrame = {
     val day = expr(s"unix_micros($tsCol) div 86400000000")
-    val d = (c: Column) => c.cast("double")
     val grain = events
       .groupBy(day.as("day"), col(catCol).as("cat"))
       .agg(count(lit(1)).as("n"))
@@ -708,7 +706,6 @@ object EventWindows {
     * median_dwell_us).
     */
   def stateDwell(dim: DataFrame): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     dim
       .filter(col("valid_to_us").isNotNull)
       .withColumn("__dur", col("valid_to_us") - col("valid_from_us"))
@@ -889,7 +886,6 @@ object EventWindows {
       typeCol: String = "event_type",
       arrivalCol: String = "event_id",
       tsCol: String = "ts"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val w = Window.partitionBy(col(typeCol)).orderBy(col(arrivalCol))
       .rowsBetween(Window.unboundedPreceding, -1)
     events
@@ -973,7 +969,6 @@ object EventWindows {
     val byUser = Window.partitionBy(userCol).orderBy(col(tsCol), col(idCol))
     val all = Window.partitionBy()
     val byFrom = Window.partitionBy("__s")
-    val d = (c: Column) => c.cast("double")
     events
       .select(col(userCol), col(tsCol), col(idCol), col(typeCol))
       .withColumn("__next", lead(col(typeCol), 1).over(byUser))
@@ -1015,7 +1010,6 @@ object EventWindows {
       tsCol: String = "ts",
       idCol: String = "event_id"): DataFrame = {
     val byUser = Window.partitionBy(userCol).orderBy(col("__us"), col(idCol))
-    val d = (c: Column) => c.cast("double")
     events
       .select(col(userCol), unix_micros(col(tsCol)).as("__us"), col(idCol))
       .withColumn("__gap", col("__us") - lag(col("__us"), 1).over(byUser))
@@ -1194,7 +1188,6 @@ object EventWindows {
       .filter(col(typeCol) === controlType && col(valueCol).isNotNull)
       .groupBy(col(userCol), col(tsCol).as("__cts"))
       .agg(max(cents).as("__cc"))
-    val d = (c: Column) => c.cast("double")
     AsOfJoin.asOf(treat, ctrl, Seq(userCol), tsCol, "__cts",
         payloadCols = Seq("__cc"), direction = "backward")
       .withColumn("__diff", (col("__tc") - col("__cc")).cast("decimal(38,0)"))

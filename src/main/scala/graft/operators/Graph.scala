@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed graph measures over an edge list — the companion to
@@ -13,44 +13,64 @@ object Graph {
 
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Per-node triangle participation counts over an undirected edge
-    * list, via DEGREE ORIENTATION: canonicalize edges (a<b, distinct),
-    * then orient every edge from its lower-degree endpoint to its
-    * higher-degree endpoint (ties by id). Wedge enumeration on the
-    * oriented DAG — join out-edges u→v with v→w, close with u→w —
-    * touches each triangle exactly once, and the orientation bounds
-    * every node's out-degree by O(√m), so the wedge join's fan-out
-    * stays O(m^1.5) even on the power-law degree distributions a
-    * near-dup graph has (a raw id-ordering would enumerate deg² wedges
-    * at every hub). The triangle SET is orientation-invariant, so an
-    * engine replaying the naive id-ordered formulation lands on the
-    * same counts.
+  /** The canonical undirected edge set: one `(a, b)` row per edge,
+    * `a < b` (self-loops dropped, reversed and repeated inputs merged).
     */
-  def triangleCount(
-      edges: DataFrame,
-      srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
-    val e = edges
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .where(col("a") < col("b")).distinct()
-    val deg = e.select(col("a").as("id"))
+
+  /** `(id, deg)` over a canonical edge set: one (node) combine. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("id"))
       .unionAll(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
+
+  /** Both orientations of every `(a, b)` row, as `(s, t)`. */
+  private def bothWays(e: DataFrame, a: String, b: String, s: String, t: String): DataFrame =
+    e.select(col(a).as(s), col(b).as(t))
+      .unionAll(e.select(col(b).as(s), col(a).as(t)))
+
+  /** Attaches `deg`'s degree of endpoint `a` as `da` and of `b` as `db`
+    * — two node-keyed equi joins.
+    */
+  private def withEndpointDegrees(
+      e: DataFrame, deg: DataFrame,
+      a: String, b: String, da: String, db: String): DataFrame =
+    e.join(deg.select(col("id").as(a), col("deg").as(da)), Seq(a))
+      .join(deg.select(col("id").as(b), col("deg").as(db)), Seq(b))
+
+  /** Every node of a `(src, dst)` edge list, once. */
+  private def nodeSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
+
+  /** `(id, tri)` over canonical edges `e` with their [[degrees]] `deg`,
+    * via DEGREE ORIENTATION: orient every edge from its lower-degree
+    * endpoint to its higher-degree endpoint (ties by id). Wedge
+    * enumeration on the oriented DAG — join out-edges u→v with v→w,
+    * close with u→w — touches each triangle exactly once, and the
+    * orientation bounds every node's out-degree by O(√m), so the wedge
+    * join's fan-out stays O(m^1.5) even on the power-law degree
+    * distributions a near-dup graph has (a raw id-ordering would
+    * enumerate deg² wedges at every hub). The triangle SET is
+    * orientation-invariant, so an engine replaying the naive
+    * id-ordered formulation lands on the same counts. Nodes in no
+    * triangle have no row.
+    */
+  private def triangles(e: DataFrame, deg: DataFrame): DataFrame = {
     // localCheckpoint (r17): the oriented DAG feeds all three legs of
     // the wedge/closing self-joins, whose sides alias differently —
     // without the eager cut each leg re-derives the full upstream
     // pair expansion (for q111 that is the MinHash banding)
-    val oriented = e
-      .join(deg.select(col("id").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b"))
+    val lowFirst = col("da") < col("db") ||
+      (col("da") === col("db") && col("a") < col("b"))
+    val oriented = withEndpointDegrees(e, deg, "a", "b", "da", "db")
       .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("u"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("v"))
+        when(lowFirst, col("a")).otherwise(col("b")).as("u"),
+        when(lowFirst, col("b")).otherwise(col("a")).as("v"))
       .localCheckpoint()
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"), col("e1.v") === col("e2.u"))
@@ -64,6 +84,36 @@ object Graph {
       .groupBy("id").agg(count(lit(1)).as("tri"))
   }
 
+  /** The hub-capped common-neighbour enumeration over canonical edges:
+    * one `(u, v, deg)` row per wedge u–w–v with u < v, `deg` the
+    * center w's degree. Centers with deg < 2 close no wedge; centers
+    * with deg > `hubCap` are EXCLUDED — the cap is SEMANTICS (their
+    * deg² fan-out is the largest; the LshBucketCap convention, mirrored
+    * by the oracles). One self-join of the capped doubled edge list on
+    * the center key, fan-out ≤ hubCap² per center.
+    */
+  private def cappedWedges(e: DataFrame, deg: DataFrame, hubCap: Int): DataFrame = {
+    val capped = bothWays(e, "a", "b", "w", "n")
+      .join(deg.filter(col("deg") >= 2 && col("deg") <= hubCap)
+        .withColumnRenamed("id", "w"), Seq("w"))
+    capped.as("x")
+      .join(capped.as("y"),
+        col("x.w") === col("y.w") && col("x.n") < col("y.n"))
+      .select(col("x.n").as("u"), col("y.n").as("v"), col("x.deg").as("deg"))
+  }
+
+  /** Per-node triangle participation counts over an undirected edge
+    * list: the canonical edge set through [[triangles]]' degree-oriented
+    * wedge closure.
+    */
+  def triangleCount(
+      edges: DataFrame,
+      srcCol: String = "src",
+      dstCol: String = "dst"): DataFrame = {
+    val e = undirected(edges, srcCol, dstCol)
+    triangles(e, degrees(e))
+  }
+
   /** Bounded-iteration synchronous PageRank: `iters` rounds of
     * rank(v) = (1−d)/N + d · Σ_{u→v} rank(u)/outdeg(u), from a
     * uniform 1/N start.
@@ -75,23 +125,19 @@ object Graph {
     * no window appears. The node count is the only driver-side value (a
     * constant-size aggregate scalar, the same sanctioned shape as
     * `Dedup.clusters`' convergence probe). Lineage is TRUNCATED with
-    * an eager `localCheckpoint()` every `checkpointEvery` rounds (and
-    * on the final round), the `Dedup.clusters` pattern: without it
-    * the returned plan nests one full round per iteration and
-    * analysis/optimization cost grows with `iters`; with it the final
-    * plan is at most `checkpointEvery` rounds over a materialized
-    * relation. Checkpointing changes nothing about the values; the
-    * previous round's copy is unpersisted once the next one is
-    * materialized, so at most two rank tables are ever cached.
+    * an eager `localCheckpoint()` every 3 rounds (and on the final
+    * round), the `Dedup.clusters` pattern: without it the returned
+    * plan nests one full round per iteration and analysis/optimization
+    * cost grows with `iters`; with it the final plan is at most 3
+    * rounds over a materialized relation. Checkpointing changes nothing
+    * about the values; the previous round's copy is unpersisted once
+    * the next one is materialized, so at most two rank tables are ever
+    * cached.
     *
     * The fixed iteration count keeps the result deterministic and
     * engine-replayable (the q108 oracle unrolls exactly `iters`
-    * rounds). `tol > 0` opts into early convergence exit — stop when
-    * max|Δrank| over a checkpoint interval falls below `tol`, probed
-    * only at checkpoint boundaries on already-materialized frames —
-    * for exploratory use where the iteration count is not part of the
-    * contract. Dangling nodes: with a symmetrized edge list every
-    * node has out-degree ≥ 1, so no rank mass is lost (callers with
+    * rounds). Dangling nodes: with a symmetrized edge list every node
+    * has out-degree ≥ 1, so no rank mass is lost (callers with
     * directed graphs should symmetrize or accept the drop).
     */
   def pageRank(
@@ -99,10 +145,7 @@ object Graph {
       iters: Int = 8,
       damping: Double = 0.85,
       srcCol: String = "src",
-      dstCol: String = "dst",
-      checkpointEvery: Int = 3,
-      tol: Double = 0.0): DataFrame = {
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
+      dstCol: String = "dst"): DataFrame = {
     // Materialize the edge list ONCE (the kCore/labelPropagation rule):
     // `e` feeds the degree fold, the node-set union AND one join per
     // round — left lazy, every checkpoint action re-derives the whole
@@ -112,23 +155,19 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint()
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
     // out-degree folds onto the rank frame ONCE (checkpointed,
     // node-grain), so each round pays one edge-side join instead of
     // two — 8 joins saved over the default run (VERDICT r12 item 8).
     // Dangling nodes (no out-edges) carry deg 1; their rank/deg is
     // never read because the contribution join keys on edge sources.
-    val nodeDeg = nodes
+    val nodeDeg = nodeSet(e)
       .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(1L)).as("deg"))
       .localCheckpoint()
     val n = nodeDeg.count()
     var ranks = nodeDeg.withColumn("rank", lit(1.0 / n)).localCheckpoint()
-    var atCkpt = ranks
-    var i = 1
-    var converged = false
-    while (i <= iters && !converged) {
+    var cut = ranks
+    for (i <- 1 to iters) {
       val contribs = e
         .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
@@ -137,19 +176,11 @@ object Graph {
         .select(col("id"), col("deg"),
           (lit((1 - damping) / n) +
             lit(damping) * coalesce(col("csum"), lit(0.0))).as("rank"))
-      if (i % checkpointEvery == 0 || i == iters) {
+      if (i % 3 == 0 || i == iters) {
         ranks = ranks.localCheckpoint()
-        if (tol > 0 && i < iters) {
-          val delta = atCkpt.select(col("id"), col("rank").as("prev"))
-            .join(ranks, Seq("id"))
-            .agg(max(abs(col("rank") - col("prev"))).as("d"))
-            .head().getDouble(0)
-          converged = delta < tol
-        }
-        atCkpt.unpersist()
-        atCkpt = ranks
+        cut.unpersist()
+        cut = ranks
       }
-      i += 1
     }
     // the returned frame is checkpointed (every exit path ends on a
     // checkpoint boundary), so the degree and edge tables can release
@@ -158,6 +189,7 @@ object Graph {
     e.unpersist()
     ranks.select("id", "rank")
   }
+
   /** Component size distribution — the shape report over G2b's
     * clustering: how many components of each size, plus each size
     * class's share of all clustered nodes. The giant-component
@@ -218,9 +250,7 @@ object Graph {
       aCol: String = "idA",
       bCol: String = "idB"): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .localCheckpoint()
+    var e = bothWays(pairs, aCol, bCol, "src", "dst").localCheckpoint()
     for (_ <- 1 to rounds) {
       val keep = e.groupBy("src").agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select(col("src").as("__id"))
@@ -263,8 +293,7 @@ object Graph {
       aCol: String = "idA",
       bCol: String = "idB"): DataFrame = {
     require(rounds >= 1)
-    val e = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    val e = bothWays(pairs, aCol, bCol, "src", "dst")
       .localCheckpoint() // feeds every round's neighbor-label join
     var labels = e.select(col("src").as("id")).distinct()
       .withColumn("community", col("id"))
@@ -298,9 +327,9 @@ object Graph {
     * together (the banding false-positive signature G83 hunts at the
     * shingle grain) — the two need opposite keeper policies.
     *
-    * Scale shape: triangles ride [[triangleCount]]'s degree-oriented
-    * wedge join (O(m^1.5) bound); degrees are one (node) combine over
-    * the canonical edge list; the attach is a node-keyed left join.
+    * Scale shape: the canonical edge list and its degree table are
+    * built once and feed [[triangles]]' degree-oriented wedge join
+    * (O(m^1.5) bound) directly; the attach is a node-keyed left join.
     * C is one exact integer ratio, 4dp (deg ≤ 1 publishes 0).
     *
     * Output: (id, deg, tri, coeff).
@@ -309,22 +338,17 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val e = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // feeds both the degree combine and the wedge join
-    val deg = e.select(col("a").as("id"))
-      .unionAll(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = degrees(e)
     deg
-      .join(triangleCount(e, "a", "b"), Seq("id"), "left")
+      .join(triangles(e, deg), Seq("id"), "left")
       .select(col("id"), col("deg"),
         coalesce(col("tri"), lit(0L)).as("tri"))
       .withColumn("coeff",
         when(col("deg") > 1,
-          round(lit(2.0) * col("tri").cast("double") /
-            (col("deg").cast("double") * (col("deg") - 1L).cast("double")), 4))
+          round(lit(2.0) * d(col("tri")) /
+            (d(col("deg")) * d(col("deg") - 1L)), 4))
           .otherwise(lit(0.0)))
   }
 
@@ -341,12 +365,9 @@ object Graph {
     * pair scores are order-free LONG sums; the top-k cut orders by
     * (score desc, u, v), total.
     *
-    * Scale shape: wedge centers with deg > `hubCap` are EXCLUDED —
-    * the cap is SEMANTICS (their per-wedge weight is the smallest and
-    * their deg² fan-out the largest; the LshBucketCap convention,
-    * mirrored by the oracle). Wedge enumeration is one self-join of
-    * the capped doubled edge list on the center key (fan-out ≤
-    * hubCap² per center), one (u,v) combine, an anti-join against the
+    * Scale shape: [[cappedWedges]] (centers with deg > `hubCap`
+    * excluded — their per-wedge weight is the smallest and their deg²
+    * fan-out the largest), one (u,v) combine, an anti-join against the
     * existing edges, and a global top-k (TakeOrdered — no full sort).
     *
     * Output: topK rows (u, v, common, aa).
@@ -357,29 +378,13 @@ object Graph {
       hubCap: Int = 64,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val e = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // feeds degrees, wedges, and the anti-join
-    val deg = e.select(col("a").as("id"))
-      .unionAll(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val dbl = e.select(col("a").as("w"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("w"), col("a").as("n")))
-    // deg-1 nodes can't center a wedge (and ln(1)=0 would divide by
-    // zero); hubs past the cap are excluded by contract
-    val capped = dbl
-      .join(deg.filter(col("deg") >= 2 && col("deg") <= hubCap)
-        .withColumnRenamed("id", "w"), Seq("w"))
-      .withColumn("__c",
-        floor(lit(1e6) / log(col("deg").cast("double")) + 0.5).cast("long"))
-    val scored = capped.as("x")
-      .join(capped.as("y"),
-        col("x.w") === col("y.w") && col("x.n") < col("y.n"))
-      .select(col("x.n").as("u"), col("y.n").as("v"), col("x.__c").as("__c"))
+    // centers have deg >= 2, so ln(deg) > 0
+    val scored = cappedWedges(e, degrees(e), hubCap)
       .groupBy("u", "v")
-      .agg(count(lit(1)).as("common"), sum("__c").as("__aaus"))
+      .agg(count(lit(1)).as("common"),
+        sum(floor(lit(1e6) / log(d(col("deg"))) + 0.5).cast("long")).as("__aaus"))
     scored
       .join(e, scored("u") === e("a") && scored("v") === e("b"), "left_anti")
       .orderBy(col("__aaus").desc, col("u"), col("v"))
@@ -462,12 +467,7 @@ object Graph {
       dstCol: String = "dst",
       idCol: String = "id",
       labelCol: String = "label"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") < col("b")).distinct()
-    val tagged = e
+    val tagged = undirected(edges, srcCol, dstCol)
       .join(labels.select(col(idCol).as("a"), col(labelCol).as("__ca")), Seq("a"))
       .join(labels.select(col(idCol).as("b"), col(labelCol).as("__cb")), Seq("b"))
       .localCheckpoint() // feeds m, within counts, AND degree mass
@@ -521,26 +521,15 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val dec = "decimal(38,0)"
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val e = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // feeds the degree combine and the moment join
-    val deg = e.select(col("a").as("id"))
-      .unionAll(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val dbl = e.select(col("a").as("s"), col("b").as("t"))
-      .unionAll(e.select(col("b").as("s"), col("a").as("t")))
-    dbl
-      .join(deg.select(col("id").as("s"), col("deg").as("__dj")), Seq("s"))
-      .join(deg.select(col("id").as("t"), col("deg").as("__dk")), Seq("t"))
+    val deg = degrees(e)
+    withEndpointDegrees(bothWays(e, "a", "b", "s", "t"), deg, "s", "t", "__dj", "__dk")
       .agg(
         count(lit(1)).as("__m"),
-        sum(col("__dj").cast(dec)).as("__sj"),
-        sum(col("__dj").cast(dec) * col("__dk")).as("__sjk"),
-        sum(col("__dj").cast(dec) * col("__dj")).as("__sjj"))
+        sum(dec(col("__dj"))).as("__sj"),
+        sum(dec(col("__dj")) * col("__dk")).as("__sjk"),
+        sum(dec(col("__dj")) * col("__dj")).as("__sjj"))
       .crossJoin(broadcast(
         deg.agg(count(lit(1)).as("n_nodes"))))
       .select(col("n_nodes"), expr("__m div 2").as("n_edges"),
@@ -573,24 +562,16 @@ object Graph {
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     require(ks.nonEmpty, "need at least one degree threshold")
-    val d = (c: Column) => c.cast("double")
     val kArr = array(ks.map(lit(_)): _*)
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val e = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // feeds the degree combine and the edge sweep
-    val deg = e.select(col("a").as("id"))
-      .unionAll(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = degrees(e)
       .localCheckpoint() // feeds the node sweep and both edge attaches
     val nodesAtK = deg
       .select(explode(kArr).as("k"), col("deg"))
       .filter(col("deg") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_nodes"))
-    val edgesAtK = e
-      .join(deg.select(col("id").as("a"), col("deg").as("__da")), Seq("a"))
-      .join(deg.select(col("id").as("b"), col("deg").as("__db")), Seq("b"))
+    val edgesAtK = withEndpointDegrees(e, deg, "a", "b", "__da", "__db")
       .select(explode(kArr).as("k"), least(col("__da"), col("__db")).as("__md"))
       .filter(col("__md") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_edges_within"))
@@ -620,7 +601,7 @@ object Graph {
     * Jaccard's denominator uses FULL degrees; the top-k cut orders by
     * (common desc, u, v), total.
     *
-    * Scale shape: capped wedge self-join, one (u,v) combine, two
+    * Scale shape: [[cappedWedges]], one (u,v) combine, two
     * broadcast-size degree attaches, anti-join against existing
     * edges, TakeOrdered top-k.
     *
@@ -632,31 +613,16 @@ object Graph {
       hubCap: Int = 64,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val e = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // feeds degrees, wedges, and the anti-join
-    val deg = e.select(col("a").as("id"))
-      .unionAll(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = degrees(e)
       .localCheckpoint() // feeds the wedge cap and both score attaches
-    val dbl = e.select(col("a").as("w"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("w"), col("a").as("n")))
-    val capped = dbl
-      .join(deg.filter(col("deg") >= 2 && col("deg") <= hubCap)
-        .select(col("id").as("w")), Seq("w"))
-    val scored = capped.as("x")
-      .join(capped.as("y"),
-        col("x.w") === col("y.w") && col("x.n") < col("y.n"))
-      .select(col("x.n").as("u"), col("y.n").as("v"))
+    val scored = cappedWedges(e, deg, hubCap)
       .groupBy("u", "v")
       .agg(count(lit(1)).as("common"))
-    scored
+    val unlinked = scored
       .join(e, scored("u") === e("a") && scored("v") === e("b"), "left_anti")
-      .join(deg.select(col("id").as("u"), col("deg").as("__du")), Seq("u"))
-      .join(deg.select(col("id").as("v"), col("deg").as("__dv")), Seq("v"))
+    withEndpointDegrees(unlinked, deg, "u", "v", "__du", "__dv")
       .orderBy(col("common").desc, col("u"), col("v"))
       .limit(topK)
       .select(col("u"), col("v"), col("common"),
@@ -695,9 +661,7 @@ object Graph {
     require(iters >= 1)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
+    val nodes = nodeSet(e).localCheckpoint()
     // r16: zero-score rows are mathematically INERT inside the loop —
     // a zero hub/auth contributes nothing to any neighbor sum and
     // nothing to the L1 total — so the per-half-round node-grain

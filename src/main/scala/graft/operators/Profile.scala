@@ -104,7 +104,6 @@ object Profile {
   def benfordAudit(df: DataFrame, valueCol: String): DataFrame = {
     val cents = round(col(valueCol) * 100).cast("long")
     val all = org.apache.spark.sql.expressions.Window.partitionBy()
-    val d = (c: Column) => c.cast("double")
     df.filter(col(valueCol).isNotNull && cents > 0)
       .select(substring(cents.cast("string"), 1, 1).cast("long").as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n"))
@@ -190,7 +189,6 @@ object Profile {
         typedLit((1 to 9).map(_ / 10.0))).as("__p"))
       .select(transform(col("__p"), b => round(b, 4)).as("__bs"))
     val all = org.apache.spark.sql.expressions.Window.partitionBy()
-    val d = (c: Column) => c.cast("double")
     rows.crossJoin(broadcast(bounds))
       .withColumn("__bin",
         aggregate(col("__bs"), lit(0),
@@ -241,7 +239,6 @@ object Profile {
       fineKeys: Seq[String],
       rollKeys: Seq[String],
       valueCol: Column): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val dec = "decimal(38,0)"
     val x = valueCol.cast("long")
     val vec = array(lit(1L), x, x * x, x * x * x, x * x * x * x)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Shared primitives of the stats family (`Rollups*`): the exact-cast
-  * helpers, the two-group value grain and its scale guard, doubled
+/** Shared primitives of the stats family (`Rollups*`): the cents
+  * quantizer, the two-group value grain and its scale guard, doubled
   * midranks and the tie cube — the pieces every rank and two-sample
   * test is built from — plus the reusable scale-safe rewrite forms for
   * the two plan classes the sf1 decade bench caught as super-linear
@@ -16,16 +16,6 @@ import org.apache.spark.sql.functions._
   * every registered query's plan.
   */
 private[operators] trait RollupsScaleForms {
-
-  /** The double cast every exact statistic ends in: ratios of exact
-    * integers, one written-order expression both engines mirror.
-    */
-  private[operators] def d(c: Column): Column = c.cast("double")
-
-  /** The corpus-moment contract: integer sums and products that can
-    * outgrow a long ride decimal(38,0) — exact and associative.
-    */
-  private[operators] def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** A metric quantized to integer cents (Spark's half-up round; the
     * oracles mirror it as `CAST(round(x * 100) AS BIGINT)`).

@@ -213,7 +213,6 @@ object SimilaritySearch {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     require(k == 3, "fixed unroll depth (oracle contract)")
-    val d = (c: Column) => c.cast("double")
     val c = prepared(corpus, idCol, embCol)
     val q = prepared(queries, idCol, embCol)
       .select(col("id").as("query_id"), col("qv").as("qqv"),
@@ -820,7 +819,6 @@ object SimilaritySearch {
       df: DataFrame,
       groupCol: String,
       embCol: String = "embedding"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val stats = spread(df)
       .select(col(groupCol).cast("long").as("__g"),
         posexplode(quantize(col(embCol))).as(Seq("pos", "v")))
@@ -1034,7 +1032,6 @@ object SimilaritySearch {
       df: DataFrame,
       labelCol: String = "label"): DataFrame = {
     val all = Window.partitionBy()
-    val d = (c: Column) => c.cast("double")
     df.filter(col(labelCol).isNotNull)
       .groupBy(col(labelCol).cast("long").as("label"))
       .agg(count(lit(1)).as("n"))
@@ -1119,7 +1116,6 @@ object SimilaritySearch {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       bar: Double = 0.999): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     spread(df)
       .select(col(idCol).cast("long").as("id"),
         quantize(col(embCol)).as("qv"),

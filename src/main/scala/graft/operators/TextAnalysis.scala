@@ -243,7 +243,6 @@ object TextAnalysis {
     * total_tokens, mean_quality, gopher_pass_rate, neardup_share).
     */
   def datasetCard(df: DataFrame): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val scored = gopherRules(quality(df))
     val base = scored.agg(
       count(lit(1)).as("n_docs"),
@@ -287,7 +286,6 @@ object TextAnalysis {
     val sentences = greatest(matches(t, "[.!?]+"), lit(1)).cast("long")
     val nWords = tokenCount(t).cast("long")
     val syllables = greatest(matches(t, "[aeiouyAEIOUY]+"), lit(1)).cast("long")
-    val d = (c: Column) => c.cast("double")
     df.withColumn("n_sentences", sentences)
       .withColumn("n_words", nWords)
       .withColumn("n_syllables", syllables)
@@ -872,7 +870,6 @@ object TextAnalysis {
       idCol: String = "doc_id",
       textCol: String = "text",
       discount: Double = 0.75): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val w = words(col(textCol))
     val tf = df
       .filter(size(w) >= 2)
@@ -1562,7 +1559,6 @@ object TextAnalysis {
       df: DataFrame,
       textCol: String = "text",
       sliceCol: String = "source"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     def cnt(pat: String): Column =
       size(regexp_extract_all(col(textCol), lit(pat), lit(0))).cast("long")
     val repl = cnt("\\x{FFFD}")
@@ -1603,7 +1599,6 @@ object TextAnalysis {
       sliceCol: String = "lang",
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val d = (c: Column) => c.cast("double")
     val nWords = size(filter(split(col(textCol), " "), w => w =!= ""))
       .cast("long")
     docs.select(col(idCol), col(sliceCol), nWords.as("__w"),

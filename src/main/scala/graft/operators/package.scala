@@ -1,8 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 package object operators {
+
+  /** The double cast every exact statistic ends in: ratios of exact
+    * integers, one written-order expression both engines mirror.
+    */
+  private[operators] def d(c: Column): Column = c.cast("double")
+
+  /** The corpus-moment contract: integer sums and products that can
+    * outgrow a long ride decimal(38,0) — exact and associative.
+    */
+  private[operators] def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Ensure at least `defaultParallelism` partitions before a
     * compute-heavy per-row stage (hashing, signatures, dot products).

@@ -18,6 +18,76 @@ import QueryHelpers._
   */
 private[graft] object GraphQueries {
 
+  /** Oracle CTEs `prs` (a, b), `deg` (id, deg), `ed` (u, v) and `tri`
+    * (id, tri) over `lshpairs`: each edge oriented low→high by
+    * (degree, id) — exactly Graph.triangles' formulation, which caps
+    * wedge fan-out at the oriented out-degree (the naive id-ordered
+    * triple join enumerates every hub's full wedge fan and filled the
+    * sf1 spill disk). Same triangle set as the naive closure. `prs`,
+    * `deg` and `ed` are MATERIALIZED: inlined, DuckDB re-evaluated
+    * `lshpairs` per reference and ran out of memory at sf0.1.
+    */
+  private val TriangleSql =
+    """prs AS MATERIALIZED (SELECT idA AS a, idB AS b FROM lshpairs),
+      |deg AS MATERIALIZED (
+      |  SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (
+      |    SELECT a AS id FROM prs UNION ALL SELECT b FROM prs)
+      |  GROUP BY 1
+      |),
+      |ed AS MATERIALIZED (
+      |  SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
+      |              THEN p.a ELSE p.b END AS u,
+      |         CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
+      |              THEN p.b ELSE p.a END AS v
+      |  FROM prs p
+      |  JOIN deg da ON da.id = p.a
+      |  JOIN deg db ON db.id = p.b
+      |),
+      |tw AS (
+      |  SELECT e1.u AS x, e1.v AS y, e2.v AS z
+      |  FROM ed e1
+      |  JOIN ed e2 ON e2.u = e1.v
+      |  JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v
+      |),
+      |m AS (
+      |  SELECT x AS id FROM tw
+      |  UNION ALL SELECT y FROM tw
+      |  UNION ALL SELECT z FROM tw
+      |),
+      |tri AS (SELECT id, CAST(count(*) AS BIGINT) AS tri FROM m GROUP BY id)""".stripMargin
+
+  /** Oracle CTEs for the co-purchase graph: `prs` (a, b) are part pairs
+    * sharing ≥ 2 order baskets (the naive basket self-join — same pair
+    * counts as the in-row expansion), `deg` (id, deg), and `cap`
+    * (w, n, deg) the doubled edges whose center w has 2 ≤ deg ≤ 64
+    * (the hub cap is semantics, mirrored from Graph.cappedWedges).
+    * `prs`, `deg` and `cap` are MATERIALIZED.
+    */
+  private val CoPurchaseWedgeSql =
+    """bk AS (
+      |  SELECT l_orderkey AS bsk, l_partkey AS it
+      |  FROM lineitem GROUP BY 1, 2
+      |),
+      |prs AS MATERIALIZED (
+      |  SELECT x.it AS a, y.it AS b
+      |  FROM bk x JOIN bk y ON x.bsk = y.bsk AND x.it < y.it
+      |  GROUP BY 1, 2 HAVING count(*) >= 2
+      |),
+      |deg AS MATERIALIZED (
+      |  SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (
+      |    SELECT a AS id FROM prs UNION ALL SELECT b FROM prs)
+      |  GROUP BY 1
+      |),
+      |dbl AS (
+      |  SELECT a AS w, b AS n FROM prs
+      |  UNION ALL SELECT b AS w, a AS n FROM prs
+      |),
+      |cap AS MATERIALIZED (
+      |  SELECT dbl.w, dbl.n, deg.deg
+      |  FROM dbl JOIN deg ON deg.id = dbl.w
+      |  WHERE deg.deg BETWEEN 2 AND 64
+      |)""".stripMargin
+
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q108_pagerank" -> ((s, dir) => {
       // PageRank over the symmetrized embedding near-dup graph:
@@ -143,9 +213,6 @@ private[graft] object GraphQueries {
   )
 
   val oracles: Seq[(String, String)] = Seq(
-    // Stratum-cap oracle: the window spelling of the same sample —
-    // rank by the identical md5-uniform, keep rk <= 10. The Scala
-    // side's bounded aggregate must land on the same kept set.
     // PageRank oracle: the driver-side loop unrolled as chained CTEs —
     // identical start vector, per-round formula, and damping
     // arithmetic ((1 - 0.85), not a pre-folded 0.15, so both engines
@@ -175,8 +242,6 @@ private[graft] object GraphQueries {
          |r0 AS (SELECT id, 1.0 / nn.n AS rank FROM nodes CROSS JOIN nn),
          |$PageRankItersSql
          |SELECT id, round(rank, 6) AS rank FROM r8""".stripMargin,
-    // Slice-minhash replay: q31's shingle + md5-seed hash forms, min
-    // per (slice, seed), component-agreement estimator.
     // k-core replay: the same 8 unrolled peel rounds. Every CTE is
     // MATERIALIZED — e_i feeds both k_{i+1} and e_{i+1}, and DuckDB's
     // default inlining would go exponential on the chain.
@@ -200,86 +265,17 @@ private[graft] object GraphQueries {
          |SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
          |FROM e8 GROUP BY 1""".stripMargin
     },
-    // Triangle oracle: the naive id-ordered closure (a<b<c via
-    // e(a,b)⋈e(b,c)⋈e(a,c)) over the q31 pair set —
-    // orientation-invariant, so it must land on the Scala side's
-    // degree-oriented counts exactly.
-    // Orientation-PINNED wedge replay (VERDICT r13 item 1): the naive
-    // id-ordered triple join enumerates every hub's full wedge fan and
-    // filled the sf1 spill disk; orienting each edge low→high by
-    // (degree, id) — exactly Graph.triangleCount's formulation — caps
-    // wedge fan-out at the oriented out-degree. Same triangle set.
-    // Triangle oracle: the naive id-ordered closure (a<b<c via
-    // e(a,b)⋈e(b,c)⋈e(a,c)) over the q31 pair set —
-    // orientation-invariant, so it must land on the Scala side's
-    // degree-oriented counts exactly.
-    // Orientation-PINNED wedge replay (VERDICT r13 item 1): the naive
-    // id-ordered triple join enumerates every hub's full wedge fan and
-    // filled the sf1 spill disk; orienting each edge low→high by
-    // (degree, id) — exactly Graph.triangleCount's formulation — caps
-    // wedge fan-out at the oriented out-degree. Same triangle set.
+    // Triangle oracle: the oriented-wedge chain (TriangleSql) over the
+    // q31 pair set; the triangle set is orientation-invariant.
     "q111_triangles" ->
       s"""WITH $MinhashPairsSql,
-         |prs AS (SELECT idA AS a, idB AS b FROM lshpairs),
-         |deg AS (
-         |  SELECT id, count(*) AS d FROM (
-         |    SELECT a AS id FROM prs UNION ALL SELECT b FROM prs)
-         |  GROUP BY 1
-         |),
-         |ed AS (
-         |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND p.a < p.b)
-         |              THEN p.a ELSE p.b END AS u,
-         |         CASE WHEN da.d < db.d OR (da.d = db.d AND p.a < p.b)
-         |              THEN p.b ELSE p.a END AS v
-         |  FROM prs p
-         |  JOIN deg da ON da.id = p.a
-         |  JOIN deg db ON db.id = p.b
-         |),
-         |tw AS (
-         |  SELECT e1.u AS x, e1.v AS y, e2.v AS z
-         |  FROM ed e1
-         |  JOIN ed e2 ON e2.u = e1.v
-         |  JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v
-         |),
-         |m AS (
-         |  SELECT x AS id FROM tw
-         |  UNION ALL SELECT y FROM tw
-         |  UNION ALL SELECT z FROM tw
-         |)
-         |SELECT id, CAST(count(*) AS BIGINT) AS tri FROM m GROUP BY id""".stripMargin,
-    // Clustering coefficient: q111's oriented-wedge triangle CTE plus
-    // the degree table; C is one exact integer ratio per node.
-    // Clustering coefficient: q111's oriented-wedge triangle CTE plus
-    // the degree table; C is one exact integer ratio per node.
+         |$TriangleSql
+         |SELECT id, tri FROM tri""".stripMargin,
+    // Clustering coefficient: q111's oriented-wedge triangle chain plus
+    // its degree table; C is one exact integer ratio per node.
     "q340_clustering_coeff" ->
       s"""WITH $MinhashPairsSql,
-         |prs AS (SELECT idA AS a, idB AS b FROM lshpairs),
-         |deg AS (
-         |  SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT a AS id FROM prs UNION ALL SELECT b FROM prs)
-         |  GROUP BY 1
-         |),
-         |ed AS (
-         |  SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
-         |              THEN p.a ELSE p.b END AS u,
-         |         CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.a < p.b)
-         |              THEN p.b ELSE p.a END AS v
-         |  FROM prs p
-         |  JOIN deg da ON da.id = p.a
-         |  JOIN deg db ON db.id = p.b
-         |),
-         |tw AS (
-         |  SELECT e1.u AS x, e1.v AS y, e2.v AS z
-         |  FROM ed e1
-         |  JOIN ed e2 ON e2.u = e1.v
-         |  JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v
-         |),
-         |m AS (
-         |  SELECT x AS id FROM tw
-         |  UNION ALL SELECT y FROM tw
-         |  UNION ALL SELECT z FROM tw
-         |),
-         |tri AS (SELECT id, CAST(count(*) AS BIGINT) AS tri FROM m GROUP BY id)
+         |$TriangleSql
          |SELECT d.id, d.deg,
          |       coalesce(t.tri, CAST(0 AS BIGINT)) AS tri,
          |       CASE WHEN d.deg > 1
@@ -287,44 +283,16 @@ private[graft] object GraphQueries {
          |                   / (CAST(d.deg AS DOUBLE) * (d.deg - 1)), 4)
          |            ELSE 0.0 END AS coeff
          |FROM deg d LEFT JOIN tri t USING (id)""".stripMargin,
-    // Adamic–Adar: co-purchase edges (≥2 shared baskets, replayed by
-    // the naive basket self-join — same pair counts as the in-row
-    // expansion); hub-capped wedge centers (the cap is semantics,
-    // mirrored here), integer micro-unit 1/ln(deg) weights so pair
-    // scores are order-free long sums, total (score, u, v) top-k cut.
-    // Adamic–Adar: co-purchase edges (≥2 shared baskets, replayed by
-    // the naive basket self-join — same pair counts as the in-row
-    // expansion); hub-capped wedge centers (the cap is semantics,
-    // mirrored here), integer micro-unit 1/ln(deg) weights so pair
-    // scores are order-free long sums, total (score, u, v) top-k cut.
+    // Adamic–Adar: the co-purchase capped wedges (CoPurchaseWedgeSql),
+    // integer micro-unit 1/ln(deg) weights of each wedge's center so
+    // pair scores are order-free long sums, total (score, u, v) top-k
+    // cut.
     "q341_adamic_adar" ->
-      s"""WITH bk AS (
-         |  SELECT l_orderkey AS bsk, l_partkey AS it
-         |  FROM lineitem GROUP BY 1, 2
-         |),
-         |prs AS (
-         |  SELECT x.it AS a, y.it AS b
-         |  FROM bk x JOIN bk y ON x.bsk = y.bsk AND x.it < y.it
-         |  GROUP BY 1, 2 HAVING count(*) >= 2
-         |),
-         |deg AS (
-         |  SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT a AS id FROM prs UNION ALL SELECT b FROM prs)
-         |  GROUP BY 1
-         |),
-         |dbl AS (
-         |  SELECT a AS w, b AS n FROM prs
-         |  UNION ALL SELECT b AS w, a AS n FROM prs
-         |),
-         |cap AS (
-         |  SELECT dbl.w, dbl.n,
-         |         CAST(floor(1e6 / ln(CAST(deg AS DOUBLE)) + 0.5) AS BIGINT) AS c
-         |  FROM dbl JOIN deg ON deg.id = dbl.w
-         |  WHERE deg BETWEEN 2 AND 64
-         |),
+      s"""WITH $CoPurchaseWedgeSql,
          |sc AS (
          |  SELECT x.n AS u, y.n AS v, CAST(count(*) AS BIGINT) AS common,
-         |         CAST(sum(x.c) AS BIGINT) AS aaus
+         |         CAST(sum(CAST(floor(1e6 / ln(CAST(x.deg AS DOUBLE)) + 0.5) AS BIGINT))
+         |           AS BIGINT) AS aaus
          |  FROM cap x JOIN cap y ON x.w = y.w AND x.n < y.n
          |  GROUP BY 1, 2
          |),
@@ -336,8 +304,6 @@ private[graft] object GraphQueries {
          |SELECT u, v, common,
          |       CAST(round(aaus / 100.0) AS BIGINT) / 10000.0 AS aa
          |FROM ne ORDER BY aaus DESC, u, v LIMIT 20""".stripMargin,
-    // Silhouette replay: q39's seed pick, full 16-way in-row scoring,
-    // top-2 by (sim desc, cell) → a/b distances → per-cell mean.
     // Degree power-law replay: same doubled edge list, same micro-nat
     // integer logs into the exact-sum trend (the q147/q176 contract).
     "q222_degree_powerlaw" ->
@@ -379,8 +345,6 @@ private[graft] object GraphQueries {
          |)
          |SELECT n_nodes, n_edges, max_degree, n_degrees, alpha, r2
          |FROM s LEFT JOIN f ON TRUE""".stripMargin,
-    // Canonical-pick replay: the q47 component walk joined to the q37
-    // quality integer, keeper by (quality desc, id) rank.
     // Component-size replay: the q47 walk, size histogram, exact
     // shares over the histogram.
     "q254_component_sizes" ->
@@ -410,7 +374,6 @@ private[graft] object GraphQueries {
          |SELECT size, n_components, n_nodes, node_share,
          |       max(node_share) OVER () AS max_share
          |FROM sh""".stripMargin,
-    // Label-balance replay: exact shares, 6dp entropy contributions.
     // Modularity replay: the lshpairs edge set labeled by source on
     // both endpoints; exact integer e_c/d_c/m, one double per
     // community in written order.
@@ -528,32 +491,10 @@ private[graft] object GraphQueries {
          |                     * CAST(nk.n_nodes - 1 AS DOUBLE)) END, 4) AS phi
          |FROM nk LEFT JOIN ek USING (k)
          |ORDER BY k""".stripMargin,
-    // Link-score replay: the q341 capped wedge frame without the AA
+    // Link-score replay: q341's capped wedges counted without the AA
     // weight; full degrees attach to the surviving pairs only.
     "q388_link_scores" ->
-      s"""WITH bk AS (
-         |  SELECT l_orderkey AS bsk, l_partkey AS it
-         |  FROM lineitem GROUP BY 1, 2
-         |),
-         |prs AS MATERIALIZED (
-         |  SELECT x.it AS a, y.it AS b
-         |  FROM bk x JOIN bk y ON x.bsk = y.bsk AND x.it < y.it
-         |  GROUP BY 1, 2 HAVING count(*) >= 2
-         |),
-         |deg AS MATERIALIZED (
-         |  SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT a AS id FROM prs UNION ALL SELECT b FROM prs)
-         |  GROUP BY 1
-         |),
-         |dbl AS (
-         |  SELECT a AS w, b AS n FROM prs
-         |  UNION ALL SELECT b AS w, a AS n FROM prs
-         |),
-         |cap AS MATERIALIZED (
-         |  SELECT dbl.w, dbl.n
-         |  FROM dbl JOIN deg ON deg.id = dbl.w
-         |  WHERE deg BETWEEN 2 AND 64
-         |),
+      s"""WITH $CoPurchaseWedgeSql,
          |sc AS (
          |  SELECT x.n AS u, y.n AS v, CAST(count(*) AS BIGINT) AS common
          |  FROM cap x JOIN cap y ON x.w = y.w AND x.n < y.n

@@ -1435,6 +1435,8 @@ private[graft] object PipelineQueries {
          |SELECT d.doc_id, d.source, d.lang, round(w.logw, 4) AS logw
          |FROM docw w JOIN documents d USING (doc_id)
          |ORDER BY w.logw DESC, d.doc_id LIMIT 50""".stripMargin,
+    // Slice-minhash replay: q31's shingle + md5-seed hash forms, min
+    // per (slice, seed), component-agreement estimator.
     "q332_minhash_rollup" ->
       """WITH w AS (SELECT source, string_split(text, ' ') AS w FROM documents),
         |sh AS (
@@ -1455,6 +1457,8 @@ private[graft] object PipelineQueries {
         |             / count(*), 4) AS jaccard_est
         |FROM st a JOIN st b ON a.j = b.j AND a.source < b.source
         |GROUP BY 1, 2""".stripMargin,
+    // Silhouette replay: q39's seed pick, full 16-way in-row scoring,
+    // top-2 by (sim desc, cell) → a/b distances → per-cell mean.
     "q161_silhouette" ->
       s"""WITH $EmbSql,
          |cent AS (
@@ -1811,6 +1815,9 @@ private[graft] object PipelineQueries {
         |       CAST(round(CAST(-sum(CASE WHEN channel = 'b' THEN c ELSE 0 END)
         |                  AS DOUBLE) / 100.0) AS BIGINT) / 10000.0 AS b_entropy
         |FROM co GROUP BY 1""".stripMargin,
+    // Stratum-cap oracle: the window spelling of the same sample —
+    // rank by the identical md5-uniform, keep rk <= 10. The Scala
+    // side's bounded aggregate must land on the same kept set.
     "q106_stratum_cap" ->
       s"""WITH r AS (
          |  SELECT source, doc_id,
@@ -2341,6 +2348,8 @@ private[graft] object PipelineQueries {
         |       round(jaro_winkler_similarity(x.p_name, y.p_name), 4) AS jw
         |FROM names x JOIN names y ON x.block = y.block AND x.p_name < y.p_name
         |WHERE round(jaro_winkler_similarity(x.p_name, y.p_name), 4) >= 0.8""".stripMargin,
+    // Canonical-pick replay: the q47 component walk joined to the q37
+    // quality integer, keeper by (quality desc, id) rank.
     "q223_canonical_pick" ->
       s"""WITH RECURSIVE $MinhashPairsSql,
          |edges AS (
@@ -2487,6 +2496,7 @@ private[graft] object PipelineQueries {
          |             / count(*) / 1e6, 6) AS mean_fid,
          |       CAST(count(*) FILTER (fid < 0.999) AS BIGINT) AS n_below
          |FROM f""".stripMargin,
+    // Label-balance replay: exact shares, 6dp entropy contributions.
     "q259_label_balance" ->
       """WITH g AS (
         |  SELECT CAST(label AS BIGINT) AS label, CAST(count(*) AS BIGINT) AS n
