@@ -24,7 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // windowed-top-k de-skew rewrite (spark.graft.rewriteWindowTopK)
+    // windowed-top-k de-skew rewrite for k <= 1000;
+    // spark.graft.rewriteWindowTopK=false turns it off
     ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
     // scale-form repairs for two PlanLint classes:
     // distinct-over-window → keyGrainAttach shape (default ON;

@@ -9,45 +9,24 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.graftshim.{columnOf, expressionOf}
 import org.apache.spark.sql.types._
 
-/** Bounded (hash, value) survivor set: the k SMALLEST pairs by
-  * lexicographic (hash, value) — a max-heap so the current worst
-  * evicts in O(log k).
+/** Bounded (hash, value) survivor set: the [[KBestHeap]] keeping the k
+  * SMALLEST pairs by lexicographic (hash, value), so the current worst
+  * evicts in O(log k). k = 0 keeps nothing.
   */
-final class BkBuffer(val k: Int) extends Serializable {
-  val hs = new Array[Long](k)
-  val vs = new Array[Double](k)
-  var size = 0
+final class BkBuffer(k: Int) extends KBestHeap(k) {
+  val hs = new Array[Long](k + 1)
+  val vs = new Array[Double](k + 1)
 
-  private def gt(ha: Long, va: Double, hb: Long, vb: Double): Boolean =
-    ha > hb || (ha == hb && va > vb)
+  protected def worse(i: Int, j: Int): Boolean =
+    hs(i) > hs(j) || (hs(i) == hs(j) && vs(i) > vs(j))
 
-  private def swap(i: Int, j: Int): Unit = {
+  protected def swap(i: Int, j: Int): Unit = {
     val th = hs(i); hs(i) = hs(j); hs(j) = th
     val tv = vs(i); vs(i) = vs(j); vs(j) = tv
   }
 
-  def add(h: Long, v: Double): Unit = {
-    if (java.lang.Double.isNaN(v)) return
-    if (size < k) {
-      hs(size) = h; vs(size) = v; size += 1
-      var i = size - 1
-      while (i > 0 && gt(hs(i), vs(i), hs((i - 1) / 2), vs((i - 1) / 2))) {
-        swap(i, (i - 1) / 2); i = (i - 1) / 2
-      }
-    } else if (k > 0 && gt(hs(0), vs(0), h, v)) {
-      hs(0) = h; vs(0) = v
-      var i = 0
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1
-        val r = 2 * i + 2
-        var s = i
-        if (l < size && gt(hs(l), vs(l), hs(s), vs(s))) s = l
-        if (r < size && gt(hs(r), vs(r), hs(s), vs(s))) s = r
-        if (s == i) done = true else { swap(i, s); i = s }
-      }
-    }
-  }
+  def add(h: Long, v: Double): Unit =
+    if (!java.lang.Double.isNaN(v)) { val s = free; hs(s) = h; vs(s) = v; offer() }
 }
 
 /** Mergeable quantile SAMPLE: the k smallest (hash, value) pairs of a
@@ -103,18 +82,8 @@ case class BottomKSample(
 
   override def eval(b: BkBuffer): Any = {
     // ascending (h, v) — deterministic across runs and engines
-    val idx = Array.tabulate[Integer](b.size)(i => i)
-    java.util.Arrays.sort(idx, (a: Integer, c: Integer) => {
-      val byH = java.lang.Long.compare(b.hs(a), b.hs(c))
-      if (byH != 0) byH else java.lang.Double.compare(b.vs(a), b.vs(c))
-    })
-    val rows = new Array[Any](b.size)
-    var i = 0
-    while (i < b.size) {
-      rows(i) = new GenericInternalRow(Array[Any](b.hs(idx(i)), b.vs(idx(i))))
-      i += 1
-    }
-    new GenericArrayData(rows)
+    new GenericArrayData(b.ranked.map(i =>
+      new GenericInternalRow(Array[Any](b.hs(i), b.vs(i))): Any))
   }
 
   override def serialize(b: BkBuffer): Array[Byte] = {

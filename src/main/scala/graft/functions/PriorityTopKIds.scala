@@ -8,52 +8,29 @@ import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftshim.{columnOf, expressionOf}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Bounded (priority, id) survivor set: keeps the k SMALLEST
-  * (priority, id) pairs seen, lexicographically — a max-heap over the
-  * survivors so the current worst is evicted in O(log k). With
-  * hash-derived uniform priorities, the k smallest uniforms of a
-  * stratum are an exact-k uniform sample of it — and "k smallest of a
-  * union = k smallest of the union of per-partition k-smallest" makes
-  * the merge exact, so partial (map-side) aggregation carries O(k)
-  * state per stratum per task instead of the stratum's rows.
+/** Bounded (priority, id) survivor set: the [[KBestHeap]] keeping the
+  * k SMALLEST (priority, id) pairs seen, lexicographically, so the
+  * current worst is evicted in O(log k). With hash-derived uniform
+  * priorities, the k smallest uniforms of a stratum are an exact-k
+  * uniform sample of it — and "k smallest of a union = k smallest of
+  * the union of per-partition k-smallest" makes the merge exact, so
+  * partial (map-side) aggregation carries O(k) state per stratum per
+  * task instead of the stratum's rows. k = 0 keeps nothing.
   */
-final class PrioIdBuffer(val k: Int) extends Serializable {
-  val prio = new Array[Double](k)
-  val ids = new Array[Long](k)
-  var size = 0
+final class PrioIdBuffer(k: Int) extends KBestHeap(k) {
+  val prio = new Array[Double](k + 1)
+  val ids = new Array[Long](k + 1)
 
-  // lexicographic (priority, id): heap property orders the WORST
-  // survivor at the root
-  private def gt(pa: Double, ia: Long, pb: Double, ib: Long): Boolean =
-    pa > pb || (pa == pb && ia > ib)
+  protected def worse(i: Int, j: Int): Boolean =
+    prio(i) > prio(j) || (prio(i) == prio(j) && ids(i) > ids(j))
 
-  private def swap(i: Int, j: Int): Unit = {
+  protected def swap(i: Int, j: Int): Unit = {
     val tp = prio(i); prio(i) = prio(j); prio(j) = tp
     val ti = ids(i); ids(i) = ids(j); ids(j) = ti
   }
 
-  def add(p: Double, id: Long): Unit = {
-    if (java.lang.Double.isNaN(p)) return
-    if (size < k) {
-      prio(size) = p; ids(size) = id; size += 1
-      var i = size - 1
-      while (i > 0 && gt(prio(i), ids(i), prio((i - 1) / 2), ids((i - 1) / 2))) {
-        swap(i, (i - 1) / 2); i = (i - 1) / 2
-      }
-    } else if (k > 0 && gt(prio(0), ids(0), p, id)) {
-      prio(0) = p; ids(0) = id
-      var i = 0
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1
-        val r = 2 * i + 2
-        var s = i
-        if (l < size && gt(prio(l), ids(l), prio(s), ids(s))) s = l
-        if (r < size && gt(prio(r), ids(r), prio(s), ids(s))) s = r
-        if (s == i) done = true else { swap(i, s); i = s }
-      }
-    }
-  }
+  def add(p: Double, id: Long): Unit =
+    if (!java.lang.Double.isNaN(p)) { val s = free; prio(s) = p; ids(s) = id; offer() }
 }
 
 /** Exact-k-per-group uniform sampling as a bounded-state aggregate —
@@ -100,14 +77,9 @@ case class PriorityTopKIds(
     buffer
   }
 
-  override def eval(buffer: PrioIdBuffer): Any = {
-    val order = Array.tabulate(buffer.size)(identity).sortWith { (a, b) =>
-      buffer.prio(a) < buffer.prio(b) ||
-        (buffer.prio(a) == buffer.prio(b) && buffer.ids(a) < buffer.ids(b))
-    }
+  override def eval(buffer: PrioIdBuffer): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      order.map(i => buffer.ids(i)))
-  }
+      buffer.ranked.map(i => buffer.ids(i)))
 
   override def serialize(buffer: PrioIdBuffer): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + buffer.size * 16)

@@ -7,59 +7,81 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.{columnOf, expressionOf}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Bounded top-K score buffer: a size-capped min-heap over doubles.
-  * Adding a score is O(log K); the harmonic evaluation sorts the ≤K
-  * survivors descending and folds Σ sᵢ/i² in that order — bit-identical
-  * to [[HarmonicScore]] over the full multiset, since only the K
-  * largest values (by value, ties interchangeable) contribute.
+/** Bounded top-K score buffer: the [[KBestHeap]] over doubles, keeping
+  * the K largest (the smallest survivor sits at the root). Adding a
+  * score is O(log K) and allocates nothing; the harmonic evaluation
+  * sorts the ≤K survivors and folds Σ sᵢ/i² from the largest down with
+  * [[HarmonicScore.fold]] — bit-identical to [[HarmonicScore]] over the
+  * full multiset, since only the K largest values (by value, ties
+  * interchangeable) contribute. NaNs are skipped; k must be ≥ 1.
   */
-final class TopKBuffer(val k: Int) extends Serializable {
-  val heap = new Array[Double](k)
-  var size = 0
+final class TopKBuffer(k: Int) extends KBestHeap(k) {
+  HarmonicScore.requireTopK(k)
+  val heap = new Array[Double](k + 1)
 
-  def add(v: Double): Unit = {
-    if (java.lang.Double.isNaN(v)) return
-    if (size < k) {
-      heap(size) = v
-      size += 1
-      var i = size - 1
-      while (i > 0 && heap((i - 1) / 2) > heap(i)) {
-        val t = heap(i); heap(i) = heap((i - 1) / 2); heap((i - 1) / 2) = t
-        i = (i - 1) / 2
-      }
-    } else if (v > heap(0)) {
-      heap(0) = v
-      var i = 0
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1
-        val r = 2 * i + 2
-        var s = i
-        if (l < size && heap(l) < heap(s)) s = l
-        if (r < size && heap(r) < heap(s)) s = r
-        if (s == i) done = true
-        else { val t = heap(i); heap(i) = heap(s); heap(s) = t; i = s }
-      }
-    }
+  protected def worse(i: Int, j: Int): Boolean = heap(i) < heap(j)
+  protected def swap(i: Int, j: Int): Unit = {
+    val t = heap(i); heap(i) = heap(j); heap(j) = t
   }
 
-  def harmonic(maxScore: Double): Any = {
-    if (size == 0) return null
-    val sorted = java.util.Arrays.copyOf(heap, size)
-    java.util.Arrays.sort(sorted)
-    var sum = 0.0
+  def add(v: Double): Unit =
+    if (!java.lang.Double.isNaN(v)) { heap(free) = v; offer() }
+
+  /** The survivors, ascending. */
+  def sorted: Array[Double] = {
+    val out = java.util.Arrays.copyOf(heap, size)
+    java.util.Arrays.sort(out)
+    out
+  }
+
+  def harmonic(maxScore: Double): Any =
+    if (size == 0) null else HarmonicScore.fold(sorted, size, size, maxScore)
+
+  /** Byte layout: int k, int size, then the `size` survivors in slot
+    * order.
+    */
+  def toBytes: Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 + size * 8)
+    bb.putInt(k).putInt(size)
     var i = 0
-    while (i < size) {
-      val rank = i + 1
-      sum += sorted(size - 1 - i) / (rank.toDouble * rank)
-      i += 1
-    }
-    sum / maxScore
+    while (i < size) { bb.putDouble(heap(i)); i += 1 }
+    bb.array()
   }
+}
+
+object TopKBuffer {
+  def fromBytes(bytes: Array[Byte]): TopKBuffer = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val buf = new TopKBuffer(bb.getInt())
+    val n = bb.getInt()
+    var i = 0
+    while (i < n) { buf.heap(i) = bb.getDouble(); i += 1 }
+    buf.size = n
+    buf
+  }
+}
+
+/** The state, merge and codec that `topk_collect` and `topk_harmonic`
+  * share: one [[TopKBuffer]] per group, merged by re-adding the other
+  * side's survivors, serialized by [[TopKBuffer.toBytes]].
+  */
+abstract class TopKBufferAggregate extends TypedImperativeAggregate[TopKBuffer] {
+  def k: Int
+
+  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
+
+  override def merge(buffer: TopKBuffer, input: TopKBuffer): TopKBuffer = {
+    var i = 0
+    while (i < input.size) { buffer.add(input.heap(i)); i += 1 }
+    buffer
+  }
+
+  override def serialize(buffer: TopKBuffer): Array[Byte] = buffer.toBytes
+  override def deserialize(bytes: Array[Byte]): TopKBuffer = TopKBuffer.fromBytes(bytes)
 }
 
 /** Windowed cumulative harmonic score with O(K) state.
@@ -77,8 +99,8 @@ final class TopKBuffer(val k: Int) extends Serializable {
   * pair would OOM that formulation, while this one carries 50 doubles).
   *
   * Input is the per-year score array from the map-side-combined
-  * `collect_list` aggregate; nulls/NaNs are skipped like
-  * [[HarmonicScore]].
+  * `topKCollect` aggregate ([[TopKCollect]]); nulls/NaNs are skipped like
+  * [[HarmonicScore]], and a k below 1 is rejected as it is there.
   */
 case class TopKHarmonic(
     child: Expression,
@@ -86,13 +108,13 @@ case class TopKHarmonic(
     maxScore: Double = GraftConf.MaxScore,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKBuffer] with UnaryLike[Expression] {
+    extends TopKBufferAggregate with UnaryLike[Expression] {
+
+  HarmonicScore.requireTopK(k)
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "topk_harmonic"
-
-  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
 
   override def update(buffer: TopKBuffer, input: InternalRow): TopKBuffer = {
     val v = child.eval(input)
@@ -108,31 +130,7 @@ case class TopKHarmonic(
     buffer
   }
 
-  override def merge(buffer: TopKBuffer, input: TopKBuffer): TopKBuffer = {
-    var i = 0
-    while (i < input.size) { buffer.add(input.heap(i)); i += 1 }
-    buffer
-  }
-
   override def eval(buffer: TopKBuffer): Any = buffer.harmonic(maxScore)
-
-  override def serialize(buffer: TopKBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + buffer.size * 8)
-    bb.putInt(buffer.k).putInt(buffer.size)
-    var i = 0
-    while (i < buffer.size) { bb.putDouble(buffer.heap(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new TopKBuffer(bb.getInt())
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) { buf.heap(i) = bb.getDouble(); i += 1 }
-    buf.size = n
-    buf
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKHarmonic =
     copy(mutableAggBufferOffset = newOffset)
@@ -161,22 +159,21 @@ object TopKHarmonic {
   * top-Ks — exact, not approximate). Aggregation state is the same
   * O(K) [[TopKBuffer]]; `collect_list` state is O(rows-per-group),
   * unbounded in evidence-per-year at 100 TB. Output is sorted
-  * descending (deterministic). Nulls and NaNs are skipped, like
-  * [[HarmonicScore]].
+  * descending (deterministic). Nulls and NaNs are skipped, and a k
+  * below 1 is rejected, like [[HarmonicScore]].
   */
 case class TopKCollect(
     child: Expression,
     k: Int = GraftConf.TopK,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[TopKBuffer] with UnaryLike[Expression] {
+    extends TopKBufferAggregate with UnaryLike[Expression] {
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
+  HarmonicScore.requireTopK(k)
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "topk_collect"
-
-  override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k)
 
   override def update(buffer: TopKBuffer, input: InternalRow): TopKBuffer = {
     val v = child.eval(input)
@@ -184,37 +181,13 @@ case class TopKCollect(
     buffer
   }
 
-  override def merge(buffer: TopKBuffer, input: TopKBuffer): TopKBuffer = {
-    var i = 0
-    while (i < input.size) { buffer.add(input.heap(i)); i += 1 }
-    buffer
-  }
-
   override def eval(buffer: TopKBuffer): Any = {
-    val sorted = java.util.Arrays.copyOf(buffer.heap, buffer.size)
-    java.util.Arrays.sort(sorted)
-    val out = new Array[Double](buffer.size)
+    val asc = buffer.sorted
+    val n = asc.length
+    val out = new Array[Double](n)
     var i = 0
-    while (i < buffer.size) { out(i) = sorted(buffer.size - 1 - i); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override def serialize(buffer: TopKBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + buffer.size * 8)
-    bb.putInt(buffer.k).putInt(buffer.size)
-    var i = 0
-    while (i < buffer.size) { bb.putDouble(buffer.heap(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new TopKBuffer(bb.getInt())
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) { buf.heap(i) = bb.getDouble(); i += 1 }
-    buf.size = n
-    buf
+    while (i < n) { out(i) = asc(n - 1 - i); i += 1 }
+    new GenericArrayData(out)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKCollect =

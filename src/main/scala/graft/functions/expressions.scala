@@ -104,7 +104,7 @@ private[graft] object NativeText {
 case class HarmonicScore(child: Expression, k: Int, maxScore: Double)
     extends UnaryExpression {
 
-  require(k >= 1, s"topK must be >= 1, got $k")
+  HarmonicScore.requireTopK(k)
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -141,16 +141,26 @@ object HarmonicScore {
     }
     if (m == 0) return null
     java.util.Arrays.sort(clean, 0, m)
-    val top = math.min(k, m)
+    java.lang.Double.valueOf(fold(clean, m, math.min(k, m), maxScore))
+  }
+
+  /** The one harmonic fold, shared with [[TopKBuffer.harmonic]]:
+    * Σ sᵢ/i² (1-based rank) over the `top` largest of `asc(0 until m)`
+    * (sorted ascending), summed from the largest down, over maxScore.
+    */
+  def fold(asc: Array[Double], m: Int, top: Int, maxScore: Double): Double = {
     var sum = 0.0
-    i = 0
+    var i = 0
     while (i < top) {
       val rank = i + 1
-      sum += clean(m - 1 - i) / (rank.toDouble * rank)
+      sum += asc(m - 1 - i) / (rank.toDouble * rank)
       i += 1
     }
-    java.lang.Double.valueOf(sum / maxScore)
+    sum / maxScore
   }
+
+  /** The k check of every top-K entry point. */
+  def requireTopK(k: Int): Unit = require(k >= 1, s"topK must be >= 1, got $k")
 }
 
 /** `long_dot(a, b)`: dot product of two long arrays — the ANN scoring

@@ -18,7 +18,7 @@ package object functions {
     */
   def harmonicScore(
       scores: Column,
-      topK: Int = 50,
+      topK: Int = GraftConf.TopK,
       maxScore: Double = GraftConf.MaxScore): Column =
     NativeText.harmonic(scores, topK, maxScore)
 
@@ -27,7 +27,7 @@ package object functions {
     */
   def harmonicScoreHof(
       scores: Column,
-      topK: Int = 50,
+      topK: Int = GraftConf.TopK,
       maxScore: Double = GraftConf.MaxScore): Column = {
     val clean = filter(scores, s => s.isNotNull && !isnan(s))
     val top = slice(reverse(array_sort(clean)), 1, topK)

@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.functions.KBestHeap
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -39,7 +41,7 @@ case class TopKRowsCollect(
   @transient private lazy val base = TypeUtils.getInterpretedOrdering(left.dataType)
 
   /** Window-order comparison: negative ⇒ x ranks before y. */
-  private def cmpKeys(x: Any, y: Any): Int =
+  @transient private lazy val cmpKeys: (Any, Any) => Int = (x, y) =>
     if (x == null && y == null) 0
     else if (x == null) { if (nullsFirst) -1 else 1 }
     else if (y == null) { if (nullsFirst) 1 else -1 }
@@ -48,52 +50,22 @@ case class TopKRowsCollect(
       if (desc) -c else c
     }
 
-  override def createAggregationBuffer(): TopKRowsBuffer = new TopKRowsBuffer(k)
-
-  private def add(buf: TopKRowsBuffer, key: Any, row: InternalRow): Unit = {
-    if (buf.size < k) {
-      buf.keys(buf.size) = key
-      buf.rows(buf.size) = row
-      buf.size += 1
-      var i = buf.size - 1
-      while (i > 0 && cmpKeys(buf.keys(i), buf.keys((i - 1) / 2)) > 0) {
-        buf.swap(i, (i - 1) / 2); i = (i - 1) / 2
-      }
-    } else if (k > 0 && cmpKeys(key, buf.keys(0)) < 0) {
-      buf.keys(0) = key
-      buf.rows(0) = row
-      var i = 0
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1
-        val r = 2 * i + 2
-        var s = i
-        if (l < buf.size && cmpKeys(buf.keys(l), buf.keys(s)) > 0) s = l
-        if (r < buf.size && cmpKeys(buf.keys(r), buf.keys(s)) > 0) s = r
-        if (s == i) done = true else { buf.swap(i, s); i = s }
-      }
-    }
-  }
+  override def createAggregationBuffer(): TopKRowsBuffer = new TopKRowsBuffer(k, cmpKeys)
 
   override def update(buf: TopKRowsBuffer, input: InternalRow): TopKRowsBuffer = {
     val row = right.eval(input).asInstanceOf[InternalRow]
-    if (row != null) {
-      add(buf, InternalRow.copyValue(left.eval(input)), row.copy())
-    }
+    if (row != null) buf.add(InternalRow.copyValue(left.eval(input)), row.copy())
     buf
   }
 
   override def merge(buf: TopKRowsBuffer, other: TopKRowsBuffer): TopKRowsBuffer = {
     var i = 0
-    while (i < other.size) { add(buf, other.keys(i), other.rows(i)); i += 1 }
+    while (i < other.size) { buf.add(other.keys(i), other.rows(i)); i += 1 }
     buf
   }
 
-  override def eval(buf: TopKRowsBuffer): Any = {
-    val order = Array.tabulate(buf.size)(identity)
-      .sortWith((a, b) => cmpKeys(buf.keys(a), buf.keys(b)) < 0)
-    new GenericArrayData(order.map(i => buf.rows(i): Any))
-  }
+  override def eval(buf: TopKRowsBuffer): Any =
+    new GenericArrayData(buf.ranked.map(i => buf.rows(i): Any))
 
   @transient private lazy val pairProj =
     UnsafeProjection.create(Array(left.dataType, right.dataType))
@@ -115,7 +87,7 @@ case class TopKRowsCollect(
 
   override def deserialize(bytes: Array[Byte]): TopKRowsBuffer = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val buf = new TopKRowsBuffer(k)
+    val buf = createAggregationBuffer()
     val n = in.readInt()
     var i = 0
     while (i < n) {
@@ -125,7 +97,7 @@ case class TopKRowsCollect(
       val ur = new UnsafeRow(2)
       ur.pointTo(arr, len)
       // heap property is preserved by re-adding (n ≤ k, so no eviction)
-      add(buf, InternalRow.copyValue(ur.get(0, left.dataType)),
+      buf.add(InternalRow.copyValue(ur.get(0, left.dataType)),
         ur.get(1, right.dataType).asInstanceOf[InternalRow].copy())
       i += 1
     }
@@ -141,13 +113,25 @@ case class TopKRowsCollect(
     copy(left = newLeft, right = newRight)
 }
 
-final class TopKRowsBuffer(val k: Int) extends Serializable {
-  val keys = new Array[Any](k)
-  val rows = new Array[InternalRow](k)
-  var size = 0
-  def swap(i: Int, j: Int): Unit = {
+/** The [[graft.functions.KBestHeap]] behind [[TopKRowsCollect]]: the k
+  * rows whose keys rank first under `cmpKeys` (negative ⇒ the first key
+  * ranks before the second).
+  */
+final class TopKRowsBuffer(k: Int, cmpKeys: (Any, Any) => Int) extends KBestHeap(k) {
+  val keys = new Array[Any](k + 1)
+  val rows = new Array[InternalRow](k + 1)
+
+  protected def worse(i: Int, j: Int): Boolean = cmpKeys(keys(i), keys(j)) > 0
+  protected def swap(i: Int, j: Int): Unit = {
     val tk = keys(i); keys(i) = keys(j); keys(j) = tk
     val tr = rows(i); rows(i) = rows(j); rows(j) = tr
+  }
+
+  def add(key: Any, row: InternalRow): Unit = {
+    val s = free
+    keys(s) = key
+    rows(s) = row
+    offer()
   }
 }
 
@@ -168,14 +152,14 @@ final class TopKRowsBuffer(val k: Int) extends Serializable {
   *
   * Guards: exactly one window expression (a row_number), single
   * deterministic ORDER BY expression, non-empty PARTITION BY, batch
-  * child, k ≤ `spark.graft.rewriteWindowTopK.maxK` (default 1000 —
-  * beyond that the heap state stops being "bounded" in any useful
-  * sense). Disable with `spark.graft.rewriteWindowTopK=false`.
+  * child, k ≤ 1000 (beyond that the heap state stops being "bounded"
+  * in any useful sense). Disable with
+  * `spark.graft.rewriteWindowTopK=false`, the rule's one setting.
   */
 object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
 
   private val ConfKey = "spark.graft.rewriteWindowTopK"
-  private val MaxKKey = "spark.graft.rewriteWindowTopK.maxK"
+  private val MaxK = 1000
 
   private def limitOf(e: Expression, rn: Attribute): Option[Int] = e match {
     case LessThanOrEqual(r: Attribute, Literal(v: Int, IntegerType)) if r.semanticEquals(rn) => Some(v)
@@ -187,7 +171,6 @@ object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString(ConfKey, "true").toBoolean) return plan
-    val maxK = conf.getConfString(MaxKKey, "1000").toInt
     plan.transformUp {
       case f @ Filter(cond,
             Window(Seq(alias @ Alias(WindowExpression(_: RowNumber,
@@ -196,7 +179,7 @@ object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
         val rn = alias.toAttribute
         val conjuncts = splitConjunctivePredicates(cond)
         val ks = conjuncts.flatMap(limitOf(_, rn))
-        if (ks.isEmpty || ks.min <= 0 || ks.min > maxK) f
+        if (ks.isEmpty || ks.min <= 0 || ks.min > MaxK) f
         else {
           val k = ks.min
           val rest = conjuncts.filter(limitOf(_, rn).isEmpty)

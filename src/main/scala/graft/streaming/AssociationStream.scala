@@ -4,7 +4,7 @@ import graft.GraftConf
 import graft.functions.TopKBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of [[graft.operators.AssociationScore.byDatasource]]:
   * maintain, per (disease, target, datasource), the cumulative top-K
@@ -23,20 +23,61 @@ object AssociationStream {
   final case class EvidenceEvent(
       diseaseId: Long, targetId: Long, datasourceId: String, score: Double)
 
-  /** Carried state: the heap's backing values (≤ K doubles) plus the
-    * total evidence count seen for the key.
+  /** What both state shapes carry: the heap's backing values (≤ K
+    * doubles) plus the total evidence count seen for the key.
     */
-  final case class ScoreState(scores: Array[Double], n: Long)
+  sealed trait Carried {
+    def scores: Array[Double]
+    def n: Long
+  }
+
+  final case class ScoreState(scores: Array[Double], n: Long) extends Carried
 
   final case class ScoreUpdate(
       diseaseId: Long, targetId: Long, datasourceId: String,
       n_evidence: Long, score: Double)
 
   final case class PeakState(scores: Array[Double], n: Long, lastScore: Double)
+      extends Carried
 
   final case class PeakEvent(
       diseaseId: Long, targetId: Long, datasourceId: String,
       score: Double, peak: Double)
+
+  /** The one streaming score step, shared by the four functions below:
+    * one key's micro-batch on top of its carried heap. It rebuilds the
+    * heap, adds the batch's scores, re-scores (a key without evidence
+    * scores 0.0), carries the heap on through `carry(heap, n, score)`
+    * and returns the key's evidence count and score. With
+    * `evictAfterMs`, a key whose event-time timeout fired is dropped
+    * (None), and every update re-arms the timeout `evictAfterMs` past
+    * the key's latest event time — measured from the key's own events
+    * (watermark-lag-proof), and strictly above the current watermark,
+    * or Spark rejects it.
+    */
+  private def step[E, S <: Carried](
+      state: GroupState[S], batch: Iterator[E], k: Int, maxScore: Double,
+      carry: (Array[Double], Long, Double) => S)(
+      score: E => Double, eventMs: E => Long = (_: E) => 0L,
+      evictAfterMs: Option[Long] = None): Option[(Long, Double)] = {
+    if (state.hasTimedOut) { state.remove(); return None }
+    val buf = new TopKBuffer(k)
+    state.getOption.foreach(_.scores.foreach(buf.add))
+    var n = state.getOption.map(_.n).getOrElse(0L)
+    var maxTs = 0L
+    batch.foreach { e =>
+      buf.add(score(e)); n += 1
+      maxTs = math.max(maxTs, eventMs(e))
+    }
+    val s = buf.harmonic(maxScore) match {
+      case null => 0.0
+      case v => v.asInstanceOf[Double]
+    }
+    state.update(carry(java.util.Arrays.copyOf(buf.heap, buf.size), n, s))
+    evictAfterMs.foreach(ms => state.setTimeoutTimestamp(
+      math.max(maxTs, state.getCurrentWatermarkMs() + 1) + ms))
+    Some((n, s))
+  }
 
   def cumulativeScores(
       evidence: Dataset[EvidenceEvent],
@@ -48,18 +89,9 @@ object AssociationStream {
       .groupByKey(e => (e.diseaseId, e.targetId, e.datasourceId))
       .mapGroupsWithState[ScoreState, ScoreUpdate](GroupStateTimeout.NoTimeout) {
         case ((d, t, src), batch, state: GroupState[ScoreState]) =>
-          val buf = new TopKBuffer(k)
-          val prevN = state.getOption.map(_.n).getOrElse(0L)
-          state.getOption.foreach(_.scores.foreach(buf.add))
-          var seen = 0L
-          batch.foreach { e => buf.add(e.score); seen += 1 }
-          state.update(
-            ScoreState(java.util.Arrays.copyOf(buf.heap, buf.size), prevN + seen))
-          val score = buf.harmonic(maxScore) match {
-            case null => 0.0
-            case v => v.asInstanceOf[Double]
-          }
-          ScoreUpdate(d, t, src, prevN + seen, score)
+          val (n, score) = step(state, batch, k, maxScore,
+            (h, n, _) => ScoreState(h, n))(_.score).get
+          ScoreUpdate(d, t, src, n, score)
       }
       .toDF()
   }
@@ -94,35 +126,11 @@ object AssociationStream {
       .withWatermark("ts", watermark)
       .groupByKey(e => (e.diseaseId, e.targetId, e.datasourceId))
       .flatMapGroupsWithState[ScoreState, ScoreUpdate](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.EventTimeTimeout) {
+        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout) {
         case ((d, t, src), batch, state: GroupState[ScoreState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = new TopKBuffer(k)
-            val prevN = state.getOption.map(_.n).getOrElse(0L)
-            state.getOption.foreach(_.scores.foreach(buf.add))
-            var seen = 0L
-            var maxTs = 0L
-            batch.foreach { e =>
-              buf.add(e.score); seen += 1
-              maxTs = math.max(maxTs, e.ts.getTime)
-            }
-            state.update(
-              ScoreState(java.util.Arrays.copyOf(buf.heap, buf.size), prevN + seen))
-            // quiet-for-evictAfter measured from the key's own last
-            // event time (watermark-lag-proof); the timeout must sit
-            // strictly above the current watermark or Spark rejects it
-            state.setTimeoutTimestamp(
-              math.max(maxTs, state.getCurrentWatermarkMs() + 1) + evictAfterMs)
-            val score = buf.harmonic(maxScore) match {
-              case null => 0.0
-              case v => v.asInstanceOf[Double]
-            }
-            Iterator(ScoreUpdate(d, t, src, prevN + seen, score))
-          }
+          step(state, batch, k, maxScore, (h, n, _) => ScoreState(h, n))(
+            _.score, _.ts.getTime, Some(evictAfterMs))
+            .iterator.map { case (n, score) => ScoreUpdate(d, t, src, n, score) }
       }
       .toDF()
   }
@@ -142,24 +150,12 @@ object AssociationStream {
     evidence
       .groupByKey(e => (e.diseaseId, e.targetId, e.datasourceId))
       .flatMapGroupsWithState[PeakState, PeakEvent](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
+        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         case ((d, t, src), batch, state: GroupState[PeakState]) =>
-          val buf = new TopKBuffer(k)
-          val prev = state.getOption
-          prev.foreach(_.scores.foreach(buf.add))
-          val last = prev.map(_.lastScore).getOrElse(0.0)
-          var seen = 0L
-          batch.foreach { e => buf.add(e.score); seen += 1 }
-          val score = buf.harmonic(maxScore) match {
-            case null => 0.0
-            case v => v.asInstanceOf[Double]
-          }
-          state.update(PeakState(
-            java.util.Arrays.copyOf(buf.heap, buf.size),
-            prev.map(_.n).getOrElse(0L) + seen, score))
-          if (score > last) Iterator(PeakEvent(d, t, src, score, score - last))
-          else Iterator.empty
+          val last = state.getOption.map(_.lastScore).getOrElse(0.0)
+          step(state, batch, k, maxScore, PeakState.apply)(_.score)
+            .iterator.collect { case (_, score) if score > last =>
+              PeakEvent(d, t, src, score, score - last) }
       }
   }
 
@@ -180,35 +176,13 @@ object AssociationStream {
       .withWatermark("ts", watermark)
       .groupByKey(e => (e.diseaseId, e.targetId, e.datasourceId))
       .flatMapGroupsWithState[PeakState, PeakEvent](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) {
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
         case ((d, t, src), batch, state: GroupState[PeakState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = new TopKBuffer(k)
-            val prev = state.getOption
-            prev.foreach(_.scores.foreach(buf.add))
-            val last = prev.map(_.lastScore).getOrElse(0.0)
-            var seen = 0L
-            var maxTs = 0L
-            batch.foreach { e =>
-              buf.add(e.score); seen += 1
-              maxTs = math.max(maxTs, e.ts.getTime)
-            }
-            val score = buf.harmonic(maxScore) match {
-              case null => 0.0
-              case v => v.asInstanceOf[Double]
-            }
-            state.update(PeakState(
-              java.util.Arrays.copyOf(buf.heap, buf.size),
-              prev.map(_.n).getOrElse(0L) + seen, score))
-            state.setTimeoutTimestamp(
-              math.max(maxTs, state.getCurrentWatermarkMs() + 1) + evictAfterMs)
-            if (score > last) Iterator(PeakEvent(d, t, src, score, score - last))
-            else Iterator.empty
-          }
+          val last = state.getOption.map(_.lastScore).getOrElse(0.0)
+          step(state, batch, k, maxScore, PeakState.apply)(
+            _.score, _.ts.getTime, Some(evictAfterMs))
+            .iterator.collect { case (_, score) if score > last =>
+              PeakEvent(d, t, src, score, score - last) }
       }
   }
 }

@@ -184,6 +184,23 @@ class FunctionsSpec extends SparkSpec {
       assert(math.abs(h - full(g)) < 1e-12, s"group $g: $h vs ${full(g)}") }
   }
 
+  test("topk_collect and topk_harmonic reject k < 1 when built, from columns and SQL") {
+    val df = Seq(0.5, 0.7).toDF("s")
+    for (k <- Seq(0, -1)) {
+      val builds = Seq[(String, () => Any)](
+        "topKCollect" -> (() => TopKCollect.topKCollect(col("s"), k)),
+        "topKHarmonic" -> (() => TopKHarmonic.topKHarmonic(array(col("s")), k)),
+        "topk_collect" -> (() => df.selectExpr(s"topk_collect(s, $k)")),
+        "topk_harmonic" -> (() => df.selectExpr(s"topk_harmonic(array(s), $k)")))
+      builds.foreach { case (name, build) =>
+        val e = intercept[Exception](build())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains(s"topK must be >= 1, got $k")),
+          s"$name(k = $k) failed with $e")
+      }
+    }
+  }
+
   test("yearFromDateString parses ISO date strings, NULLs the malformed") {
     val df = Seq(
       Some("1995-03-07"), Some("2021-12-31 08:00:00"), Some("1980"),

@@ -1,8 +1,13 @@
 package graft
 
-import graft.functions.{CanonicalUrl, HarmonicScore, TopKBuffer}
+import graft.functions.{BottomKSample, CanonicalUrl, HarmonicScore, PriorityTopKIds, TopKBuffer, TopKCollect}
+import graft.plans.TopKRowsCollect
 
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateStruct}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -136,22 +141,77 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** `rows` folded into two partial buffers split at `cut`, the right
+    * one merged into the left through serialize/deserialize — the
+    * map-side-combine path — and evaluated.
+    */
+  private def splitMerged[B](
+      agg: TypedImperativeAggregate[B], rows: Seq[InternalRow], cut: Int): Any = {
+    val (l, r) = rows.splitAt(if (rows.isEmpty) 0 else cut % (rows.length + 1))
+    def fold(part: Seq[InternalRow]) = part.foldLeft(agg.createAggregationBuffer())(agg.update)
+    agg.eval(agg.merge(fold(l), agg.deserialize(agg.serialize(fold(r)))))
+  }
+
+  private val D = Ordering.Double.TotalOrdering
+  private def ref(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
+
   test("TopKCollect buffer yields the sorted top-K under arbitrary merge splits") {
-    check(Prop.forAll(
-      Gen.listOf(Gen.chooseNum(0.0, 1.0)), Gen.chooseNum(1, 20), Gen.chooseNum(0, 100)) {
-      (xs: List[Double], k: Int, splitSeed: Int) =>
-        // split the input into two partial buffers and merge — the
-        // map-side-combine path must equal the single-buffer path
-        val (l, r) = xs.splitAt(if (xs.isEmpty) 0 else splitSeed % (xs.length + 1))
-        val a = new TopKBuffer(k); l.foreach(a.add)
-        val b = new TopKBuffer(k); r.foreach(b.add)
-        var i = 0
-        while (i < b.size) { a.add(b.heap(i)); i += 1 }
-        val single = new TopKBuffer(k); xs.foreach(single.add)
-        java.util.Arrays.sort(a.heap, 0, a.size)
-        java.util.Arrays.sort(single.heap, 0, single.size)
-        a.size == single.size &&
-          (0 until a.size).forall(j => a.heap(j) == single.heap(j))
+    // tied values included: the k best of a full sort, descending
+    val score = Gen.oneOf(Gen.chooseNum(0.0, 1.0), Gen.oneOf(0.0, 0.5, 1.0))
+    check(Prop.forAll(Gen.listOf(score), Gen.chooseNum(1, 20), Gen.chooseNum(0, 100)) {
+      (xs: List[Double], k: Int, cut: Int) =>
+        val got = splitMerged(TopKCollect(ref(0, DoubleType), k), xs.map(InternalRow(_)), cut)
+        got.asInstanceOf[ArrayData].toDoubleArray().toSeq == xs.sorted(D).reverse.take(k)
+    })
+  }
+
+  test("PrioIdBuffer keeps the k smallest (priority, id) under any merge split") {
+    val pair = Gen.zip(Gen.oneOf(0.0, 0.25, 0.5, 1.0), Gen.chooseNum(0L, 4L))
+    check(Prop.forAll(Gen.listOf(pair), Gen.chooseNum(0, 12), Gen.chooseNum(0, 100)) {
+      (xs: List[(Double, Long)], k: Int, cut: Int) =>
+        val agg = PriorityTopKIds(ref(0, DoubleType), ref(1, LongType), k)
+        val got = splitMerged(agg, xs.map { case (p, id) => InternalRow(p, id) }, cut)
+        got.asInstanceOf[ArrayData].toLongArray().toSeq ==
+          xs.sorted(Ordering.Tuple2(D, Ordering.Long)).take(k).map(_._2)
+    })
+  }
+
+  test("BkBuffer keeps the k smallest (hash, value) under any merge split") {
+    val pair = Gen.zip(Gen.chooseNum(0L, 4L), Gen.oneOf(0.0, 0.5, 1.0))
+    check(Prop.forAll(Gen.listOf(pair), Gen.chooseNum(0, 12), Gen.chooseNum(0, 100)) {
+      (xs: List[(Long, Double)], k: Int, cut: Int) =>
+        val agg = BottomKSample(ref(0, LongType), ref(1, DoubleType), k)
+        val got = splitMerged(agg, xs.map { case (h, v) => InternalRow(h, v) }, cut)
+          .asInstanceOf[GenericArrayData].array.toSeq
+          .map { case r: InternalRow => (r.getLong(0), r.getDouble(1)) }
+        got == xs.sorted(Ordering.Tuple2(Ordering.Long, D)).take(k)
+    })
+  }
+
+  test("TopKRowsCollect keeps the k first rows in window order under any merge split") {
+    // ties beyond position k are arbitrary (row_number's contract), so
+    // the keys must be the k first of a full sort, and every row a
+    // distinct input row carrying its own key
+    val key = Gen.option(Gen.oneOf(0.0, 0.5, 1.0, 2.0))
+    check(Prop.forAll(Gen.listOf(key), Gen.chooseNum(1, 8), Gen.oneOf(true, false),
+      Gen.oneOf(true, false), Gen.chooseNum(0, 100)) {
+      (keys: List[Option[Double]], k: Int, desc: Boolean, nullsFirst: Boolean, cut: Int) =>
+        val agg = TopKRowsCollect(ref(0, DoubleType),
+          CreateStruct(Seq(ref(0, DoubleType), ref(1, LongType))), k, desc, nullsFirst)
+        val rows = keys.zipWithIndex.map { case (o, i) => InternalRow(o.getOrElse(null), i.toLong) }
+        val got = splitMerged(agg, rows, cut).asInstanceOf[GenericArrayData].array.toSeq
+          .map { case r: InternalRow =>
+            (if (r.isNullAt(0)) None else Some(r.getDouble(0)), r.getLong(1).toInt) }
+        val byValue = if (desc) D.reverse else D
+        val order: Ordering[Option[Double]] = (a, b) => (a, b) match {
+          case (None, None) => 0
+          case (None, _) => if (nullsFirst) -1 else 1
+          case (_, None) => if (nullsFirst) 1 else -1
+          case (Some(x), Some(y)) => byValue.compare(x, y)
+        }
+        got.map(_._1) == keys.sorted(order).take(k) &&
+          got.forall { case (o, i) => keys(i) == o } &&
+          got.map(_._2).distinct.size == got.size
     })
   }
 

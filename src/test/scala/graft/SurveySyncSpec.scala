@@ -67,4 +67,24 @@ class SurveySyncSpec extends AnyFunSuite {
     assert(handRolled.isEmpty,
       s"cap observe() outside PairForms (use PairForms.capDrop): ${handRolled.mkString(", ")}")
   }
+
+  test("bounded heaps are built only by the shared k-best heap") {
+    // one sift-up and one sift-down (functions/KBestHeap.scala): a
+    // hand-rolled heap is a second spelling of its order and a second
+    // place for an index slip
+    import scala.jdk.CollectionConverters._
+    val parentIndex = """\(\s*\w+\s*-\s*1\s*\)\s*/\s*2""".r
+    def code(line: String) = {
+      val t = line.trim
+      !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+    }
+    val handRolled = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "KBestHeap.scala")
+      .filter(p => Files.readAllLines(p).asScala
+        .exists(l => code(l) && parentIndex.findFirstIn(l).isDefined))
+      .toSeq
+    assert(handRolled.isEmpty,
+      s"sift loop outside KBestHeap (extend KBestHeap): ${handRolled.mkString(", ")}")
+  }
 }
