@@ -659,7 +659,7 @@ object Multimodal {
       dfCap: Int = 16,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    require(frameBytes >= 1 && minShared >= 1 && dfCap >= 2)
+    require(frameBytes >= 1 && minShared >= 1)
     val t = col(textCol)
     val frames = spread(df)
       .filter(length(t) >= frameBytes)

@@ -24,11 +24,16 @@ private[graft] object PairForms {
     * `dropped` = Σ `weight` over dropped rows (1, or the document mass
     * of a row standing for several) and, if set, `largest` = the largest
     * size seen. One-member buckets form no pair and go too, unless
-    * `singletons`.
+    * `singletons`. A cap that empties the filter whatever the data
+    * (below 2, or below 1 with `singletons`) is rejected here: Spark
+    * would fold the frame to an empty relation that runs nothing and
+    * reports no metric.
     */
   def capDrop(df: DataFrame, site: String, size: Column, cap: Int,
       largest: Option[String] = Some("max_bucket_size"), dropped: String = "dropped_postings",
       weight: Column = lit(1L), singletons: Boolean = false): DataFrame = {
+    val least = if (singletons) 1 else 2
+    require(cap >= least, s"$site cap must be >= $least, got $cap")
     val metrics = sum(when(size > cap, weight).otherwise(0L)).as(dropped) +:
       largest.map(coalesce(max(size), lit(0L)).as(_)).toSeq
     df.observe(s"graft_${site}_cap_${obsId.incrementAndGet()}",

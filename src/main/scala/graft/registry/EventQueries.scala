@@ -390,13 +390,9 @@ private[graft] object EventQueries {
       // bucket), reduced to the split-invariant kept set — a doc
       // survives iff no band bucket of its has a smaller member (the
       // batch minhash keeper rule, which the oracle replays).
-      val updates = EventStream.withRocksDbStateStore(s) {
-        StreamQueries.materialize(
-          DedupStream.bucketKeepers(
-            StreamQueries.streamTable(s, dir, "documents")),
-          mode = "update")
-      }
-      DedupStream.keptDocs(updates)
+      DedupStream.keptDocs(StreamQueries.materialize(
+        DedupStream.bucketKeepers(StreamQueries.streamTable(s, dir, "documents")),
+        mode = "update"))
     }),
     "q63_stream_assoc" -> ((s, dir) => {
       // the flagship chain's streaming twin: cumulative top-K harmonic
@@ -436,12 +432,8 @@ private[graft] object EventQueries {
       // with watermarks + an event-time range bounding the join state.
       // The watermark outlives the replay (cf. q62), so the match set
       // equals the batch join however the input is micro-batched.
-      val ev = StreamQueries.streamEvents(s, dir)
-      StreamQueries.materialize(
-        EventStream.streamStreamJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          range = "1 hour", watermark = "3650 days"))
+      purchasesJoinClicks(s, dir)(
+        EventStream.streamStreamJoin(_, _, range = "1 hour", watermark = "3650 days"))
     }),
     "q296_stream_semi" -> ((s, dir) => {
       // H54 stream–stream LEFT SEMI: purchases QUALIFIED by a click in
@@ -449,12 +441,8 @@ private[graft] object EventQueries {
       // fan-out per matching click (the inner join q85 emits one row
       // per match). Watermark outlives the replay, so the set equals
       // the batch EXISTS semi-join under any micro-batching.
-      val ev = StreamQueries.streamEvents(s, dir)
-      StreamQueries.materialize(
-        EventStream.streamStreamSemiJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          range = "1 hour", watermark = "3650 days"))
+      purchasesJoinClicks(s, dir)(
+        EventStream.streamStreamSemiJoin(_, _, range = "1 hour", watermark = "3650 days"))
     }),
     "q123_stream_ivm" -> ((s, dir) => {
       // streaming IVM: every micro-batch folds its mergeable state
@@ -478,20 +466,9 @@ private[graft] object EventQueries {
       // slice = left events ≥ watermark+range behind both sides' max
       // event time, whose outer verdict no micro-batch split can
       // change — so the batch left-join oracle gates it exactly.
-      val ev = StreamQueries.streamEvents(s, dir)
-      val out = StreamQueries.materialize(
-        EventStream.streamStreamLeftJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          range = "1 hour", watermark = "1 hour"))
-      val t = Tables(s, dir)
-      val cut = t.events
-        .filter(col("event_type").isin("purchase", "click"))
-        .groupBy("event_type").agg(max(unix_micros(col("ts"))).as("m"))
-        .agg((min("m") - 7200000000L).as("cut_us"))
-      out.crossJoin(broadcast(cut))
-        .filter(col("l_ts_us") <= col("cut_us"))
-        .select("user_id", "left_id", "right_id")
+      finalVerdicts(s, dir, purchasesJoinClicks(s, dir)(
+        EventStream.streamStreamLeftJoin(_, _, range = "1 hour", watermark = "1 hour")))(
+        col("l_ts_us") <= _)
     }),
     "q323_stream_right_outer" -> ((s, dir) => {
       // H59 stream-stream RIGHT OUTER join end-to-end: clicks WITH
@@ -501,24 +478,13 @@ private[graft] object EventQueries {
       // Registered slice = right events ≥ watermark+range behind both
       // sides' max event time, whose outer verdict no micro-batch
       // split can change — the batch right-join oracle gates exactly.
-      val ev = StreamQueries.streamEvents(s, dir)
-      val out = StreamQueries.materialize(
-        EventStream.streamStreamRightJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          range = "1 hour", watermark = "1 hour"))
-      val t = Tables(s, dir)
-      val cut = t.events
-        .filter(col("event_type").isin("purchase", "click"))
-        .groupBy("event_type").agg(max(unix_micros(col("ts"))).as("m"))
-        .agg((min("m") - 7200000000L).as("cut_us"))
-      out.crossJoin(broadcast(cut))
+      finalVerdicts(s, dir, purchasesJoinClicks(s, dir)(
+        EventStream.streamStreamRightJoin(_, _, range = "1 hour", watermark = "1 hour")))(
         // strict <: at exact equality the global watermark equals
         // r.ts + range and outer-state eviction is strict at the
         // boundary, so the null-extended verdict for an == row may
         // not yet be emitted when the stream drains (ADVICE r13)
-        .filter(col("r_ts_us") < col("cut_us"))
-        .select("user_id", "left_id", "right_id")
+        col("r_ts_us") < _)
     }),
     "q65_stream_evict" -> ((s, dir) => {
       // H9 event-time state eviction END-TO-END: the EventTimeTimeout
@@ -529,11 +495,7 @@ private[graft] object EventQueries {
       // result as the non-evicting twin while the eviction machinery
       // (watermark clock, setTimeoutTimestamp, hasTimedOut) executes.
       import s.implicits._
-      val ev = StreamQueries.streamTable(s, dir, "lineitem").select(
-          col("l_suppkey").cast("long").as("diseaseId"),
-          col("l_partkey").cast("long").as("targetId"),
-          col("l_returnflag").as("datasourceId"),
-          (col("l_discount") * 10).cast("double").as("score"),
+      val ev = StreamQueries.evidence(StreamQueries.streamTable(s, dir, "lineitem"),
           col("l_shipdate").cast("timestamp").as("ts"))
         .as[AssociationStream.TimedEvidenceEvent]
       val updates = StreamQueries.materialize(
@@ -754,20 +716,9 @@ private[graft] object EventQueries {
       // range behind both sides' max event time, so no micro-batch
       // split can change any verdict and the batch full-join oracle
       // gates it exactly.
-      val ev = StreamQueries.streamEvents(s, dir)
-      val out = StreamQueries.materialize(
-        EventStream.streamStreamFullJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "click"),
-          range = "1 hour", watermark = "1 hour"))
-      val t = Tables(s, dir)
-      val cut = t.events
-        .filter(col("event_type").isin("purchase", "click"))
-        .groupBy("event_type").agg(max(unix_micros(col("ts"))).as("m"))
-        .agg((min("m") - 7200000000L).as("cut_us"))
-      out.crossJoin(broadcast(cut))
-        .filter(coalesce(col("l_ts_us"), col("r_ts_us")) <= col("cut_us"))
-        .select("user_id", "left_id", "right_id")
+      finalVerdicts(s, dir, purchasesJoinClicks(s, dir)(
+        EventStream.streamStreamFullJoin(_, _, range = "1 hour", watermark = "1 hour")))(
+        coalesce(col("l_ts_us"), col("r_ts_us")) <= _)
     }),
     "q277_stream_tws" -> ((s, dir) => {
       // H50 transformWithState running totals on the RocksDB state
@@ -775,18 +726,9 @@ private[graft] object EventQueries {
       // AvailableNow. Exact integer-cent state is micro-batch-split
       // invariant, so the batch aggregate oracles it; Update mode
       // emits per touched batch and the final (max-n) row per key is
-      // the state. Provider conf is scoped to this query and restored.
-      import s.implicits._
-      val ev = StreamQueries.streamEvents(s, dir)
-        .filter(col("value").isNotNull && col("event_id").isNotNull &&
-          col("user_id").isNotNull)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[EventStream.Event]
-      val out = EventStream.withRocksDbStateStore(s) {
-        StreamQueries.materialize(
-          EventStream.runningTotalsTws(ev), mode = "update")
-      }
+      // the state. The replay runner picks the store from the plan.
+      val out = StreamQueries.materialize(
+        EventStream.runningTotalsTws(streamTypedEvents(s, dir)), mode = "update")
       out.groupBy("user_id")
         .agg(max(struct(col("n_events"), col("total_cents"))).as("st"))
         .select(col("user_id"), col("st.n_events").as("n_events"),
@@ -812,17 +754,8 @@ private[graft] object EventQueries {
       // is a lattice merge, so the final state is split-invariant and
       // the batch per-user top-K aggregate oracles it; n_seen is
       // monotone, so max(struct) picks the last emitted state.
-      import s.implicits._
-      val ev = StreamQueries.streamEvents(s, dir)
-        .filter(col("value").isNotNull && col("event_id").isNotNull &&
-          col("user_id").isNotNull)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[EventStream.Event]
-      val out = EventStream.withRocksDbStateStore(s) {
-        StreamQueries.materialize(
-          EventStream.minKLedgerTws(ev, k = 3), mode = "update")
-      }
+      val out = StreamQueries.materialize(
+        EventStream.minKLedgerTws(streamTypedEvents(s, dir), k = 3), mode = "update")
       out.groupBy("user_id")
         .agg(max(struct(col("n_seen"), col("k_kept"), col("sum_kept_cents")))
           .as("st"))
@@ -835,21 +768,42 @@ private[graft] object EventQueries {
       // a MapState (per-touched-entry RocksDB updates), replayed
       // AvailableNow; final (max-n) row per (user, type) is the state,
       // gated by the batch (user, type) aggregate.
-      import s.implicits._
-      val ev = StreamQueries.streamEvents(s, dir)
-        .filter(col("value").isNotNull && col("event_id").isNotNull &&
-          col("user_id").isNotNull)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[EventStream.Event]
-      val out = EventStream.withRocksDbStateStore(s) {
-        StreamQueries.materialize(
-          EventStream.perTypeCountsTws(ev), mode = "update")
-      }
+      val out = StreamQueries.materialize(
+        EventStream.perTypeCountsTws(streamTypedEvents(s, dir)), mode = "update")
       out.groupBy("user_id", "event_type")
         .agg(max(col("n_events")).as("n_events"))
     }),
   )
+
+  /** events.parquet as the typed [[EventStream.Event]] stream. */
+  private def streamTypedEvents(s: SparkSession, dir: String) =
+    EventStream.typedEvents(StreamQueries.streamEvents(s, dir))
+
+  /** `join` of the purchase (left) and click (right) halves of the
+    * event stream, replayed to its memory sink.
+    */
+  private def purchasesJoinClicks(s: SparkSession, dir: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ev = StreamQueries.streamEvents(s, dir)
+    StreamQueries.materialize(join(ev.filter(col("event_type") === "purchase"),
+      ev.filter(col("event_type") === "click")))
+  }
+
+  /** The rows of an outer stream-stream join replay whose verdict no
+    * micro-batch split can change: `settled(cut_us)` holds when the
+    * row's driving event time is watermark + range (2 h) behind both
+    * sides' max event time. Output: user_id, left_id, right_id.
+    */
+  private def finalVerdicts(s: SparkSession, dir: String, out: DataFrame)(
+      settled: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+    val cut = Tables(s, dir).events
+      .filter(col("event_type").isin("purchase", "click"))
+      .groupBy("event_type").agg(max(unix_micros(col("ts"))).as("m"))
+      .agg((min("m") - 7200000000L).as("cut_us"))
+    out.crossJoin(broadcast(cut))
+      .filter(settled(col("cut_us")))
+      .select("user_id", "left_id", "right_id")
+  }
 
   val oracles: Seq[(String, String)] = Seq(
     "q40_window_tumbling" ->

@@ -58,7 +58,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   /** Datasource weight dimension (broadcast-sized). */
   def weights: DataFrame = {
     import spark.implicits._
-    GraftConfWeights.df(spark)
+    graft.GraftConf.Weights.toDF("datasourceId", "weight")
   }
 
   /** Drug dimension — (drugId, approvalYear), the reference's ChEMBL
@@ -136,11 +136,4 @@ object Tables {
       case other => throw new IllegalStateException(
         s"events.ts has unsupported type $other; extend Tables.normalizeEventTs")
     }
-}
-
-private[sources] object GraftConfWeights {
-  def df(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    graft.GraftConf.Weights.toDF("datasourceId", "weight")
-  }
 }

@@ -97,12 +97,8 @@ object DedupStream {
       shingleSize: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bandRows(docs, textCol, idCol, k, bands, shingleSize)
-      .as[BandRow]
-      .groupByKey(_.bkey)
-      .transformWithState(new BucketKeeperProcessor,
-        TimeMode.None(), OutputMode.Update())
-      .toDF()
+    EventStream.withState(bandRows(docs, textCol, idCol, k, bands, shingleSize).as[BandRow],
+      (_: BandRow).bkey, new BucketKeeperProcessor)
   }
 
   /** Split-invariant reduction of the update stream to the kept set:

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
@@ -14,17 +14,43 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
+  /** The one watermarked window aggregate: `events` watermarked on `ts`
+    * (then `enrich`ed: a stream-static join must see the watermark),
+    * grouped by the window column `win` and `keys`, aggregated by
+    * `aggs`. Output: the window's `bounds` fields under their names,
+    * then the keys and the aggregates in order.
+    */
+  private def windowAgg(events: DataFrame, watermark: String, win: Column, keys: Seq[Column],
+      bounds: Seq[(String, String)], enrich: DataFrame => DataFrame = identity)(
+      aggs: Column*): DataFrame = {
+    val g = enrich(events.withWatermark("ts", watermark))
+      .groupBy(win +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val w = g.columns.head
+    g.select(bounds.map { case (f, as) => col(s"$w.$f").as(as) } ++
+      g.columns.tail.map(col): _*)
+  }
+
+  /** [[windowAgg]] over tumbling windows, keyed by `window_start`. */
+  private def tumbling(events: DataFrame, duration: String, watermark: String, keys: Column*)(
+      aggs: Column*): DataFrame =
+    windowAgg(events, watermark, window(col("ts"), duration), keys,
+      Seq("start" -> "window_start"))(aggs: _*)
+
+  /** [[windowAgg]] over per-user sessions closed by `gap`, as
+    * (start_ts, end_ts, user_id, n_events).
+    */
+  private def sessions(events: DataFrame, gap: Column, watermark: String): DataFrame =
+    windowAgg(events, watermark, session_window(col("ts"), gap), Seq(col("user_id")),
+      Seq("start" -> "start_ts", "end" -> "end_ts"))(count(lit(1)).as("n_events"))
+
   /** Tumbling-window counts/sums with a watermark bounding state. */
   def tumblingCounts(
       events: DataFrame,
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
+    tumbling(events, duration, watermark, col("event_type"))(
+      count(lit(1)).as("n"), sum("value").as("sum_value"))
 
   /** OHLC bars as STREAMING state: open/close are `min_by`/`max_by`
     * against the (event-time, event_id) struct — O(1) mergeable
@@ -40,17 +66,12 @@ object EventStream {
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame = {
     val ord = struct(unix_micros(col("ts")), col("event_id"))
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration), col("event_type"))
-      .agg(
-        min_by(col("value"), ord).as("open"),
-        max("value").as("high"),
-        min("value").as("low"),
-        max_by(col("value"), ord).as("close"),
-        count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("open"), col("high"), col("low"), col("close"), col("n"))
+    tumbling(events, duration, watermark, col("event_type"))(
+      min_by(col("value"), ord).as("open"),
+      max("value").as("high"),
+      min("value").as("low"),
+      max_by(col("value"), ord).as("close"),
+      count(lit(1)).as("n"))
   }
 
   /** Approx-distinct users per tumbling window with the HLL sketch AS
@@ -67,13 +88,9 @@ object EventStream {
       events: DataFrame,
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration))
-      .agg(
-        count(lit(1)).as("n"),
-        graft.functions.HllSketch.hllDistinct(col("user_id")).as("u_hll"))
-      .select(col("window.start").as("window_start"), col("n"), col("u_hll"))
+    tumbling(events, duration, watermark)(
+      count(lit(1)).as("n"),
+      graft.functions.HllSketch.hllDistinct(col("user_id")).as("u_hll"))
 
   /** Tumbling counts by an arbitrary grouping EXPRESSION — the
     * generic monitoring primitive behind per-window integrity checks
@@ -83,14 +100,10 @@ object EventStream {
     */
   def tumblingGroupCounts(
       events: DataFrame,
-      groupExpr: org.apache.spark.sql.Column,
+      groupExpr: Column,
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration), groupExpr.as("grp"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("grp"), col("n"))
+    tumbling(events, duration, watermark, groupExpr.as("grp"))(count(lit(1)).as("n"))
 
   /** Count-min sketch AS STREAMING STATE per tumbling window — the
     * streaming heavy-hitter primitive: each (window) state row
@@ -108,13 +121,9 @@ object EventStream {
       keyCol: String = "event_type",
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration))
-      .agg(
-        count(lit(1)).as("n"),
-        graft.functions.CmsSketch.cmsSketch(col(keyCol)).as("sk"))
-      .select(col("window.start").as("window_start"), col("n"), col("sk"))
+    tumbling(events, duration, watermark)(
+      count(lit(1)).as("n"),
+      graft.functions.CmsSketch.cmsSketch(col(keyCol)).as("sk"))
 
   /** KLL quantile summary AS STREAMING STATE per tumbling window
     * (H61) — per-window percentiles over an unbounded value stream
@@ -134,14 +143,9 @@ object EventStream {
       valueCol: String = "value",
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .filter(col(valueCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration))
-      .agg(
-        count(lit(1)).as("n"),
-        graft.functions.KllSketch.kllState(col(valueCol)).as("st"))
-      .select(col("window.start").as("window_start"), col("n"), col("st"))
+    tumbling(events.filter(col(valueCol).isNotNull), duration, watermark)(
+      count(lit(1)).as("n"),
+      graft.functions.KllSketch.kllState(col(valueCol)).as("st"))
 
   /** Misra–Gries frequent-items summary AS STREAMING STATE per
     * tumbling window (H62) — the candidate-LISTING streaming heavy
@@ -160,18 +164,13 @@ object EventStream {
       k: Int = 32,
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      // null keys carry no frequency information and would reach the
-      // sketch as a null string while the exact gate counts the null
-      // group — filter here and mirror in the q351 exact side/oracle
-      .filter(col(keyCol).isNotNull)
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), duration))
-      .agg(
-        count(lit(1)).as("n"),
-        graft.functions.FreqSketch.freqSketch(col(keyCol).cast("string"),
-          lit(1L), k).as("st"))
-      .select(col("window.start").as("window_start"), col("n"), col("st"))
+    // null keys carry no frequency information and would reach the
+    // sketch as a null string while the exact gate counts the null
+    // group — filter here and mirror in the q351 exact side/oracle
+    tumbling(events.filter(col(keyCol).isNotNull), duration, watermark)(
+      count(lit(1)).as("n"),
+      graft.functions.FreqSketch.freqSketch(col(keyCol).cast("string"),
+        lit(1L), k).as("st"))
 
   /** Gap-based session aggregation using the built-in session_window —
     * the streaming twin of graft.operators.Sessionize.
@@ -180,12 +179,7 @@ object EventStream {
       events: DataFrame,
       gap: String = "30 minutes",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("start_ts"),
-        col("session_window.end").as("end_ts"), col("user_id"), col("n_events"))
+    sessions(events, lit(gap), watermark)
 
   /** DYNAMIC-gap session aggregation: the idle timeout is an
     * expression of the event itself (a purchase keeps the session
@@ -199,15 +193,10 @@ object EventStream {
   def sessionCountsDynamicGap(
       events: DataFrame,
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"),
-          when(col("event_type") === "purchase", lit("60 minutes"))
-            .otherwise(lit("20 minutes"))),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("start_ts"),
-        col("session_window.end").as("end_ts"), col("user_id"), col("n_events"))
+    sessions(events,
+      when(col("event_type") === "purchase", lit("60 minutes"))
+        .otherwise(lit("20 minutes")),
+      watermark)
 
   /** Stream-static enrichment + tumbling weighted sums: broadcast-join
     * a static dimension (event_type → weight) onto the stream, then
@@ -220,13 +209,9 @@ object EventStream {
       dim: DataFrame,
       duration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .join(broadcast(dim), Seq("event_type"))
-      .groupBy(window(col("ts"), duration), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value") * col("weight")).as("wsum"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("wsum"))
+    windowAgg(events, watermark, window(col("ts"), duration), Seq(col("event_type")),
+      Seq("start" -> "window_start"), _.join(broadcast(dim), Seq("event_type")))(
+      count(lit(1)).as("n"), sum(col("value") * col("weight")).as("wsum"))
 
   /** Streaming exact dedup: one surviving row per key (arbitrary within
     * a micro-batch, stable across batches), with state bounded by the
@@ -256,14 +241,25 @@ object EventStream {
       left: DataFrame,
       right: DataFrame,
       range: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
+      watermark: String = "2 hours"): DataFrame =
+    intervalJoin(left, right, range, watermark, "inner")
+      .select(col("l.user_id").as("user_id"),
+        col("l.event_id").as("left_id"), col("r.event_id").as("right_id"))
+
+  /** The one watermarked interval join of the five stream–stream join
+    * modes: `left` (alias `l`) and `right` (alias `r`), each
+    * watermarked on `ts`, joined by `how` on the same user with r.ts in
+    * [l.ts − `range`, l.ts]. Both watermarks plus the range are what
+    * let Spark expire buffered rows; each mode keeps only its select.
+    */
+  private def intervalJoin(left: DataFrame, right: DataFrame, range: String, watermark: String,
+      how: String): DataFrame = {
     val l = left.withWatermark("ts", watermark).alias("l")
     val r = right.withWatermark("ts", watermark).alias("r")
     l.join(r,
       expr(s"""l.user_id = r.user_id AND
-               r.ts BETWEEN l.ts - INTERVAL $range AND l.ts"""))
-      .select(col("l.user_id").as("user_id"),
-        col("l.event_id").as("left_id"), col("r.event_id").as("right_id"))
+               r.ts BETWEEN l.ts - INTERVAL $range AND l.ts"""),
+      how)
   }
 
   /** Streaming point-in-time enrichment — the STREAMING half of the
@@ -308,16 +304,10 @@ object EventStream {
       left: DataFrame,
       right: DataFrame,
       range: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(r,
-      expr(s"""l.user_id = r.user_id AND
-               r.ts BETWEEN l.ts - INTERVAL $range AND l.ts"""),
-      "left_semi")
+      watermark: String = "2 hours"): DataFrame =
+    intervalJoin(left, right, range, watermark, "left_semi")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"))
-  }
 
   /** Stream–stream LEFT OUTER join: like [[streamStreamJoin]], but a
     * `left` event with no same-user `right` event in the preceding
@@ -335,17 +325,11 @@ object EventStream {
       left: DataFrame,
       right: DataFrame,
       range: String = "1 hour",
-      watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(r,
-      expr(s"""l.user_id = r.user_id AND
-               r.ts BETWEEN l.ts - INTERVAL $range AND l.ts"""),
-      "left_outer")
+      watermark: String = "1 hour"): DataFrame =
+    intervalJoin(left, right, range, watermark, "left_outer")
       .select(col("l.user_id").as("user_id"),
         unix_micros(col("l.ts")).as("l_ts_us"),
         col("l.event_id").as("left_id"), col("r.event_id").as("right_id"))
-  }
 
   /** Stream–stream FULL OUTER join — completes the H13/H19 join
     * family: matched pairs emit eagerly; an unmatched row on EITHER
@@ -363,18 +347,12 @@ object EventStream {
       left: DataFrame,
       right: DataFrame,
       range: String = "1 hour",
-      watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(r,
-      expr(s"""l.user_id = r.user_id AND
-               r.ts BETWEEN l.ts - INTERVAL $range AND l.ts"""),
-      "full_outer")
+      watermark: String = "1 hour"): DataFrame =
+    intervalJoin(left, right, range, watermark, "full_outer")
       .select(coalesce(col("l.user_id"), col("r.user_id")).as("user_id"),
         unix_micros(col("l.ts")).as("l_ts_us"),
         unix_micros(col("r.ts")).as("r_ts_us"),
         col("l.event_id").as("left_id"), col("r.event_id").as("right_id"))
-  }
 
   /** Stream–stream RIGHT OUTER join — the mirror of
     * [[streamStreamLeftJoin]] and the last of the five watermarked
@@ -392,17 +370,11 @@ object EventStream {
       left: DataFrame,
       right: DataFrame,
       range: String = "1 hour",
-      watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    l.join(r,
-      expr(s"""l.user_id = r.user_id AND
-               r.ts BETWEEN l.ts - INTERVAL $range AND l.ts"""),
-      "right_outer")
+      watermark: String = "1 hour"): DataFrame =
+    intervalJoin(left, right, range, watermark, "right_outer")
       .select(col("r.user_id").as("user_id"),
         unix_micros(col("r.ts")).as("r_ts_us"),
         col("l.event_id").as("left_id"), col("r.event_id").as("right_id"))
-  }
 
   final case class UserTotals(user_id: Long, n_events: Long, total_cents: Long)
 
@@ -479,12 +451,10 @@ object EventStream {
     }
   }
 
-  def perTypeCountsTws(events: org.apache.spark.sql.Dataset[Event]): DataFrame = {
+  def perTypeCountsTws(events: Dataset[Event]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new PerTypeCountsProcessor, TimeMode.None(), OutputMode.Update())
-      .toDF()
+    withState(events, (_: Event).user_id, new PerTypeCountsProcessor)
   }
 
   final case class LedgerEntry(cents: Long, event_id: Long)
@@ -534,62 +504,65 @@ object EventStream {
   }
 
   def minKLedgerTws(
-      events: org.apache.spark.sql.Dataset[Event],
+      events: Dataset[Event],
       k: Int = 3,
       ttl: Option[java.time.Duration] = None): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeMode =
-      if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events.groupByKey(_.user_id)
-      .transformWithState(
-        new MinKLedgerProcessor(k, ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)),
-        timeMode, OutputMode.Update())
-      .toDF()
+    withState(events, (_: Event).user_id,
+      new MinKLedgerProcessor(k, ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)),
+      if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None())
   }
 
-  /** transformWithState requires the RocksDB state store; callers set
-    * `spark.sql.streaming.stateStore.providerClass` to
-    * [[RocksDbProvider]] for the query's lifetime (and restore after —
-    * the rest of the replay suite runs on the default HDFS-backed
-    * store).
+  /** transformWithState requires the RocksDB state store.
+    * [[StreamQueries]] replays pick it themselves (from the stream's
+    * plan); a caller that starts its own query sets
+    * `spark.sql.streaming.stateStore.providerClass` to it for the
+    * query's start with [[withRocksDbStateStore]].
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private val rocksDbLock = new Object
-
   /** Runs `body` with the session's state-store provider set to
-    * RocksDB, restoring the previous value after. The set/restore pair
-    * is serialized on a process-wide lock so concurrently-driven
-    * callers (the registry is sequential today, but safe-by-
-    * construction beats a latent race) cannot interleave a restore
-    * into another caller's query start — the provider conf is read
-    * once at stream START, which the lock covers in full because
-    * callers materialize inside `body`.
+    * RocksDB, restoring the previous value after, under the same lock
+    * as the replay runner's confs (a stream reads the provider once,
+    * at start, so callers start their query inside `body`).
     */
-  def withRocksDbStateStore[A](s: org.apache.spark.sql.SparkSession)(body: => A): A =
-    rocksDbLock.synchronized {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, RocksDbProvider)
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
+  def withRocksDbStateStore[A](s: SparkSession)(body: => A): A =
+    StreamQueries.withConfs(s, Seq(StreamQueries.StateStoreKey -> RocksDbProvider))(body)
 
-  def runningTotalsTws(events: org.apache.spark.sql.Dataset[Event]): DataFrame = {
+  def runningTotalsTws(events: Dataset[Event]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor, TimeMode.None(), OutputMode.Update())
-      .toDF()
+    withState(events, (_: Event).user_id, new RunningTotalsProcessor)
   }
+
+  /** The one transformWithState call of the stateful processors here
+    * and in [[DedupStream]]: `rows` grouped by `key` through
+    * `processor`, update mode.
+    */
+  private[streaming] def withState[K: Encoder, I, O: Encoder](rows: Dataset[I], key: I => K,
+      processor: StatefulProcessor[K, I, O], timeMode: TimeMode = TimeMode.None()): DataFrame =
+    rows.groupByKey(key).transformWithState(processor, timeMode, OutputMode.Update()).toDF()
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
+
+  /** An event frame as the typed [[Event]] stream the stateful
+    * operators take: rows with a value, an event id and a user, in
+    * [[Event]]'s columns.
+    */
+  private[graft] def typedEvents(events: DataFrame): Dataset[Event] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events
+      .filter(col("value").isNotNull && col("event_id").isNotNull &&
+        col("user_id").isNotNull)
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"))
+      .as[Event]
+  }
+
   final case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
 
   /** Custom state: running per-user totals via mapGroupsWithState.
@@ -600,7 +573,7 @@ object EventStream {
     * batches forever, so processAllAvailable would never converge in tests).
     */
   def runningTotals(
-      events: org.apache.spark.sql.Dataset[Event],
+      events: Dataset[Event],
       evictAfter: Option[String] = None): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Runs the streaming operators as REGISTERED queries: a driver parquet
   * table is replayed through the file source with Trigger.AvailableNow
@@ -37,11 +38,8 @@ object StreamQueries {
 
   val metrics = scala.collection.concurrent.TrieMap.empty[String, StreamRunMetrics]
 
-  private def record(
-      name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      wallMs: Long): Unit = {
-    val progs = q.recentProgress
+  private def record(name: String, runs: Seq[StreamingQuery], wallMs: Long): Unit = {
+    val progs = runs.flatMap(_.recentProgress)
     metrics.put(name, StreamRunMetrics(
       batches = progs.length,
       inputRows = progs.map(_.numInputRows).sum,
@@ -78,46 +76,26 @@ object StreamQueries {
     * [[AssociationStream.EvidenceEvent]]-shaped rows.
     */
   def streamEvidence(spark: SparkSession, dir: String): DataFrame =
-    streamTable(spark, dir, "lineitem").select(
+    evidence(streamTable(spark, dir, "lineitem"))
+
+  /** The lineitem → evidence mapping behind [[streamEvidence]], plus
+    * `extra` columns of the same rows (the ship date as event time for
+    * the evicting twins).
+    */
+  private[graft] def evidence(lineitem: DataFrame, extra: Column*): DataFrame =
+    lineitem.select(Seq(
       col("l_suppkey").cast("long").as("diseaseId"),
       col("l_partkey").cast("long").as("targetId"),
       col("l_returnflag").as("datasourceId"),
-      (col("l_discount") * 10).cast("double").as("score"))
+      (col("l_discount") * 10).cast("double").as("score")) ++ extra: _*)
 
   /** Run `stream` to completion (AvailableNow) into a uniquely-named
     * memory sink and return the materialized table.
-    *
-    * Checkpoints live under the per-JVM [[graft.Scratch]] root
-    * (removed at exit — repeated bench/verify runs must not
-    * accumulate state dirs). The replay runs with
-    * [[graft.GraftConf.StreamStatePartitions]] shuffle partitions:
-    * every stateful operator instantiates one state store PER
-    * partition PER micro-batch, so a bounded replay at the session's
-    * batch width (32) pays 4× the store startup/commit overhead for
-    * zero parallelism gain at this state size. The session conf is
-    * restored after planning — an unbounded production stream with a
-    * hot keyspace sizes its own width at start().
     */
   def materialize(stream: DataFrame, mode: String = "append"): DataFrame = {
-    val name = s"graft_stream_${ctr.incrementAndGet()}"
-    val ckpt = graft.Scratch.dir(s"ckpt-$name")
-    val spark = stream.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.GraftConf.StreamStatePartitions.toString)
-    val t0 = System.nanoTime()
-    val q = try {
-      stream.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    record(name, q, (System.nanoTime() - t0) / 1000000L)
-    spark.table(name)
+    val (name, _) = replay("stream", () => stream, mode)((w, name) =>
+      w.format("memory").queryName(name))
+    stream.sparkSession.table(name)
   }
 
   /** What [[crashRecoveryReplay]] returns: the recovered sink as a
@@ -153,45 +131,20 @@ object StreamQueries {
       build: () => DataFrame,
       outputMode: String = "append",
       stopAtBatchId: Long = 1L): CrashReplay = {
-    val name = s"graft_crash_${ctr.incrementAndGet()}"
-    val ckpt = graft.Scratch.dir(s"ckpt-$name")
-    val out = graft.Scratch.dir(s"sink-$name")
+    val out = graft.Scratch.dir("sink-crash")
     val useForeachBatch = outputMode != "append"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.GraftConf.StreamStatePartitions.toString)
-    def start(available: Boolean) = try {
-      val w0 = build().writeStream
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-      val w1 = if (available) w0.trigger(Trigger.AvailableNow()) else w0
+    val (_, runs) = replay("crash", build, outputMode, Some(stopAtBatchId))((w, _) =>
       if (useForeachBatch) {
         val fold: (DataFrame, Long) => Unit = (df, id) =>
           df.write.mode("overwrite").parquet(s"$out/batch=$id")
-        w1.foreachBatch(fold).start()
-      } else w1.format("parquet").option("path", out.toString).start()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    // phase 1: free-running, killed once `stopAtBatchId` has committed
-    val q1 = start(available = false)
-    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    while (q1.isActive &&
-        (q1.lastProgress == null || q1.lastProgress.batchId < stopAtBatchId) &&
-        System.nanoTime() < deadline)
-      Thread.sleep(10)
-    q1.stop()
-    q1.awaitTermination()
-    val p1 = q1.recentProgress.map(_.batchId).distinct.length
-
-    // phase 2: a NEW query object resumes from the same checkpoint
-    val q2 = start(available = true)
-    q2.awaitTermination()
-    val p2rows = q2.recentProgress.map(_.numInputRows).sum
-
+        w.foreachBatch(fold)
+      } else w.format("parquet").option("path", out))
     val result =
-      if (useForeachBatch) spark.read.parquet(out.toString).drop("batch")
-      else spark.read.parquet(out.toString)
-    CrashReplay(result, p1, p2rows)
+      if (useForeachBatch) spark.read.parquet(out).drop("batch")
+      else spark.read.parquet(out)
+    CrashReplay(result,
+      runs.head.recentProgress.map(_.batchId).distinct.length,
+      runs.last.recentProgress.map(_.numInputRows).sum)
   }
 
   /** Streaming INCREMENTAL-VIEW-MAINTENANCE sink: each micro-batch
@@ -212,14 +165,11 @@ object StreamQueries {
       events: DataFrame,
       keys: Seq[String],
       valueCol: String): DataFrame = {
-    val name = s"graft_ivm_${ctr.incrementAndGet()}"
-    val ckpt = graft.Scratch.dir(s"ckpt-$name")
-    val dirs = Array(graft.Scratch.dir(s"$name-a"), graft.Scratch.dir(s"$name-b"))
+    val dirs = Array(graft.Scratch.dir("ivm-a"), graft.Scratch.dir("ivm-b"))
     val spark = events.sparkSession
     @volatile var last = -1L
-    val t0 = System.nanoTime()
-    val q = events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    replay("ivm", () => events, "append")((w, _) =>
+      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
         val delta = graft.operators.Incremental.aggState(batch, keys, valueCol)
         val prev = if (last >= 0) {
           spark.read.parquet(dirs((last % 2).toInt))
@@ -228,14 +178,82 @@ object StreamQueries {
           .write.mode("overwrite").parquet(dirs((batchId % 2).toInt))
         last = batchId
         ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    record(name, q, (System.nanoTime() - t0) / 1000000L)
+      })
     require(last >= 0, "stream produced no batches")
     spark.read.parquet(dirs((last % 2).toInt))
+  }
+
+  /** The one replay runner behind [[materialize]],
+    * [[crashRecoveryReplay]] and [[incrementalStateReplay]]: it names
+    * the sink `graft_<kind>_<n>`, checkpoints under the per-JVM
+    * [[graft.Scratch]] root (removed at exit), starts `build()` into
+    * `sink`, runs it AvailableNow to completion and records its
+    * [[StreamRunMetrics]]. With `killAfterBatch` it first runs the
+    * stream free, kills it once that batch has committed and resumes
+    * from the same checkpoint; the record spans both runs (returned
+    * killed first).
+    *
+    * Each start sets [[graft.GraftConf.StreamStatePartitions]] shuffle
+    * partitions — every stateful operator opens one state store PER
+    * partition PER micro-batch, so a bounded replay at the session's
+    * batch width pays that startup/commit overhead for no parallelism —
+    * and, when the analyzed plan holds a `TransformWithState`, the
+    * RocksDB state store it requires (the default HDFS-backed store
+    * rejects it).
+    */
+  private def replay(kind: String, build: () => DataFrame, mode: String,
+      killAfterBatch: Option[Long] = None)(
+      sink: (DataStreamWriter[Row], String) => DataStreamWriter[Row])
+      : (String, Seq[StreamingQuery]) = {
+    val name = s"graft_${kind}_${ctr.incrementAndGet()}"
+    val ckpt = graft.Scratch.dir(s"ckpt-$name")
+    def start(availableNow: Boolean): StreamingQuery = {
+      val stream = build()
+      val tws = stream.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
+      val w = stream.writeStream.outputMode(mode).option("checkpointLocation", ckpt)
+      withConfs(stream.sparkSession,
+        ("spark.sql.shuffle.partitions" -> graft.GraftConf.StreamStatePartitions.toString) +:
+          (if (tws) Seq(StateStoreKey -> EventStream.RocksDbProvider) else Nil)) {
+        sink(if (availableNow) w.trigger(Trigger.AvailableNow()) else w, name).start()
+      }
+    }
+    val t0 = System.nanoTime()
+    val killed = killAfterBatch.toSeq.map { b =>
+      val q = start(availableNow = false)
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (q.isActive && (q.lastProgress == null || q.lastProgress.batchId < b) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(10)
+      q.stop()
+      q.awaitTermination()
+      q
+    }
+    val q = start(availableNow = true)
+    q.awaitTermination()
+    val runs = killed :+ q
+    record(name, runs, (System.nanoTime() - t0) / 1000000L)
+    (name, runs)
+  }
+
+  private[streaming] val StateStoreKey = "spark.sql.streaming.stateStore.providerClass"
+
+  private val confLock = new Object
+
+  /** Runs `body` with `confs` set on the session, restoring the previous
+    * values after, under one process-wide lock so concurrent callers
+    * cannot interleave a restore into another's start. A stream reads
+    * them once, at start (its session is cloned then), so a caller
+    * starts its stream inside `body`.
+    */
+  private[streaming] def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = confLock.synchronized {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Reduce an update-mode output history to the final state per key:

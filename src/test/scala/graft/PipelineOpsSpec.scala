@@ -198,11 +198,11 @@ class PipelineOpsSpec extends SparkSpec {
     val out = TextAnalysis.lexicalCosinePairs(docs, minCos = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out.toSeq == Seq((1L, 2L, 3L, 1.0)))
-    // with maxDf = 1 every shared shingle is "boilerplate": no pairs.
-    // (No metric either: no pair can clear df > 1 AND df <= 1, Spark
-    // folds that filter to an empty relation, and nothing runs.)
-    val capped = TextAnalysis.lexicalCosinePairs(docs, minCos = 0.1, maxDf = 1)
-    assert(capped.count() == 0)
+    // maxDf = 1 would make every shared shingle "boilerplate": no pair
+    // can clear df > 1 AND df <= 1, so the cap guard refuses it
+    assert(intercept[IllegalArgumentException](
+      TextAnalysis.lexicalCosinePairs(docs, minCos = 0.1, maxDf = 1))
+      .getMessage.contains("cap must be >= 2"))
     // at maxDf = 2 the shingle "a b c" held by 3 docs is capped out of
     // the dot and its 3 postings reported; docs 4/5 still pair
     val boiler = Seq((1L, "a b c p q"), (2L, "a b c r s"), (3L, "a b c t u"),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.EventStream
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -597,8 +598,8 @@ class StreamingSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
   import graft.streaming.StreamQueries
 
-  /** events (sf0.001, ts-normalized) split into 16 TIME-ORDERED
-    * files with strictly increasing modification times, so
+  /** `rows` (sf0.001) split into 16 TIME-ORDERED files by `byTime`,
+    * with strictly increasing modification times, so
     * maxFilesPerTrigger=1 paces 16 micro-batches arriving in event-
     * time order — plenty of room for the kill to land mid-replay. The
     * ordering matters: FileStreamSource drains files by mod-time, and
@@ -607,14 +608,14 @@ class StreamingSpec extends SparkSpec {
     * late (a replay artifact, not an arrival pattern any production
     * stream has).
     */
-  private lazy val crashSrcDir: String = {
-    val d = java.nio.file.Paths.get(graft.Scratch.dir("crash-src"))
+  private def timeSlices(tag: String, rows: DataFrame, byTime: String): String = {
+    val d = java.nio.file.Paths.get(graft.Scratch.dir(tag))
     val n = 16
-    val sliced = graft.sources.Tables(spark, sfDir).events
+    val sliced = rows
       .withColumn("__slice", org.apache.spark.sql.functions.ntile(n).over(
-        org.apache.spark.sql.expressions.Window.orderBy("ts")))
+        org.apache.spark.sql.expressions.Window.orderBy(byTime)))
     (1 to n).foreach { i =>
-      val tmp = java.nio.file.Paths.get(graft.Scratch.dir(s"crash-src-tmp-$i"))
+      val tmp = java.nio.file.Paths.get(graft.Scratch.dir(s"$tag-tmp-$i"))
       sliced.filter(org.apache.spark.sql.functions.col("__slice") === i)
         .drop("__slice")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -628,24 +629,36 @@ class StreamingSpec extends SparkSpec {
     d.toString
   }
 
-  private def pacedEvents: DataFrame = spark.readStream
-    .schema(spark.read.parquet(crashSrcDir).schema)
-    .option("maxFilesPerTrigger", "1").parquet(crashSrcDir)
+  private lazy val crashSrcDir: String =
+    timeSlices("crash-src", graft.sources.Tables(spark, sfDir).events, "ts")
+
+  /** lineitem, the evidence source of the paper's score, by ship date. */
+  private lazy val evidenceSrcDir: String =
+    timeSlices("crash-evidence", graft.sources.Tables(spark, sfDir).lineitem, "l_shipdate")
+
+  private def paced(dir: String): DataFrame = spark.readStream
+    .schema(spark.read.parquet(dir).schema)
+    .option("maxFilesPerTrigger", "1").parquet(dir)
+
+  private def pacedEvents: DataFrame = paced(crashSrcDir)
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** The recovered sink's final rows (sorted by their text), after
+    * asserting they equal a single run's.
+    */
   private def crashVsSingle(
       build: () => DataFrame,
       finalize: DataFrame => DataFrame = identity,
-      mode: String = "append"): Seq[String] = {
+      mode: String = "append"): Seq[Row] = {
     val cr = StreamQueries.crashRecoveryReplay(spark, build, outputMode = mode)
     assert(cr.phase2InputRows > 0,
       s"phase 2 read nothing — the kill landed after the replay finished " +
         s"(phase1=${cr.phase1Batches} batches); recovery untested")
-    val crash = sortedRows(finalize(cr.result))
+    val crash = finalize(cr.result).collect().sortBy(_.toString).toSeq
     val single = sortedRows(finalize(StreamQueries.materialize(build(), mode)))
-    assert(crash == single, s"restarted sink != single-run sink " +
+    assert(crash.map(_.toString) == single, s"restarted sink != single-run sink " +
       s"(${crash.size} vs ${single.size} rows)")
     crash
   }
@@ -665,7 +678,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("window.end") <= lit(cut))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-    assert(crash == sortedRows(batch))
+    assert(crash.map(_.toString) == sortedRows(batch))
   }
 
   test("crash-recovery: session windows (q61 family) ≡ single run") {
@@ -694,12 +707,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   private def crashEventsDs: org.apache.spark.sql.Dataset[EventStream.Event] =
-    pacedEvents
-      .filter(col("value").isNotNull && col("event_id").isNotNull &&
-        col("user_id").isNotNull)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventStream.Event]
+    EventStream.typedEvents(pacedEvents)
 
   private def crashBatchEvents: DataFrame =
     spark.read.parquet(crashSrcDir)
@@ -711,26 +719,22 @@ class StreamingSpec extends SparkSpec {
       .agg(max(struct(col("n_events"), col("total_cents"))).as("st"))
       .select(col("user_id"), col("st.n_events").as("n_events"),
         col("st.total_cents").as("total_cents"))
-    val crash = EventStream.withRocksDbStateStore(spark) {
-      crashVsSingle(() => EventStream.runningTotalsTws(crashEventsDs).toDF(),
-        finalState, mode = "update")
-    }
+    val crash = crashVsSingle(() => EventStream.runningTotalsTws(crashEventsDs),
+      finalState, mode = "update")
     val batch = crashBatchEvents.groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(round(col("value") * 100).cast("long")).as("total_cents"))
-    assert(crash == sortedRows(batch))
+    assert(crash.map(_.toString) == sortedRows(batch))
   }
 
   test("crash-recovery: transformWithState MAP state (q282 family) ≡ batch oracle") {
     def finalState(df: DataFrame) = df.groupBy("user_id", "event_type")
       .agg(max(col("n_events")).as("n_events"))
-    val crash = EventStream.withRocksDbStateStore(spark) {
-      crashVsSingle(() => EventStream.perTypeCountsTws(crashEventsDs),
-        finalState, mode = "update")
-    }
+    val crash = crashVsSingle(() => EventStream.perTypeCountsTws(crashEventsDs),
+      finalState, mode = "update")
     val batch = crashBatchEvents.groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n_events"))
-    assert(crash == sortedRows(batch))
+    assert(crash.map(_.toString) == sortedRows(batch))
   }
 
   test("crash-recovery: transformWithState LIST state (q290 family) ≡ batch oracle") {
@@ -740,10 +744,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id"), col("st.n_seen").as("n_seen"),
         col("st.k_kept").as("k_kept"),
         col("st.sum_kept_cents").as("sum_kept_cents"))
-    val crash = EventStream.withRocksDbStateStore(spark) {
-      crashVsSingle(() => EventStream.minKLedgerTws(crashEventsDs, k = 3),
-        finalState, mode = "update")
-    }
+    val crash = crashVsSingle(() => EventStream.minKLedgerTws(crashEventsDs, k = 3),
+      finalState, mode = "update")
     val batch = crashBatchEvents
       .select(col("user_id"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
@@ -753,6 +755,89 @@ class StreamingSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_seen"),
         sum(when(col("rn") <= 3, 1L).otherwise(0L)).as("k_kept"),
         sum(when(col("rn") <= 3, col("cents")).otherwise(0L)).as("sum_kept_cents"))
-    assert(crash == sortedRows(batch))
+    assert(crash.map(_.toString) == sortedRows(batch))
+  }
+
+  test("replay runner starts transformWithState on RocksDB and restores the session confs") {
+    val keys = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.shuffle.partitions")
+    val before = keys.map(spark.conf.getOption)
+    val out = StreamQueries.materialize(
+      EventStream.runningTotalsTws(EventStream.typedEvents(
+        StreamQueries.streamEvents(spark, sfDir))), "update")
+    assert(keys.map(spark.conf.getOption) == before, "the runner left its confs set")
+    val fin = out.groupBy("user_id")
+      .agg(max(struct(col("n_events"), col("total_cents"))).as("st"))
+      .select(col("user_id"), col("st.n_events").as("n_events"),
+        col("st.total_cents").as("total_cents"))
+    val batch = EventStream.typedEvents(graft.sources.Tables(spark, sfDir).events)
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_events"),
+        sum(round(col("value") * 100).cast("long")).as("total_cents"))
+    assert(sortedRows(fin) == sortedRows(batch))
+  }
+
+  // ---- the paper's streaming twin under a crash: the cumulative top-K
+  // harmonic score carried across a kill must equal a single run and
+  // the batch chain's score over all the evidence ----
+
+  import graft.streaming.AssociationStream
+
+  private val scoreKeys = Seq("diseaseId", "targetId", "datasourceId")
+
+  private def pacedEvidence: DataFrame = StreamQueries.evidence(paced(evidenceSrcDir))
+
+  private def pacedTimedEvidence: DataFrame = StreamQueries.evidence(
+    paced(evidenceSrcDir), col("l_shipdate").cast("timestamp").as("ts"))
+
+  /** AssociationScore.byDatasource's undated-bucket (year null) score
+    * per key: its accumulation covers every dated year too, so it is
+    * the score over all the replayed lineitem rows.
+    */
+  private lazy val batchScores: Map[(Long, Long, String), Double] =
+    graft.operators.AssociationScore.byDatasource(graft.sources.Tables(spark, sfDir).evidence)
+      .filter(col("year").isNull)
+      .select(col("diseaseId").cast("long"), col("targetId").cast("long"),
+        col("datasourceId"), round(col("score"), 4))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)) -> r.getDouble(3))
+      .toMap
+
+  /** Recovered (keys, score) rows equal `want` per key at 4 dp. */
+  private def assertScores(recovered: Seq[Row], want: Map[(Long, Long, String), Double]): Unit = {
+    val got = recovered.map(r => (r.getLong(0), r.getLong(1), r.getString(2)) ->
+      BigDecimal(r.getDouble(3)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
+    assert(got.size == recovered.size && got.keySet == want.keySet,
+      s"${got.size} recovered keys vs ${want.size} batch keys")
+    val off = got.filter { case (k, v) => v != want(k) }
+    assert(off.isEmpty, s"${off.size} keys differ from byDatasource, e.g. " +
+      off.take(3).map { case (k, v) => s"$k: $v vs ${want(k)}" }.mkString("; "))
+  }
+
+  private def finalScores(updates: DataFrame): DataFrame =
+    StreamQueries.latestByKey(updates, scoreKeys, "n_evidence")
+      .select((scoreKeys :+ "score").map(col): _*)
+
+  test("crash-recovery: cumulative harmonic score (q63 family) ≡ single run ≡ byDatasource") {
+    val crash = crashVsSingle(() => AssociationStream.cumulativeScores(
+        pacedEvidence.as[AssociationStream.EvidenceEvent]),
+      finalScores, mode = "update")
+    assertScores(crash, batchScores)
+  }
+
+  test("crash-recovery: evicting cumulative score (q65 family) ≡ single run ≡ byDatasource") {
+    val crash = crashVsSingle(() => AssociationStream.cumulativeScoresEvicting(
+        pacedTimedEvidence.as[AssociationStream.TimedEvidenceEvent],
+        watermark = "3650 days", evictAfterMs = 200L * 365 * 24 * 3600 * 1000),
+      finalScores, mode = "update")
+    assertScores(crash, batchScores)
+  }
+
+  test("crash-recovery: novelty peaks (q170 family) ≡ single run ≡ byDatasource") {
+    // the highest peak a key fires is its final score; a key whose
+    // score never rises above 0 fires none
+    val crash = crashVsSingle(() => AssociationStream.noveltyPeaks(
+        pacedEvidence.as[AssociationStream.EvidenceEvent]).toDF(),
+      _.groupBy(scoreKeys.map(col): _*).agg(max(col("score")).as("score")))
+    assertScores(crash, batchScores.filter(_._2 > 0))
   }
 }

@@ -68,6 +68,37 @@ class SurveySyncSpec extends AnyFunSuite {
       s"cap observe() outside PairForms (use PairForms.capDrop): ${handRolled.mkString(", ")}")
   }
 
+  test("streams are started only by the StreamQueries replay runner") {
+    // one runner owns the sink, the checkpoint, the state width and the
+    // state store: a second start site is a replay that skips one of them
+    import scala.jdk.CollectionConverters._
+    val starts = Seq("""\.writeStream\b""".r, """Trigger\.AvailableNow""".r,
+      """"spark\.sql\.shuffle\.partitions"|SHUFFLE_PARTITIONS""".r)
+    def code(line: String) = {
+      val t = line.trim
+      !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+    }
+    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => Files.readAllLines(p).asScala.filter(code)
+        .flatMap(l => starts.filter(_.findFirstIn(l).isDefined).map(r => (p, r.regex))))
+    // GraftSession only sizes the session it builds (its `.config`)
+    val outside = hits.filterNot { case (p, r) =>
+      p.getFileName.toString == "StreamQueries.scala" ||
+        (p.getFileName.toString == "GraftSession.scala" && r.contains("shuffle"))
+    }
+    assert(outside.isEmpty, s"stream start or width outside the runner: $outside")
+    val inRunner = hits.filter(_._1.getFileName.toString == "StreamQueries.scala")
+      .groupBy(_._2).map { case (r, hs) => r -> hs.size }
+    assert(inRunner.size == starts.size && inRunner.values.forall(_ == 1),
+      s"the runner holds each of them once: $inRunner")
+    val rocks = Files.walk(Paths.get("src/main/scala/graft/registry")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains("withRocksDbStateStore"))
+      .toSeq
+    assert(rocks.isEmpty, s"the replay runner picks the state store: $rocks")
+  }
+
   test("bounded heaps are built only by the shared k-best heap") {
     // one sift-up and one sift-down (functions/KBestHeap.scala): a
     // hand-rolled heap is a second spelling of its order and a second

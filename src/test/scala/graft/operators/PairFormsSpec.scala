@@ -65,6 +65,27 @@ class PairFormsSpec extends SparkSpec {
     assert(names.size == 2 && names.distinct.size == 2, s"got $names")
   }
 
+  test("capDrop rejects a cap that empties its filter whatever the data") {
+    // size > 1 AND size <= 1 folds to an empty relation: nothing would
+    // run and no metric would exist, so the frame is refused when built
+    val rows = Seq(("x", 1L), ("y", 2L)).toDF("k", "n")
+    val pairs = intercept[IllegalArgumentException](
+      PairForms.capDrop(rows, "probe_low", col("n"), 1))
+    assert(pairs.getMessage.contains("probe_low cap must be >= 2, got 1"))
+    val single = intercept[IllegalArgumentException](
+      PairForms.capDrop(rows, "probe_low", col("n"), 0, singletons = true))
+    assert(single.getMessage.contains("probe_low cap must be >= 1, got 0"))
+    // the smallest caps that can keep a row are still accepted
+    assert(PairForms.capDrop(rows, "probe_low", col("n"), 2).count() == 1L)
+    assert(PairForms.capDrop(rows, "probe_low", col("n"), 1, singletons = true).count() == 1L)
+    // an operator given such a cap fails the same way (it used to
+    // return an empty frame and publish no metric)
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](
+      TextAnalysis.lexicalCosinePairs(docs, minCos = 0.1, maxDf = 1))
+    assert(e.getMessage.contains("cap must be >= 2, got 1"))
+  }
+
   test("memberPairs expands a hand-listed bucket into its unordered pairs") {
     val postings = Seq(("x", 3L), ("x", 1L), ("x", 2L), ("y", 4L)).toDF("k", "id")
     val scalar = PairForms.memberPairs(postings, Seq("k"), col("id"),
