@@ -76,9 +76,7 @@ private[graft] object EventQueries {
       // (run-length encoding of a keyed state stream; every step
       // rides one user-keyed exchange)
       val t = Tables(s, dir)
-      EventWindows.scd2(
-        t.events.withColumn("ts_us", unix_micros(col("ts"))),
-        "user_id", "event_type", "ts_us", "event_id")
+      scd2History(t)
         .select("user_id", "version", "value",
           "valid_from_us", "valid_to_us", "is_current")
     }),
@@ -103,9 +101,7 @@ private[graft] object EventQueries {
       // event-type state before transitioning, from the SCD-2 history
       // (closed versions only — live states are right-censored)
       val t = Tables(s, dir)
-      val dim = EventWindows.scd2(
-        t.events.withColumn("ts_us", unix_micros(col("ts"))),
-        "user_id", "event_type", "ts_us", "event_id")
+      val dim = scd2History(t)
       EventWindows.stateDwell(dim)
     }),
     "q304_stream_pit" -> ((s, dir) => {
@@ -115,9 +111,7 @@ private[graft] object EventQueries {
       // interval predicate replaces the as-of sort a stream can't do,
       // and the SAME oracle gates both halves
       val t = Tables(s, dir)
-      val dim = EventWindows.scd2(
-        t.events.withColumn("ts_us", unix_micros(col("ts"))),
-        "user_id", "event_type", "ts_us", "event_id")
+      val dim = scd2History(t)
       val ev = StreamQueries.streamEvents(s, dir)
       StreamQueries.materialize(
         EventStream.streamPointInTime(ev, dim, probeShiftUs = 1800000000L))
@@ -166,17 +160,7 @@ private[graft] object EventQueries {
       // min_by-tie-broken) first action. Subjects collapse to
       // (cohort, day) grain before the bounded KM windows.
       val t = Tables(s, dir)
-      val ev = t.events.select(col("user_id"), col("event_type"),
-        col("event_id"), unix_micros(col("ts")).as("us"))
-      val horizon = broadcast(ev.agg(max("us").as("hz")))
-      val users = ev.groupBy("user_id")
-        .agg(min("us").as("t0"),
-          min_by(col("event_type"), struct(col("us"), col("event_id")))
-            .as("cohort"),
-          min(when(col("event_type") === "purchase", col("us"))).as("tp"))
-      val subjects = users.join(horizon)
-        .withColumn("event", when(col("tp").isNotNull, 1L).otherwise(0L))
-        .withColumn("duration", expr("(coalesce(tp, hz) - t0) DIV 86400000000"))
+      val subjects = cohortSubjects(t)
       EventWindows.kaplanMeier(subjects, Seq("cohort"))
     }),
     "q337_logrank" -> ((s, dir) => {
@@ -597,8 +581,7 @@ private[graft] object EventQueries {
       // THAT hour, not at readout)
       val wins = StreamQueries.materialize(
         EventStream.tumblingGroupCounts(
-          StreamQueries.streamEvents(s, dir),
-          when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")))
+          StreamQueries.streamEvents(s, dir), parityArm))
       val d = (c: org.apache.spark.sql.Column) => c.cast("double")
       wins.groupBy("window_start")
         .agg(
@@ -618,17 +601,7 @@ private[graft] object EventQueries {
       // survival frame — the additive risk view per first-action
       // cohort
       val t = Tables(s, dir)
-      val ev = t.events.select(col("user_id"), col("event_type"),
-        col("event_id"), unix_micros(col("ts")).as("us"))
-      val horizon = broadcast(ev.agg(max("us").as("hz")))
-      val users = ev.groupBy("user_id")
-        .agg(min("us").as("t0"),
-          min_by(col("event_type"), struct(col("us"), col("event_id")))
-            .as("cohort"),
-          min(when(col("event_type") === "purchase", col("us"))).as("tp"))
-      val subjects = users.join(horizon)
-        .withColumn("event", when(col("tp").isNotNull, 1L).otherwise(0L))
-        .withColumn("duration", expr("(coalesce(tp, hz) - t0) DIV 86400000000"))
+      val subjects = cohortSubjects(t)
       EventWindows.cumulativeHazard(subjects, Seq("cohort"))
     }),
     "q240_churn_labels" -> ((s, dir) => {
@@ -970,42 +943,7 @@ private[graft] object EventQueries {
         |       CAST(count(*) AS BIGINT) AS n_events
         |FROM r GROUP BY 1, 2""".stripMargin,
     "q144_kaplan_meier" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us FROM events
-        |),
-        |hz AS (SELECT max(us) AS hz FROM e),
-        |u AS (
-        |  SELECT user_id, min(us) AS t0,
-        |         min(CASE WHEN event_type = 'purchase' THEN us END) AS tp
-        |  FROM e GROUP BY 1
-        |),
-        |f AS (
-        |  SELECT user_id, event_type AS cohort FROM (
-        |    SELECT user_id, event_type,
-        |           row_number() OVER (PARTITION BY user_id
-        |             ORDER BY us, event_id) AS rk
-        |    FROM e)
-        |  WHERE rk = 1
-        |),
-        |s AS (
-        |  SELECT f.cohort,
-        |         CASE WHEN u.tp IS NOT NULL THEN 1 ELSE 0 END AS ev,
-        |         (coalesce(u.tp, hz.hz) - u.t0) // 86400000000 AS duration
-        |  FROM u JOIN f USING (user_id) CROSS JOIN hz
-        |),
-        |g AS (
-        |  SELECT cohort, duration, CAST(sum(ev) AS BIGINT) AS d,
-        |         CAST(sum(1 - ev) AS BIGINT) AS c
-        |  FROM s GROUP BY 1, 2
-        |),
-        |w AS (
-        |  SELECT *,
-        |    CAST(sum(d + c) OVER (PARTITION BY cohort)
-        |      - (sum(d + c) OVER (PARTITION BY cohort ORDER BY duration
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - (d + c))
-        |      AS BIGINT) AS n_risk
-        |  FROM g
-        |),
+      s"""WITH $SurvivalRiskSql,
         |z AS (
         |  SELECT *,
         |    min(n_risk - d) OVER (PARTITION BY cohort ORDER BY duration
@@ -1117,28 +1055,7 @@ private[graft] object EventQueries {
         |       max(end_us) AS end_us, CAST(count(*) AS BIGINT) AS n_intervals
         |FROM f GROUP BY 1, 2""".stripMargin,
     "q118_scd2" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-        |),
-        |c AS (
-        |  SELECT user_id, event_id, event_type, us,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY us, event_id) AS prev
-        |  FROM e
-        |),
-        |r AS (
-        |  SELECT user_id, event_type, us,
-        |         CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
-        |             THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY us, event_id
-        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM c
-        |),
-        |g AS (
-        |  SELECT user_id, version, min(event_type) AS value,
-        |         min(us) AS valid_from_us
-        |  FROM r GROUP BY 1, 2
-        |)
+      s"""WITH $Scd2VersionsSql
         |SELECT user_id, version, value, valid_from_us,
         |       lead(valid_from_us) OVER (PARTITION BY user_id
         |         ORDER BY version) AS valid_to_us,
@@ -1149,28 +1066,7 @@ private[graft] object EventQueries {
     // covering-version via the interval predicate (from <= t < to) —
     // equivalent to the as-of argmax because versions partition time.
     "q302_pit_join" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-        |),
-        |c AS (
-        |  SELECT user_id, event_id, event_type, us,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY us, event_id) AS prev
-        |  FROM e
-        |),
-        |r AS (
-        |  SELECT user_id, event_type, us,
-        |         CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
-        |             THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY us, event_id
-        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM c
-        |),
-        |g AS (
-        |  SELECT user_id, version, min(event_type) AS value,
-        |         min(us) AS valid_from_us
-        |  FROM r GROUP BY 1, 2
-        |),
+      s"""WITH $Scd2VersionsSql,
         |d AS (
         |  SELECT user_id, value, valid_from_us,
         |         lead(valid_from_us) OVER (PARTITION BY user_id
@@ -1190,28 +1086,7 @@ private[graft] object EventQueries {
     // exact micro-second durations, quantile_cont median (the q50
     // contract) rounded to whole micros.
     "q306_state_dwell" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-        |),
-        |c AS (
-        |  SELECT user_id, event_id, event_type, us,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY us, event_id) AS prev
-        |  FROM e
-        |),
-        |r AS (
-        |  SELECT user_id, event_type, us,
-        |         CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
-        |             THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY us, event_id
-        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM c
-        |),
-        |g AS (
-        |  SELECT user_id, version, min(event_type) AS value,
-        |         min(us) AS valid_from_us
-        |  FROM r GROUP BY 1, 2
-        |),
+      s"""WITH $Scd2VersionsSql,
         |d AS (
         |  SELECT user_id, value, valid_from_us,
         |         lead(valid_from_us) OVER (PARTITION BY user_id
@@ -1230,28 +1105,7 @@ private[graft] object EventQueries {
     // streaming PIT replay: identical to q302 — the stream-static
     // interval join returns the batch as-of result by construction.
     "q304_stream_pit" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-        |),
-        |c AS (
-        |  SELECT user_id, event_id, event_type, us,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY us, event_id) AS prev
-        |  FROM e
-        |),
-        |r AS (
-        |  SELECT user_id, event_type, us,
-        |         CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
-        |             THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY us, event_id
-        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM c
-        |),
-        |g AS (
-        |  SELECT user_id, version, min(event_type) AS value,
-        |         min(us) AS valid_from_us
-        |  FROM r GROUP BY 1, 2
-        |),
+      s"""WITH $Scd2VersionsSql,
         |d AS (
         |  SELECT user_id, value, valid_from_us,
         |         lead(valid_from_us) OVER (PARTITION BY user_id
@@ -1294,24 +1148,7 @@ private[graft] object EventQueries {
     // completion is the min event time of its type at-or-after step
     // i−1's completion; users without a step-1 event score 0.
     "q95_funnel" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events
-        |),
-        |s1 AS (
-        |  SELECT user_id, min(us) AS t1 FROM ev
-        |  WHERE event_type = 'view' GROUP BY 1
-        |),
-        |s2 AS (
-        |  SELECT e.user_id, min(e.us) AS t2
-        |  FROM ev e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.us >= s1.t1 GROUP BY 1
-        |),
-        |s3 AS (
-        |  SELECT e.user_id, min(e.us) AS t3
-        |  FROM ev e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.us >= s2.t2 GROUP BY 1
-        |),
+      s"""WITH $FunnelStepsSql,
         |u AS (SELECT DISTINCT user_id FROM ev)
         |SELECT u.user_id,
         |       CAST(CAST(t1 IS NOT NULL AS INT) + CAST(t2 IS NOT NULL AS INT)
@@ -1531,15 +1368,7 @@ private[graft] object EventQueries {
         |       round(CAST(max(v) AS DOUBLE) / 100, 4) AS max_v
         |FROM e GROUP BY 1""".stripMargin,
     "q117_stream_outer" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events
-        |),
-        |cut AS (
-        |  SELECT min(m) - 7200000000 AS c FROM (
-        |    SELECT event_type, max(epoch_us(ts)) AS m FROM ev
-        |    WHERE event_type IN ('purchase', 'click') GROUP BY 1)
-        |),
+      s"""WITH $FinalVerdictCutSql,
         |l AS (SELECT * FROM ev WHERE event_type = 'purchase'),
         |r AS (SELECT * FROM ev WHERE event_type = 'click')
         |SELECT l.user_id, l.event_id AS left_id, r.event_id AS right_id
@@ -1549,15 +1378,7 @@ private[graft] object EventQueries {
     // RIGHT-outer replay of the q117 shape: right-side null emission,
     // the cut on the RIGHT (outer-side) event time.
     "q323_stream_right_outer" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events
-        |),
-        |cut AS (
-        |  SELECT min(m) - 7200000000 AS c FROM (
-        |    SELECT event_type, max(epoch_us(ts)) AS m FROM ev
-        |    WHERE event_type IN ('purchase', 'click') GROUP BY 1)
-        |),
+      s"""WITH $FinalVerdictCutSql,
         |l AS (SELECT * FROM ev WHERE event_type = 'purchase'),
         |r AS (SELECT * FROM ev WHERE event_type = 'click')
         |SELECT r.user_id, l.event_id AS left_id, r.event_id AS right_id
@@ -1637,24 +1458,7 @@ private[graft] object EventQueries {
     // Funnel-timing replay: the q95 staged-min chain, then exact
     // interpolated percentiles of the conversion gap.
     "q180_funnel_timing" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events
-        |),
-        |s1 AS (
-        |  SELECT user_id, min(us) AS t1 FROM ev
-        |  WHERE event_type = 'view' GROUP BY 1
-        |),
-        |s2 AS (
-        |  SELECT e.user_id, min(e.us) AS t2
-        |  FROM ev e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.us >= s1.t1 GROUP BY 1
-        |),
-        |s3 AS (
-        |  SELECT e.user_id, min(e.us) AS t3
-        |  FROM ev e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.us >= s2.t2 GROUP BY 1
-        |),
+      s"""WITH $FunnelStepsSql,
         |d AS (SELECT s3.user_id, t3 - t1 AS d
         |      FROM s3 JOIN s1 USING (user_id))
         |SELECT CAST(count(*) AS BIGINT) AS n_converted,
@@ -1729,9 +1533,9 @@ private[graft] object EventQueries {
     // Stickiness replay: same user-day grain, same bounded offset
     // fans re-aggregated with exact distincts.
     "q202_stickiness" ->
-      """WITH ud AS (
+      s"""WITH ud AS (
         |  SELECT DISTINCT user_id AS u,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
+        |         $DaySql AS d
         |  FROM events
         |),
         |dau AS (SELECT d AS day, CAST(count(DISTINCT u) AS BIGINT) AS dau FROM ud GROUP BY 1),
@@ -1750,24 +1554,7 @@ private[graft] object EventQueries {
     // Step-report replay: the q95 funnel CTEs re-aggregated on a
     // 0..3 spine with a lag-window conversion.
     "q203_funnel_steps" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
-        |  FROM events
-        |),
-        |s1 AS (
-        |  SELECT user_id, min(us) AS t1 FROM ev
-        |  WHERE event_type = 'view' GROUP BY 1
-        |),
-        |s2 AS (
-        |  SELECT e.user_id, min(e.us) AS t2
-        |  FROM ev e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.us >= s1.t1 GROUP BY 1
-        |),
-        |s3 AS (
-        |  SELECT e.user_id, min(e.us) AS t3
-        |  FROM ev e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.us >= s2.t2 GROUP BY 1
-        |),
+      s"""WITH $FunnelStepsSql,
         |u AS (SELECT DISTINCT user_id FROM ev),
         |f AS (
         |  SELECT CAST(CAST(t1 IS NOT NULL AS INT) + CAST(t2 IS NOT NULL AS INT)
@@ -1787,8 +1574,8 @@ private[graft] object EventQueries {
     // Trending replay: same (day, item) grain, same tie-broken ranks,
     // previous-appearance lag per item.
     "q209_trending" ->
-      """WITH c AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH c AS (
+        |  SELECT $DaySql AS day,
         |         event_type AS item, CAST(count(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1, 2
         |),
@@ -1807,9 +1594,9 @@ private[graft] object EventQueries {
     // Cohort-LTV replay: same first-seen min window, same integer-cent
     // revenue, same cohort-partitioned cumulative.
     "q220_cohort_ltv" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
+        |         $DaySql AS d,
         |         COALESCE(CAST(round(value * 100) AS BIGINT), 0) AS c
         |  FROM events
         |),
@@ -1872,8 +1659,8 @@ private[graft] object EventQueries {
     // Decay-score replay: same integer day ages, same exact
     // shift-based 2^-age micro weights, HUGEINT contribution sums.
     "q228_decay_score" ->
-      """WITH f AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
+      s"""WITH f AS (
+        |  SELECT user_id, $DaySql AS d,
         |         CAST(round(value * 100) AS BIGINT) AS c
         |  FROM events WHERE value IS NOT NULL
         |),
@@ -1944,42 +1731,7 @@ private[graft] object EventQueries {
     // Cumulative-hazard replay: the q144 survival CTEs with the
     // micro-quantized d/n increments cumulated as exact longs.
     "q239_cum_hazard" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us FROM events
-        |),
-        |hz AS (SELECT max(us) AS hz FROM e),
-        |u AS (
-        |  SELECT user_id, min(us) AS t0,
-        |         min(CASE WHEN event_type = 'purchase' THEN us END) AS tp
-        |  FROM e GROUP BY 1
-        |),
-        |f AS (
-        |  SELECT user_id, event_type AS cohort FROM (
-        |    SELECT user_id, event_type,
-        |           row_number() OVER (PARTITION BY user_id
-        |             ORDER BY us, event_id) AS rk
-        |    FROM e)
-        |  WHERE rk = 1
-        |),
-        |s AS (
-        |  SELECT f.cohort,
-        |         CASE WHEN u.tp IS NOT NULL THEN 1 ELSE 0 END AS ev,
-        |         (coalesce(u.tp, hz.hz) - u.t0) // 86400000000 AS duration
-        |  FROM u JOIN f USING (user_id) CROSS JOIN hz
-        |),
-        |g AS (
-        |  SELECT cohort, duration, CAST(sum(ev) AS BIGINT) AS d,
-        |         CAST(sum(1 - ev) AS BIGINT) AS c
-        |  FROM s GROUP BY 1, 2
-        |),
-        |w AS (
-        |  SELECT *,
-        |    CAST(sum(d + c) OVER (PARTITION BY cohort)
-        |      - (sum(d + c) OVER (PARTITION BY cohort ORDER BY duration
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - (d + c))
-        |      AS BIGINT) AS n_risk
-        |  FROM g
-        |),
+      s"""WITH $SurvivalRiskSql,
         |h AS (
         |  SELECT *,
         |    CAST(round(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) * 1e6) AS BIGINT) AS hu
@@ -1992,8 +1744,8 @@ private[graft] object EventQueries {
         |FROM h""".stripMargin,
     // Churn-label replay: same max-anchored cutoff, same side counts.
     "q240_churn_labels" ->
-      """WITH f AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d
+      s"""WITH f AS (
+        |  SELECT user_id, $DaySql AS d
         |  FROM events
         |),
         |a AS (SELECT max(d) - 7 + 1 AS cut FROM f),
@@ -2035,8 +1787,8 @@ private[graft] object EventQueries {
     // Daily-band replay: interpolated percentiles on integer cents at
     // day grain (the q50/q157 contract).
     "q247_daily_bands" ->
-      """WITH f AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH f AS (
+        |  SELECT $DaySql AS day,
         |         CAST(round(value * 100) AS BIGINT) AS c
         |  FROM events WHERE value IS NOT NULL
         |)
@@ -2048,8 +1800,8 @@ private[graft] object EventQueries {
     // Mix-shift replay: same (day, cat) grain, same 6dp per-category
     // JS contributions, same closed-form absent-mass remainder.
     "q248_mix_shift" ->
-      """WITH g AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH g AS (
+        |  SELECT $DaySql AS day,
         |         event_type AS cat, CAST(count(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1, 2
         |),
@@ -2165,15 +1917,7 @@ private[graft] object EventQueries {
     // FULL-outer replay of the q117 shape: both-side null emission,
     // same watermark+range cut on the driving (left, else right) time.
     "q271_stream_full_outer" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events
-        |),
-        |cut AS (
-        |  SELECT min(m) - 7200000000 AS c FROM (
-        |    SELECT event_type, max(epoch_us(ts)) AS m FROM ev
-        |    WHERE event_type IN ('purchase', 'click') GROUP BY 1)
-        |),
+      s"""WITH $FinalVerdictCutSql,
         |l AS (SELECT * FROM ev WHERE event_type = 'purchase'),
         |r AS (SELECT * FROM ev WHERE event_type = 'click')
         |SELECT coalesce(l.user_id, r.user_id) AS user_id,

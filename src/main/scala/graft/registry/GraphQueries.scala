@@ -106,7 +106,7 @@ private[graft] object GraphQueries {
       // duplicate families survive, incidental pairwise matches peel
       // away — the template-spam screen beside q111's triangles
       val t = Tables(s, dir)
-      Graph.kCore(Dedup.minhashLshPairs(t.documents).select("idA", "idB"))
+      Graph.kCore(nearDupEdges(t))
     }),
     "q111_triangles" -> ((s, dir) => {
       // per-node triangle participation over the MinHash near-dup
@@ -116,7 +116,7 @@ private[graft] object GraphQueries {
       // formulation — same triangle set)
       val t = Tables(s, dir)
       Graph.triangleCount(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"),
+        nearDupEdges(t),
         "idA", "idB")
     }),
     "q340_clustering_coeff" -> ((s, dir) => {
@@ -125,7 +125,7 @@ private[graft] object GraphQueries {
       // boilerplate hub — opposite keeper policies
       val t = Tables(s, dir)
       Graph.clusteringCoefficient(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"),
+        nearDupEdges(t),
         "idA", "idB")
     }),
     "q341_adamic_adar" -> ((s, dir) => {
@@ -147,7 +147,7 @@ private[graft] object GraphQueries {
       // the MinHash near-dup graph
       val t = Tables(s, dir)
       Graph.degreePowerLaw(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"),
+        nearDupEdges(t),
         "idA", "idB")
     }),
     "q254_component_sizes" -> ((s, dir) => {
@@ -155,7 +155,7 @@ private[graft] object GraphQueries {
       // near-dup clustering with node shares
       val t = Tables(s, dir)
       Graph.componentSizes(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"))
+        nearDupEdges(t))
     }),
     "q379_dup_modularity" -> ((s, dir) => {
       // G110 modularity of the SOURCE partition over the near-dup
@@ -164,7 +164,7 @@ private[graft] object GraphQueries {
       // per-source vs global dedup
       val t = Tables(s, dir)
       Graph.modularity(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"),
+        nearDupEdges(t),
         t.documents.select(col("doc_id"), col("source")),
         "idA", "idB", "doc_id", "source")
         .orderBy("community")
@@ -176,7 +176,7 @@ private[graft] object GraphQueries {
       // prices the wedge-enumeration plan
       val t = Tables(s, dir)
       Graph.assortativity(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"),
+        nearDupEdges(t),
         "idA", "idB")
     }),
     "q387_rich_club" -> ((s, dir) => {
@@ -186,7 +186,7 @@ private[graft] object GraphQueries {
       // thresholds
       val t = Tables(s, dir)
       Graph.richClub(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"),
+        nearDupEdges(t),
         Seq(1, 2, 4, 8, 16), "idA", "idB")
     }),
     "q399_label_prop" -> ((s, dir) => {
@@ -196,7 +196,7 @@ private[graft] object GraphQueries {
       // through single weak edges
       val t = Tables(s, dir)
       Graph.labelPropagation(
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"))
+        nearDupEdges(t))
         .orderBy("id")
     }),
     "q388_link_scores" -> ((s, dir) => {
@@ -257,9 +257,7 @@ private[graft] object GraphQueries {
       }.mkString(",\n")
       s"""WITH $MinhashPairsSql,
          |e0 AS MATERIALIZED (
-         |  SELECT idA AS src, idB AS dst FROM lshpairs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM lshpairs
+         |${BothWaysSql("lshpairs")}
          |),
          |$peels
          |SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
@@ -349,16 +347,7 @@ private[graft] object GraphQueries {
     // shares over the histogram.
     "q254_component_sizes" ->
       s"""WITH RECURSIVE $MinhashPairsSql,
-         |edges AS (
-         |  SELECT idA AS src, idB AS dst FROM lshpairs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM lshpairs
-         |),
-         |walk(id, comp) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-         |),
+         |${ComponentsSql("lshpairs")},
          |comps AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
          |sz AS (SELECT comp, CAST(count(*) AS BIGINT) AS size FROM comps GROUP BY 1),
          |hist AS (
@@ -422,9 +411,7 @@ private[graft] object GraphQueries {
       }.mkString(",\n")
       s"""WITH $MinhashPairsSql,
          |e0 AS MATERIALIZED (
-         |  SELECT idA AS src, idB AS dst FROM lshpairs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM lshpairs
+         |${BothWaysSql("lshpairs")}
          |),
          |l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS community FROM e0),
          |$roundsSql

@@ -737,28 +737,7 @@ private[graft] object InfraQueries {
     // q118 pipeline over all events) — the engine's split+apply path
     // must land on it byte-for-byte.
     "q307_scd2_apply" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-        |),
-        |c AS (
-        |  SELECT user_id, event_id, event_type, us,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY us, event_id) AS prev
-        |  FROM e
-        |),
-        |r AS (
-        |  SELECT user_id, event_type, us,
-        |         CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
-        |             THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY user_id ORDER BY us, event_id
-        |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
-        |  FROM c
-        |),
-        |g AS (
-        |  SELECT user_id, version, min(event_type) AS value,
-        |         min(us) AS valid_from_us
-        |  FROM r GROUP BY 1, 2
-        |)
+      s"""WITH $Scd2VersionsSql
         |SELECT user_id, version, value, valid_from_us,
         |       lead(valid_from_us) OVER (PARTITION BY user_id
         |         ORDER BY version) AS valid_to_us,

@@ -324,7 +324,7 @@ private[graft] object PipelineQueries {
     "q47_dedup_clusters" -> ((s, dir) => {
       // near-dup components: keeper = min id per cluster
       val t = Tables(s, dir)
-      Dedup.clusters(Dedup.minhashLshPairs(t.documents).select("idA", "idB"))
+      Dedup.clusters(nearDupEdges(t))
     }),
     "q308_soft_dedup" -> ((s, dir) => {
       // G97 soft dedup: 1/cluster-size downweighting instead of
@@ -544,7 +544,7 @@ private[graft] object PipelineQueries {
       // seeded integer-threshold noise both engines replay exactly
       val t = Tables(s, dir)
       val ev = t.events.withColumn("day",
-        expr("unix_micros(ts) div 86400000000"))
+        dayOf)
       Privacy.dpCounts(ev, Seq("event_type", "day"))
     }),
     "q213_centroid_outliers" -> ((s, dir) => {
@@ -566,7 +566,7 @@ private[graft] object PipelineQueries {
       // cluster (G2b components x G8 quality)
       val t = Tables(s, dir)
       Dedup.canonicalPick(t.documents,
-        Dedup.minhashLshPairs(t.documents).select("idA", "idB"))
+        nearDupEdges(t))
     }),
     "q266_dup_by_source" -> ((s, dir) => {
       // G84 which feeds contribute the duplication: per-source
@@ -745,31 +745,13 @@ private[graft] object PipelineQueries {
     // then min-label per node — identical to hash-to-min convergence.
     "q47_dedup_clusters" ->
       s"""WITH RECURSIVE $MinhashPairsSql,
-         |edges AS (
-         |  SELECT idA AS src, idB AS dst FROM lshpairs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM lshpairs
-         |),
-         |walk(id, comp) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-         |)
+         |${ComponentsSql("lshpairs")}
          |SELECT id, min(comp) AS comp FROM walk GROUP BY id""".stripMargin,
     // soft-dedup replay: q47's components, micro-unit 1/k weights,
     // singletons (docs outside every pair) weigh 1.0 via the left join.
     "q308_soft_dedup" ->
       s"""WITH RECURSIVE $MinhashPairsSql,
-         |edges AS (
-         |  SELECT idA AS src, idB AS dst FROM lshpairs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM lshpairs
-         |),
-         |walk(id, comp) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-         |),
+         |${ComponentsSql("lshpairs")},
          |cmp AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
          |ks AS (SELECT comp, CAST(count(*) AS BIGINT) AS k FROM cmp GROUP BY 1),
          |wt AS (
@@ -803,48 +785,14 @@ private[graft] object PipelineQueries {
         |FROM buckets""".stripMargin,
     "q33_ngram_jaccard" ->
       s"""WITH $ShinglesSql,
-         |blocked AS (
-         |  SELECT d.source AS block, s.id, list_distinct(s.sh) AS sh
-         |  FROM shingled s JOIN documents d ON d.doc_id = s.id
-         |),
-         |inv AS (SELECT block, id, len(sh) AS sz, unnest(sh) AS s FROM blocked),
-         |dfc AS (SELECT block, s, count(*) AS df FROM inv GROUP BY 1, 2),
-         |kept AS (
-         |  SELECT i.block, i.id, i.sz, i.s
-         |  FROM inv i JOIN dfc ON dfc.block = i.block AND dfc.s = i.s
-         |  WHERE dfc.df BETWEEN 2 AND ${graft.GraftConf.NgramMaxDf}
-         |),
-         |pairs AS (
-         |  SELECT a.block, a.id AS idA, b.id AS idB, a.sz AS szA, b.sz AS szB,
-         |         count(*) AS common
-         |  FROM kept a JOIN kept b
-         |    ON a.block = b.block AND a.s = b.s AND a.id < b.id
-         |  GROUP BY 1, 2, 3, 4, 5
-         |)
+         |$BlockedNgramPairsSql
          |SELECT block, idA, idB,
          |       round(CAST(common AS DOUBLE) / (szA + szB - common), 3) AS jaccard
          |FROM pairs
          |WHERE round(CAST(common AS DOUBLE) / (szA + szB - common), 3) >= 0.5""".stripMargin,
     "q168_containment" ->
       s"""WITH $ShinglesSql,
-         |blocked AS (
-         |  SELECT d.source AS block, s.id, list_distinct(s.sh) AS sh
-         |  FROM shingled s JOIN documents d ON d.doc_id = s.id
-         |),
-         |inv AS (SELECT block, id, len(sh) AS sz, unnest(sh) AS s FROM blocked),
-         |dfc AS (SELECT block, s, count(*) AS df FROM inv GROUP BY 1, 2),
-         |kept AS (
-         |  SELECT i.block, i.id, i.sz, i.s
-         |  FROM inv i JOIN dfc ON dfc.block = i.block AND dfc.s = i.s
-         |  WHERE dfc.df BETWEEN 2 AND ${graft.GraftConf.NgramMaxDf}
-         |),
-         |pairs AS (
-         |  SELECT a.block, a.id AS idA, b.id AS idB, a.sz AS szA, b.sz AS szB,
-         |         count(*) AS common
-         |  FROM kept a JOIN kept b
-         |    ON a.block = b.block AND a.s = b.s AND a.id < b.id
-         |  GROUP BY 1, 2, 3, 4, 5
-         |)
+         |$BlockedNgramPairsSql
          |SELECT block, idA, idB,
          |       round(CAST(common AS DOUBLE) / szA, 3) AS c_ab,
          |       round(CAST(common AS DOUBLE) / szB, 3) AS c_ba
@@ -856,16 +804,10 @@ private[graft] object PipelineQueries {
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |scored AS (
          |  SELECT c.vec_id AS id, q.query_id,
-         |         CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |           / (c.n * q.qn) AS cos
+         |         ${CosineSql()} AS cos
          |  FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
          |),
-         |ranked AS (
-         |  SELECT query_id, id,
-         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, id) AS INT) AS rank,
-         |         cos
-         |  FROM scored
-         |)
+         |$CosineRankedSql
          |SELECT query_id, id, rank, round(cos, 4) AS cos FROM ranked WHERE rank <= 5""".stripMargin,
     // hard-negative replay: q34's scoring with labels carried and the
     // wrong-label predicate in the join.
@@ -880,8 +822,7 @@ private[graft] object PipelineQueries {
          |scored AS (
          |  SELECT q.query_id, q.qlbl AS anchor_label, c.vec_id AS id,
          |         l.label AS neg_label,
-         |         CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |           / (c.n * q.qn) AS cos
+         |         ${CosineSql()} AS cos
          |  FROM nrm c JOIN lbl l ON l.vec_id = c.vec_id
          |  CROSS JOIN qs q
          |  WHERE c.vec_id != q.query_id AND l.label != q.qlbl
@@ -955,7 +896,7 @@ private[graft] object PipelineQueries {
     // codes, integer dots — every FP step (widen, ×, ÷, round) is
     // IEEE-exact so the codes agree bit-for-bit across engines.
     "q90_int8_ann" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, embedding,
         |         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS mx
         |  FROM embeddings
@@ -977,8 +918,7 @@ private[graft] object PipelineQueries {
         |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nz WHERE vec_id % 50 = 0),
         |scored AS (
         |  SELECT c.vec_id AS id, q.query_id,
-        |         CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-        |           / (c.n * q.qn) AS cos8
+        |         ${CosineSql()} AS cos8
         |  FROM nz c CROSS JOIN qs q WHERE c.vec_id != q.query_id
         |),
         |ranked AS (
@@ -998,11 +938,8 @@ private[graft] object PipelineQueries {
          |       FROM nrm WHERE vec_id % 50 = 0),
          |rel AS MATERIALIZED (
          |  SELECT c.vec_id AS id, q.query_id,
-         |         CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i]))
-         |              AS DOUBLE) / (c.n * q.qn) AS rel,
-         |         row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |           CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i]))
-         |                AS DOUBLE) / (c.n * q.qn) DESC, c.vec_id) AS rk
+         |         ${CosineSql()} AS rel,
+         |         ${CosineRankSql()} AS rk
          |  FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
          |),
          |pool AS MATERIALIZED (SELECT query_id, id, rel FROM rel WHERE rk <= 8),
@@ -1109,16 +1046,10 @@ private[graft] object PipelineQueries {
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn, bucket FROM withb WHERE vec_id % 50 = 0),
          |scored AS (
          |  SELECT c.vec_id AS id, q.query_id,
-         |         CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |           / (c.n * q.qn) AS cos
+         |         ${CosineSql()} AS cos
          |  FROM withb c JOIN qs q USING (bucket) WHERE c.vec_id != q.query_id
          |),
-         |ranked AS (
-         |  SELECT query_id, id,
-         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, id) AS INT) AS rank,
-         |         cos
-         |  FROM scored
-         |)
+         |$CosineRankedSql
          |SELECT query_id, id, rank, round(cos, 4) AS cos FROM ranked WHERE rank <= 5""".stripMargin,
     // The stub decoder is deterministic byte arithmetic over the UTF-8
     // payload (Multimodal.decodeStub); document text is ASCII, so DuckDB
@@ -1130,14 +1061,7 @@ private[graft] object PipelineQueries {
     // (8 + n%8) × (8 + (n/8)%8), file size 54 + stride·h with 4-byte
     // row padding — a decoder stride/offset/row-order bug mismatches
     "q38_multimodal" ->
-      """WITH b AS (
-        |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
-        |    ELSE length(text) END AS INT) AS n FROM documents
-        |),
-        |d AS (
-        |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
-        |  FROM b
-        |),
+      s"""WITH ${TextImageSql("b", "d")},
         |px AS (SELECT doc_id, text, n, w, h, unnest(range(0, w * h)) AS k FROM d),
         |s AS (
         |  SELECT doc_id, any_value(w) AS w, any_value(h) AS h,
@@ -1174,14 +1098,7 @@ private[graft] object PipelineQueries {
     // target samples source pixel (x·w//8, y·h//8) of the synthesized
     // image, whose channels are the same (3k+c) mod n byte lookups
     "q68_bmp_resize" ->
-      """WITH b AS (
-        |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
-        |    ELSE length(text) END AS INT) AS n FROM documents
-        |),
-        |d AS (
-        |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
-        |  FROM b
-        |),
+      s"""WITH ${TextImageSql("b", "d")},
         |o AS (SELECT doc_id, text, n, w, h, unnest(range(0, 64)) AS p FROM d),
         |m AS (
         |  SELECT doc_id, text, n,
@@ -1224,12 +1141,7 @@ private[graft] object PipelineQueries {
          |           / (c.n * qx.qn) AS cos
          |  FROM casgn c JOIN qasgn qx USING (cell) WHERE c.vec_id != qx.query_id
          |),
-         |ranked AS (
-         |  SELECT query_id, id,
-         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, id) AS INT) AS rank,
-         |         cos
-         |  FROM scored
-         |)
+         |$CosineRankedSql
          |SELECT query_id, id, rank, round(cos, 4) AS cos FROM ranked WHERE rank <= 5""".stripMargin,
     // Cosine near-dup replay: pairs sharing an LSH bucket (bucket-cap
     // guarded like q31) with unrounded cosine >= 0.35.
@@ -1326,16 +1238,10 @@ private[graft] object PipelineQueries {
          |),
          |scored AS (
          |  SELECT c.vec_id AS id, q.query_id,
-         |         CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |           / (c.n * q.qn) AS cos
+         |         ${CosineSql()} AS cos
          |  FROM casgn c JOIN qasgn q USING (cell) WHERE c.vec_id != q.query_id
          |),
-         |ranked AS (
-         |  SELECT query_id, id,
-         |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, id) AS INT) AS rank,
-         |         cos
-         |  FROM scored
-         |)
+         |$CosineRankedSql
          |SELECT query_id, id, rank, round(cos, 4) AS cos FROM ranked WHERE rank <= 5""".stripMargin,
     "q54_hash_split" ->
       s"""WITH h AS (
@@ -1774,14 +1680,7 @@ private[graft] object PipelineQueries {
     // order-free — 6dp doubles flipped a 4dp boundary at sf0.1 —
     // 4dp entropies (+0.0 normalizes the all-one-bin negative zero).
     "q396_image_stats" ->
-      """WITH bb AS (
-        |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
-        |    ELSE length(text) END AS INT) AS n FROM documents
-        |),
-        |dd AS (
-        |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
-        |  FROM bb
-        |),
+      s"""WITH ${TextImageSql("bb", "dd")},
         |px AS (SELECT doc_id, text, n, w, h, unnest(range(0, w * h)) AS k FROM dd),
         |ch AS (
         |  SELECT doc_id, w, h, 'r' AS channel,
@@ -1844,16 +1743,7 @@ private[graft] object PipelineQueries {
          |  WHERE CAST(list_sum(list_transform(range(1, 65), i -> a.q[i] * b.q[i])) AS DOUBLE)
          |        / (a.n * b.n) >= 0.35
          |),
-         |edges AS (
-         |  SELECT idA AS src, idB AS dst FROM prs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM prs
-         |),
-         |walk(id, comp) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-         |),
+         |${ComponentsSql("prs")},
          |comp AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id)
          |SELECT e.vec_id,
          |       coalesce(c.comp, e.vec_id) AS keeper,
@@ -2120,22 +2010,14 @@ private[graft] object PipelineQueries {
          |$LshSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS (
-         |  SELECT query_id, id FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
-         |    FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
-         |  ) WHERE rank <= 5
+         |$ExactTop5Sql
          |),
          |qb AS (SELECT w.vec_id AS query_id, w.q AS qq, w.n AS qn, w.bucket
          |       FROM withb w WHERE w.vec_id % 50 = 0),
          |ap AS (
          |  SELECT query_id, id FROM (
          |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
+         |           ${CosineRankSql()} AS rank
          |    FROM withb c JOIN qb q USING (bucket) WHERE c.vec_id != q.query_id
          |  ) WHERE rank <= 5
          |),
@@ -2160,23 +2042,11 @@ private[graft] object PipelineQueries {
          |ex AS (
          |  SELECT query_id, id FROM (
          |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
+         |           ${CosineRankSql()} AS rank
          |    FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
          |  ) WHERE rank = 1
          |),
-         |qb AS (SELECT w.vec_id AS query_id, w.q AS qq, w.n AS qn, w.bucket
-         |       FROM withb w WHERE w.vec_id % 50 = 0),
-         |ap AS (
-         |  SELECT query_id, id, rank FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
-         |    FROM withb c JOIN qb q USING (bucket) WHERE c.vec_id != q.query_id
-         |  ) WHERE rank <= 5
-         |),
+         |$LshTop5Sql,
          |per AS (
          |  SELECT e.query_id,
          |         CAST(coalesce(a.rank, 0) AS BIGINT) AS rank_of_true,
@@ -2197,10 +2067,7 @@ private[graft] object PipelineQueries {
     // by construction, pure integer comparisons.
     "q193_dp_counts" ->
       s"""WITH g AS (
-         |  SELECT event_type,
-         |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-         |         CAST(count(*) AS BIGINT) AS n
-         |  FROM events GROUP BY 1, 2
+         |${DailyCountsSql("n")}
          |),
          |b AS (
          |  SELECT event_type, day, n,
@@ -2284,13 +2151,7 @@ private[graft] object PipelineQueries {
       s"""WITH $EmbSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 10 = 0),
          |nn AS (
-         |  SELECT query_id, id FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
-         |    FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
-         |  ) WHERE rank <= 5
+         |$ExactTop5Sql
          |),
          |lab AS (SELECT vec_id, CAST(label AS BIGINT) AS l FROM embeddings),
          |m AS (
@@ -2352,31 +2213,10 @@ private[graft] object PipelineQueries {
     // quality integer, keeper by (quality desc, id) rank.
     "q223_canonical_pick" ->
       s"""WITH RECURSIVE $MinhashPairsSql,
-         |edges AS (
-         |  SELECT idA AS src, idB AS dst FROM lshpairs
-         |  UNION ALL
-         |  SELECT idB AS src, idA AS dst FROM lshpairs
-         |),
-         |walk(id, comp) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
-         |),
+         |${ComponentsSql("lshpairs")},
          |comps AS (SELECT id, min(comp) AS comp FROM walk GROUP BY id),
-         |base AS (
-         |  SELECT doc_id, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT) AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a'))) AS BIGINT)
-         |                * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
+         |${DocsBaseSql()},
+         |$QualityIntSql,
          |r AS (
          |  SELECT c.comp, c.id, q.qi,
          |         row_number() OVER (PARTITION BY c.comp ORDER BY q.qi DESC, c.id) AS rn,
@@ -2393,25 +2233,9 @@ private[graft] object PipelineQueries {
          |$LshSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS (
-         |  SELECT query_id, id FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
-         |    FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
-         |  ) WHERE rank <= 5
+         |$ExactTop5Sql
          |),
-         |qb AS (SELECT w.vec_id AS query_id, w.q AS qq, w.n AS qn, w.bucket
-         |       FROM withb w WHERE w.vec_id % 50 = 0),
-         |ap AS (
-         |  SELECT query_id, id, rank FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
-         |    FROM withb c JOIN qb q USING (bucket) WHERE c.vec_id != q.query_id
-         |  ) WHERE rank <= 5
-         |),
+         |$LshTop5Sql,
          |dcg AS (
          |  SELECT a.query_id,
          |         CAST(sum(CASE WHEN e.id IS NOT NULL
@@ -2542,21 +2366,8 @@ private[graft] object PipelineQueries {
     // Exact-substring replay: same md5 8-gram windows, same >=2
     // corpus-occurrence test, same gaps-and-islands span merge.
     "q269_exact_spans" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |w AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |         md5(array_to_string(toks[i+1:i+8], ' ')) AS h
-        |  FROM t, unnest(range(0, greatest(0, len(toks) - 8 + 1))) u(i)
-        |  WHERE len(toks) >= 8
-        |),
-        |d AS (SELECT h FROM w GROUP BY h HAVING count(*) > 1),
-        |hits AS (SELECT doc_id, i FROM w JOIN d USING (h)),
-        |m AS (
-        |  SELECT doc_id, i,
-        |         max(i + 8) OVER (PARTITION BY doc_id ORDER BY i
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS runmax
-        |  FROM hits
-        |),
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |$SpanHitsSql,
         |isl AS (
         |  SELECT doc_id, i,
         |         sum(CASE WHEN runmax IS NULL OR i > runmax THEN 1 ELSE 0 END)
@@ -2641,13 +2452,7 @@ private[graft] object PipelineQueries {
       s"""WITH $EmbSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS MATERIALIZED (
-         |  SELECT query_id, id FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |             CAST(list_sum(list_transform(range(1, 65), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-         |               / (c.n * q.qn) DESC, c.vec_id) AS rank
-         |    FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
-         |  ) WHERE rank <= 5
+         |$ExactTop5Sql
          |),
          |tot AS (SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
          |               CAST(count(*) AS BIGINT) AS n_exact FROM ex),
@@ -2660,9 +2465,7 @@ private[graft] object PipelineQueries {
         |ap8 AS (
         |  SELECT query_id, id FROM (
         |    SELECT q.query_id, c.vec_id AS id,
-        |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-        |             CAST(list_sum(list_transform(range(1, 9), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-        |               / (c.n * q.qn) DESC, c.vec_id) AS rank
+        |           ${CosineRankSql(8)} AS rank
         |    FROM nrm8 c CROSS JOIN qs8 q WHERE c.vec_id != q.query_id
         |  ) WHERE rank <= 5
         |),
@@ -2679,9 +2482,7 @@ private[graft] object PipelineQueries {
         |ap16 AS (
         |  SELECT query_id, id FROM (
         |    SELECT q.query_id, c.vec_id AS id,
-        |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-        |             CAST(list_sum(list_transform(range(1, 17), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-        |               / (c.n * q.qn) DESC, c.vec_id) AS rank
+        |           ${CosineRankSql(16)} AS rank
         |    FROM nrm16 c CROSS JOIN qs16 q WHERE c.vec_id != q.query_id
         |  ) WHERE rank <= 5
         |),
@@ -2698,9 +2499,7 @@ private[graft] object PipelineQueries {
         |ap32 AS (
         |  SELECT query_id, id FROM (
         |    SELECT q.query_id, c.vec_id AS id,
-        |           row_number() OVER (PARTITION BY q.query_id ORDER BY
-        |             CAST(list_sum(list_transform(range(1, 33), i -> c.q[i] * q.qq[i])) AS DOUBLE)
-        |               / (c.n * q.qn) DESC, c.vec_id) AS rank
+        |           ${CosineRankSql(32)} AS rank
         |    FROM nrm32 c CROSS JOIN qs32 q WHERE c.vec_id != q.query_id
         |  ) WHERE rank <= 5
         |),
@@ -2746,21 +2545,8 @@ private[graft] object PipelineQueries {
     // Cut replay: the q269 span chain, disjoint spans per doc, the
     // indexed token filter, md5 of the space-rejoined survivor text.
     "q283_exact_cut" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |w AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |         md5(array_to_string(toks[i+1:i+8], ' ')) AS h
-        |  FROM t, unnest(range(0, greatest(0, len(toks) - 8 + 1))) u(i)
-        |  WHERE len(toks) >= 8
-        |),
-        |d AS (SELECT h FROM w GROUP BY h HAVING count(*) > 1),
-        |hits AS (SELECT doc_id, i FROM w JOIN d USING (h)),
-        |m AS (
-        |  SELECT doc_id, i,
-        |         max(i + 8) OVER (PARTITION BY doc_id ORDER BY i
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS runmax
-        |  FROM hits
-        |),
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |$SpanHitsSql,
         |isl AS (
         |  SELECT doc_id, i,
         |         sum(CASE WHEN runmax IS NULL OR i > runmax THEN 1 ELSE 0 END)

@@ -2,12 +2,15 @@ package graft
 
 import graft.operators._
 import graft.sources.{Io, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared plumbing for the per-family query registries: the scratch-dir
-  * helpers and every composable DuckDB-oracle SQL fragment (CTE chains
-  * reused across queries). Split out of SparkEntry so each registry file
-  * stays reviewable; see SparkEntry for the assembled driver contract.
+  * helpers, the input frames several Spark queries build alike, and
+  * every composable DuckDB-oracle SQL fragment (CTE chains reused across
+  * queries), each beside the Spark frame it mirrors. Split out of
+  * SparkEntry so each registry file stays reviewable; see SparkEntry for
+  * the assembled driver contract.
   */
 private[graft] object QueryHelpers {
   /** Scratch space for the IO-exercising queries (q77–q79) — see
@@ -23,7 +26,113 @@ private[graft] object QueryHelpers {
     }
   private[graft] def scratchDir(tag: String): String = Scratch.dir(tag)
 
-  // Shared SQL fragments for the oracles (DuckDB dialect).
+  // Shared SQL fragments for the oracles (DuckDB dialect), each with its
+  // Spark twin beside it where several Spark queries build that input too.
+
+  /** The A/B arm of a user by id parity: even "A", odd "B". */
+  private[graft] def parityArm: Column =
+    when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")
+
+  /** The UTC day number of `ts` (the events table's timestamp). */
+  private[graft] val DaySql = "epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000"
+
+  /** The UTC day number of `ts` — twin of [[DaySql]]. */
+  private[graft] def dayOf: Column = expr("unix_micros(ts) div 86400000000")
+
+  /** Body of the per-(event type, day) count CTE, `(event_type, day,
+    * cnt)` with the day and count columns named by the caller.
+    */
+  private[graft] def DailyCountsSql(cnt: String, day: String = "day"): String =
+    s"""  SELECT event_type, $DaySql AS $day,
+       |         CAST(count(*) AS BIGINT) AS $cnt
+       |  FROM events GROUP BY 1, 2""".stripMargin
+
+  /** Per-(`key`, day) row counts `(key, day, cnt)` of `events` — twin
+    * of [[DailyCountsSql]].
+    */
+  private[graft] def dailyCounts(events: DataFrame, cnt: String, key: String = "event_type")
+      : DataFrame =
+    events.groupBy(col(key), dayOf.as("day")).agg(count(lit(1)).as(cnt))
+
+  /** Per-event-type daily counts in micro-units, CTE
+    * `s(event_type, day, yu)` — the series the integer Holt and MASE
+    * folds run over.
+    */
+  private[graft] val DailyMicroCountsSql =
+    s"""s AS (
+       |  SELECT event_type,
+       |         $DaySql AS day,
+       |         CAST(count(*) AS BIGINT) * 1000000 AS yu
+       |  FROM events GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** Per-event-type daily counts `s(event_type, day, y)` and their
+    * centered 7-day moving average in micro-units,
+    * `t(event_type, day, y, tu)` — the trend step of
+    * graft.operators.Rollups.seasonalDecompose.
+    */
+  private[graft] val StlTrendSql =
+    s"""s AS (
+       |${DailyCountsSql("y")}
+       |),
+       |t AS (
+       |  SELECT event_type, day, y,
+       |         CAST(round(CAST(sum(y) OVER fr AS DOUBLE) / count(*) OVER fr * 1e6) AS BIGINT) AS tu
+       |  FROM s WINDOW fr AS (PARTITION BY event_type ORDER BY day
+       |                       ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+       |)""".stripMargin
+
+  /** Body of the daily click (`x`) / view (`y`) count CTE. */
+  private[graft] val DailyClickViewSql =
+    s"""  SELECT $DaySql AS day,
+       |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS x,
+       |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS y
+       |  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1""".stripMargin
+
+  /** Daily click (`x`) and view (`y`) counts per day — twin of
+    * [[DailyClickViewSql]].
+    */
+  private[graft] def dailyClickView(events: DataFrame): DataFrame =
+    events
+      .filter(col("event_type").isin("click", "view"))
+      .groupBy(dayOf.as("day"))
+      .agg(
+        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
+        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("y"))
+
+  /** The daily click/view series `dly` ([[DailyClickViewSql]]) and its
+    * exact HUGEINT moments `m(n, sx, sy, sxx, syy, sxy)`.
+    */
+  private[graft] val ClickViewMomentsSql =
+    s"""dly AS (
+       |$DailyClickViewSql
+       |),
+       |m AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS n,
+       |         CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
+       |         CAST(sum(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
+       |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
+       |         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
+       |         CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
+       |  FROM dly
+       |)""".stripMargin
+
+  /** Body of the per-(datasourceId, year) evidence count CTE, as the
+    * regression pair `(datasourceId, x = year, y = count)`.
+    */
+  private[graft] val EvidenceYearCountsSql =
+    """  SELECT l_returnflag AS datasourceId,
+      |         CAST(year(l_shipdate) AS BIGINT) AS x,
+      |         CAST(count(*) AS BIGINT) AS y
+      |  FROM lineitem GROUP BY 1, 2""".stripMargin
+
+  /** Evidence rows per (datasourceId, year), `n` — twin of
+    * [[EvidenceYearCountsSql]].
+    */
+  private[graft] def evidenceYearCounts(t: Tables): DataFrame =
+    t.evidence.groupBy("datasourceId", "year").agg(count(lit(1)).as("n"))
+
+  /** The evidence view as CTE `ev` — mirrors graft.sources.Tables.evidence. */
   private[graft] val EvSql =
     """ev AS (
       |  SELECT l_suppkey AS diseaseId, l_partkey AS targetId,
@@ -86,6 +195,43 @@ private[graft] object QueryHelpers {
       |           list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
       |    FROM embeddings
       |  )
+      |)""".stripMargin
+
+  /** Cosine of candidate `c` against query `q(qq, qn)` over the first
+    * `dims` quantized dimensions of [[EmbSql]]'s `nrm` rows — the score
+    * of graft.operators.SimilaritySearch.bruteForceTopK.
+    */
+  private[graft] def CosineSql(dims: Int = 64): String =
+    s"""CAST(list_sum(list_transform(range(1, ${dims + 1}), i -> c.q[i] * q.qq[i])) AS DOUBLE)
+       |               / (c.n * q.qn)""".stripMargin
+
+  /** Rank of candidate `c` per query by [[CosineSql]] desc, ties by
+    * vec_id — bruteForceTopK's order.
+    */
+  private[graft] def CosineRankSql(dims: Int = 64): String =
+    s"""row_number() OVER (PARTITION BY q.query_id ORDER BY
+       |             ${CosineSql(dims)} DESC, c.vec_id)""".stripMargin
+
+  /** Exact top-5 neighbours `(query_id, id)` of every `qs` query among
+    * all other `nrm` vectors — the body of the brute-force CTE.
+    */
+  private[graft] val ExactTop5Sql =
+    s"""  SELECT query_id, id FROM (
+       |    SELECT q.query_id, c.vec_id AS id,
+       |           ${CosineRankSql()} AS rank
+       |    FROM nrm c CROSS JOIN qs q WHERE c.vec_id != q.query_id
+       |  ) WHERE rank <= 5""".stripMargin
+
+  /** Per-query rank of CTE `scored(id, query_id, cos)` by cos desc, ties
+    * by id, as CTE `ranked(query_id, id, rank, cos)` — bruteForceTopK's
+    * order over an already scored candidate set.
+    */
+  private[graft] val CosineRankedSql =
+    """ranked AS (
+      |  SELECT query_id, id,
+      |         CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, id) AS INT) AS rank,
+      |         cos
+      |  FROM scored
       |)""".stripMargin
 
   /** Voronoi-assignment CTE for the IVF oracles: rank `cents` cells per
@@ -189,6 +335,83 @@ private[graft] object QueryHelpers {
        |),
        |lshpairs AS (SELECT idA, idB, jaccard FROM verified WHERE jaccard >= 0.8)""".stripMargin
 
+  /** The MinHash-LSH near-duplicate document pairs as `(idA, idB)`
+    * edges — twin of [[MinhashPairsSql]]'s `lshpairs`.
+    */
+  private[graft] def nearDupEdges(t: Tables): DataFrame =
+    Dedup.minhashLshPairs(t.documents).select("idA", "idB")
+
+  /** Both orientations `(src, dst)` of the `(idA, idB)` pairs in CTE
+    * `pairs` — mirrors graft.operators.Graph's `bothWays`.
+    */
+  private[graft] def BothWaysSql(pairs: String): String =
+    s"""  SELECT idA AS src, idB AS dst FROM $pairs
+       |  UNION ALL
+       |  SELECT idB AS src, idA AS dst FROM $pairs""".stripMargin
+
+  /** Connected components of the `pairs` graph: CTE `edges` (both
+    * ways) and the recursive min-label CTE `walk(id, comp)`, whose
+    * per-id min(comp) is the component — mirrors
+    * graft.operators.Dedup.clusters. The query opens WITH RECURSIVE.
+    */
+  private[graft] def ComponentsSql(pairs: String): String =
+    s"""edges AS (
+       |${BothWaysSql(pairs)}
+       |),
+       |walk(id, comp) AS (
+       |  SELECT DISTINCT src, src FROM edges
+       |  UNION
+       |  SELECT e.src, w.comp FROM edges e JOIN walk w ON e.dst = w.id
+       |)""".stripMargin
+
+  /** Per-source blocked n-gram postings over [[ShinglesSql]]'s `shingled`:
+    * shingles kept at document frequency 2..NgramMaxDf within their block,
+    * ending in CTE `pairs(block, idA, idB, szA, szB, common)` — the
+    * posting pairs of graft.operators.Dedup.ngramJaccard with a block
+    * column.
+    */
+  private[graft] val BlockedNgramPairsSql =
+    s"""blocked AS (
+       |  SELECT d.source AS block, s.id, list_distinct(s.sh) AS sh
+       |  FROM shingled s JOIN documents d ON d.doc_id = s.id
+       |),
+       |inv AS (SELECT block, id, len(sh) AS sz, unnest(sh) AS s FROM blocked),
+       |dfc AS (SELECT block, s, count(*) AS df FROM inv GROUP BY 1, 2),
+       |kept AS (
+       |  SELECT i.block, i.id, i.sz, i.s
+       |  FROM inv i JOIN dfc ON dfc.block = i.block AND dfc.s = i.s
+       |  WHERE dfc.df BETWEEN 2 AND ${graft.GraftConf.NgramMaxDf}
+       |),
+       |pairs AS (
+       |  SELECT a.block, a.id AS idA, b.id AS idB, a.sz AS szA, b.sz AS szB,
+       |         count(*) AS common
+       |  FROM kept a JOIN kept b
+       |    ON a.block = b.block AND a.s = b.s AND a.id < b.id
+       |  GROUP BY 1, 2, 3, 4, 5
+       |)""".stripMargin
+
+  /** Duplicated 8-token spans over CTE `t(doc_id, toks)`: window hashes
+    * `w`, hashes seen more than once `d`, their positions `hits` and CTE
+    * `m(doc_id, i, runmax)`, the furthest end of any earlier hit — the
+    * hit windows of graft.operators.Dedup.exactDupSpans before its
+    * island merge.
+    */
+  private[graft] val SpanHitsSql =
+    """w AS (
+      |  SELECT doc_id, CAST(i AS BIGINT) AS i,
+      |         md5(array_to_string(toks[i+1:i+8], ' ')) AS h
+      |  FROM t, unnest(range(0, greatest(0, len(toks) - 8 + 1))) u(i)
+      |  WHERE len(toks) >= 8
+      |),
+      |d AS (SELECT h FROM w GROUP BY h HAVING count(*) > 1),
+      |hits AS (SELECT doc_id, i FROM w JOIN d USING (h)),
+      |m AS (
+      |  SELECT doc_id, i,
+      |         max(i + 8) OVER (PARTITION BY doc_id ORDER BY i
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS runmax
+      |  FROM hits
+      |)""".stripMargin
+
   /** `[257^15 mod 1e9+7, …, 257^0]` — the per-position weights of a
     * 16-byte Rabin–Karp window, inlined into the q46 oracle so DuckDB
     * needs no modpow.
@@ -222,6 +445,21 @@ private[graft] object QueryHelpers {
       |  FROM proj GROUP BY 1
       |),
       |withb AS (SELECT n.vec_id, n.q, n.n, b.bucket FROM nrm n JOIN bkt b USING (vec_id))""".stripMargin
+
+  /** Approximate top-5 `ap(query_id, id, rank)` of the every-50th
+    * queries `qb`, ranked by [[CosineRankSql]] within the query's
+    * [[LshSql]] bucket only — mirrors SimilaritySearch.lshTopK.
+    */
+  private[graft] val LshTop5Sql =
+    s"""qb AS (SELECT w.vec_id AS query_id, w.q AS qq, w.n AS qn, w.bucket
+       |       FROM withb w WHERE w.vec_id % 50 = 0),
+       |ap AS (
+       |  SELECT query_id, id, rank FROM (
+       |    SELECT q.query_id, c.vec_id AS id,
+       |           ${CosineRankSql()} AS rank
+       |    FROM withb c JOIN qb q USING (bucket) WHERE c.vec_id != q.query_id
+       |  ) WHERE rank <= 5
+       |)""".stripMargin
 
   /** DuckDB replica of [[graft.operators.Sampling.hashBucket]]: decode
     * the first 6 hex nibbles of `md5Expr` positionally (DuckDB has no
@@ -345,19 +583,25 @@ private[graft] object QueryHelpers {
        |         AND (n > 0 AND (l - (n - 1)) >= 3 * n AND (l - (n - 1)) <= 10 * n)
        |         AND (aw * 10 >= n * 8) AND (sh >= $minStop) AND (sym * 10 <= l)""".stripMargin
 
+  /** Each disease's self + ancestor node list, CTE `ont(id, nodes)` —
+    * mirrors graft.sources.Tables.ontology.
+    */
+  private[graft] val OntologySql =
+    """ont AS (
+      |  SELECT s.s_suppkey AS id,
+      |         list_distinct([CAST(s.s_suppkey AS BIGINT),
+      |          CAST(s.s_nationkey + 100 AS BIGINT),
+      |          CAST(n.n_regionkey + 200 AS BIGINT)]) AS nodes
+      |  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
+      |)""".stripMargin
+
   /** Ontology-propagated ("indirect") evidence CTE: every evidence row
     * copied to its disease's self+ancestors — mirrors
     * graft.operators.OntologyPropagate over sources.Tables.ontology.
     */
   private[graft] val IndirectEvSql =
     s"""${EvSql.replace("ev AS", "ev0 AS")},
-       |ont AS (
-       |  SELECT s.s_suppkey AS id,
-       |         list_distinct([CAST(s.s_suppkey AS BIGINT),
-       |          CAST(s.s_nationkey + 100 AS BIGINT),
-       |          CAST(n.n_regionkey + 200 AS BIGINT)]) AS nodes
-       |  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-       |),
+       |$OntologySql,
        |ev AS (
        |  SELECT unnest(o.nodes) AS diseaseId, e.targetId, e.datasourceId, e.score, e.year
        |  FROM ev0 e JOIN ont o ON e.diseaseId = o.id
@@ -471,54 +715,460 @@ private[graft] object QueryHelpers {
 
   private[graft] val OverallSql = s"$BySourceSql,\n$OverallTail"
 
-  /** Novelty attachment over the preceding `overall` CTE + final
-    * projection — mirrors graft.operators.Novelty.attach.
+  /** The overall (pair, year) association score over the direct
+    * evidence — twin of [[OverallSql]].
     */
+  private[graft] def overallScores(t: Tables): DataFrame =
+    AssociationScore.overall(AssociationScore.byDatasource(t.evidence), t.weights)
+
+  /** The (disease, target) key of the overall score and the
+    * (disease, target, datasource) key of the per-source score.
+    */
+  private[graft] val PairKeys = Seq("diseaseId", "targetId")
+  private[graft] val SourceKeys = PairKeys :+ "datasourceId"
+
+  /** Year-over-year score rise per `keys` over the dense score CTE
+    * `src`, as CTE `name(keys, peakYear, peak)` — mirrors
+    * graft.operators.Novelty.peaks.
+    */
+  private[graft] def PeaksSql(src: String, keys: Seq[String], name: String = "peaks"): String =
+    s"""$name AS (
+       |  SELECT ${keys.mkString(", ")}, year AS peakYear,
+       |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
+       |           PARTITION BY ${keys.mkString(", ")} ORDER BY year) AS peak
+       |  FROM $src
+       |)""".stripMargin
+
+  /** [[PeaksSql]] plus the logistic decay of every positive peak over
+    * the next ten years, max per year, ending in CTE
+    * `decayed(keys, year, novelty 3dp)` — the novelty half of
+    * graft.operators.Novelty.attach(src, keys).
+    */
+  private[graft] def NoveltySql(src: String, keys: Seq[String]): String =
+    s"""${PeaksSql(src, keys)},
+       |decayed AS (
+       |  SELECT ${keys.mkString(", ")}, peakYear + d.delta AS year,
+       |         round(max(peak / (1 + exp(2.0 * (d.delta - 2.0)))), 3) AS novelty
+       |  FROM peaks CROSS JOIN (SELECT unnest(range(0, 11)) AS delta) d
+       |  WHERE peak > 0
+       |  GROUP BY ${(1 to keys.size + 1).mkString(", ")}
+       |)""".stripMargin
+
+  /** Per-source novelty over [[BySourceSql]]'s `bysource`, attached as
+    * CTE `nv(keys, year, novelty)` with the undated 2002 bucket as a
+    * NULL year — Novelty.attach(byDatasource, SourceKeys) without its
+    * score column.
+    */
+  private[graft] val SourceNoveltySql =
+    s"""${NoveltySql("bysource", SourceKeys)},
+       |nv AS (
+       |  SELECT b.diseaseId, b.targetId, b.datasourceId,
+       |         CASE WHEN b.year = 2002 THEN NULL ELSE b.year END AS year,
+       |         coalesce(n.novelty, 0.0) AS novelty
+       |  FROM bysource b
+       |  LEFT JOIN decayed n
+       |    ON n.diseaseId = b.diseaseId AND n.targetId = b.targetId
+       |   AND n.datasourceId = b.datasourceId AND n.year = b.year
+       |)""".stripMargin
+
+  /** First positive-peak year per (pair, source) over `bysource`,
+    * self-joined on the pair into CTE `j(datasourceIdA, datasourceIdB,
+    * yearA, yearB)` — the input of graft.operators.Rollups.peakYearCorrelation,
+    * which [[CorrPCtesSql]] then correlates.
+    */
+  private[graft] val PeakYearPairsSql =
+    s"""${PeaksSql("bysource", SourceKeys, "pk")},
+       |fp AS (
+       |  SELECT diseaseId, targetId, datasourceId,
+       |         CAST(min(peakYear) AS INT) AS peakYear
+       |  FROM pk WHERE peak > 0 GROUP BY 1, 2, 3
+       |),
+       |j AS (
+       |  SELECT a.datasourceId AS datasourceIdA, b.datasourceId AS datasourceIdB,
+       |         a.peakYear AS yearA, b.peakYear AS yearB
+       |  FROM fp a JOIN fp b USING (diseaseId, targetId)
+       |)""".stripMargin
+
   /** Novelty-attached series as a reusable CTE chain ending in `att`
-    * (diseaseId, targetId, year, score 4dp, novelty 3dp) — shared by
-    * the q03/q10 tails and the q171 timeline pivot.
+    * (diseaseId, targetId, year, score 4dp, novelty 3dp) — the
+    * (pair)-over-`overall` case of [[NoveltySql]], shared by the
+    * q03/q10 tails and the q171 timeline pivot.
     */
   private[graft] val NoveltyCtesSql =
-    """peaks AS (
-      |  SELECT diseaseId, targetId, year AS peakYear,
-      |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-      |           PARTITION BY diseaseId, targetId ORDER BY year) AS peak
-      |  FROM overall
-      |),
-      |decayed AS (
-      |  SELECT diseaseId, targetId, peakYear + d.delta AS year,
-      |         round(max(peak / (1 + exp(2.0 * (d.delta - 2.0)))), 3) AS novelty
-      |  FROM peaks CROSS JOIN (SELECT unnest(range(0, 11)) AS delta) d
-      |  WHERE peak > 0
-      |  GROUP BY 1, 2, 3
-      |),
-      |att AS (
-      |  SELECT o.diseaseId, o.targetId,
-      |         CASE WHEN o.year = 2002 THEN NULL ELSE o.year END AS year,
-      |         round(o.score, 4) AS score,
-      |         coalesce(n.novelty, 0.0) AS novelty
-      |  FROM overall o
-      |  LEFT JOIN decayed n
-      |    ON n.diseaseId = o.diseaseId AND n.targetId = o.targetId AND n.year = o.year
-      |)""".stripMargin
+    s"""${NoveltySql("overall", PairKeys)},
+       |att AS (
+       |  SELECT o.diseaseId, o.targetId,
+       |         CASE WHEN o.year = 2002 THEN NULL ELSE o.year END AS year,
+       |         round(o.score, 4) AS score,
+       |         coalesce(n.novelty, 0.0) AS novelty
+       |  FROM overall o
+       |  LEFT JOIN decayed n
+       |    ON n.diseaseId = o.diseaseId AND n.targetId = o.targetId AND n.year = o.year
+       |)""".stripMargin
 
   private[graft] val NoveltyTailSql =
     s"""$NoveltyCtesSql
        |SELECT * FROM att""".stripMargin
 
+  /** The click-vs-view value grain `(v, c1, c2)`: cents-quantized
+    * values with each group's row count — the body of a `p` CTE,
+    * mirroring graft.operators.RollupsScaleForms.twoGroupGrain.
+    */
+  private[graft] val TwoGroupGrainSql =
+    """  SELECT CAST(round(value * 100) AS BIGINT) AS v,
+      |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
+      |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
+      |  FROM events
+      |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
+      |  GROUP BY 1""".stripMargin
+
+  /** Doubled midrank 2·#below + t + 1 of a [[TwoGroupGrainSql]] row,
+    * pooled over both groups — RollupsScaleForms.midrank2.
+    */
+  private[graft] val Midrank2Sql =
+    """2 * (sum(c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
+      |              - (c1 + c2)) + (c1 + c2) + 1""".stripMargin
+
+  /** Σ(t³ − t) over tie counts `t`, in HUGEINT — RollupsScaleForms.tieCube. */
+  private[graft] val TieCubeSql = "sum(CAST(t AS HUGEINT) * t * t - t)"
+
+  /** Click (1) and view (2) row counts `n`, cents sums `s` and sums of
+    * squares `q` in one row, CTE `s(n1, s1, q1, n2, s2, q2)` — the exact
+    * moments of the two-sample mean tests.
+    */
+  private[graft] val TwoGroupMomentsSql =
+    """s AS (
+      |  SELECT
+      |    CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n1,
+      |    CAST(sum(CAST(round(value * 100) AS BIGINT)) FILTER (event_type = 'click') AS BIGINT) AS s1,
+      |    CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT))
+      |         FILTER (event_type = 'click') AS BIGINT) AS q1,
+      |    CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n2,
+      |    CAST(sum(CAST(round(value * 100) AS BIGINT)) FILTER (event_type = 'view') AS BIGINT) AS s2,
+      |    CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT))
+      |         FILTER (event_type = 'view') AS BIGINT) AS q2
+      |  FROM events
+      |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
+      |)""".stripMargin
+
+  /** The (cents value, event type) grain `pts(v, g, n)`, the pooled tie
+    * counts `vg(v, t)` and their doubled midranks `vr(v, t, r2)` —
+    * RollupsScaleForms.midrank2 over k groups.
+    */
+  private[graft] val PooledMidranksSql =
+    """pts AS (
+      |  SELECT CAST(round(value * 100) AS BIGINT) AS v, event_type AS g,
+      |         CAST(count(*) AS BIGINT) AS n
+      |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
+      |  GROUP BY 1, 2
+      |),
+      |vg AS (SELECT v, CAST(sum(n) AS BIGINT) AS t FROM pts GROUP BY 1),
+      |vr AS (
+      |  SELECT v, t,
+      |         2 * coalesce(sum(t) OVER (ORDER BY v
+      |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |           + t + 1 AS r2
+      |  FROM vg
+      |)""".stripMargin
+
+  /** The block × treatment cross of CTE `cells(b, g, cnt)`, zero-filled
+    * (a treatment absent from a block measured zero there), as CTE
+    * `dense(b, g, cnt)` — RollupsScaleForms.blockMidranks' frame.
+    */
+  private[graft] val DenseBlocksSql =
+    """dense AS (
+      |  SELECT bb.b, gg.g, coalesce(c.cnt, 0) AS cnt
+      |  FROM (SELECT DISTINCT b FROM cells) bb
+      |  CROSS JOIN (SELECT DISTINCT g FROM cells) gg
+      |  LEFT JOIN cells c ON c.b = bb.b AND c.g = gg.g
+      |)""".stripMargin
+
+  /** The repeated-measures rank sums over daily event counts: blocks `b`
+    * (days) × treatments `g` (event types), zero-filled dense, doubled
+    * within-block midranks `r2` with tie counts `t`, ending in CTEs
+    * `a1(k, rr4)` (treatment rank sums) and `a2(tsum, n_blocks)` — mirrors
+    * graft.operators.RollupsScaleForms.blockMidranks under Rollups.friedman
+    * and Rollups.kendallW.
+    */
+  private[graft] val BlockRankSumsSql =
+    s"""cells AS (
+       |  SELECT $DaySql AS b,
+       |         event_type AS g, CAST(count(*) AS BIGINT) AS cnt
+       |  FROM events GROUP BY 1, 2
+       |),
+       |$DenseBlocksSql,
+       |r AS (
+       |  SELECT b, g,
+       |         CAST(count(*) OVER (PARTITION BY b, cnt) AS BIGINT) AS t,
+       |         2 * (rank() OVER (PARTITION BY b ORDER BY cnt) - 1)
+       |           + CAST(count(*) OVER (PARTITION BY b, cnt) AS BIGINT) + 1 AS r2
+       |  FROM dense
+       |),
+       |pert AS (SELECT g, CAST(sum(r2) AS BIGINT) AS s2 FROM r GROUP BY 1),
+       |a1 AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS k,
+       |         CAST(sum(s2 * s2) AS BIGINT) AS rr4
+       |  FROM pert
+       |),
+       |a2 AS (
+       |  SELECT CAST(sum(t * t - 1) AS BIGINT) AS tsum,
+       |         CAST(count(DISTINCT b) AS BIGINT) AS n_blocks
+       |  FROM r
+       |)""".stripMargin
+
+  /** The lang × source document contingency table `cells(lang, source,
+    * n_ab)` with its margins, CTE `e(lang, source, n_ab, na, nb, n)` —
+    * mirrors the grid of graft.operators.Rollups.chiSquare.
+    */
+  private[graft] val ContingencySql =
+    """cells AS (
+      |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_ab
+      |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
+      |  GROUP BY 1, 2
+      |),
+      |e AS (
+      |  SELECT lang, source, n_ab,
+      |         CAST(sum(n_ab) OVER (PARTITION BY lang) AS BIGINT) AS na,
+      |         CAST(sum(n_ab) OVER (PARTITION BY source) AS BIGINT) AS nb,
+      |         CAST(sum(n_ab) OVER () AS BIGINT) AS n
+      |  FROM cells
+      |)""".stripMargin
+
+  /** The documents `base(doc_id, keep…, w, n_tokens)` CTE: the words
+    * and space-count token count of each text — the inputs of
+    * graft.operators.TextAnalysis.quality.
+    */
+  private[graft] def DocsBaseSql(keep: String*): String =
+    s"""base AS (
+       |  SELECT ${("doc_id" +: keep).mkString(", ")}, string_split(text, ' ') AS w,
+       |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
+       |           AS n_tokens
+       |  FROM documents
+       |)""".stripMargin
+
+  /** TextAnalysis.quality's score ×10000 over `base`'s `w`/`n_tokens`:
+    * the rational rounded half-up in integer arithmetic (a BIGINT
+    * quotient; the published double is it / 10000.0).
+    */
+  private[graft] val QualityUnitsSql =
+    """(CAST(4 * least(n_tokens, 100) * n_tokens
+      |                    + 300 * len(list_distinct(w))
+      |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
+      |                                      - len(list_filter(w, x -> x = 'a')))
+      |               AS BIGINT)
+      |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens)""".stripMargin
+
+  /** CTE `q(doc_id, qi)`: the integer quality score per document. */
+  private[graft] val QualityIntSql =
+    s"""q AS (
+       |  SELECT doc_id,
+       |         CAST($QualityUnitsSql AS BIGINT) AS qi
+       |  FROM base
+       |)""".stripMargin
+
+  /** CTE `q(doc_id, quality)`: the published double quality score. */
+  private[graft] val QualitySql =
+    s"""q AS (
+       |  SELECT doc_id,
+       |         CAST($QualityUnitsSql AS DOUBLE)
+       |           / 10000.0 AS quality
+       |  FROM base
+       |)""".stripMargin
+
+  /** Per-document Gopher stats `d`, tokens `base`, integer quality
+    * `q(doc_id, qi)` and the paper's Gopher pass flag
+    * `g(doc_id, gopher_pass)` — the scored-document inputs of the
+    * quality-calibration oracles (TextAnalysis.quality + gopherRules).
+    */
+  private[graft] val GopherQualitySql =
+    s"""$GopherDocSql,
+       |${DocsBaseSql("text")},
+       |$QualityIntSql,
+       |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d)""".stripMargin
+
+  /** Decile bins of the integer quality score against the Gopher pass
+    * flag over [[GopherQualitySql]]: `rows_r(u, y)`, the nine decile cut
+    * points `b(bs)`, and CTE `t(bin, n, n_pos)` of rows and passes per bin.
+    */
+  private[graft] val GopherDecileBinsSql =
+    """rows_r AS (
+      |  SELECT q.qi AS u, CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
+      |  FROM q JOIN g USING (doc_id)
+      |),
+      |b AS (
+      |  SELECT list_transform(quantile_cont(u, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
+      |           x -> round(x, 4)) AS bs
+      |  FROM rows_r
+      |),
+      |binned AS (
+      |  SELECT CAST(list_sum(list_transform(bs,
+      |           x -> CASE WHEN u > x THEN 1 ELSE 0 END)) AS BIGINT) AS bin, y
+      |  FROM rows_r CROSS JOIN b
+      |),
+      |t AS (
+      |  SELECT bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS n_pos
+      |  FROM binned GROUP BY 1
+      |)""".stripMargin
+
+  /** SCD-2 versions of each user's event_type runs over the events
+    * `e(user_id, event_id, event_type, us)`: a new version wherever the
+    * type changes in (us, event_id) order, ending in CTE
+    * `g(user_id, version, value, valid_from_us)` — mirrors
+    * graft.operators.EventWindows.scd2.
+    */
+  private[graft] val Scd2VersionsSql =
+    """e AS (
+      |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
+      |),
+      |c AS (
+      |  SELECT user_id, event_id, event_type, us,
+      |         lag(event_type) OVER (PARTITION BY user_id
+      |           ORDER BY us, event_id) AS prev
+      |  FROM e
+      |),
+      |r AS (
+      |  SELECT user_id, event_type, us,
+      |         CAST(sum(CASE WHEN prev IS NULL OR prev <> event_type
+      |             THEN 1 ELSE 0 END)
+      |           OVER (PARTITION BY user_id ORDER BY us, event_id
+      |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS version
+      |  FROM c
+      |),
+      |g AS (
+      |  SELECT user_id, version, min(event_type) AS value,
+      |         min(us) AS valid_from_us
+      |  FROM r GROUP BY 1, 2
+      |)""".stripMargin
+
+  /** Each user's SCD-2 event_type history — twin of [[Scd2VersionsSql]]. */
+  private[graft] def scd2History(t: Tables): DataFrame =
+    EventWindows.scd2(
+      t.events.withColumn("ts_us", unix_micros(col("ts"))),
+      "user_id", "event_type", "ts_us", "event_id")
+
+  /** Kaplan–Meier risk table over the events: each user's first event
+    * type as cohort, time to first purchase (or censoring at the corpus
+    * horizon) in whole days, ending in CTE
+    * `w(cohort, duration, d, c, n_risk)` — mirrors the risk table of
+    * graft.operators.EventWindows.kaplanMeier.
+    */
+  private[graft] val SurvivalRiskSql =
+    """e AS (
+      |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us FROM events
+      |),
+      |hz AS (SELECT max(us) AS hz FROM e),
+      |u AS (
+      |  SELECT user_id, min(us) AS t0,
+      |         min(CASE WHEN event_type = 'purchase' THEN us END) AS tp
+      |  FROM e GROUP BY 1
+      |),
+      |f AS (
+      |  SELECT user_id, event_type AS cohort FROM (
+      |    SELECT user_id, event_type,
+      |           row_number() OVER (PARTITION BY user_id
+      |             ORDER BY us, event_id) AS rk
+      |    FROM e)
+      |  WHERE rk = 1
+      |),
+      |s AS (
+      |  SELECT f.cohort,
+      |         CASE WHEN u.tp IS NOT NULL THEN 1 ELSE 0 END AS ev,
+      |         (coalesce(u.tp, hz.hz) - u.t0) // 86400000000 AS duration
+      |  FROM u JOIN f USING (user_id) CROSS JOIN hz
+      |),
+      |g AS (
+      |  SELECT cohort, duration, CAST(sum(ev) AS BIGINT) AS d,
+      |         CAST(sum(1 - ev) AS BIGINT) AS c
+      |  FROM s GROUP BY 1, 2
+      |),
+      |w AS (
+      |  SELECT *,
+      |    CAST(sum(d + c) OVER (PARTITION BY cohort)
+      |      - (sum(d + c) OVER (PARTITION BY cohort ORDER BY duration
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - (d + c))
+      |      AS BIGINT) AS n_risk
+      |  FROM g
+      |)""".stripMargin
+
+  /** Time-to-first-purchase survival subjects: users, clocked from their
+    * first event, cohorted by it, censored at the corpus horizon, with
+    * `event` and whole-day `duration` — twin of [[SurvivalRiskSql]].
+    */
+  private[graft] def cohortSubjects(t: Tables): DataFrame = {
+    val ev = t.events.select(col("user_id"), col("event_type"),
+      col("event_id"), unix_micros(col("ts")).as("us"))
+    val horizon = broadcast(ev.agg(max("us").as("hz")))
+    val users = ev.groupBy("user_id")
+      .agg(min("us").as("t0"),
+        min_by(col("event_type"), struct(col("us"), col("event_id")))
+          .as("cohort"),
+        min(when(col("event_type") === "purchase", col("us"))).as("tp"))
+    users.join(horizon)
+      .withColumn("event", when(col("tp").isNotNull, 1L).otherwise(0L))
+      .withColumn("duration", expr("(coalesce(tp, hz) - t0) DIV 86400000000"))
+  }
+
+  /** The events `ev(user_id, event_type, us)` and the staged view →
+    * click → purchase funnel over them: CTEs `s1(user_id, t1)`,
+    * `s2(user_id, t2)` and `s3(user_id, t3)`, each step's completion the
+    * earliest event of its type at or after the previous step's —
+    * mirrors graft.operators.EventWindows.funnel.
+    */
+  private[graft] val FunnelStepsSql =
+    """ev AS (
+      |  SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS us
+      |  FROM events
+      |),
+      |s1 AS (
+      |  SELECT user_id, min(us) AS t1 FROM ev
+      |  WHERE event_type = 'view' GROUP BY 1
+      |),
+      |s2 AS (
+      |  SELECT e.user_id, min(e.us) AS t2
+      |  FROM ev e JOIN s1 USING (user_id)
+      |  WHERE e.event_type = 'click' AND e.us >= s1.t1 GROUP BY 1
+      |),
+      |s3 AS (
+      |  SELECT e.user_id, min(e.us) AS t3
+      |  FROM ev e JOIN s2 USING (user_id)
+      |  WHERE e.event_type = 'purchase' AND e.us >= s2.t2 GROUP BY 1
+      |)""".stripMargin
+
+  /** The events `ev(event_id, user_id, event_type, ts)` and the "final
+    * verdict" cut `cut(c)`: two hours before the earlier of the last
+    * purchase and the last click — mirrors EventQueries.finalVerdicts.
+    */
+  private[graft] val FinalVerdictCutSql =
+    """ev AS (
+      |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
+      |  FROM events
+      |),
+      |cut AS (
+      |  SELECT min(m) - 7200000000 AS c FROM (
+      |    SELECT event_type, max(epoch_us(ts)) AS m FROM ev
+      |    WHERE event_type IN ('purchase', 'click') GROUP BY 1)
+      |)""".stripMargin
+
+  /** The text-as-image dimensions of graft.operators.Multimodal.textToBmp:
+    * CTE `b(doc_id, text, n)` with the text length (1 when empty), and
+    * CTE `d(doc_id, text, n, w, h)` with the 8..15 × 8..15 image width
+    * and height it derives — both named by the caller.
+    */
+  private[graft] def TextImageSql(b: String, d: String): String =
+    s"""$b AS (
+       |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
+       |    ELSE length(text) END AS INT) AS n FROM documents
+       |),
+       |$d AS (
+       |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
+       |  FROM $b
+       |)""".stripMargin
 
   /** DuckDB replay of textToBmp + dhash ending in CTE
     * `bits(doc_id, dhash_hi, dhash_lo)` - shared by q115/q179.
     */
   private[graft] val DhashBitsSql =
-    """b AS (
-        |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
-        |    ELSE length(text) END AS INT) AS n FROM documents
-        |),
-        |d AS (
-        |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
-        |  FROM b
-        |),
+    s"""${TextImageSql("b", "d")},
         |o AS (SELECT doc_id, text, n, w, h, unnest(range(0, 72)) AS p FROM d),
         |m AS (
         |  SELECT doc_id, text, n, CAST(p % 9 AS INT) AS x, CAST(p // 9 AS INT) AS y,

@@ -30,8 +30,7 @@ private[graft] object RefQueries {
     }),
     "q03_novelty" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val overall = AssociationScore.overall(
-        AssociationScore.byDatasource(t.evidence), t.weights)
+      val overall = overallScores(t)
       Novelty.attach(overall, Seq("diseaseId", "targetId"))
     }),
     "q04_novelty_datasource" -> ((s, dir) => {
@@ -49,8 +48,7 @@ private[graft] object RefQueries {
       // hashes scalar columns; Novelty.timeline itself returns real
       // arrays.
       val t = Tables(s, dir)
-      val overall = AssociationScore.overall(
-        AssociationScore.byDatasource(t.evidence), t.weights)
+      val overall = overallScores(t)
       val tl = Novelty.timeline(
         Novelty.attach(overall, Seq("diseaseId", "targetId")),
         Seq("diseaseId", "targetId"))
@@ -127,8 +125,7 @@ private[graft] object RefQueries {
     }),
     "q09_peaks" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val overall = AssociationScore.overall(
-        AssociationScore.byDatasource(t.evidence), t.weights)
+      val overall = overallScores(t)
       Novelty.peaks(overall, Seq("diseaseId", "targetId"))
         .withColumn("peak", round(col("peak"), 4))
         .filter(col("peak") > 0)
@@ -274,8 +271,7 @@ private[graft] object RefQueries {
       // trailing z-score anomaly years over the dense overall
       // association series (5-year baseline, >= 3 priors, z >= 2)
       val t = Tables(s, dir)
-      val overall = AssociationScore.overall(
-        AssociationScore.byDatasource(t.evidence), t.weights)
+      val overall = overallScores(t)
       Novelty.rollingAnomaly(overall, Seq("diseaseId", "targetId"))
         .select("diseaseId", "targetId", "year", "score", "z")
     }),
@@ -284,16 +280,14 @@ private[graft] object RefQueries {
       // slope/intercept/R² from exact decimal moment sums, O(1)
       // aggregate state per key — never a window or self-join
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.linearTrend(series, Seq("datasourceId"), "year", "n")
     }),
     "q152_locf" -> ((s, dir) => {
       // step-function gap fill of each datasource's yearly evidence
       // count — carried values are exact copies, no scaffold join
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.locf(series, Seq("datasourceId"), "year", "n")
     }),
     "q159_seasonal" -> ((s, dir) => {
@@ -306,8 +300,7 @@ private[graft] object RefQueries {
       // yearly growth diagnostics per datasource: YoY deltas + CAGR
       // from one (keys) exchange carrying both window frames
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.growthRates(series, Seq("datasourceId"), "year", "n")
     }),
     "q140_autocorr" -> ((s, dir) => {
@@ -316,8 +309,7 @@ private[graft] object RefQueries {
       // moment sums on one (datasourceId) exchange, floats only in
       // the final ratio
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.autocorrelation(series, Seq("datasourceId"), "year", "n")
     }),
     "q139_cusum" -> ((s, dir) => {
@@ -367,8 +359,7 @@ private[graft] object RefQueries {
       // exact exponent shift, so the smoother is bit-identical across
       // engines
       val t = Tables(s, dir)
-      val overall = AssociationScore.overall(
-        AssociationScore.byDatasource(t.evidence), t.weights)
+      val overall = overallScores(t)
         .filter(col("year").isNotNull) // dated series only: engines
         // disagree on NULL sort position, and smoothing the undated
         // surrogate row is meaningless anyway
@@ -398,28 +389,21 @@ private[graft] object RefQueries {
       // D15 robust yearly trend per datasource: median of all pairwise
       // slopes, in-row over the calendar-bounded year series
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.theilSen(series, Seq("datasourceId"), "year", "n")
     }),
     "q197_changepoint" -> ((s, dir) => {
       // D16 level-shift locator: the split day maximizing between-
       // segment SSE gain over each event type's daily count series
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.changepoint(series, Seq("event_type"), "day", "y")
     }),
     "q253_stl_anomalies" -> ((s, dir) => {
       // D20 seasonal-aware anomaly days per event type: residual
       // beyond 3 sigma after trend AND weekly effect removal
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.seasonalAnomalies(series, Seq("event_type"), "day", "y",
         nSigma = 2.0)
     }),
@@ -428,56 +412,42 @@ private[graft] object RefQueries {
       // the trend-momentum crossover beside q301's bounded RSI; one
       // branch-free micro-unit fold per key
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.macd(series, Seq("event_type"), "day", "y")
     }),
     "q301_rsi" -> ((s, dir) => {
       // D25 Wilder RSI-14 over each event type's daily count series —
       // the bounded momentum read beside D18's EWMA and D21's Holt
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.rsi(series, Seq("event_type"), "day", "y")
     }),
     "q297_stl_strength" -> ((s, dir) => {
       // D24 forecastability triage: Hyndman trend/seasonal strength
       // per event type over the q230 decomposition's components
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.seasonalStrength(series, Seq("event_type"), "day", "y")
     }),
     "q230_seasonal_decompose" -> ((s, dir) => {
       // D19 STL-lite: centered-MA trend, weekly phase effects, and
       // residual spread over each event type's daily count series
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.seasonalDecompose(series, Seq("event_type"), "day", "y")
     }),
     "q211_ewma_backtest" -> ((s, dir) => {
       // D18 one-step-ahead forecast skill of D6's smoother on the
       // yearly datasource series
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.ewmaBacktest(series, Seq("datasourceId"), "year", "n")
     }),
     "q205_durbin_watson" -> ((s, dir) => {
       // D17 residual autocorrelation of D9's yearly fit — did the
       // straight line leave structure behind?
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.durbinWatson(series, Seq("datasourceId"), "year", "n")
     }),
     "q272_holt_backtest" -> ((s, dir) => {
@@ -485,10 +455,7 @@ private[graft] object RefQueries {
       // trend-aware upgrade of D18's EWMA MAE, integer micro-unit
       // floor-halving recursion folded in-row over each daily series
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.holtBacktest(series, Seq("event_type"), "day", "y")
     }),
     "q321_croston" -> ((s, dir) => {
@@ -498,20 +465,14 @@ private[graft] object RefQueries {
       // input, no dense calendar scaffold; α = 1/2 micro-unit
       // self-field folds (the D21 contract), forecast = size/interval
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("user_id"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y", "user_id")
       Rollups.croston(series, Seq("user_id"), "day", "y")
     }),
     "q288_mase" -> ((s, dir) => {
       // D22 MASE: the D21 Holt MAE normalized by the seasonal-naive
       // (lag-7) MAE per event type — is the model beating a lookup?
       val t = Tables(s, dir)
-      val series = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
+      val series = dailyCounts(t.events, "y")
       Rollups.maseBacktest(series, Seq("event_type"), "day", "y")
     }),
     "q377_spectral_entropy" -> ((s, dir) => {
@@ -528,10 +489,7 @@ private[graft] object RefQueries {
       // type: trend/cluster (too few runs) vs oscillation (too many),
       // the assumption-free serial-dependence check
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.runsTest(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -541,10 +499,7 @@ private[graft] object RefQueries {
       // θ=2 line, forecast = their average — the classical baseline
       // next to q272's Holt and q321's Croston
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.thetaForecast(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -553,10 +508,7 @@ private[graft] object RefQueries {
       // the null-mirror of q384's KPSS — run both, disagreement
       // means "near-integrated, difference before modeling"
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.dickeyFuller(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -565,10 +517,7 @@ private[graft] object RefQueries {
       // persistence the short-lag family (q140 ACF, q205 DW, q378
       // runs) cannot see — H>0.5 trending, H<0.5 mean-reverting
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.hurstRS(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -614,19 +563,7 @@ private[graft] object RefQueries {
          |$NoveltyTailSql""".stripMargin,
     "q04_novelty_datasource" ->
       s"""WITH $BySourceSql,
-         |peaks AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |decayed AS (
-         |  SELECT diseaseId, targetId, datasourceId, peakYear + d.delta AS year,
-         |         round(max(peak / (1 + exp(2.0 * (d.delta - 2.0)))), 3) AS novelty
-         |  FROM peaks CROSS JOIN (SELECT unnest(range(0, 11)) AS delta) d
-         |  WHERE peak > 0
-         |  GROUP BY 1, 2, 3, 4
-         |)
+         |${NoveltySql("bysource", SourceKeys)}
          |SELECT b.diseaseId, b.targetId, b.datasourceId,
          |       CASE WHEN b.year = 2002 THEN NULL ELSE b.year END AS year,
          |       round(b.score, 4) AS score,
@@ -637,13 +574,7 @@ private[graft] object RefQueries {
          | AND n.datasourceId = b.datasourceId AND n.year = b.year""".stripMargin,
     "q05_indirect" ->
       s"""WITH $EvSql,
-         |ont AS (
-         |  SELECT s.s_suppkey AS id,
-         |         list_distinct([CAST(s.s_suppkey AS BIGINT),
-         |          CAST(s.s_nationkey + 100 AS BIGINT),
-         |          CAST(n.n_regionkey + 200 AS BIGINT)]) AS nodes
-         |  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-         |),
+         |$OntologySql,
          |prop AS (
          |  SELECT unnest(o.nodes) AS diseaseId, e.targetId, e.datasourceId, e.score
          |  FROM ev e JOIN ont o ON e.diseaseId = o.id
@@ -697,12 +628,7 @@ private[graft] object RefQueries {
         |FROM sparse GROUP BY 1""".stripMargin,
     "q09_peaks" ->
       s"""WITH $OverallSql,
-         |peaks AS (
-         |  SELECT diseaseId, targetId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId ORDER BY year) AS peak
-         |  FROM overall
-         |)
+         |${PeaksSql("overall", PairKeys)}
          |SELECT diseaseId, targetId, peakYear, round(peak, 4) AS peak
          |FROM peaks WHERE round(peak, 4) > 0""".stripMargin,
     "q11_top_rank" ->
@@ -740,28 +666,7 @@ private[graft] object RefQueries {
          |FROM ev GROUP BY 1""".stripMargin,
     "q15_approval_composite" ->
       s"""WITH $BySourceSql,
-         |peaks AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |decayed AS (
-         |  SELECT diseaseId, targetId, datasourceId, peakYear + d.delta AS year,
-         |         round(max(peak / (1 + exp(2.0 * (d.delta - 2.0)))), 3) AS novelty
-         |  FROM peaks CROSS JOIN (SELECT unnest(range(0, 11)) AS delta) d
-         |  WHERE peak > 0
-         |  GROUP BY 1, 2, 3, 4
-         |),
-         |nv AS (
-         |  SELECT b.diseaseId, b.targetId, b.datasourceId,
-         |         CASE WHEN b.year = 2002 THEN NULL ELSE b.year END AS year,
-         |         coalesce(n.novelty, 0.0) AS novelty
-         |  FROM bysource b
-         |  LEFT JOIN decayed n
-         |    ON n.diseaseId = b.diseaseId AND n.targetId = b.targetId
-         |   AND n.datasourceId = b.datasourceId AND n.year = b.year
-         |),
+         |$SourceNoveltySql,
          |drugs AS (
          |  SELECT o_orderkey AS drugId, CAST(year(o_orderdate) AS INT) AS approvalYear
          |  FROM orders
@@ -791,28 +696,7 @@ private[graft] object RefQueries {
          |GROUP BY 1""".stripMargin,
     "q17_phase_union" ->
       s"""WITH $BySourceSql,
-         |peaks AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |decayed AS (
-         |  SELECT diseaseId, targetId, datasourceId, peakYear + d.delta AS year,
-         |         round(max(peak / (1 + exp(2.0 * (d.delta - 2.0)))), 3) AS novelty
-         |  FROM peaks CROSS JOIN (SELECT unnest(range(0, 11)) AS delta) d
-         |  WHERE peak > 0
-         |  GROUP BY 1, 2, 3, 4
-         |),
-         |nv AS (
-         |  SELECT b.diseaseId, b.targetId, b.datasourceId,
-         |         CASE WHEN b.year = 2002 THEN NULL ELSE b.year END AS year,
-         |         coalesce(n.novelty, 0.0) AS novelty
-         |  FROM bysource b
-         |  LEFT JOIN decayed n
-         |    ON n.diseaseId = b.diseaseId AND n.targetId = b.targetId
-         |   AND n.datasourceId = b.datasourceId AND n.year = b.year
-         |),
+         |$SourceNoveltySql,
          |drugs AS (
          |  SELECT o_orderkey AS drugId, CAST(year(o_orderdate) AS INT) AS approvalYear
          |  FROM orders
@@ -884,28 +768,7 @@ private[graft] object RefQueries {
         |WHERE rk.r = 1""".stripMargin,
     "q18_novel_by_ta" ->
       s"""WITH $BySourceSql,
-         |peaks AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |decayed AS (
-         |  SELECT diseaseId, targetId, datasourceId, peakYear + d.delta AS year,
-         |         round(max(peak / (1 + exp(2.0 * (d.delta - 2.0)))), 3) AS novelty
-         |  FROM peaks CROSS JOIN (SELECT unnest(range(0, 11)) AS delta) d
-         |  WHERE peak > 0
-         |  GROUP BY 1, 2, 3, 4
-         |),
-         |nv AS (
-         |  SELECT b.diseaseId, b.targetId, b.datasourceId,
-         |         CASE WHEN b.year = 2002 THEN NULL ELSE b.year END AS year,
-         |         coalesce(n.novelty, 0.0) AS novelty
-         |  FROM bysource b
-         |  LEFT JOIN decayed n
-         |    ON n.diseaseId = b.diseaseId AND n.targetId = b.targetId
-         |   AND n.datasourceId = b.datasourceId AND n.year = b.year
-         |),
+         |$SourceNoveltySql,
          |expl AS (
          |  SELECT CAST(s.s_suppkey AS BIGINT) AS diseaseId,
          |         unnest([CAST(s.s_nationkey + 100 AS BIGINT),
@@ -966,11 +829,8 @@ private[graft] object RefQueries {
          |  AND round((s0 - sm / n)
          |            / CASE WHEN v > 1e-12 THEN sqrt(v) END, 4) >= 2.0""".stripMargin,
     "q147_linear_trend" ->
-      """WITH series AS (
-        |  SELECT l_returnflag AS datasourceId,
-        |         CAST(year(l_shipdate) AS BIGINT) AS x,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM lineitem GROUP BY 1, 2
+      s"""WITH series AS (
+        |$EvidenceYearCountsSql
         |),
         |m AS (
         |  SELECT datasourceId,
@@ -1106,11 +966,8 @@ private[graft] object RefQueries {
     // (identical written form — a 1-ulp libm gap dies at the round),
     // HUGEINT Fourier sums, integer peak-phase pick.
     "q329_periodogram" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("n")}
         |),
         |ph AS (
         |  SELECT event_type, p.period, day % p.period AS r,
@@ -1233,34 +1090,14 @@ private[graft] object RefQueries {
         |FROM x""".stripMargin,
     "q19_peak_correlation" ->
       s"""WITH RECURSIVE $BySourceSql,
-         |pk AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |fp AS (
-         |  SELECT diseaseId, targetId, datasourceId,
-         |         CAST(min(peakYear) AS INT) AS peakYear
-         |  FROM pk WHERE peak > 0 GROUP BY 1, 2, 3
-         |),
-         |j AS (
-         |  SELECT a.datasourceId AS datasourceIdA, b.datasourceId AS datasourceIdB,
-         |         a.peakYear AS yearA, b.peakYear AS yearB
-         |  FROM fp a JOIN fp b USING (diseaseId, targetId)
-         |),
+         |$PeakYearPairsSql,
          |$CorrPTailSql""".stripMargin,
     // replays the deterministic permutation: lane = (source, md5-shard
     // of the pair id), key rank by md5, value rank by (year, md5),
     // rank-to-rank join, then the same corr as q19
     "q86_shuffled_correlation" ->
       s"""WITH RECURSIVE $BySourceSql,
-         |pk AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
+         |${PeaksSql("bysource", SourceKeys, "pk")},
          |fp AS MATERIALIZED (
          |  SELECT diseaseId, targetId, datasourceId,
          |         CAST(min(peakYear) AS INT) AS peakYear,
@@ -1295,8 +1132,8 @@ private[graft] object RefQueries {
     // Cross-correlation replay: identical dense calendar, identical
     // integer min-centering, the same five exact sums per lag.
     "q190_xcorr" ->
-      """WITH d AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH d AS (
+        |  SELECT $DaySql AS day,
         |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS na,
         |         CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS nb
         |  FROM events WHERE event_type IN ('view', 'purchase') GROUP BY 1
@@ -1330,11 +1167,8 @@ private[graft] object RefQueries {
     // Theil–Sen replay: same (x, y) long series, same in-list pair
     // slopes, both engines sort the SAME doubles before the median.
     "q195_theil_sen" ->
-      """WITH s AS (
-        |  SELECT l_returnflag AS datasourceId,
-        |         CAST(year(l_shipdate) AS BIGINT) AS x,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM lineitem GROUP BY 1, 2
+      s"""WITH s AS (
+        |$EvidenceYearCountsSql
         |),
         |arr AS (
         |  SELECT datasourceId,
@@ -1357,10 +1191,8 @@ private[graft] object RefQueries {
     // Changepoint replay: same cumulative/total long sums, gain
     // rounded 6dp BEFORE the (gain desc, day) argmax rank.
     "q197_changepoint" ->
-      """WITH d AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH d AS (
+        |${DailyCountsSql("y")}
         |),
         |c AS (
         |  SELECT event_type, day, y,
@@ -1390,11 +1222,8 @@ private[graft] object RefQueries {
     // DW replay: the q147 fit formulas verbatim (4dp slope/intercept),
     // residuals in integer micro-units, exact long DW sums.
     "q205_durbin_watson" ->
-      """WITH series AS (
-        |  SELECT l_returnflag AS datasourceId,
-        |         CAST(year(l_shipdate) AS BIGINT) AS x,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM lineitem GROUP BY 1, 2
+      s"""WITH series AS (
+        |$EvidenceYearCountsSql
         |),
         |m AS (
         |  SELECT datasourceId, CAST(count(*) AS HUGEINT) AS n,
@@ -1428,10 +1257,8 @@ private[graft] object RefQueries {
     // Backtest replay: the q120 EWMA closed form, lagged one step,
     // errors in integer micro-units before the sums.
     "q211_ewma_backtest" ->
-      """WITH series AS (
-        |  SELECT l_returnflag AS datasourceId,
-        |         CAST(year(l_shipdate) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS y
-        |  FROM lineitem GROUP BY 1, 2
+      s"""WITH series AS (
+        |$EvidenceYearCountsSql
         |),
         |r AS (
         |  SELECT datasourceId, x, y,
@@ -1477,10 +1304,8 @@ private[graft] object RefQueries {
     // nested reduces — oracle-side only, n is calendar-bounded).
     // macd_1 = 0 seeds the scalar fold naturally.
     "q309_macd" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("y")}
         |),
         |arr AS (
         |  SELECT event_type, list(y * 1000000 ORDER BY day) AS a,
@@ -1529,10 +1354,8 @@ private[graft] object RefQueries {
     // no init arg); integer micro-unit averages, floor-of-double
     // divisions, RS ratio one double at the end.
     "q301_rsi" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("y")}
         |),
         |arr AS (
         |  SELECT event_type, list(y ORDER BY day) AS a,
@@ -1577,17 +1400,7 @@ private[graft] object RefQueries {
     // order with the null gate OUTSIDE greatest (both engines'
     // greatest skips nulls).
     "q297_stl_strength" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
-        |),
-        |t AS (
-        |  SELECT event_type, day, y,
-        |         CAST(round(CAST(sum(y) OVER fr AS DOUBLE) / count(*) OVER fr * 1e6) AS BIGINT) AS tu
-        |  FROM s WINDOW fr AS (PARTITION BY event_type ORDER BY day
-        |                       ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |),
+      s"""WITH $StlTrendSql,
         |b AS (SELECT event_type, day % 7 AS phase, y, y * 1000000 - tu AS du FROM t),
         |se AS (
         |  SELECT event_type, phase,
@@ -1623,17 +1436,7 @@ private[graft] object RefQueries {
         |             END, 4) AS seasonal_strength
         |FROM m""".stripMargin,
     "q230_seasonal_decompose" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
-        |),
-        |t AS (
-        |  SELECT event_type, day, y,
-        |         CAST(round(CAST(sum(y) OVER fr AS DOUBLE) / count(*) OVER fr * 1e6) AS BIGINT) AS tu
-        |  FROM s WINDOW fr AS (PARTITION BY event_type ORDER BY day
-        |                       ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |),
+      s"""WITH $StlTrendSql,
         |b AS (SELECT event_type, day % 7 AS phase, y * 1000000 - tu AS du FROM t),
         |se AS (
         |  SELECT event_type, phase, CAST(count(*) AS BIGINT) AS n,
@@ -1662,17 +1465,7 @@ private[graft] object RefQueries {
     // STL-anomaly replay: the q230 pipeline + the 4dp-threshold keep
     // test against 2 sigma.
     "q253_stl_anomalies" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
-        |),
-        |t AS (
-        |  SELECT event_type, day, y,
-        |         CAST(round(CAST(sum(y) OVER fr AS DOUBLE) / count(*) OVER fr * 1e6) AS BIGINT) AS tu
-        |  FROM s WINDOW fr AS (PARTITION BY event_type ORDER BY day
-        |                       ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        |),
+      s"""WITH $StlTrendSql,
         |b AS (SELECT event_type, day, y, tu, day % 7 AS phase, y * 1000000 - tu AS du FROM t),
         |se AS (
         |  SELECT event_type, phase,
@@ -1703,12 +1496,7 @@ private[graft] object RefQueries {
     // Holt replay: same ordered fold via list_reduce, same integer
     // micro-unit floor-halving state, same 4dp outputs.
     "q272_holt_backtest" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) * 1000000 AS yu
-        |  FROM events GROUP BY 1, 2
-        |),
+      s"""WITH $DailyMicroCountsSql,
         |l AS (SELECT event_type, list(yu ORDER BY day) AS ys FROM s GROUP BY 1),
         |f AS (
         |  SELECT event_type,
@@ -1732,9 +1520,9 @@ private[graft] object RefQueries {
     // self-only (z := half(z+yu), p := half(p+gu)); intervals from a
     // lag window, first interval = 1 day by convention.
     "q321_croston" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+        |         $DaySql AS day,
         |         CAST(count(*) AS BIGINT) * 1000000 AS yu
         |  FROM events GROUP BY 1, 2
         |),
@@ -1768,12 +1556,7 @@ private[graft] object RefQueries {
     // MASE replay: the q272 Holt fold + a lag-7 naive MAE over the
     // same day series, 4dp ratio.
     "q288_mase" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) * 1000000 AS yu
-        |  FROM events GROUP BY 1, 2
-        |),
+      s"""WITH $DailyMicroCountsSql,
         |l AS (SELECT event_type, list(yu ORDER BY day) AS ys FROM s GROUP BY 1),
         |f AS (
         |  SELECT event_type,
@@ -1814,11 +1597,8 @@ private[graft] object RefQueries {
     // the 8-period bank, amp²-normalized powers, entropy fold via
     // Σ p·lnp = (Σ P·lnP)/T − lnT, 4dp.
     "q377_spectral_entropy" ->
-      """WITH s AS (
-        |  SELECT event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("n")}
         |),
         |ph AS (
         |  SELECT event_type, p.period, day % p.period AS r,
@@ -1869,11 +1649,8 @@ private[graft] object RefQueries {
     // Runs-test replay: exact doubled-median cut, equal-to-median
     // days excluded, lag-pass run count, textbook null moments.
     "q378_runs_test" ->
-      """WITH daily AS MATERIALIZED (
-        |  SELECT event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
+      s"""WITH daily AS MATERIALIZED (
+        |${DailyCountsSql("cnt")}
         |),
         |med AS (
         |  SELECT event_type,
@@ -1916,10 +1693,8 @@ private[graft] object RefQueries {
     // by the q272 list_reduce (element 1 seeds), integer-grain
     // publishes.
     "q393_theta_forecast" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("y")}
         |),
         |b AS MATERIALIZED (
         |  SELECT event_type, y,
@@ -1970,10 +1745,8 @@ private[graft] object RefQueries {
     // DF replay: per-key lag pairs, exact HUGEINT moments, the
     // multiply-through centered sums, one pinned tau chain.
     "q402_dickey_fuller" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("y")}
         |),
         |b AS (
         |  SELECT event_type, y,
@@ -2015,10 +1788,8 @@ private[graft] object RefQueries {
     // multiply-through demeaned partial sums in HUGEINT, per-block
     // R/S at 6dp, size means at 4dp, the collapsed ln-ln slope.
     "q394_hurst" ->
-      """WITH s AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS MATERIALIZED (
+        |${DailyCountsSql("y")}
         |),
         |b AS (
         |  SELECT event_type, y,

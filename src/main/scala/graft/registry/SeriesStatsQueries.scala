@@ -44,7 +44,7 @@ private[graft] object SeriesStatsQueries {
       val t = Tables(s, dir)
       val daily = t.events.filter(col("value").isNotNull)
         .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
+          dayOf.as("day"))
         .agg(sum(round(col("value") * 100).cast("long") - 50L).as("flow"))
       Rollups.maxDrawdown(daily, Seq("event_type"), "day", "flow")
         .orderBy("event_type")
@@ -54,10 +54,7 @@ private[graft] object SeriesStatsQueries {
       // type: random-walk efficiency at the week horizon — the "how
       // much mean reversion" companion to q383's DF unit-root τ
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.varianceRatio(daily, Seq("event_type"), "day", "cnt", q = 5)
         .orderBy("event_type")
     }),
@@ -66,10 +63,7 @@ private[graft] object SeriesStatsQueries {
       // per type: the rank-based randomness gate (E[RVN]=2) — D17's
       // Durbin–Watson geometry, robust to the level's distribution
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.bartelsRank(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -90,12 +84,7 @@ private[graft] object SeriesStatsQueries {
       // does the disagreement live") — the report q405's Deming slope
       // is read next to
       val t = Tables(s, dir)
-      val daily = t.events
-        .filter(col("event_type").isin("click", "view"))
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("y"))
+      val daily = dailyClickView(t.events)
       Rollups.concordanceAgreement(daily, "x", "y")
     }),
     "q413_hodges_lehmann" -> ((s, dir) => {
@@ -133,7 +122,7 @@ private[graft] object SeriesStatsQueries {
       // the block's RANGE, the higher-power Friedman at small k
       val t = Tables(s, dir)
       val daily = t.events
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"),
+        .groupBy(dayOf.as("day"),
           col("event_type"))
         .agg(count(lit(1)).as("cnt"))
       Rollups.quade(daily, "day", "event_type", "cnt")
@@ -144,10 +133,7 @@ private[graft] object SeriesStatsQueries {
       // weekly cycle without estimating it — the trend gate after
       // q143's seasonal index says the cycle exists
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.seasonalMannKendall(daily, Seq("event_type"), "day", "cnt",
         period = 7)
         .orderBy("event_type")
@@ -157,10 +143,7 @@ private[graft] object SeriesStatsQueries {
       // event-count trend per type: did the regime shift — the known-
       // break F companion to q196's changepoint SCAN
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.chowTest(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -169,10 +152,7 @@ private[graft] object SeriesStatsQueries {
       // fingerprint via closed-form Durbin–Levinson on q228's exact
       // one-mean ACF ratios — where does the direct correlation cut
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.pacf(daily, Seq("event_type"), "day", "cnt")
         .orderBy("event_type")
     }),
@@ -181,12 +161,7 @@ private[graft] object SeriesStatsQueries {
       // spread + q402's DF τ on the SCALED-EXACT residual — do the
       // two series share one stochastic trend (correlation can't say)
       val t = Tables(s, dir)
-      val daily = t.events
-        .filter(col("event_type").isin("click", "view"))
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("y"))
+      val daily = dailyClickView(t.events)
       Rollups.engleGranger(daily, "day", "x", "y")
     }),
     "q422_hosmer_lemeshow" -> ((s, dir) => {
@@ -326,13 +301,8 @@ private[graft] object SeriesStatsQueries {
     // Kuiper replay: the q192 CDF frame with signed max in each
     // direction (greatest with 0 — all-below samples have D⁺ = 0).
     "q406_kuiper" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT sum(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS f1,
@@ -390,8 +360,8 @@ private[graft] object SeriesStatsQueries {
     // trough via ORDER BY (dd DESC, day ASC) row_number = the struct
     // max (dd, −t, peak) on the Spark side.
     "q408_drawdown" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH daily AS (
+        |  SELECT event_type, $DaySql AS day,
         |         CAST(sum(CAST(round(value * 100) AS BIGINT) - 50) AS BIGINT) AS flow
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
         |),
@@ -430,10 +400,8 @@ private[graft] object SeriesStatsQueries {
     // day−1 / day−5), exact HUGEINT multiply-through variances, one
     // pinned ratio + iid-null z.
     "q409_variance_ratio" ->
-      """WITH daily AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
+      s"""WITH daily AS MATERIALIZED (
+        |${DailyCountsSql("cnt")}
         |),
         |d1 AS (
         |  SELECT a.event_type, CAST(count(*) AS BIGINT) AS m1,
@@ -473,10 +441,8 @@ private[graft] object SeriesStatsQueries {
     // Bartels replay: doubled midranks (2·rank + ties − 1), successor
     // by day order, denominator collapse ΣR2² − n(n+1)².
     "q410_bartels" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
+      s"""WITH daily AS (
+        |${DailyCountsSql("cnt")}
         |),
         |rk AS (
         |  SELECT event_type, day, cnt,
@@ -514,22 +480,7 @@ private[graft] object SeriesStatsQueries {
     // the Spark side, so both engines walk identical partial sums).
     "q411_by_fdr" ->
       s"""WITH RECURSIVE $BySourceSql,
-         |pk AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |fp AS (
-         |  SELECT diseaseId, targetId, datasourceId,
-         |         CAST(min(peakYear) AS INT) AS peakYear
-         |  FROM pk WHERE peak > 0 GROUP BY 1, 2, 3
-         |),
-         |j AS (
-         |  SELECT a.datasourceId AS datasourceIdA, b.datasourceId AS datasourceIdB,
-         |         a.peakYear AS yearA, b.peakYear AS yearB
-         |  FROM fp a JOIN fp b USING (diseaseId, targetId)
-         |),
+         |$PeakYearPairsSql,
          |$CorrPCtesSql,
          |corr_out AS (
          |$CorrPSelectSql
@@ -560,21 +511,7 @@ private[graft] object SeriesStatsQueries {
     // sums (CCC terms share the scale so (Sy−Sx)² joins unscaled),
     // identical pinned r/CCC/bias/SD/limits chain.
     "q412_agreement" ->
-      """WITH dly AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS x,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS y
-        |  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
-        |),
-        |m AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-        |         CAST(sum(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-        |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-        |         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-        |         CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
-        |  FROM dly
-        |),
+      s"""WITH $ClickViewMomentsSql,
         |c AS (
         |  SELECT n, sx, sy,
         |         n * sxx - sx * sx AS cxx,
@@ -607,13 +544,8 @@ private[graft] object SeriesStatsQueries {
     // HL replay: the same value-grain weighted cross; exact HUGEINT
     // cumulative weights; doubled straddle median, one /200 publish.
     "q413_hodges_lehmann" ->
-      """WITH p AS MATERIALIZED (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS MATERIALIZED (
+        |$TwoGroupGrainSql
         |),
         |t AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
         |             CAST(sum(c2) AS BIGINT) AS n2 FROM p),
@@ -674,13 +606,8 @@ private[graft] object SeriesStatsQueries {
     // BM replay: identical doubled pooled/within midranks, exact
     // HUGEINT placement moments, the same pinned p̂/S²/W chains.
     "q415_brunner_munzel" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT c1, c2,
@@ -726,13 +653,8 @@ private[graft] object SeriesStatsQueries {
     // conditional permutation moments of the realized score vectors,
     // two pinned z chains.
     "q416_lepage" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |t AS (SELECT CAST(sum(c1) + sum(c2) AS BIGINT) AS N FROM p),
         |c AS (
@@ -777,8 +699,8 @@ private[graft] object SeriesStatsQueries {
     // values, cross-block ranges), S4 = Q2·(r2−(k+1)), the 16-cancel
     // F — `full` feeds both layers so it must MATERIALIZE.
     "q417_quade" ->
-      """WITH cell AS MATERIALIZED (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS b,
+      s"""WITH cell AS MATERIALIZED (
+        |  SELECT $DaySql AS b,
         |         event_type AS tr, CAST(count(*) AS BIGINT) AS v
         |  FROM events GROUP BY 1, 2
         |),
@@ -826,11 +748,8 @@ private[graft] object SeriesStatsQueries {
     // (type, weekday), S and tie-corrected variance pooled across
     // seasons, one continuity-corrected z.
     "q418_seasonal_mk" ->
-      """WITH s AS MATERIALIZED (
-        |  SELECT event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS x,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS MATERIALIZED (
+        |${DailyCountsSql("y", "x")}
         |),
         |ss AS MATERIALIZED (SELECT event_type, x % 7 AS season, x, y FROM s),
         |arr AS (
@@ -877,10 +796,8 @@ private[graft] object SeriesStatsQueries {
     // segment moments, RSS = (Cyy·Cxx − Cxy²)/(m·Cxx) exact-integer
     // ratios, one pinned F chain.
     "q419_chow" ->
-      """WITH daily AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
+      s"""WITH daily AS MATERIALIZED (
+        |${DailyCountsSql("cnt")}
         |),
         |ext AS MATERIALIZED (
         |  SELECT event_type, min(day) AS tmin, max(day) AS tmax,
@@ -950,10 +867,8 @@ private[graft] object SeriesStatsQueries {
     // 1..3 (time-arithmetic pairing), then the identical pinned
     // Durbin-Levinson chain on the unrounded rho doubles.
     "q420_pacf" ->
-      """WITH s AS MATERIALIZED (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS MATERIALIZED (
+        |${DailyCountsSql("x")}
         |),
         |tot AS (
         |  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
@@ -1014,11 +929,8 @@ private[graft] object SeriesStatsQueries {
     // to integer micro-units, then the q402 DF chain on the
     // position-lagged residual series.
     "q421_coint" ->
-      """WITH dly AS MATERIALIZED (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS x,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS y
-        |  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
+      s"""WITH dly AS MATERIALIZED (
+        |$DailyClickViewSql
         |),
         |mm AS (
         |  SELECT CAST(count(*) AS HUGEINT) AS n,
@@ -1087,23 +999,8 @@ private[graft] object SeriesStatsQueries {
     // contributions summed order-free.
     "q422_hosmer_lemeshow" ->
       s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS DOUBLE)
-         |           / 10000.0 AS quality
-         |  FROM base
-         |),
+         |${DocsBaseSql("text")},
+         |$QualitySql,
          |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
          |sc AS (
          |  SELECT least(CAST(floor(quality * 10) AS INT), 9) AS bin,
@@ -1332,14 +1229,7 @@ private[graft] object SeriesStatsQueries {
     // integer ITU-R 601 gray, cumulative class moments, the
     // 1024-scaled exact-integer score, earliest-gray argmax.
     "q428_otsu" ->
-      """WITH bb AS (
-        |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
-        |    ELSE length(text) END AS INT) AS n FROM documents
-        |),
-        |dd AS (
-        |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
-        |  FROM bb
-        |),
+      s"""WITH ${TextImageSql("bb", "dd")},
         |px AS (SELECT doc_id, text, n, w, h, unnest(range(0, w * h)) AS k FROM dd),
         |ch AS (
         |  SELECT doc_id, w, h,
@@ -1383,14 +1273,7 @@ private[graft] object SeriesStatsQueries {
     // Colorfulness replay: same pixel synthesis, exact opponent sums
     // (doubled yb), the identical pinned sigma/mu chain.
     "q429_colorfulness" ->
-      """WITH bb AS (
-        |  SELECT doc_id, text, CAST(CASE WHEN length(text) = 0 THEN 1
-        |    ELSE length(text) END AS INT) AS n FROM documents
-        |),
-        |dd AS (
-        |  SELECT doc_id, text, n, 8 + (n % 8) AS w, 8 + ((n // 8) % 8) AS h
-        |  FROM bb
-        |),
+      s"""WITH ${TextImageSql("bb", "dd")},
         |px AS (SELECT doc_id, text, n, w, h, unnest(range(0, w * h)) AS k FROM dd),
         |ch AS (
         |  SELECT doc_id, CAST(w AS BIGINT) * h AS np,

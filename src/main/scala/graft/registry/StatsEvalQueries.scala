@@ -120,18 +120,12 @@ private[graft] object StatsEvalQueries {
 
   val oracles: Seq[(String, String)] = Seq(
     "q216_auc" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |r AS (
         |  SELECT c1, c2,
-        |         2 * (sum(c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-        |              - (c1 + c2)) + (c1 + c2) + 1 AS r2
+        |         $Midrank2Sql AS r2
         |  FROM p
         |),
         |s AS (
@@ -148,24 +142,7 @@ private[graft] object StatsEvalQueries {
     // Gini replay: same value-grain tie-run closed form, HUGEINT
     // totals mirroring the decimal(38,0) sums.,
     "q227_ece" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
+      s"""WITH $GopherQualitySql,
          |b AS (
          |  SELECT CAST(least(CAST(floor(CAST(qi AS DOUBLE) / 10000.0 * 10) AS BIGINT), 9) AS BIGINT) AS bin,
          |         CAST(count(*) AS BIGINT) AS n,
@@ -190,24 +167,7 @@ private[graft] object StatsEvalQueries {
     // Item-cosine replay: same basket collapse, same in-row pair
     // expansion, same 4dp-rounded keep test.,
     "q238_lift_curve" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
+      s"""WITH $GopherQualitySql,
          |rows_q AS (
          |  SELECT q.qi AS u, CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
          |  FROM q JOIN g USING (doc_id)
@@ -295,42 +255,8 @@ private[graft] object StatsEvalQueries {
     // Triple-support replay: same sorted distinct baskets, same
     // canonical (a < b < c) in-row expansion, same top-k order.,
     "q262_roc_curve" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
-         |rows_r AS (
-         |  SELECT q.qi AS u, CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
-         |  FROM q JOIN g USING (doc_id)
-         |),
-         |b AS (
-         |  SELECT list_transform(quantile_cont(u, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-         |           x -> round(x, 4)) AS bs
-         |  FROM rows_r
-         |),
-         |binned AS (
-         |  SELECT CAST(list_sum(list_transform(bs,
-         |           x -> CASE WHEN u > x THEN 1 ELSE 0 END)) AS BIGINT) AS bin, y
-         |  FROM rows_r CROSS JOIN b
-         |),
-         |t AS (
-         |  SELECT bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS n_pos
-         |  FROM binned GROUP BY 1
-         |),
+      s"""WITH $GopherQualitySql,
+         |$GopherDecileBinsSql,
          |c AS (
          |  SELECT bin, n, n_pos,
          |         CAST(sum(n_pos) OVER (ORDER BY bin DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp,
@@ -347,42 +273,8 @@ private[graft] object StatsEvalQueries {
          |FROM c""".stripMargin,
     // PR replay: q262's bins, step-wise AP from 6dp contributions.,
     "q263_pr_curve" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
-         |rows_r AS (
-         |  SELECT q.qi AS u, CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
-         |  FROM q JOIN g USING (doc_id)
-         |),
-         |b AS (
-         |  SELECT list_transform(quantile_cont(u, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-         |           x -> round(x, 4)) AS bs
-         |  FROM rows_r
-         |),
-         |binned AS (
-         |  SELECT CAST(list_sum(list_transform(bs,
-         |           x -> CASE WHEN u > x THEN 1 ELSE 0 END)) AS BIGINT) AS bin, y
-         |  FROM rows_r CROSS JOIN b
-         |),
-         |t AS (
-         |  SELECT bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS n_pos
-         |  FROM binned GROUP BY 1
-         |),
+      s"""WITH $GopherQualitySql,
+         |$GopherDecileBinsSql,
          |c AS (
          |  SELECT bin, n, n_pos,
          |         round(CAST(sum(n_pos) OVER dw AS DOUBLE)
@@ -403,42 +295,8 @@ private[graft] object StatsEvalQueries {
          |FROM a""".stripMargin,
     // Best-F1 replay: the PR bins, 4dp F1, (f1 desc, bin desc) argmax.,
     "q264_best_f1" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
-         |rows_r AS (
-         |  SELECT q.qi AS u, CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
-         |  FROM q JOIN g USING (doc_id)
-         |),
-         |b AS (
-         |  SELECT list_transform(quantile_cont(u, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-         |           x -> round(x, 4)) AS bs
-         |  FROM rows_r
-         |),
-         |binned AS (
-         |  SELECT CAST(list_sum(list_transform(bs,
-         |           x -> CASE WHEN u > x THEN 1 ELSE 0 END)) AS BIGINT) AS bin, y
-         |  FROM rows_r CROSS JOIN b
-         |),
-         |t AS (
-         |  SELECT bin, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS n_pos
-         |  FROM binned GROUP BY 1
-         |),
+      s"""WITH $GopherQualitySql,
+         |$GopherDecileBinsSql,
          |c AS (
          |  SELECT bin,
          |         round(CAST(sum(n_pos) OVER dw AS DOUBLE) / sum(n) OVER dw, 4) AS precision,
@@ -463,24 +321,7 @@ private[graft] object StatsEvalQueries {
          |FROM r WHERE rnk = 1""".stripMargin,
     // Kappa replay: the same 2x2 exact table and closed form.,
     "q265_kappa" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
+      s"""WITH $GopherQualitySql,
          |j AS (
          |  SELECT CAST(q.qi AS DOUBLE) / 10000.0 >= 0.5 AS a, g.gopher_pass AS b
          |  FROM q JOIN g USING (doc_id)
@@ -508,24 +349,7 @@ private[graft] object StatsEvalQueries {
          |FROM c""".stripMargin,
     // MCC replay: the q265 2x2, exact HUGEINT products.,
     "q267_mcc" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
+      s"""WITH $GopherQualitySql,
          |j AS (
          |  SELECT CAST(q.qi AS DOUBLE) / 10000.0 >= 0.5 AS p, g.gopher_pass AS y
          |  FROM q JOIN g USING (doc_id)
@@ -553,24 +377,7 @@ private[graft] object StatsEvalQueries {
     // clamped to [1, 9999] (the Spark-side semantics), nano-unit
     // per-row terms via the engine-identical floor, entropy reference.
     "q350_log_loss" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
+      s"""WITH $GopherQualitySql,
          |j AS (
          |  SELECT greatest(1, least(9999, q.qi)) AS u,
          |         CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
@@ -609,24 +416,7 @@ private[graft] object StatsEvalQueries {
     // Brier replay: exact 1e-4-unit squared errors, closed-form
     // reference score.,
     "q268_brier" ->
-      s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
-         |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
+      s"""WITH $GopherQualitySql,
          |j AS (
          |  SELECT q.qi AS u, CASE WHEN g.gopher_pass THEN 1 ELSE 0 END AS y
          |  FROM q JOIN g USING (doc_id)

@@ -48,10 +48,7 @@ private[graft] object StatsInferenceQueries {
       // series per type: Q over ACF lags 1..7, pico-unit order-free
       // term sums, time-arithmetic lag pairing
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.ljungBox(daily, Seq("event_type"), "day", "cnt", maxLag = 7)
     }),
     "q156_ab_ztest" -> ((s, dir) => {
@@ -144,15 +141,14 @@ private[graft] object StatsInferenceQueries {
       // value gap ONE effect or segment-specific?
       val t = Tables(s, dir)
       Rollups.effectHeterogeneity(
-        t.events.withColumn("arm",
-          when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")),
+        t.events.withColumn("arm", parityArm),
         "event_type", "arm", "value", "A", "B")
     }),
     "q244_cuped" -> ((s, dir) => {
       // F46 CUPED variance reduction: post-cutoff spend tested with
       // the pre-cutoff spend covariate removed (parity arms)
       val t = Tables(s, dir)
-      val day = expr("unix_micros(ts) div 86400000000")
+      val day = dayOf
       val anchor = broadcast(t.events.agg((max(day) - 6).as("__cut")))
       val users = t.events
         .select(col("user_id"), day.as("__d"),
@@ -184,8 +180,7 @@ private[graft] object StatsInferenceQueries {
       // the observed split match the intended 50/50?
       val t = Tables(s, dir)
       Rollups.srmCheck(
-        t.events.withColumn("arm",
-          when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")),
+        t.events.withColumn("arm", parityArm),
         "arm", "A", "B")
     }),
     "q226_paired_uplift" -> ((s, dir) => {
@@ -232,9 +227,8 @@ private[graft] object StatsInferenceQueries {
       val t = Tables(s, dir)
       Rollups.msprtSequence(
         t.events
-          .withColumn("day0", expr("unix_micros(ts) div 86400000000"))
-          .withColumn("arm",
-          when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")),
+          .withColumn("day0", dayOf)
+          .withColumn("arm", parityArm),
         "arm", "value", "A", "B",
         dayCol = "day0",
         tauSq = 1.0)
@@ -245,9 +239,8 @@ private[graft] object StatsInferenceQueries {
       val t = Tables(s, dir)
       Rollups.msprtSrm(
         t.events.filter(col("user_id").isNotNull)
-          .withColumn("day0", expr("unix_micros(ts) div 86400000000"))
-          .withColumn("arm",
-            when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")),
+          .withColumn("day0", dayOf)
+          .withColumn("arm", parityArm),
         "arm", "A", "day0")
     }),
     "q286_eb_shrink" -> ((s, dir) => {
@@ -307,8 +300,7 @@ private[graft] object StatsInferenceQueries {
       // yearly evidence series — the q195 Theil–Sen slope's
       // significance companion on the SAME series
       val t = Tables(s, dir)
-      val series = t.evidence.groupBy("datasourceId", "year")
-        .agg(count(lit(1)).as("n"))
+      val series = evidenceYearCounts(t)
       Rollups.mannKendall(series, Seq("datasourceId"), "year", "n")
     }),
     "q313_odds_ratio" -> ((s, dir) => {
@@ -317,8 +309,7 @@ private[graft] object StatsInferenceQueries {
       val t = Tables(s, dir)
       Rollups.oddsRatio(
         t.events.filter(col("user_id").isNotNull)
-          .withColumn("arm",
-            when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")),
+          .withColumn("arm", parityArm),
         "arm", col("event_type") === "purchase", "A", "B")
     }),
     "q311_newcombe" -> ((s, dir) => {
@@ -328,8 +319,7 @@ private[graft] object StatsInferenceQueries {
       val t = Tables(s, dir)
       Rollups.newcombeDiff(
         t.events.filter(col("user_id").isNotNull)
-          .withColumn("arm",
-            when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")),
+          .withColumn("arm", parityArm),
         "arm", col("event_type") === "purchase", "A", "B")
     }),
     "q310_effect_size" -> ((s, dir) => {
@@ -383,10 +373,7 @@ private[graft] object StatsInferenceQueries {
       // series per type — the rank-based robust companion to q197's
       // mean-split changepoint; exact integer doubled-rank U_t
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.pettitt(daily, Seq("event_type"), "day", "cnt")
     }),
     "q349_kendall_w" -> ((s, dir) => {
@@ -395,7 +382,7 @@ private[graft] object StatsInferenceQueries {
       // same blocked doubled-rank frame
       val t = Tables(s, dir)
       Rollups.kendallW(t.events,
-        expr("unix_micros(ts) div 86400000000"), col("event_type"))
+        dayOf, col("event_type"))
     }),
     "q295_friedman" -> ((s, dir) => {
       // F64 Friedman: do any event types consistently out-rank the
@@ -403,7 +390,7 @@ private[graft] object StatsInferenceQueries {
       // filled dense cross, within-day average ranks
       val t = Tables(s, dir)
       Rollups.friedman(t.events,
-        expr("unix_micros(ts) div 86400000000"), col("event_type"))
+        dayOf, col("event_type"))
     }),
     "q373_bartlett" -> ((s, dir) => {
       // F100 Bartlett: the normal-theory variance-homogeneity test
@@ -434,7 +421,7 @@ private[graft] object StatsInferenceQueries {
       // Friedman, same dense doubled-rank frame
       val t = Tables(s, dir)
       Rollups.pageTrend(t.events,
-        expr("unix_micros(ts) div 86400000000"), col("event_type"))
+        dayOf, col("event_type"))
     }),
     "q380_g_test" -> ((s, dir) => {
       // F104 G-test lang ⇄ source: q182 χ²'s information-theoretic
@@ -451,7 +438,7 @@ private[graft] object StatsInferenceQueries {
       val t = Tables(s, dir)
       Rollups.cmh(
         t.events.filter(col("user_id").isNotNull && col("value").isNotNull),
-        expr("unix_micros(ts) div 86400000000"),
+        dayOf,
         col("user_id") % 2 === 1, col("value") > 0.5)
     }),
     "q382_dunn" -> ((s, dir) => {
@@ -467,10 +454,7 @@ private[graft] object StatsInferenceQueries {
       // half-series successor (q195 estimates the slope, q293 ranks
       // all pairs; this is the cheap first gate)
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.coxStuart(daily, Seq("event_type"), "day", "cnt")
     }),
     "q384_kpss" -> ((s, dir) => {
@@ -479,10 +463,7 @@ private[graft] object StatsInferenceQueries {
       // η scores how un-stationary the level already is); exact
       // integers until one division
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.kpss(daily, Seq("event_type"), "day", "cnt")
     }),
     "q404_conformal" -> ((s, dir) => {
@@ -499,12 +480,7 @@ private[graft] object StatsInferenceQueries {
       // OLS is biased toward zero by design; slope≈1, intercept≈0
       // means the two measure the same activity
       val t = Tables(s, dir)
-      val daily = t.events
-        .filter(col("event_type").isin("click", "view"))
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("y"))
+      val daily = dailyClickView(t.events)
       Rollups.deming(daily, "x", "y")
     }),
     "q397_ad2" -> ((s, dir) => {
@@ -528,10 +504,7 @@ private[graft] object StatsInferenceQueries {
       // count = drift; the assumption-free pre-gate before q205's
       // model-bound Durbin–Watson
       val t = Tables(s, dir)
-      val daily = t.events
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("cnt"))
+      val daily = dailyCounts(t.events, "cnt")
       Rollups.turningPoints(daily, Seq("event_type"), "day", "cnt")
     }),
   )
@@ -540,13 +513,8 @@ private[graft] object StatsInferenceQueries {
     // Wasserstein-1: the q192 CDF CTE plus value gaps — the sum is
     // exact HUGEINT (mirrors decimal(38,0)), one final division.
     "q342_wasserstein" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT v,
@@ -572,10 +540,8 @@ private[graft] object StatsInferenceQueries {
     // multiplied-through integer ACF in HUGEINT, pico-unit terms via
     // the engine-identical floor(x*1e12 + 0.5), one final expression.
     "q343_ljung_box" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("x")}
         |),
         |tot AS (
         |  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
@@ -623,18 +589,12 @@ private[graft] object StatsInferenceQueries {
     // stays exact integer (HUGEINT mirrors decimal(38,0)); the
     // magnitude band compares integer cross products, ulp-proof.
     "q338_cliffs_delta" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |r AS (
         |  SELECT c1, c2,
-        |         2 * (sum(c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-        |              - (c1 + c2)) + (c1 + c2) + 1 AS r2
+        |         $Midrank2Sql AS r2
         |  FROM p
         |),
         |a AS (
@@ -747,18 +707,7 @@ private[graft] object StatsInferenceQueries {
     // Weighted-median replay: identical (value, event_id) cumulative
     // ordering, all-long crossing test — no floats until the final 4dp.,
     "q175_mutual_info" ->
-      """WITH cells AS (
-        |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
-        |  GROUP BY 1, 2
-        |),
-        |e AS (
-        |  SELECT lang, source, n_ab,
-        |         CAST(sum(n_ab) OVER (PARTITION BY lang) AS BIGINT) AS na,
-        |         CAST(sum(n_ab) OVER (PARTITION BY source) AS BIGINT) AS nb,
-        |         CAST(sum(n_ab) OVER () AS BIGINT) AS n
-        |  FROM cells
-        |),
+      s"""WITH $ContingencySql,
         |c AS (
         |  SELECT lang, source, n_ab,
         |         round(ln(CAST(n_ab AS DOUBLE) * CAST(n AS DOUBLE)
@@ -775,22 +724,7 @@ private[graft] object StatsInferenceQueries {
     // same (p·m)/rank suffix-min, 4dp cap-at-1 adjustment.,
     "q178_fdr" ->
       s"""WITH RECURSIVE $BySourceSql,
-         |pk AS (
-         |  SELECT diseaseId, targetId, datasourceId, year AS peakYear,
-         |         coalesce(score, 0) - lag(coalesce(score, 0)) OVER (
-         |           PARTITION BY diseaseId, targetId, datasourceId ORDER BY year) AS peak
-         |  FROM bysource
-         |),
-         |fp AS (
-         |  SELECT diseaseId, targetId, datasourceId,
-         |         CAST(min(peakYear) AS INT) AS peakYear
-         |  FROM pk WHERE peak > 0 GROUP BY 1, 2, 3
-         |),
-         |j AS (
-         |  SELECT a.datasourceId AS datasourceIdA, b.datasourceId AS datasourceIdB,
-         |         a.peakYear AS yearA, b.peakYear AS yearB
-         |  FROM fp a JOIN fp b USING (diseaseId, targetId)
-         |),
+         |$PeakYearPairsSql,
          |$CorrPCtesSql,
          |corr_out AS (
          |$CorrPSelectSql
@@ -815,18 +749,7 @@ private[graft] object StatsInferenceQueries {
     // χ² replay: identical cast-then-multiply E per cell, the same
     // empty-cell fold (Σ(O−E)²/E−E + n), 6dp contributions.,
     "q182_chi_square" ->
-      """WITH cells AS (
-        |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
-        |  GROUP BY 1, 2
-        |),
-        |e AS (
-        |  SELECT lang, source, n_ab,
-        |         CAST(sum(n_ab) OVER (PARTITION BY lang) AS BIGINT) AS na,
-        |         CAST(sum(n_ab) OVER (PARTITION BY source) AS BIGINT) AS nb,
-        |         CAST(sum(n_ab) OVER () AS BIGINT) AS n
-        |  FROM cells
-        |),
+      s"""WITH $ContingencySql,
         |c AS (
         |  SELECT lang, source, n_ab, n,
         |         round((CAST(n_ab AS DOUBLE)
@@ -857,13 +780,8 @@ private[graft] object StatsInferenceQueries {
     // UCB1 replay: exact integer-cent means; ln/sqrt rounded 6dp
     // before the display rank so ranks can never flip on an ulp.,
     "q192_ks_test" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT sum(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS f1,
@@ -922,24 +840,18 @@ private[graft] object StatsInferenceQueries {
     // exact 2U₁, tie sums in HUGEINT (Rollups.tieCube's decimal), same
     // double-op order for z.,
     "q199_mann_whitney" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |r AS (
         |  SELECT c1, c2, c1 + c2 AS t,
-        |         2 * (sum(c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-        |              - (c1 + c2)) + (c1 + c2) + 1 AS r2
+        |         $Midrank2Sql AS r2
         |  FROM p
         |),
         |s AS (
         |  SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2,
         |         CAST(sum(c1 * r2) AS BIGINT) AS r2sum1,
-        |         sum(CAST(t AS HUGEINT) * t * t - t) AS ties
+        |         $TieCubeSql AS ties
         |  FROM r
         |),
         |m AS (
@@ -1023,19 +935,7 @@ private[graft] object StatsInferenceQueries {
         |FROM m""".stripMargin,
     // Welch replay: same exact sums, same mean/variance/t/df ops.,
     "q208_welch" ->
-      """WITH s AS (
-        |  SELECT
-        |    CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n1,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) FILTER (event_type = 'click') AS BIGINT) AS s1,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT))
-        |         FILTER (event_type = 'click') AS BIGINT) AS q1,
-        |    CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n2,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) FILTER (event_type = 'view') AS BIGINT) AS s2,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT))
-        |         FILTER (event_type = 'view') AS BIGINT) AS q2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |),
+      s"""WITH $TwoGroupMomentsSql,
         |v AS (
         |  SELECT n1, n2, s1, s2,
         |         (CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n1) / (n1 - 1) AS v1,
@@ -1054,19 +954,7 @@ private[graft] object StatsInferenceQueries {
         |FROM e""".stripMargin,
     // MDE replay: welch-shape exact sums, the same fixed z literals.,
     "q210_mde" ->
-      """WITH s AS (
-        |  SELECT
-        |    CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n1,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) FILTER (event_type = 'click') AS BIGINT) AS s1,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT))
-        |         FILTER (event_type = 'click') AS BIGINT) AS q1,
-        |    CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n2,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) FILTER (event_type = 'view') AS BIGINT) AS s2,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT))
-        |         FILTER (event_type = 'view') AS BIGINT) AS q2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |),
+      s"""WITH $TwoGroupMomentsSql,
         |v AS (
         |  SELECT n1, n2, s1,
         |         (CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n1) / (n1 - 1) AS v1,
@@ -1303,8 +1191,8 @@ private[graft] object StatsInferenceQueries {
     // Lift-curve replay: q227's quality/pass inputs, I25's 4dp decile
     // boundaries, cumulative windows from the TOP bin down.,
     "q244_cuped" ->
-      """WITH f AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS d,
+      s"""WITH f AS (
+        |  SELECT user_id, $DaySql AS d,
         |         COALESCE(CAST(round(value * 100) AS BIGINT), 0) AS c
         |  FROM events
         |),
@@ -1574,8 +1462,8 @@ private[graft] object StatsInferenceQueries {
         |FROM e""".stripMargin,
     // ROC replay: q238's binning, cumulative TPR/FPR from the top bin.,
     "q275_msprt" ->
-      """WITH e AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH e AS (
+        |  SELECT $DaySql AS day,
         |         CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
         |         CAST(round(value * 100) AS HUGEINT) AS c
         |  FROM events WHERE value IS NOT NULL
@@ -1638,8 +1526,8 @@ private[graft] object StatsInferenceQueries {
     // Sequential-SRM replay: same cumulative day counts, null
     // variance p0(1-p0)/N, written-order Lambda, rounded running min.,
     "q284_msprt_srm" ->
-      """WITH e AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH e AS (
+        |  SELECT $DaySql AS day,
         |         CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS a
         |  FROM events WHERE user_id IS NOT NULL
         |),
@@ -1749,8 +1637,8 @@ private[graft] object StatsInferenceQueries {
     // integer comparisons per pair (no sign products), one double
     // division at the end.,
     "q291_kendall_tau" ->
-      """WITH d AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      s"""WITH d AS (
+        |  SELECT $DaySql AS day,
         |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS na,
         |         CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS nb
         |  FROM events WHERE event_type IN ('view', 'purchase') GROUP BY 1
@@ -1784,27 +1672,14 @@ private[graft] object StatsInferenceQueries {
     // cumulative (the mannWhitney convention), HUGEINT rank sums and
     // tie cubes, anovaF-style written-order doubles, 4dp.,
     "q292_kruskal_wallis" ->
-      """WITH pts AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v, event_type AS g,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2
-        |),
-        |vg AS (SELECT v, CAST(sum(n) AS BIGINT) AS t FROM pts GROUP BY 1),
-        |vr AS (
-        |  SELECT v, t,
-        |         2 * coalesce(sum(t) OVER (ORDER BY v
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           + t + 1 AS r2
-        |  FROM vg
-        |),
+      s"""WITH $PooledMidranksSql,
         |perg AS (
         |  SELECT g, CAST(sum(n) AS BIGINT) AS ng,
         |         CAST(sum(CAST(n AS HUGEINT) * r2) AS HUGEINT) AS s2
         |  FROM pts JOIN vr USING (v) GROUP BY 1
         |),
         |tie AS (
-        |  SELECT coalesce(CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT),
+        |  SELECT coalesce(CAST($TieCubeSql AS HUGEINT),
         |                  0) AS tie3
         |  FROM vg
         |),
@@ -1924,11 +1799,8 @@ private[graft] object StatsInferenceQueries {
     // pairs (exact integers), tie rollup from the same series, the
     // continuity-corrected z as one written-order double, 4dp.,
     "q293_mann_kendall" ->
-      """WITH s AS (
-        |  SELECT l_returnflag AS datasourceId,
-        |         CAST(year(l_shipdate) AS BIGINT) AS x,
-        |         CAST(count(*) AS BIGINT) AS y
-        |  FROM lineitem GROUP BY 1, 2
+      s"""WITH s AS (
+        |$EvidenceYearCountsSql
         |),
         |arr AS (
         |  SELECT datasourceId,
@@ -2143,13 +2015,8 @@ private[graft] object StatsInferenceQueries {
     // Median-test replay: identical integer lower-median decision on
     // the value grain, exact cells, HUGEINT χ² products.
     "q355_median_test" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT v,
@@ -2185,18 +2052,12 @@ private[graft] object StatsInferenceQueries {
     // Mood replay: q199's doubled midranks, D = 2r − (N+1) exact
     // integers, 4M in HUGEINT, the same null-moment z expression.
     "q354_mood" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT c1, c2,
-        |         2 * (sum(c1 + c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
-        |              - (c1 + c2)) + (c1 + c2) + 1 AS r2,
+        |         $Midrank2Sql AS r2,
         |         sum(c1 + c2) OVER () AS nn
         |  FROM p
         |),
@@ -2221,13 +2082,8 @@ private[graft] object StatsInferenceQueries {
     // CvM replay: the q192 CDF CTE with per-value multiplicities; the
     // sum is exact HUGEINT (mirrors decimal(38,0)), one final division.
     "q353_cvm" ->
-      """WITH p AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH p AS (
+        |$TwoGroupGrainSql
         |),
         |c AS (
         |  SELECT v, c1, c2,
@@ -2255,8 +2111,8 @@ private[graft] object StatsInferenceQueries {
     // frames), exact long U_t, the same (|U| desc, t) argmax, one
     // final double p expression.
     "q352_pettitt" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS t,
+      s"""WITH s AS (
+        |  SELECT event_type, $DaySql AS t,
         |         CAST(count(*) AS BIGINT) AS v
         |  FROM events GROUP BY 1, 2
         |),
@@ -2296,35 +2152,7 @@ private[graft] object StatsInferenceQueries {
     // expression mirrored term-for-term (left-associated doubles over
     // exact integers).
     "q349_kendall_w" ->
-      """WITH cells AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS b,
-        |         event_type AS g, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |),
-        |dense AS (
-        |  SELECT bb.b, gg.g, coalesce(c.cnt, 0) AS cnt
-        |  FROM (SELECT DISTINCT b FROM cells) bb
-        |  CROSS JOIN (SELECT DISTINCT g FROM cells) gg
-        |  LEFT JOIN cells c ON c.b = bb.b AND c.g = gg.g
-        |),
-        |r AS (
-        |  SELECT b, g,
-        |         CAST(count(*) OVER (PARTITION BY b, cnt) AS BIGINT) AS t,
-        |         2 * (rank() OVER (PARTITION BY b ORDER BY cnt) - 1)
-        |           + CAST(count(*) OVER (PARTITION BY b, cnt) AS BIGINT) + 1 AS r2
-        |  FROM dense
-        |),
-        |pert AS (SELECT g, CAST(sum(r2) AS BIGINT) AS s2 FROM r GROUP BY 1),
-        |a1 AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k,
-        |         CAST(sum(s2 * s2) AS BIGINT) AS rr4
-        |  FROM pert
-        |),
-        |a2 AS (
-        |  SELECT CAST(sum(t * t - 1) AS BIGINT) AS tsum,
-        |         CAST(count(DISTINCT b) AS BIGINT) AS n_blocks
-        |  FROM r
-        |),
+      s"""WITH $BlockRankSumsSql,
         |f AS (
         |  SELECT n_blocks, k,
         |         3.0 * CAST(rr4 AS DOUBLE)
@@ -2341,35 +2169,7 @@ private[graft] object StatsInferenceQueries {
         |       round(num / (CASE WHEN den <= 0 THEN NULL ELSE den END), 4) AS w
         |FROM f""".stripMargin,
     "q295_friedman" ->
-      """WITH cells AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS b,
-        |         event_type AS g, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |),
-        |dense AS (
-        |  SELECT bb.b, gg.g, coalesce(c.cnt, 0) AS cnt
-        |  FROM (SELECT DISTINCT b FROM cells) bb
-        |  CROSS JOIN (SELECT DISTINCT g FROM cells) gg
-        |  LEFT JOIN cells c ON c.b = bb.b AND c.g = gg.g
-        |),
-        |r AS (
-        |  SELECT b, g,
-        |         CAST(count(*) OVER (PARTITION BY b, cnt) AS BIGINT) AS t,
-        |         2 * (rank() OVER (PARTITION BY b ORDER BY cnt) - 1)
-        |           + CAST(count(*) OVER (PARTITION BY b, cnt) AS BIGINT) + 1 AS r2
-        |  FROM dense
-        |),
-        |pert AS (SELECT g, CAST(sum(r2) AS BIGINT) AS s2 FROM r GROUP BY 1),
-        |a1 AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k,
-        |         CAST(sum(s2 * s2) AS BIGINT) AS rr4
-        |  FROM pert
-        |),
-        |a2 AS (
-        |  SELECT CAST(sum(t * t - 1) AS BIGINT) AS tsum,
-        |         CAST(count(DISTINCT b) AS BIGINT) AS n_blocks
-        |  FROM r
-        |)
+      s"""WITH $BlockRankSumsSql
         |SELECT n_blocks, k,
         |       round(12.0 * (CAST(rr4 AS DOUBLE) / 4.0)
         |             / (CAST(n_blocks AS DOUBLE) * CAST(k AS DOUBLE)
@@ -2495,17 +2295,12 @@ private[graft] object StatsInferenceQueries {
     // Page-L replay: the q295 dense doubled-rank frame, lexicographic
     // treatment ordinals, exact doubled L, no-tie null moments.
     "q376_page_trend" ->
-      """WITH cells AS MATERIALIZED (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS b,
+      s"""WITH cells AS MATERIALIZED (
+        |  SELECT $DaySql AS b,
         |         event_type AS g, CAST(count(*) AS BIGINT) AS cnt
         |  FROM events GROUP BY 1, 2
         |),
-        |dense AS (
-        |  SELECT bb.b, gg.g, coalesce(c.cnt, 0) AS cnt
-        |  FROM (SELECT DISTINCT b FROM cells) bb
-        |  CROSS JOIN (SELECT DISTINCT g FROM cells) gg
-        |  LEFT JOIN cells c ON c.b = bb.b AND c.g = gg.g
-        |),
+        |$DenseBlocksSql,
         |r AS MATERIALIZED (
         |  SELECT b, g,
         |         2 * (rank() OVER (PARTITION BY b ORDER BY cnt) - 1)
@@ -2535,18 +2330,7 @@ private[graft] object StatsInferenceQueries {
     // rounded 6dp (empty cells contribute exactly 0 — no correction
     // term), G = 2·Σ at 4dp.
     "q380_g_test" ->
-      """WITH cells AS (
-        |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
-        |  GROUP BY 1, 2
-        |),
-        |e AS (
-        |  SELECT lang, source, n_ab,
-        |         CAST(sum(n_ab) OVER (PARTITION BY lang) AS BIGINT) AS na,
-        |         CAST(sum(n_ab) OVER (PARTITION BY source) AS BIGINT) AS nb,
-        |         CAST(sum(n_ab) OVER () AS BIGINT) AS n
-        |  FROM cells
-        |),
+      s"""WITH $ContingencySql,
         |c AS (
         |  SELECT lang, source, n,
         |         round(CAST(n_ab AS DOUBLE) *
@@ -2569,8 +2353,8 @@ private[graft] object StatsInferenceQueries {
     // the two Mantel-Haenszel odds terms rounded 6dp per stratum
     // before the strata-sized sums; continuity-corrected CMH at 4dp.
     "q381_cmh" ->
-      """WITH s AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS t,
+      s"""WITH s AS (
+        |  SELECT $DaySql AS t,
         |         CAST(count(*) FILTER (user_id % 2 = 1 AND value > 0.5)
         |              AS BIGINT) AS a,
         |         CAST(count(*) FILTER (user_id % 2 = 1 AND NOT value > 0.5)
@@ -2614,20 +2398,7 @@ private[graft] object StatsInferenceQueries {
     // exact decimal numerator S_a*n_b - S_b*n_a over the pooled
     // tie-corrected sigma2 (doubled scale: /3 not /12).
     "q382_dunn" ->
-      """WITH pts AS (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v, event_type AS g,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2
-        |),
-        |vg AS (SELECT v, CAST(sum(n) AS BIGINT) AS t FROM pts GROUP BY 1),
-        |vr AS (
-        |  SELECT v, t,
-        |         2 * coalesce(sum(t) OVER (ORDER BY v
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           + t + 1 AS r2
-        |  FROM vg
-        |),
+      s"""WITH $PooledMidranksSql,
         |perg AS MATERIALIZED (
         |  SELECT g, CAST(sum(n) AS BIGINT) AS ng,
         |         CAST(sum(CAST(n AS HUGEINT) * r2) AS HUGEINT) AS s2
@@ -2635,7 +2406,7 @@ private[graft] object StatsInferenceQueries {
         |),
         |tot AS (
         |  SELECT CAST(sum(ng) AS BIGINT) AS nn,
-        |         (SELECT coalesce(CAST(sum(CAST(t AS HUGEINT) * t * t - t)
+        |         (SELECT coalesce(CAST($TieCubeSql
         |                               AS HUGEINT), 0) FROM vg) AS tie3
         |  FROM perg
         |)
@@ -2656,10 +2427,8 @@ private[graft] object StatsInferenceQueries {
     // via 1-based list indexing (the q272 fold convention), exact
     // sign counts, continuity-corrected binomial z.
     "q383_cox_stuart" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("x")}
         |),
         |a AS (
         |  SELECT event_type, list(x ORDER BY day) AS arr,
@@ -2692,10 +2461,8 @@ private[graft] object StatsInferenceQueries {
     // partial sums P per key, eta = sum(P^2)/(n*sum(e^2)) — exact
     // integers until the one division.
     "q384_kpss" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("x")}
         |),
         |t AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -2722,10 +2489,8 @@ private[graft] object StatsInferenceQueries {
     // Turning points + difference sign: strict-inequality lag/lead
     // counts per type series, textbook null moments.
     "q385_turning_points" ->
-      """WITH s AS (
-        |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
+      s"""WITH s AS (
+        |${DailyCountsSql("x")}
         |),
         |w AS (
         |  SELECT event_type, x,
@@ -2799,21 +2564,7 @@ private[graft] object StatsInferenceQueries {
     // Deming replay: exact HUGEINT moments, multiply-through centered
     // sums cast to double, one pinned slope/intercept chain.
     "q405_deming" ->
-      """WITH dly AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS x,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS y
-        |  FROM events WHERE event_type IN ('click', 'view') GROUP BY 1
-        |),
-        |m AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-        |         CAST(sum(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-        |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-        |         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-        |         CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
-        |  FROM dly
-        |),
+      s"""WITH $ClickViewMomentsSql,
         |c AS (
         |  SELECT n, sx, sy,
         |         CAST(sxx * n - sx * sx AS DOUBLE) AS cxx,
@@ -2837,13 +2588,8 @@ private[graft] object StatsInferenceQueries {
     // exact HUGEINT numerators/denominator, per-value pico-unit
     // contributions (floor(x*1e12 + 0.5)) summed order-free.
     "q397_ad2" ->
-      """WITH pts AS MATERIALIZED (
-        |  SELECT CAST(round(value * 100) AS BIGINT) AS v,
-        |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS c1,
-        |         CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS c2
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IN ('click', 'view')
-        |  GROUP BY 1
+      s"""WITH pts AS MATERIALIZED (
+        |$TwoGroupGrainSql
         |),
         |t AS (SELECT CAST(sum(c1) AS BIGINT) AS n1,
         |             CAST(sum(c2) AS BIGINT) AS n2 FROM pts),

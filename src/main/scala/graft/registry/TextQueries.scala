@@ -383,11 +383,7 @@ private[graft] object TextQueries {
          |SELECT doc_id, lang, score_de, score_en, score_es, score_fr, lang_pred
          |FROM langpred""".stripMargin,
     "q37_quality" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, string_split(text, ' ') AS w,
-        |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT) AS n_tokens
-        |  FROM documents
-        |)
+      s"""WITH ${DocsBaseSql("text")}
         |SELECT doc_id, n_tokens,
         |       CAST(len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')) AS INT) AS n_bpe,
         |       CASE WHEN length(text) = 0 THEN 0.0
@@ -395,11 +391,7 @@ private[graft] object TextQueries {
         |                       / length(text), 4) END AS punct_ratio,
         |       CAST(len(list_distinct(w)) AS INT) AS n_distinct,
         |       round(CAST(length(text) - (n_tokens - 1) AS DOUBLE) / n_tokens, 4) AS avg_token_len,
-        |       CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-        |                  + 300 * len(list_distinct(w))
-        |                  + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-        |                                    - len(list_filter(w, x -> x = 'a'))) AS BIGINT)
-        |              * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS DOUBLE) / 10000.0 AS quality
+        |       CAST($QualityUnitsSql AS DOUBLE) / 10000.0 AS quality
         |FROM base""".stripMargin,
     // Rolling-fingerprint replay: direct per-window polynomial sums
     // with the Scala-precomputed 257^k mod 1e9+7 powers table — same
@@ -1007,23 +999,8 @@ private[graft] object TextQueries {
     // predicate, decile binning, exact-integer mean per bin.
     "q183_calibration" ->
       s"""WITH $GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS DOUBLE)
-         |           / 10000.0 AS quality
-         |  FROM base
-         |),
+         |${DocsBaseSql("text")},
+         |$QualitySql,
          |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
          |s AS (
          |  SELECT CAST(least(CAST(floor(quality * 10) AS INT), 9) AS INT) AS bin,
@@ -1118,22 +1095,8 @@ private[graft] object TextQueries {
     "q260_dataset_card" ->
       s"""WITH $MinhashPairsSql,
          |$GopherDocSql,
-         |base AS (
-         |  SELECT doc_id, text, lang, string_split(text, ' ') AS w,
-         |         CAST(length(text) - length(replace(text, ' ', '')) + 1 AS INT)
-         |           AS n_tokens
-         |  FROM documents
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |         CAST((CAST(4 * least(n_tokens, 100) * n_tokens
-         |                    + 300 * len(list_distinct(w))
-         |                    + 300 * (n_tokens - len(list_filter(w, x -> x = 'the'))
-         |                                      - len(list_filter(w, x -> x = 'a')))
-         |               AS BIGINT)
-         |               * 20000 + 1000 * n_tokens) // (2000 * n_tokens) AS BIGINT) AS qi
-         |  FROM base
-         |),
+         |${DocsBaseSql("text", "lang")},
+         |$QualityIntSql,
          |g AS (SELECT doc_id, (${gopherPassPred(2)}) AS gopher_pass FROM d),
          |agg AS (
          |  SELECT CAST(count(*) AS BIGINT) AS n_docs,

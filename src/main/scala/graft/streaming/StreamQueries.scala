@@ -193,10 +193,12 @@ object StreamQueries {
     * from the same checkpoint; the record spans both runs (returned
     * killed first).
     *
-    * Each start sets [[graft.GraftConf.StreamStatePartitions]] shuffle
-    * partitions — every stateful operator opens one state store PER
-    * partition PER micro-batch, so a bounded replay at the session's
-    * batch width pays that startup/commit overhead for no parallelism —
+    * Each start caps the shuffle partitions at
+    * [[graft.GraftConf.StreamStatePartitions]] — every stateful operator
+    * opens one state store PER partition PER micro-batch, so a bounded
+    * replay at a wide session's batch width pays that startup/commit
+    * overhead for no parallelism, while a session narrower than the cap
+    * keeps its own width (widening it would only add state stores) —
     * and, when the analyzed plan holds a `TransformWithState`, the
     * RocksDB state store it requires (the default HDFS-backed store
     * rejects it).
@@ -211,8 +213,10 @@ object StreamQueries {
       val stream = build()
       val tws = stream.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
       val w = stream.writeStream.outputMode(mode).option("checkpointLocation", ckpt)
+      val width = math.min(graft.GraftConf.StreamStatePartitions,
+        stream.sparkSession.sessionState.conf.numShufflePartitions)
       withConfs(stream.sparkSession,
-        ("spark.sql.shuffle.partitions" -> graft.GraftConf.StreamStatePartitions.toString) +:
+        ("spark.sql.shuffle.partitions" -> width.toString) +:
           (if (tws) Seq(StateStoreKey -> EventStream.RocksDbProvider) else Nil)) {
         sink(if (availableNow) w.trigger(Trigger.AvailableNow()) else w, name).start()
       }

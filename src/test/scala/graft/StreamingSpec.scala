@@ -802,10 +802,14 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)) -> r.getDouble(3))
       .toMap
 
+  /** `x` rounded half-up to 4 dp. */
+  private def dp4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** Recovered (keys, score) rows equal `want` per key at 4 dp. */
   private def assertScores(recovered: Seq[Row], want: Map[(Long, Long, String), Double]): Unit = {
     val got = recovered.map(r => (r.getLong(0), r.getLong(1), r.getString(2)) ->
-      BigDecimal(r.getDouble(3)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
+      dp4(r.getDouble(3))).toMap
     assert(got.size == recovered.size && got.keySet == want.keySet,
       s"${got.size} recovered keys vs ${want.size} batch keys")
     val off = got.filter { case (k, v) => v != want(k) }
@@ -840,4 +844,151 @@ class StreamingSpec extends SparkSpec {
       _.groupBy(scoreKeys.map(col): _*).agg(max(col("score")).as("score")))
     assertScores(crash, batchScores.filter(_._2 > 0))
   }
+
+  test("replay caps its state width at a narrower session's own width") {
+    // the test session runs 4 shuffle partitions, under the runner's cap
+    // of GraftConf.StreamStatePartitions: the stateful operator must run
+    // at the session's 4, not be widened to the cap
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val width = spark.sessionState.conf.numShufflePartitions
+    assert(width < GraftConf.StreamStatePartitions)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => seen.add(o.numShufflePartitions))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      StreamQueries.materialize(EventStream.tumblingCounts(
+        StreamQueries.streamEvents(spark, sfDir), "1 hour", "2 hours"))
+      // progress reaches listeners asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.streams.removeListener(listener)
+    assert(!seen.isEmpty, "no state operator progress was reported")
+    assert(seen.asScala.forall(_ == width),
+      s"state operators ran on ${seen.asScala.toSet} partitions, want $width")
+  }
+
+  // ---- the paper's streaming twin under any year-aligned micro-batch
+  // split: state carried between batches must equal a from-scratch
+  // recomputation over the years replayed so far ----
+
+  private lazy val shipYears: Seq[Int] = graft.sources.Tables(spark, sfDir).evidence
+    .select("year").distinct().collect().map(_.getInt(0)).toSeq.sorted
+
+  /** Consecutive ship years grouped into micro-batches: seed 0 gives
+    * every year its own batch, other seeds cut at random years.
+    */
+  private def yearBatches(seed: Int): Seq[Seq[Int]] =
+    if (seed == 0) shipYears.map(Seq(_))
+    else {
+      val rnd = new scala.util.Random(seed)
+      shipYears.foldLeft(Vector.empty[Vector[Int]]) { (acc, y) =>
+        if (acc.isEmpty || rnd.nextBoolean()) acc :+ Vector(y)
+        else acc.init :+ (acc.last :+ y)
+      }
+    }
+
+  /** lineitem, one file per batch of ship years in year order, paced
+    * one file per micro-batch.
+    */
+  private def yearBatchedEvidence(tag: String, batches: Seq[Seq[Int]]): DataFrame = {
+    val d = java.nio.file.Paths.get(graft.Scratch.dir(tag))
+    val lineitem = graft.sources.Tables(spark, sfDir).lineitem
+    batches.zipWithIndex.foreach { case (ys, i) =>
+      val tmp = java.nio.file.Paths.get(graft.Scratch.dir(s"$tag-tmp-$i"))
+      lineitem.filter(year(col("l_shipdate")).isin(ys: _*))
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = java.nio.file.Files.list(tmp)
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
+      val dst = d.resolve(f"batch-$i%02d.parquet")
+      java.nio.file.Files.copy(part, dst)
+      dst.toFile.setLastModified(1700000000000L + i * 60000L)
+    }
+    StreamQueries.evidence(paced(d.toString))
+  }
+
+  private type Key = (Long, Long, String)
+
+  /** byDatasource's dense scores with the scaffold opening one year
+    * before the first ship year, so every key's first rise is a peak.
+    */
+  private lazy val denseScores: DataFrame = graft.operators.AssociationScore.byDatasource(
+    graft.sources.Tables(spark, sfDir).evidence, firstYear = shipYears.head - 1)
+    .filter(col("year").isNotNull)
+
+  private lazy val scoreAt: Map[(Key, Int), Double] = denseScores
+    .filter(col("score").isNotNull)
+    .select(col("diseaseId").cast("long"), col("targetId").cast("long"),
+      col("datasourceId"), col("year"), col("score"))
+    .collect().map(r => ((r.getLong(0), r.getLong(1), r.getString(2)), r.getInt(3)) ->
+      r.getDouble(4)).toMap
+
+  private lazy val evidenceCounts: Map[(Key, Int), Long] = graft.sources.Tables(spark, sfDir)
+    .evidence.groupBy("diseaseId", "targetId", "datasourceId", "year").count()
+    .collect().map(r => ((r.getLong(0), r.getLong(1), r.getString(2)), r.getInt(3)) ->
+      r.getLong(4)).toMap
+
+  test("cumulative score under any year-aligned micro-batch split ≡ byDatasource at the batch's last year") {
+    val keys = evidenceCounts.keySet.map(_._1)
+    for (seed <- 0 to 2) {
+      val batches = yearBatches(seed)
+      val updates = StreamQueries.materialize(AssociationStream.cumulativeScores(
+          yearBatchedEvidence(s"split-score-$seed", batches)
+            .as[AssociationStream.EvidenceEvent]), "update")
+        .collect().map(r => ((r.getLong(0), r.getLong(1), r.getString(2)),
+          r.getLong(3), r.getDouble(4))).toSeq
+      // every (key, batch) with evidence: its cumulative count and the
+      // from-scratch score through the batch's last year
+      val want = keys.toSeq.flatMap { k =>
+        batches.scanLeft((0L, 0L)) { case ((_, cum), ys) =>
+          val c = ys.map(y => evidenceCounts.getOrElse((k, y), 0L)).sum
+          (c, cum + c)
+        }.tail.zip(batches).collect { case ((c, cum), ys) if c > 0 =>
+          (k, cum) -> dp4(scoreAt((k, ys.last)))
+        }
+      }.toMap
+      val got = updates.map { case (k, n, sc) => (k, n) -> dp4(sc) }.toMap
+      assert(got.size == updates.size && got.keySet == want.keySet,
+        s"seed $seed ($batches): ${updates.size} updates vs ${want.size} (key, batch) pairs")
+      val off = got.filter { case (kn, v) => v != want(kn) }
+      assert(off.isEmpty, s"seed $seed ($batches): ${off.size} updates differ, e.g. " +
+        off.take(3).map { case (kn, v) => s"$kn: $v vs ${want(kn)}" }.mkString("; "))
+    }
+  }
+
+  test("novelty peaks under any year-aligned micro-batch split ≡ Novelty.peaks summed over the batch's years") {
+    val peaks: Map[(Key, Int), Double] = graft.operators.Novelty.peaks(denseScores, scoreKeys)
+      .select(col("diseaseId").cast("long"), col("targetId").cast("long"),
+        col("datasourceId"), col("peakYear"), col("peak"))
+      .collect().map(r => ((r.getLong(0), r.getLong(1), r.getString(2)), r.getInt(3)) ->
+        r.getDouble(4)).toMap
+    val keys = peaks.keySet.map(_._1)
+    for (seed <- 0 to 2) {
+      val batches = yearBatches(seed)
+      val events = StreamQueries.materialize(AssociationStream.noveltyPeaks(
+          yearBatchedEvidence(s"split-peaks-$seed", batches)
+            .as[AssociationStream.EvidenceEvent]).toDF())
+        .select("diseaseId", "targetId", "datasourceId", "score", "peak")
+        .collect().map(r => ((r.getLong(0), r.getLong(1), r.getString(2)),
+          dp4(r.getDouble(3)), dp4(r.getDouble(4)))).toSeq
+      // a batch fires when its years hold a positive peak; the delta is
+      // their sum and the score the one at the batch's last year
+      val want = keys.toSeq.flatMap { k =>
+        batches.flatMap { ys =>
+          val delta = ys.flatMap(y => peaks.get((k, y))).sum
+          if (delta > 0) Some((k, dp4(scoreAt((k, ys.last))), dp4(delta))) else None
+        }
+      }
+      assert(events.sortBy(_.toString) == want.sortBy(_.toString),
+        s"seed $seed ($batches): ${events.size} peak events vs ${want.size} expected, " +
+          s"first differences: ${events.diff(want).take(3)} / ${want.diff(events).take(3)}")
+    }
+  }
 }
+

@@ -118,4 +118,31 @@ class SurveySyncSpec extends AnyFunSuite {
     assert(handRolled.isEmpty,
       s"sift loop outside KBestHeap (extend KBestHeap): ${handRolled.mkString(", ")}")
   }
+
+  test("shared oracle fragments and input frames are spelled only in QueryHelpers") {
+    // one spelling per recurring piece: a registry copy of a day bucket,
+    // the novelty decay, the quality numerator or the two-group grain is
+    // a second place for the engines to drift apart
+    import scala.jdk.CollectionConverters._
+    val pieces = Seq(
+      "epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000", // QueryHelpers.DaySql
+      "unix_micros(ts) div 86400000000", // QueryHelpers.dayOf
+      "exp(2.0 * (d.delta - 2.0))", // QueryHelpers.NoveltySql
+      "4 * least(n_tokens, 100)", // QueryHelpers.QualityUnitsSql
+      "FILTER (event_type = 'click') AS BIGINT) AS c1") // QueryHelpers.TwoGroupGrainSql
+    def code(line: String) = {
+      val t = line.trim
+      !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+    }
+    val copies = Files.list(Paths.get("src/main/scala/graft/registry")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "QueryHelpers.scala")
+      .toSeq.sortBy(_.toString)
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.filter(code)
+        pieces.filter(x => lines.exists(_.contains(x))).map(x => s"${p.getFileName}: $x")
+      }
+    assert(copies.isEmpty,
+      s"use the QueryHelpers fragment instead of a copy: ${copies.mkString("; ")}")
+  }
 }
