@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   *
   *  - BENCH_FULL.json: ONE json.load-able line, `schema`
   *    "graft-bench-1", full `"qNN_name"` keys at 3dp, `reps`, plus
-  *    metric/value/unit/sf. This is the cross-round diffable artifact.
+  *    metric/value/unit/sf and the `host` block (cores, heap_mb, spark,
+  *    git_sha) it ran on. This is the cross-round diffable artifact.
   *  - stdout: the most precise compaction that fits the driver's
   *    2000-char output window (full keys 3dp → 2dp → "qNN" → "NN" 1dp);
   *    same fields, possibly shortened keys — BENCH_FULL carries the
@@ -42,6 +43,13 @@ object BenchRender {
         ",\"full\":" + fmt(full, 3) + ",\"min6\":" + m6 + "}"
     }.mkString(",\"movers_min6\":{", ",", "}")
 
+  /** The host block: machine cores, driver heap, Spark version and the
+    * checkout's commit (null outside a git checkout).
+    */
+  def host(cores: Int, heapMb: Long, spark: String, gitSha: Option[String]): String =
+    s"""{"cores":$cores,"heap_mb":$heapMb,"spark":"${clean(spark)}","git_sha":""" +
+      gitSha.map(g => "\"" + clean(g) + "\"").getOrElse("null") + "}"
+
   /** One JSON line. keyMode: 0 = full "qNN_name", 1 = "qNN", 2 = "NN". */
   def line(
       results: Seq[(String, Either[String, Double])],
@@ -50,7 +58,8 @@ object BenchRender {
       reps: Int,
       dp: Int,
       keyMode: Int,
-      movers: Seq[(String, Double, Double, Either[String, Double])] = Nil): String = {
+      movers: Seq[(String, Double, Double, Either[String, Double])] = Nil,
+      host: String = ""): String = {
     def key(k: String): String = keyMode match {
       case 0 => k
       case 1 => k.split("_")(0)
@@ -69,14 +78,15 @@ object BenchRender {
       case (k, Right(v)) if headline(k) =>
         "\"" + k.split("_")(0) + "\":" + fmt(v, 3)
     }.mkString("{", ",", "}")
-    s"""{"schema":"$Schema","metric":"total","value":${fmt(total, 3)},"unit":"sec","reps":$reps,"queries":$qs,"hl_min6":$hl,"full":"BENCH_FULL.json","sf":"$sfDir"$errField${moversField(movers)}}"""
+    s"""{"schema":"$Schema","metric":"total","value":${fmt(total, 3)},"unit":"sec","reps":$reps,"queries":$qs,"hl_min6":$hl,"full":"BENCH_FULL.json","sf":"$sfDir"$errField${moversField(movers)}${if (host.isEmpty) "" else ",\"host\":" + host}}"""
   }
 
-  /** The stdout compaction ladder; BENCH_FULL always gets full(). */
+  /** The BENCH_FULL form: full keys at 3dp, with the host block. */
   def full(results: Seq[(String, Either[String, Double])],
       headline: Set[String], sfDir: String, reps: Int,
-      movers: Seq[(String, Double, Double, Either[String, Double])] = Nil): String =
-    line(results, headline, sfDir, reps, 3, 0, movers)
+      movers: Seq[(String, Double, Double, Either[String, Double])] = Nil,
+      host: String = ""): String =
+    line(results, headline, sfDir, reps, 3, 0, movers, host)
 
   /** Summary form for when even maximal key compaction overflows the
     * driver's output window (256 queries × "NN":1.2 alone is >2,500
@@ -205,6 +215,12 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
 
+  /** HEAD of the git checkout in the working directory, if there is one. */
+  def gitSha: Option[String] =
+    scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim)
+      .toOption.filter(_.matches("[0-9a-f]{40}"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -301,10 +317,12 @@ object Bench {
     // A subset run must never clobber the whole-registry artifact —
     // it lands in BENCH_SUBSET.json instead.
     val published = Bench.adjudicatedWalls(results, movers)
+    val host = BenchRender.host(Runtime.getRuntime.availableProcessors,
+      Runtime.getRuntime.maxMemory / (1 << 20), spark.version, Bench.gitSha)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
         if (only.nonEmpty) "BENCH_SUBSET.json" else "BENCH_FULL.json"),
-      BenchRender.full(published, headline, sfDir, reps, movers) + "\n")
+      BenchRender.full(published, headline, sfDir, reps, movers, host) + "\n")
     val out = BenchRender.compact(published, headline, sfDir, reps, 1900, movers)
     spark.stop()
     // printed after stop() so no Spark shutdown chatter lands between

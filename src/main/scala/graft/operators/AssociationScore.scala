@@ -108,12 +108,19 @@ object AssociationScore {
     // outnumber the active rows at every scale, never ride an exchange
     // again. Without it each stage re-exchanges at its own grain
     // (4 exchanges across byDatasource→overall→novelty; now 2, and the
-    // two that remain carry only compacted active-grain rows). No
-    // numPartitions is pinned, so AQE still coalesces adaptively.
+    // two that remain carry only compacted active-grain rows). The
+    // width is pinned to the session's shuffle partitions (cores on
+    // local[N], set by the deployer on a cluster), so AQE does not
+    // coalesce it: its compact active rows undercount the work behind
+    // it by the calendar span — each fans out to every year of its
+    // segment fill, then overall's (pair, year) aggregate and the
+    // novelty windows — and a byte-sized merge ran all of that in one
+    // task. At scale its partitions exceed AQE's advisory size anyway.
     val perYear = dated
       .groupBy((keyCols(keys) :+ col("year")): _*)
       .agg(graft.functions.TopKCollect.topKCollect(col("score"), topK).as("yrScores"))
-      .repartition(keyCols(PairKeys): _*)
+      .repartition(dated.sparkSession.sessionState.conf.numShufflePartitions,
+        keyCols(PairKeys): _*)
 
     // Cumulative harmonic score per active year via the O(K)-state
     // top-K window aggregate: the growing frame feeds each year's

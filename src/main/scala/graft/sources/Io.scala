@@ -5,8 +5,11 @@ import org.apache.spark.sql.types.StructType
 
 /** Format adapters beyond parquet: CSV (the reference's dimension-table
   * format, cf. the csv lookups under /root/reference/data) and JSON-lines.
-  * Schemas are always supplied explicitly — schema inference is a full
-  * extra pass over the data and is never acceptable at scale.
+  * The CSV and JSON readers take their schema from the caller — their
+  * inference is a full extra pass over the data. The ORC and parquet
+  * reads here infer it from file footers (one job per read;
+  * `readParquetMerged` reads every footer); driver tables go through
+  * [[Tables]], which infers each schema once per session.
   */
 object Io {
 

@@ -6,11 +6,15 @@ import org.apache.spark.sql.functions._
 /** Typed access to the driver-provided parquet tables plus the derived
   * domain views (evidence / ontology / weights) that realize the
   * reference's data model on the TPC-H-ish testdata (see SURVEY.md §3).
+  * Every table is read with the schema [[Tables.schema]] resolved for
+  * it, so a read launches no schema-inference job after the first.
   */
 final case class Tables(spark: SparkSession, dir: String) {
 
-  def table(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schema(spark, path)).parquet(path)
+  }
 
   def lineitem: DataFrame = table("lineitem")
   def orders: DataFrame = table("orders")
@@ -109,6 +113,56 @@ final case class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
   import org.apache.spark.sql.types._
+
+  /** Session confs that change what parquet schema inference returns
+    * for the same files (`events` sets the first one).
+    */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** Path, its leaf files as (path, length, mtime), and [[SchemaConfs]]. */
+  private final case class SchemaKey(
+      path: String, files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  /** Per session, the resolved schemas. Only `StructType`s are held — no
+    * DataFrame, plan or RDD — so no query result is ever reused.
+    */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[SchemaKey, StructType]]()
+
+  /** The parquet schema at `path`, inferred by Spark once per session for
+    * each (path, leaf files, schema confs) key. A table rewritten at the
+    * same path, or read under a flipped conf, gets a new key and is
+    * inferred again; a missing path is never cached, so the read fails as
+    * an unresolved one would.
+    */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val key = SchemaKey(path, leafFiles(spark, path), SchemaConfs.map(spark.conf.getOption))
+    val cache = schemas.synchronized(schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()))
+    Option(cache.get(key)).getOrElse {
+      val resolved = spark.read.parquet(path).schema
+      cache.put(key, resolved)
+      resolved
+    }
+  }
+
+  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    } catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   /** Normalize `events.ts` to a session-tz `TimestampType` regardless of
     * how the driver's generator encoded it:

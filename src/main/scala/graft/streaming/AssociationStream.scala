@@ -140,6 +140,11 @@ object AssociationStream {
     * cumulative score rises above its previous value (the batch
     * engine's year-over-year `lag` becomes batch-over-batch state).
     * Emits nothing for batches that leave the score flat.
+    *
+    * One known difference: a key's first rise counts from a score of 0
+    * here, so it is a peak even when it lands in the scaffold's first
+    * year, where `Novelty.peaks`' `lag` is NULL (as in the reference)
+    * and the batch side has no peak.
     */
   def noveltyPeaks(
       evidence: Dataset[EvidenceEvent],

@@ -50,8 +50,8 @@ object StreamQueries {
         p.stateOperators.map(_.memoryUsedBytes).sum).maxOption.getOrElse(0L)))
   }
 
-  /** A driver parquet table as a file-source stream (schema probed from
-    * the parquet footer).
+  /** A driver parquet table as a file-source stream, with the schema
+    * [[graft.sources.Tables.schema]] resolves for the batch reads.
     */
   def streamTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -60,7 +60,7 @@ object StreamQueries {
     // file-valued basePath is rejected at partition inference — so feed
     // it a single-alternative {name} glob (matches only this file) and
     // pin basePath to the parent directory ourselves.
-    spark.readStream.schema(spark.read.parquet(path).schema)
+    spark.readStream.schema(graft.sources.Tables.schema(spark, path))
       .option("basePath", dir).parquet(s"$dir/{$name}.parquet")
   }
 

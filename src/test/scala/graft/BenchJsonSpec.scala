@@ -41,6 +41,36 @@ class BenchJsonSpec extends AnyFunSuite {
       (j \ "hl_min6" \ "q01") === JDouble(1.235))
   }
 
+  /** The host block's fields and types, where a file carries one. */
+  private def assertHost(j: JValue): Unit = {
+    val h = j \ "host"
+    assert(h.isInstanceOf[JObject], s"no host block: $h")
+    assert((h \ "cores").isInstanceOf[JInt])
+    assert((h \ "heap_mb").isInstanceOf[JInt])
+    assert((h \ "spark").isInstanceOf[JString])
+    assert((h \ "git_sha") match {
+      case JString(s) => s.matches("[0-9a-f]{40}")
+      case JNull => true
+      case _ => false
+    }, s"git_sha: ${h \ "git_sha"}")
+  }
+
+  test("full form carries the host block it ran on") {
+    val host = BenchRender.host(4, 7282, "4.1.2", Some("c" * 40))
+    val j = JsonMethods.parse(BenchRender.full(results, headline, "/tmp/sf", 6, host = host))
+    assertHost(j)
+    assert((j \ "host" \ "cores") === JInt(4))
+    assert((j \ "host" \ "heap_mb") === JInt(7282))
+    assert((j \ "host" \ "spark") === JString("4.1.2"))
+    assert((j \ "host" \ "git_sha") === JString("c" * 40))
+    // outside a git checkout the sha is null, and the line still parses
+    assertHost(JsonMethods.parse(BenchRender.full(results, headline, "/tmp/sf", 6,
+      host = BenchRender.host(4, 7282, "4.1.2", None))))
+    // the stdout ladder keeps its window and leaves the block to the file
+    assert((JsonMethods.parse(BenchRender.compact(results, headline, "/tmp/sf", 6, 1900))
+      \ "host") === JNothing)
+  }
+
   test("compaction ladder: fits the window, keeps schema + metric head") {
     // 256 queries can NOT fit per-query in 1900 chars (the r8 driver
     // truncation); the ladder must fall back to the summary form with
@@ -202,6 +232,8 @@ class BenchJsonSpec extends AnyFunSuite {
       if ((j \ "schema") != JNothing) {
         val qs = (j \ "queries").asInstanceOf[JObject].obj.map(_._1)
         assert(qs.nonEmpty && qs.forall(_.matches("q\\d+[a-z0-9_]*")))
+        // files written before the host block existed have none
+        if ((j \ "host") != JNothing) assertHost(j)
       }
     }
   }

@@ -437,6 +437,39 @@ class ScaleDesignSpec extends SparkSpec {
     assert(finalPlan.contains("BroadcastHashJoin"), "ontology/weights dims must broadcast")
   }
 
+  test("q02 keeps the scoring chain's pair exchange at the session's width") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    // The pair repartition's bytes undercount the work behind it by the
+    // calendar span (segment fill, overall's (pair, year) aggregate,
+    // the novelty windows), so a byte-sized AQE merge ran that whole
+    // stage in one task; its width is pinned to the session's instead.
+    val df = SparkEntry.queries("q02_assoc_overall")(spark, sfDir)
+    df.collect() // finalize THIS QueryExecution's adaptive plan
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    val all = nodes(df.queryExecution.executedPlan)
+    def isPair(s: ShuffleQueryStageExec) = s.shuffle.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name)) == Seq("diseaseId", "targetId")
+      case _ => false
+    }
+    val pairStages = all.collect { case s: ShuffleQueryStageExec if isPair(s) => s }
+    assert(pairStages.nonEmpty, s"no pair exchange in q02's final plan:\n${all.head}")
+    assert(pairStages.forall(_.shuffle.numPartitions == width),
+      pairStages.map(_.shuffle.numPartitions).mkString(", "))
+    val coalesced = all.collect {
+      case r: AQEShuffleReadExec if r.hasCoalescedPartition &&
+          (r.child match { case s: ShuffleQueryStageExec => isPair(s); case _ => false }) => r
+    }
+    assert(coalesced.isEmpty, s"the pair exchange was coalesced:\n${coalesced.mkString("\n")}")
+  }
+
   test("saltedAgg equals direct aggregation") {
     val t = tables
     val direct = t.evidence.groupBy("datasourceId")

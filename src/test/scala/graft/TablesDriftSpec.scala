@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -75,6 +76,33 @@ class TablesDriftSpec extends SparkSpec {
     dir
   }
 
+  /** Jobs launched while `body` runs. Listener events arrive in order,
+    * so a marker job before and after `body` brackets its jobs.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val key = "graft.spec.marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
+    }
+    def marker(m: String): Unit = {
+      spark.sparkContext.setLocalProperty(key, m)
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty(key, null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.contains("end") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val jobs = seen.toArray(Array.empty[String]).toSeq
+      assert(jobs.contains("end"), "the listener never saw the end marker")
+      jobs.dropWhile(_ != "start").dropWhile(_ == "start").takeWhile(_ != "end").size
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def readBack(dir: String): (DataType, Seq[Long]) = {
     val ev = Tables(spark, dir).events
     val tpe = ev.schema("ts").dataType
@@ -102,6 +130,52 @@ class TablesDriftSpec extends SparkSpec {
     val ev = Tables(spark, sfDir).events
     assert(ev.schema("ts").dataType === TimestampType)
     assert(ev.limit(1).count() === 1L)
+  }
+
+  test("a table's schema is inferred once per session: a second read launches no job") {
+    val path = s"$sfDir/nation.parquet"
+    Tables(spark, sfDir).table("nation")
+    // the counter sees an unresolved read's inference job
+    assert(jobsDuring(spark.read.parquet(path)) >= 1)
+    var again: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { again = Tables(spark, sfDir).table("nation") } === 0)
+    assert(again.schema === spark.read.parquet(path).schema)
+    assert(again.count() === spark.read.parquet(path).count())
+  }
+
+  test("a table rewritten at the same path is read with its new schema") {
+    val dir = fixtureDir("rewrite")
+    spark.range(3).toDF("a").write.parquet(s"$dir/t.parquet")
+    assert(Tables(spark, dir).table("t").schema.fieldNames.toSeq === Seq("a"))
+    spark.range(3).select(col("id").as("a"), col("id").cast("string").as("b"))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val t = Tables(spark, dir).table("t")
+    assert(t.schema.fieldNames.toSeq === Seq("a", "b"))
+    assert(t.orderBy("a").collect().map(_.getString(1)).toSeq === Seq("0", "1", "2"))
+  }
+
+  test("a flipped schema conf is resolved again, never served stale") {
+    val path = s"${writeNanosFixture()}/events.parquet"
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(Tables.schema(spark, path)("ts").dataType === LongType)
+      // Spark rejects TIMESTAMP(NANOS) without the conf
+      spark.conf.set(key, "false")
+      intercept[Exception](Tables.schema(spark, path))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("both encodings, each read twice in one session, normalise to identical micros") {
+    for (dir <- Seq(writeNanosFixture(), writeNtzFixture())) {
+      val first = readBack(dir)
+      assert(readBack(dir) === first)
+      assert(first === ((TimestampType, micros)))
+    }
   }
 
   test("streaming loader agrees with the batch loader on both encodings") {
