@@ -117,11 +117,20 @@ package object functions {
     org.apache.spark.sql.graftshim.columnOf(
       CanonicalUrl(org.apache.spark.sql.graftshim.expressionOf(s)))
 
-  /** Cosine similarity over quantized vectors (deterministic double). */
-  def quantizedCosine(a: Column, b: Column): Column =
-    quantizedDot(a, b).cast("double") /
-      (sqrt(quantizedDot(a, a).cast("double")) *
-        sqrt(quantizedDot(b, b).cast("double")))
+  /** L2 norm of a quantized vector: the IEEE sqrt of its exact
+    * integer self-dot (deterministic double).
+    */
+  def quantizedNorm(v: Column): Column =
+    sqrt(quantizedDot(v, v).cast("double"))
+
+  /** Cosine similarity of quantized vectors `a` and `b` over their
+    * precomputed [[quantizedNorm]]s `na` and `nb`: the exact integer
+    * dot, then one IEEE divide (deterministic double). A zero norm
+    * has no cosine; ANSI mode fails the divide, so callers drop zero
+    * vectors first.
+    */
+  def quantizedCosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    quantizedDot(a, b).cast("double") / (na * nb)
 
   /** Int8 scalar quantization with a per-vector scale: q_i =
     * round(x_i · 127 / max|x|) ∈ [−127, 127] — the compressed-index

@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   * across engines (SURVEY.md §3) — while the final cosine stays a
   * deterministic double (IEEE sqrt/div of exact inputs).
   *
+  * Every operator is built from the same few pieces: [[vectors]] (the
+  * coded vector and its norm, zero vectors dropped), [[querySide]]
+  * (the broadcast query rename), [[queryCos]] /
+  * [[graft.functions.quantizedCosine]] (the one cosine) and
+  * [[rankPerQuery]] (the one per-query ranking, ties by id) — the Spark
+  * twins of the `QueryHelpers` oracle fragments `VectorsSql`,
+  * `CosineSql` and `CosineRankSql`. Candidate generation (brute force,
+  * label filter, LSH bucket, IVF cell, PQ/sign shortlist) is what each
+  * operator adds.
+  *
   * Scale design: the query set is broadcast against the corpus (the
   * corpus is never shuffled); the LSH variant buckets the corpus by
   * deterministic hyperplane signs so only same-bucket candidates are
@@ -19,11 +29,64 @@ import org.apache.spark.sql.functions._
   */
 object SimilaritySearch {
 
-  private def prepared(df: DataFrame, idCol: String, embCol: String): DataFrame =
-    spread(df).select(
-        col(idCol).as("id"),
-        quantize(col(embCol)).as("qv"))
-      .withColumn("nrm", sqrt(quantizedDot(col("qv"), col("qv")).cast("double")))
+  /** `(id, qv, carry*, nrm)`: each vector coded by `code` (the ×1000
+    * quantizer unless given) with its norm. Zero-norm vectors are
+    * dropped here, once for every operator: cosine is undefined for
+    * them, and dividing by a zero norm fails the task under ANSI.
+    */
+  private def vectors(
+      df: DataFrame,
+      idCol: String,
+      embCol: String,
+      code: Column => Column = quantize(_),
+      carry: Seq[Column] = Nil): DataFrame =
+    spread(df)
+      .select(col(idCol).as("id") +: code(col(embCol)).as("qv") +: carry: _*)
+      .withColumn("nrm", quantizedNorm(col("qv")))
+      .filter(col("nrm") > 0d)
+
+  /** The broadcast query side of a [[vectors]] frame: `(query_id, qqv,
+    * qnrm, carry*)`.
+    */
+  private def querySide(v: DataFrame, carry: Column*): DataFrame =
+    broadcast(v.select(Seq(col("id").as("query_id"), col("qv").as("qqv"),
+      col("nrm").as("qnrm")) ++ carry: _*))
+
+  /** Cosine of corpus vector `qv` against query vector `qqv`. */
+  private def queryCos: Column =
+    quantizedCosine(col("qv"), col("qqv"), col("nrm"), col("qnrm"))
+
+  /** The first `k` rows of each query_id by `order`, numbered 1..k in
+    * column `rank`, ties by id ascending — the order recallAtK, mrrAtK
+    * and ndcgAtK compare against and `CosineRankSql` mirrors.
+    */
+  private def rankPerQuery(
+      scored: DataFrame, order: Column, k: Int, rank: String = "rank"): DataFrame =
+    scored
+      .withColumn(rank,
+        row_number().over(Window.partitionBy("query_id").orderBy(order, col("id"))))
+      .filter(col(rank) <= k)
+
+  /** Per-label centroids `(lbl, cv, cnrm)` of a [[vectors]] frame that
+    * carries `lbl`: per-(label, dim) integer sums of the quantized
+    * vectors — posexplode fans each vector into (label, dim, value)
+    * rows whose sum is exact and order-independent, with map-side
+    * partial aggregation absorbing most of the fan-out before the
+    * shuffle. The sum stands in for the mean (the 1/count cancels
+    * inside cosine), so everything stays integer until the final
+    * sqrt/divide. A zero centroid is dropped, as [[vectors]] drops a
+    * zero vector. Per-dim sums must fit a Long — at >~10⁹ rows per
+    * label feed a sampled split.
+    */
+  private def labelCentroids(v: DataFrame): DataFrame =
+    v.select(col("lbl"), posexplode(col("qv")))
+      .groupBy(col("lbl"), col("pos"))
+      .agg(sum("col").as("s"))
+      .groupBy("lbl")
+      .agg(array_sort(collect_list(struct(col("pos"), col("s")))).as("ps"))
+      .select(col("lbl"), transform(col("ps"), x => x.getField("s")).as("cv"))
+      .withColumn("cnrm", quantizedNorm(col("cv")))
+      .filter(col("cnrm") > 0)
 
   /** Exact brute-force cosine top-k of `queries` against `corpus`.
     * Output: (query_id, id, rank, cos). Ties broken by id ascending —
@@ -35,16 +98,10 @@ object SimilaritySearch {
       k: Int = 5,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val c = prepared(corpus, idCol, embCol)
-    val q = prepared(queries, idCol, embCol)
-      .select(col("id").as("query_id"), col("qv").as("qqv"), col("nrm").as("qnrm"))
-    val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("qqv")).cast("double") / (col("nrm") * col("qnrm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val scored = vectors(corpus, idCol, embCol)
+      .join(querySide(vectors(queries, idCol, embCol)), col("id") =!= col("query_id"))
+      .withColumn("cos", queryCos)
+    rankPerQuery(scored, col("cos").desc, k)
       .select(col("query_id"), col("id"), col("rank"), round(col("cos"), 4).as("cos"))
   }
 
@@ -70,21 +127,13 @@ object SimilaritySearch {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    def prep(df: DataFrame) = spread(df).select(
-        col(idCol).as("id"), quantize(col(embCol)).as("qv"),
-        col(labelCol).as("lbl"))
-      .withColumn("nrm", sqrt(quantizedDot(col("qv"), col("qv")).cast("double")))
-    val c = prep(corpus)
-    val q = prep(anchors).select(col("id").as("query_id"),
-      col("qv").as("qqv"), col("nrm").as("qnrm"), col("lbl").as("qlbl"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))
-    c.join(broadcast(q),
-        col("id") =!= col("query_id") && col("lbl") =!= col("qlbl"))
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("qqv")).cast("double") /
-          (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    def labeled(df: DataFrame) =
+      vectors(df, idCol, embCol, carry = Seq(col(labelCol).as("lbl")))
+    val q = querySide(labeled(anchors), col("lbl").as("qlbl"))
+    val scored = labeled(corpus)
+      .join(q, col("id") =!= col("query_id") && col("lbl") =!= col("qlbl"))
+      .withColumn("cos", queryCos)
+    rankPerQuery(scored, col("cos").desc, k)
       .select(col("query_id"), col("qlbl").as("anchor_label"),
         col("id"), col("lbl").as("neg_label"),
         col("rank"), round(col("cos"), 4).as("cos"))
@@ -97,9 +146,7 @@ object SimilaritySearch {
     * codes; scales cancel in cosine, so there is no dequantization on
     * the hot path. At 100 TB this is the memory lever: the broadcast
     * query table and the scanned corpus codes are 4× smaller than f32,
-    * and the integer dot stays exact and engine-portable. Zero-norm
-    * codes (all-zero vectors) are excluded on both sides — cosine is
-    * undefined for them.
+    * and the integer dot stays exact and engine-portable.
     *
     * Output: (query_id, id, rank, cos8), ties by id ascending.
     */
@@ -109,19 +156,11 @@ object SimilaritySearch {
       k: Int = 5,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    def prep(df: DataFrame) = spread(df)
-      .select(col(idCol).as("id"), quantizeInt8(col(embCol)).as("qv"))
-      .withColumn("nrm", sqrt(quantizedDot(col("qv"), col("qv")).cast("double")))
-      .filter(col("nrm") > 0d)
-    val c = prep(corpus)
-    val q = prep(queries)
-      .select(col("id").as("query_id"), col("qv").as("qqv"), col("nrm").as("qnrm"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos8").desc, col("id"))
-    c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("cos8",
-        quantizedDot(col("qv"), col("qqv")).cast("double") / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    def codes(df: DataFrame) = vectors(df, idCol, embCol, code = quantizeInt8)
+    val scored = codes(corpus)
+      .join(querySide(codes(queries)), col("id") =!= col("query_id"))
+      .withColumn("cos8", queryCos)
+    rankPerQuery(scored, col("cos8").desc, k)
       .select(col("query_id"), col("id"), col("rank"), round(col("cos8"), 4).as("cos8"))
   }
 
@@ -153,8 +192,7 @@ object SimilaritySearch {
       shortlist: Int = 50,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    def packed(df: DataFrame) = prepared(df, idCol, embCol)
-      .filter(col("nrm") > 0d)
+    def packed(df: DataFrame) = vectors(df, idCol, embCol)
       .withColumn("h1", expr(
         "aggregate(zip_with(slice(qv, 1, 32), sequence(0, 31), " +
           "(x, i) -> IF(x > 0L, shiftleft(1L, i), 0L)), 0L, " +
@@ -163,29 +201,18 @@ object SimilaritySearch {
         "aggregate(zip_with(slice(qv, 33, 32), sequence(0, 31), " +
           "(x, i) -> IF(x > 0L, shiftleft(1L, i), 0L)), 0L, " +
           "(acc, b) -> acc + b)"))
-    val c = packed(corpus)
-    val q = packed(queries).select(col("id").as("query_id"),
-      col("qv").as("qqv"), col("nrm").as("qnrm"),
-      col("h1").as("qh1"), col("h2").as("qh2"))
-    val wHam = Window.partitionBy("query_id")
-      .orderBy(col("hamming"), col("id"))
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("id"))
-    c.join(broadcast(q), col("id") =!= col("query_id"))
+    val q = querySide(packed(queries), col("h1").as("qh1"), col("h2").as("qh2"))
+    val hammed = packed(corpus).join(q, col("id") =!= col("query_id"))
       .withColumn("hamming",
         expr("CAST(bit_count(h1 ^ qh1) + bit_count(h2 ^ qh2) AS BIGINT)"))
-      .withColumn("__sr", row_number().over(wHam))
-      .filter(col("__sr") <= shortlist)
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("qqv")).cast("double") /
-          (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+    val scored = rankPerQuery(hammed, col("hamming"), shortlist, "__sr")
+      .withColumn("cos", queryCos)
+    rankPerQuery(scored, col("cos").desc, k)
       .select(col("query_id"), col("id"), col("rank"),
         round(col("cos"), 4).as("cos"), col("hamming"))
   }
 
-  /** Maximal-marginal-relevance diversified top-k (G121, Carbonell &
+  /** Maximal-marginal-relevance diversified top-3 (G121, Carbonell &
     * Goldstein 1998) — the de-duplicating retrieval layer every RAG
     * stack runs over its ANN shortlist: plain top-k returns five
     * copies of the same near-duplicate passage; MMR greedily picks
@@ -193,59 +220,48 @@ object SimilaritySearch {
     * against redundancy to what is already selected.
     *
     * Determinism: relevance and candidate-pair similarities are the
-    * exact-integer-dot cosines; the greedy rounds are UNROLLED (k
-    * fixed) with every argmax totally ordered by (score desc, id);
-    * scores publish 4dp, comparisons run on raw identical doubles.
+    * exact-integer-dot cosines; the three greedy rounds are UNROLLED
+    * (a fixed depth, the oracle's contract) with every argmax totally
+    * ordered by (score desc, id); scores publish 4dp, comparisons run
+    * on raw identical doubles.
     *
     * Scale shape: the selection never touches the corpus — a bounded
     * `pool` shortlist per query (the [[bruteForceTopK]] window) plus
     * its pool² pairwise sims; all joins ride the query key.
     *
-    * Output: (query_id, rank, id, rel, mmr) — rank 1..k; the first
+    * Output: (query_id, rank, id, rel, mmr) — rank 1..3; the first
     * pick's mmr is λ·rel (empty-selection penalty 0).
     */
   def mmrTopK(
       corpus: DataFrame,
       queries: DataFrame,
-      k: Int = 3,
       pool: Int = 8,
       lambdaRel: Double = 0.7,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    require(k == 3, "fixed unroll depth (oracle contract)")
-    val c = prepared(corpus, idCol, embCol)
-    val q = prepared(queries, idCol, embCol)
-      .select(col("id").as("query_id"), col("qv").as("qqv"),
-        col("nrm").as("qnrm"))
-    val wRel = Window.partitionBy("query_id").orderBy(col("rel").desc, col("id"))
-    val cand = c.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("rel",
-        quantizedDot(col("qv"), col("qqv")).cast("double") /
-          (col("nrm") * col("qnrm")))
-      .withColumn("__rk", row_number().over(wRel))
-      .filter(col("__rk") <= pool)
+    val rel = vectors(corpus, idCol, embCol)
+      .join(querySide(vectors(queries, idCol, embCol)), col("id") =!= col("query_id"))
+      .withColumn("rel", queryCos)
+    val cand = rankPerQuery(rel, col("rel").desc, pool, "__rk")
       .select(col("query_id"), col("id"), col("rel"), col("qv"), col("nrm"))
       .localCheckpoint() // feeds the sims self-join and every round
     val sims = cand.as("x").join(cand.as("y"),
         col("x.query_id") === col("y.query_id") && col("x.id") =!= col("y.id"))
       .select(col("x.query_id").as("query_id"), col("x.id").as("a"),
         col("y.id").as("b"),
-        (quantizedDot(col("x.qv"), col("y.qv")).cast("double") /
-          (col("x.nrm") * col("y.nrm"))).as("sim"))
+        quantizedCosine(col("x.qv"), col("y.qv"), col("x.nrm"), col("y.nrm")).as("sim"))
       .localCheckpoint() // probed by rounds 2 and 3
+    // the best candidate of each query's round: one per-query pick
+    def pick(round: DataFrame, score: Column) = rankPerQuery(round, score.desc, 1, "__rk")
     val pool0 = cand.select("query_id", "id", "rel")
-    val s1 = pool0
-      .withColumn("__rk", row_number().over(wRel)).filter(col("__rk") === 1)
+    val s1 = pick(pool0, col("rel"))
       .select(col("query_id"), col("id").as("s1"), col("rel").as("rel1"))
     val r2 = pool0.join(s1, "query_id").filter(col("id") =!= col("s1"))
       .join(sims.select(col("query_id"), col("a").as("id"),
         col("b").as("s1"), col("sim").as("__p1")), Seq("query_id", "id", "s1"))
       .withColumn("__sc",
         lit(lambdaRel) * col("rel") - lit(1.0 - lambdaRel) * col("__p1"))
-    val wSc = Window.partitionBy("query_id")
-      .orderBy(col("__sc").desc, col("id"))
-    val s2 = r2.withColumn("__rk", row_number().over(wSc))
-      .filter(col("__rk") === 1)
+    val s2 = pick(r2, col("__sc"))
       .select(col("query_id"), col("s1"), col("rel1"),
         col("id").as("s2"), col("rel").as("rel2"), col("__sc").as("sc2"))
     val r3 = pool0.join(s2, "query_id")
@@ -256,8 +272,7 @@ object SimilaritySearch {
         col("b").as("s2"), col("sim").as("__p2")), Seq("query_id", "id", "s2"))
       .withColumn("__sc", lit(lambdaRel) * col("rel") -
         lit(1.0 - lambdaRel) * greatest(col("__p1"), col("__p2")))
-    val s3 = r3.withColumn("__rk", row_number().over(wSc))
-      .filter(col("__rk") === 1)
+    val s3 = pick(r3, col("__sc"))
       .select(col("query_id"), col("s1"), col("rel1"), col("s2"), col("rel2"),
         col("sc2"), col("id").as("s3"), col("rel").as("rel3"),
         col("__sc").as("sc3"))
@@ -307,8 +322,8 @@ object SimilaritySearch {
       embCol: String = "embedding"): DataFrame = {
     require(dims % subspaces == 0, "subspaces must divide dims")
     val subDim = dims / subspaces
-    val c = prepared(corpus, idCol, embCol)
-    val q = prepared(queries, idCol, embCol)
+    val c = vectors(corpus, idCol, embCol)
+    val q = vectors(queries, idCol, embCol)
 
     // deterministic codebook seeds: the codebookSize corpus vectors
     // with smallest md5(id) (distributed TakeOrdered, no global sort),
@@ -350,22 +365,16 @@ object SimilaritySearch {
     val adist = (0 until subspaces)
       .map(j => element_at(col(s"t$j"), col(s"c$j").cast("int") + 1))
       .reduce(_ + _)
-    val wA = Window.partitionBy("query_id").orderBy(col("adist"), col("id"))
-    val cand = cCodes.join(broadcast(qTabs), col("id") =!= col("query_id"))
-      .withColumn("adist", adist)
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= shortlist)
+    val cand = rankPerQuery(
+        cCodes.join(broadcast(qTabs), col("id") =!= col("query_id"))
+          .withColumn("adist", adist),
+        col("adist"), shortlist, "arank")
       .select(col("query_id"), col("id"))
 
     // stage 2: exact integer-cosine re-rank of the shortlist only
-    val qSide = broadcast(q.select(
-      col("id").as("query_id"), col("qv").as("qqv"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))
-    cand.join(c, Seq("id")).join(qSide, Seq("query_id"))
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("qqv")).cast("double") / (col("nrm") * col("qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val scored = cand.join(c, Seq("id")).join(querySide(q), Seq("query_id"))
+      .withColumn("cos", queryCos)
+    rankPerQuery(scored, col("cos").desc, k)
       .select(col("query_id"), col("id"), col("rank"), round(col("cos"), 4).as("cos"))
   }
 
@@ -398,19 +407,6 @@ object SimilaritySearch {
       }: _*)
   }
 
-  /** IVF (inverted-file) ANN: partition the corpus into Voronoi cells
-    * around `nCentroids` deterministic seed vectors, then search only
-    * the `nProbe` cells nearest to each query — the classic
-    * coarse-quantizer layout (FAISS IVF-Flat) expressed as Spark joins.
-    *
-    * Centroid seeds are corpus vectors picked by an even stride over
-    * vec_id order (deterministic, no training dependency); assignment
-    * scores all `nCentroids` cells IN-ROW against a one-row broadcast
-    * centroid array ([[centArray]]/[[topCells]]) — a pure projection,
-    * zero corpus exchange. At 100 TB the scored join is an equi-join
-    * on cell id — work scales with corpus/nCentroids×nProbe, not the
-    * full corpus.
-    */
   /** The centroid table collapsed to ONE row holding a sorted array of
     * (cell, cv, cnrm) structs, broadcast. Joining this against the
     * corpus is a broadcast nested-loop of exactly one row, so cell
@@ -431,8 +427,8 @@ object SimilaritySearch {
   private def topCells(keep: Int): Column =
     slice(
       array_sort(transform(col("cents"), c => struct(
-        (-quantizedDot(col("qv"), c.getField("cv")).cast("double") /
-          (col("nrm") * c.getField("cnrm"))).as("negSim"),
+        (-quantizedCosine(col("qv"), c.getField("cv"), col("nrm"), c.getField("cnrm")))
+          .as("negSim"),
         c.getField("cell").as("cell")))),
       1, keep)
 
@@ -455,7 +451,7 @@ object SimilaritySearch {
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("cell"),
         transform(col("pm"), p => round(p.getField("m")).cast("long")).as("cv"))
-      .withColumn("cnrm", sqrt(quantizedDot(col("cv"), col("cv")).cast("double")))
+      .withColumn("cnrm", quantizedNorm(col("cv")))
 
   /** Deterministic pseudo-random seed pick: the nCentroids corpus
     * vectors with smallest md5(id). orderBy+limit plans as a
@@ -496,7 +492,7 @@ object SimilaritySearch {
       nCentroids: Int = 16,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val c = prepared(corpus, idCol, embCol)
+    val c = vectors(corpus, idCol, embCol)
     val top2 = element_at(col("__t2"), 1)
     val second = element_at(col("__t2"), 2)
     c.join(centArray(seedCentroids(c, nCentroids)))
@@ -512,6 +508,23 @@ object SimilaritySearch {
       .agg(count(lit(1)).as("n"), round(avg(col("__s")), 4).as("avg_silhouette"))
   }
 
+  /** IVF (inverted-file) ANN: partition the corpus into Voronoi cells
+    * around `nCentroids` deterministic seed vectors, then search only
+    * the `nProbe` cells nearest to each query — the classic
+    * coarse-quantizer layout (FAISS IVF-Flat) expressed as Spark joins.
+    *
+    * Centroid seeds are the corpus vectors with smallest md5(id)
+    * ([[seedCentroids]]; deterministic, no training dependency),
+    * optionally refined by `lloydIters` Lloyd steps; assignment
+    * scores all `nCentroids` cells IN-ROW against a one-row broadcast
+    * centroid array ([[centArray]]/[[topCells]]) — a pure projection,
+    * zero corpus exchange. At 100 TB the scored join is an equi-join
+    * on cell id — work scales with corpus/nCentroids×nProbe, not the
+    * full corpus.
+    *
+    * Output: (query_id, id, rank, cos) — the [[bruteForceTopK]]
+    * contract.
+    */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -522,8 +535,8 @@ object SimilaritySearch {
       replication: Int = 1,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val c = prepared(corpus, idCol, embCol)
-    val q = prepared(queries, idCol, embCol)
+    val c = vectors(corpus, idCol, embCol)
+    val q = vectors(queries, idCol, embCol)
 
     val seeds = seedCentroids(c, nCentroids)
 
@@ -551,21 +564,13 @@ object SimilaritySearch {
     // rises sharply on weakly-clustered data. A (query, corpus) pair
     // can then meet in up to min(r, nProbe) cells, so pairs are
     // reduced to one row (cos is identical per pair) before ranking.
-    val corpusCells = assign(c, replication)
-    val queryCells = assign(q, nProbe)
-      .select(col("id").as("query_id"), col("qv").as("qqv"),
-        col("nrm").as("qnrm"), col("cell"))
-
-    val scored = corpusCells.join(broadcast(queryCells), Seq("cell"))
+    val scored = assign(c, replication)
+      .join(querySide(assign(q, nProbe), col("cell")), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("qqv")).cast("double") / (col("nrm") * col("qnrm")))
+      .withColumn("cos", queryCos)
       .groupBy("query_id", "id")
       .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankPerQuery(scored, col("cos").desc, k)
       .select(col("query_id"), col("id"), col("rank"), round(col("cos"), 4).as("cos"))
   }
 
@@ -586,7 +591,7 @@ object SimilaritySearch {
       bucketCap: Int = graft.GraftConf.LshBucketCap,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val c = prepared(corpus, idCol, embCol)
+    val c = vectors(corpus, idCol, embCol)
       .withColumn("bucket", lshBucket(col("qv"), planes, dims))
     // bucket sizes via groupBy + broadcast join-back, NOT a window: the
     // key space is 2^planes (256) buckets, so a bucket-partitioned
@@ -604,8 +609,7 @@ object SimilaritySearch {
       .memberPairs(c.join(broadcast(counts), "bucket"),
         Seq("bucket"), struct(col("id"), col("qv"), col("nrm")))
       .withColumn("cos",
-        quantizedDot(col("a.qv"), col("b.qv")).cast("double") /
-          (col("a.nrm") * col("b.nrm")))
+        quantizedCosine(col("a.qv"), col("b.qv"), col("a.nrm"), col("b.nrm")))
       .filter(col("cos") >= minCos)
       .select(col("a.id").as("idA"), col("b.id").as("idB"),
         round(col("cos"), 4).as("cos"))
@@ -646,20 +650,13 @@ object SimilaritySearch {
       dims: Int = 64,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val c = prepared(corpus, idCol, embCol)
+    def bucketed(df: DataFrame) = vectors(df, idCol, embCol)
       .withColumn("bucket", lshBucket(col("qv"), planes, dims))
-    val q = prepared(queries, idCol, embCol)
-      .withColumn("bucket", lshBucket(col("qv"), planes, dims))
-      .select(col("id").as("query_id"), col("qv").as("qqv"),
-        col("nrm").as("qnrm"), col("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
+    val scored = bucketed(corpus)
+      .join(querySide(bucketed(queries), col("bucket")), Seq("bucket"))
       .filter(col("id") =!= col("query_id"))
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("qqv")).cast("double") / (col("nrm") * col("qnrm")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cos", queryCos)
+    rankPerQuery(scored, col("cos").desc, k)
       .select(col("query_id"), col("id"), col("rank"), round(col("cos"), 4).as("cos"))
   }
 
@@ -668,18 +665,10 @@ object SimilaritySearch {
     * its most-cosine-similar centroid. The domain/topic-classifier
     * primitive of a curation pipeline.
     *
-    * Scale design: centroids are per-(label, dim) integer sums of the
-    * quantized vectors — posexplode fans each vector into 64 (label,
-    * dim, value) rows whose sum is exact and order-independent, with
-    * map-side partial aggregation absorbing most of the fan-out before
-    * the shuffle. Cosine against a centroid uses the UN-normalized sum
-    * (the 1/count of the mean cancels inside cosine), so everything
-    * stays integer until the final IEEE-exact sqrt/divide — the tiny
-    * (one row per label) centroid table is broadcast and the test set
-    * is never shuffled. Ties broken by label ascending. Note: per-dim
-    * sums must fit a Long — at >~10⁹ train rows per label feed a
-    * sampled train split (the centroid estimate converges long
-    * before that).
+    * Scale design: centroids are [[labelCentroids]]' exact integer
+    * sums — the tiny (one row per label) centroid table is broadcast
+    * and the test set is never shuffled. Ties broken by label
+    * ascending.
     *
     * Output: (idCol, keep*, pred, cos) — `keep` columns (e.g. the true
     * label for a confusion rollup) ride along from the test side, so
@@ -692,31 +681,19 @@ object SimilaritySearch {
       embCol: String = "embedding",
       labelCol: String = "label",
       keep: Seq[String] = Nil): DataFrame = {
-    val sums = spread(train)
-      .select(col(labelCol).as("__lbl"), quantize(col(embCol)).as("qv"))
-      .select(col("__lbl"), posexplode(col("qv")))
-      .groupBy(col("__lbl"), col("pos"))
-      .agg(sum("col").as("s"))
-    val cents = sums
-      .groupBy("__lbl")
-      .agg(array_sort(collect_list(struct(col("pos"), col("s")))).as("ps"))
-      .select(
-        col("__lbl").as("pred"),
-        transform(col("ps"), x => x.getField("s")).as("cv"))
-      .withColumn("cnrm", sqrt(quantizedDot(col("cv"), col("cv")).cast("double")))
-    val te = spread(test)
-      .select(col(idCol).as("id") +: quantize(col(embCol)).as("qv") +:
-        keep.map(col): _*)
-      .withColumn("nrm", sqrt(quantizedDot(col("qv"), col("qv")).cast("double")))
+    val cents = labelCentroids(
+        vectors(train, idCol, embCol, carry = Seq(col(labelCol).as("lbl"))))
+      .withColumnRenamed("lbl", "pred")
     val w = Window.partitionBy("id").orderBy(col("cos").desc, col("pred"))
-    te.crossJoin(broadcast(cents))
-      .withColumn("cos",
-        quantizedDot(col("qv"), col("cv")).cast("double") / (col("nrm") * col("cnrm")))
+    vectors(test, idCol, embCol, carry = keep.map(col))
+      .crossJoin(broadcast(cents))
+      .withColumn("cos", quantizedCosine(col("qv"), col("cv"), col("nrm"), col("cnrm")))
       .withColumn("r", row_number().over(w))
       .filter(col("r") === 1)
       .select(col("id").as(idCol) +: keep.map(col) :+ col("pred") :+
         round(col("cos"), 4).as("cos"): _*)
   }
+
 
   /** Deterministic ±1 Johnson–Lindenstrauss sign matrix (inDims ×
     * outDims), derived from md5 parity so any engine can rebuild it —
@@ -758,8 +735,7 @@ object SimilaritySearch {
     val sp = (0 until outDims).map(j => col(s"p$j") * col(s"p$j")).reduce(_ + _)
     projected
       .withColumn("norm_ratio",
-        round(sqrt(sp.cast("double") / outDims) /
-          sqrt(quantizedDot(col("qv"), col("qv")).cast("double")), 4))
+        round(sqrt(sp.cast("double") / outDims) / quantizedNorm(col("qv")), 4))
       .select(col("id").as(idCol) +:
         (0 until outDims).map(j => col(s"p$j")) :+ col("norm_ratio"): _*)
   }
@@ -856,9 +832,9 @@ object SimilaritySearch {
     * as probable annotation errors (Northcutt's confident-learning
     * intuition reduced to the centroid geometry G22 already uses).
     *
-    * Scale shape: centroids are the same exact per-(label, dim)
-    * integer sums as [[centroidClassify]] (map-side combined
-    * posexplode fan, label-count-sized result broadcast back); the
+    * Scale shape: centroids are [[labelCentroids]]' exact integer
+    * sums, as in [[centroidClassify]] (label-count-sized, broadcast
+    * back); the
     * own-label attach is a broadcast join, cosine a projection, and
     * the outlier pick a label-partitioned rank ordered (cos asc, id)
     * — O(k) survivors per label. Self-inclusion in the centroid is
@@ -872,30 +848,15 @@ object SimilaritySearch {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val vecs = spread(df)
-      .select(col(idCol).cast("long").as("id"),
-        col(labelCol).cast("long").as("lbl"),
-        quantize(col(embCol)).as("qv"))
-      .withColumn("nrm", sqrt(quantizedDot(col("qv"), col("qv")).cast("double")))
-      .filter(col("nrm") > 0)
-    val cents = vecs
-      .select(col("lbl"), posexplode(col("qv")))
-      .groupBy(col("lbl"), col("pos"))
-      .agg(sum("col").as("s"))
-      .groupBy("lbl")
-      .agg(array_sort(collect_list(struct(col("pos"), col("s")))).as("ps"))
-      .select(col("lbl"),
-        transform(col("ps"), x => x.getField("s")).as("cv"))
-      .withColumn("cnrm", sqrt(quantizedDot(col("cv"), col("cv")).cast("double")))
-      .filter(col("cnrm") > 0)
+    val vecs = vectors(df, idCol, embCol, carry = Seq(col(labelCol).cast("long").as("lbl")))
     val w = Window.partitionBy("lbl").orderBy(col("cos").asc, col("id"))
-    vecs.join(broadcast(cents), Seq("lbl"))
+    vecs.join(broadcast(labelCentroids(vecs)), Seq("lbl"))
       .withColumn("cos", round(
-        quantizedDot(col("qv"), col("cv")).cast("double") /
-          (col("nrm") * col("cnrm")), 4))
+        quantizedCosine(col("qv"), col("cv"), col("nrm"), col("cnrm")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("lbl").as("label"), col("id").as(idCol), col("cos"), col("rank"))
+      .select(col("lbl").as("label"), col("id").cast("long").as(idCol), col("cos"),
+        col("rank"))
   }
 
   /** Neighbor label-confusion matrix — hard-negative mining's summary
@@ -1120,11 +1081,11 @@ object SimilaritySearch {
       .select(col(idCol).cast("long").as("id"),
         quantize(col(embCol)).as("qv"),
         graft.functions.quantizeInt8(col(embCol)).as("q8"))
-      .withColumn("__nq", sqrt(d(quantizedDot(col("qv"), col("qv")))))
-      .withColumn("__n8", sqrt(d(quantizedDot(col("q8"), col("q8")))))
+      .withColumn("__nq", quantizedNorm(col("qv")))
+      .withColumn("__n8", quantizedNorm(col("q8")))
       .filter(col("__nq") > 0 && col("__n8") > 0)
       .withColumn("fid", round(
-        d(quantizedDot(col("qv"), col("q8"))) / (col("__nq") * col("__n8")), 6))
+        quantizedCosine(col("qv"), col("q8"), col("__nq"), col("__n8")), 6))
       .agg(
         count(lit(1)).as("n_vectors"),
         min(col("fid")).as("min_fid"),

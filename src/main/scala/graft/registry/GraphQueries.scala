@@ -218,7 +218,7 @@ private[graft] object GraphQueries {
     // arithmetic ((1 - 0.85), not a pre-folded 0.15, so both engines
     // hit the same doubles).
     "q108_pagerank" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |bsz AS (SELECT bucket, count(*) AS bn FROM withb GROUP BY 1),
          |ok AS (

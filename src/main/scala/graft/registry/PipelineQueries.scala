@@ -355,9 +355,10 @@ private[graft] object PipelineQueries {
         t.embeddings, t.embeddings.filter(col("vec_id") % 50 === 0))
     }),
     "q96_pq_ann" -> ((s, dir) => {
-      // product-quantization ANN: 4 subspaces x 8-entry codebooks,
-      // corpus encoded to 4 code ints, ADC search via per-query
-      // lookup tables — integer squared-L2 throughout
+      // product-quantization ANN at pqTopK's defaults: 16 subspaces
+      // of 4 dims x 16-entry codebooks, corpus encoded to 16 code
+      // ints, ADC search via per-query lookup tables — integer
+      // squared-L2 throughout
       val t = Tables(s, dir)
       SimilaritySearch.pqTopK(
         t.embeddings, t.embeddings.filter(col("vec_id") % 50 === 0))
@@ -800,7 +801,7 @@ private[graft] object PipelineQueries {
          |WHERE greatest(round(CAST(common AS DOUBLE) / szA, 3),
          |               round(CAST(common AS DOUBLE) / szB, 3)) >= 0.6""".stripMargin,
     "q34_ann_topk" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |scored AS (
          |  SELECT c.vec_id AS id, q.query_id,
@@ -812,7 +813,7 @@ private[graft] object PipelineQueries {
     // hard-negative replay: q34's scoring with labels carried and the
     // wrong-label predicate in the join.
     "q303_hard_negatives" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |lbl AS (SELECT vec_id, label FROM embeddings),
          |qs AS (
          |  SELECT n.vec_id AS query_id, n.q AS qq, n.n AS qn, l.label AS qlbl
@@ -841,7 +842,7 @@ private[graft] object PipelineQueries {
     // query's distances at the corpus codes, then exact integer-
     // cosine re-rank of the shortlist. 16 subspaces of 4 dims.
     "q96_pq_ann" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |cb AS (
          |  SELECT row_number() OVER (ORDER BY h) - 1 AS ci, q AS cq
          |  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, q
@@ -933,7 +934,7 @@ private[graft] object PipelineQueries {
     // total order; the penalty weight is WRITTEN (1.0 - 0.7) so both
     // engines fold the identical double.
     "q403_mmr" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn
          |       FROM nrm WHERE vec_id % 50 = 0),
          |rel AS MATERIALIZED (
@@ -1041,7 +1042,7 @@ private[graft] object PipelineQueries {
          |SELECT query_id, id, rank, round(cos, 4) AS cos, hamming
          |FROM ranked WHERE rank <= 5""".stripMargin,
     "q35_ann_lsh" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn, bucket FROM withb WHERE vec_id % 50 = 0),
          |scored AS (
@@ -1123,7 +1124,7 @@ private[graft] object PipelineQueries {
     // trained centroids; DISTINCT collapses pairs meeting in several
     // cells (cos is identical per pair).
     "q49_ann_ivf_trained" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |c0 AS (
          |  SELECT md5(CAST(vec_id AS VARCHAR)) AS cell, q AS cv, n AS cn
          |  FROM nrm ORDER BY cell LIMIT 8
@@ -1146,7 +1147,7 @@ private[graft] object PipelineQueries {
     // Cosine near-dup replay: pairs sharing an LSH bucket (bucket-cap
     // guarded like q31) with unrounded cosine >= 0.35.
     "q45_cosine_neardup" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |bsz AS (SELECT bucket, count(*) AS bn FROM withb GROUP BY 1),
          |ok AS (
@@ -1162,7 +1163,7 @@ private[graft] object PipelineQueries {
     // q45's pair chain + the q54 hash split on vec_id + the q281
     // leakage matrix.
     "q322_semantic_leakage" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |bsz AS (SELECT bucket, count(*) AS bn FROM withb GROUP BY 1),
          |ok AS (
@@ -1212,7 +1213,7 @@ private[graft] object PipelineQueries {
     // (sim DESC, cell) tie-break, nProbe=4 probe cells, exact integer
     // dots — bit-identical doubles end to end.
     "q39_ann_ivf" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |cent AS (
          |  SELECT md5(CAST(vec_id AS VARCHAR)) AS cell, q AS cv, n AS cn
          |  FROM nrm ORDER BY cell LIMIT 16
@@ -1366,7 +1367,7 @@ private[graft] object PipelineQueries {
     // Silhouette replay: q39's seed pick, full 16-way in-row scoring,
     // top-2 by (sim desc, cell) → a/b distances → per-cell mean.
     "q161_silhouette" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |cent AS (
          |  SELECT md5(CAST(vec_id AS VARCHAR)) AS cell, q AS cv, n AS cn
          |  FROM nrm ORDER BY cell LIMIT 16
@@ -1730,7 +1731,7 @@ private[graft] object PipelineQueries {
     // connected components (q47's walk), keeper = min id, singletons
     // keep themselves.
     "q99_semdedup" ->
-      s"""WITH RECURSIVE $EmbSql,
+      s"""WITH RECURSIVE $VectorsSql,
          |$LshSql,
          |bsz AS (SELECT bucket, count(*) AS bn FROM withb GROUP BY 1),
          |ok AS (
@@ -1816,7 +1817,7 @@ private[graft] object PipelineQueries {
          |SELECT change, source, CAST(count(*) AS BIGINT) AS n_docs
          |FROM d GROUP BY 1, 2""".stripMargin,
     "q71_centroid_classify" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |tr AS (
          |  SELECT e.label, n.q FROM nrm n JOIN embeddings e ON n.vec_id = e.vec_id
          |  WHERE n.vec_id % 5 != 0
@@ -1830,6 +1831,7 @@ private[graft] object PipelineQueries {
          |  SELECT pred, cv,
          |         sqrt(CAST(list_sum(list_transform(cv, x -> x * x)) AS DOUBLE)) AS cn
          |  FROM (SELECT label AS pred, list(s ORDER BY pos) AS cv FROM sums GROUP BY label)
+         |  WHERE cn > 0
          |),
          |te AS (
          |  SELECT n.vec_id, e.label, n.q, n.n
@@ -2006,7 +2008,7 @@ private[graft] object PipelineQueries {
     // Recall replay: both rankings re-derived with the same (cos desc,
     // id) tie-break; micro recall is a ratio of exact long totals.
     "q191_ann_recall" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS (
@@ -2036,7 +2038,7 @@ private[graft] object PipelineQueries {
     // micro-unit reciprocal ranks (engine-identical floor), one
     // broadcast total.
     "q344_ann_mrr" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS (
@@ -2148,7 +2150,7 @@ private[graft] object PipelineQueries {
     // Confusion replay: the q34 brute-force ranking on the %10 query
     // sample, labels attached per side, label-partitioned share.
     "q212_label_confusion" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 10 = 0),
          |nn AS (
          |$ExactTop5Sql
@@ -2229,7 +2231,7 @@ private[graft] object PipelineQueries {
     // NDCG replay: q191's exact/approx rank tables, per-rank discount
     // gains quantized once to integer micro-units, exact long sums.
     "q225_ndcg" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |$LshSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS (
@@ -2449,7 +2451,7 @@ private[graft] object PipelineQueries {
     // Matryoshka replay: full-width exact top-5 once, truncated
     // brute force per width over the SAME quantized vectors.
     "q280_matryoshka" ->
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |qs AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm WHERE vec_id % 50 = 0),
          |ex AS MATERIALIZED (
          |$ExactTop5Sql
@@ -2459,7 +2461,7 @@ private[graft] object PipelineQueries {
          |nrm8 AS (
         |  SELECT vec_id, q,
         |         sqrt(CAST(list_sum(list_transform(q[1:8], x -> x * x)) AS DOUBLE)) AS n
-        |  FROM nrm
+        |  FROM nrm WHERE list_sum(list_transform(q[1:8], x -> x * x)) > 0
         |),
         |qs8 AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm8 WHERE vec_id % 50 = 0),
         |ap8 AS (
@@ -2476,7 +2478,7 @@ private[graft] object PipelineQueries {
         |nrm16 AS (
         |  SELECT vec_id, q,
         |         sqrt(CAST(list_sum(list_transform(q[1:16], x -> x * x)) AS DOUBLE)) AS n
-        |  FROM nrm
+        |  FROM nrm WHERE list_sum(list_transform(q[1:16], x -> x * x)) > 0
         |),
         |qs16 AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm16 WHERE vec_id % 50 = 0),
         |ap16 AS (
@@ -2493,7 +2495,7 @@ private[graft] object PipelineQueries {
         |nrm32 AS (
         |  SELECT vec_id, q,
         |         sqrt(CAST(list_sum(list_transform(q[1:32], x -> x * x)) AS DOUBLE)) AS n
-        |  FROM nrm
+        |  FROM nrm WHERE list_sum(list_transform(q[1:32], x -> x * x)) > 0
         |),
         |qs32 AS (SELECT vec_id AS query_id, q AS qq, n AS qn FROM nrm32 WHERE vec_id % 50 = 0),
         |ap32 AS (

@@ -183,19 +183,30 @@ private[graft] object QueryHelpers {
       |  WHERE len(w) >= 3
       |)""".stripMargin
 
-  /** ×1000-quantized embeddings + L2 norm — mirrors
-    * graft.functions.quantize/quantizedDot (integer math, exact).
+  /** CTE `nrm(vec_id, q, n)`: ×1000-quantized embeddings + L2 norm,
+    * rows kept by `where`.
     */
-  private[graft] val EmbSql =
-    """nrm AS (
-      |  SELECT vec_id, q,
-      |         sqrt(CAST(list_sum(list_transform(q, x -> x * x)) AS DOUBLE)) AS n
-      |  FROM (
-      |    SELECT vec_id,
-      |           list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
-      |    FROM embeddings
-      |  )
-      |)""".stripMargin
+  private def nrmSql(where: String): String =
+    s"""nrm AS (
+       |  SELECT vec_id, q,
+       |         sqrt(CAST(list_sum(list_transform(q, x -> x * x)) AS DOUBLE)) AS n
+       |  FROM (
+       |    SELECT vec_id,
+       |           list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
+       |    FROM embeddings
+       |  )$where
+       |)""".stripMargin
+
+  /** ×1000-quantized embeddings + L2 norm, every vector — mirrors
+    * graft.functions.quantize/quantizedNorm (integer math, exact).
+    */
+  private[graft] val EmbSql = nrmSql("")
+
+  /** [[EmbSql]] without zero vectors — mirrors
+    * graft.operators.SimilaritySearch.vectors, which drops them (a zero
+    * vector has no cosine).
+    */
+  private[graft] val VectorsSql = nrmSql("\n  WHERE n > 0")
 
   /** Cosine of candidate `c` against query `q(qq, qn)` over the first
     * `dims` quantized dimensions of [[EmbSql]]'s `nrm` rows — the score

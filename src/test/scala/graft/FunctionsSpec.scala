@@ -217,10 +217,11 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("quantized dot/cosine are exact integer math") {
+    val (qa, qb) = (quantize(col("a")), quantize(col("b")))
     val df = Seq((Seq(1.0f, 0.0f), Seq(0.5f, 0.5f))).toDF("a", "b")
       .select(
-        quantizedDot(quantize(col("a")), quantize(col("b"))).as("dot"),
-        quantizedCosine(quantize(col("a")), quantize(col("b"))).as("cos"))
+        quantizedDot(qa, qb).as("dot"),
+        quantizedCosine(qa, qb, quantizedNorm(qa), quantizedNorm(qb)).as("cos"))
     val r = df.head()
     assert(r.getLong(0) == 1000L * 500L)
     assert(math.abs(r.getDouble(1) - 500000.0 / (1000.0 * math.sqrt(500000.0))) < 1e-12)

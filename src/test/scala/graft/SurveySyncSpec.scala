@@ -145,4 +145,37 @@ class SurveySyncSpec extends AnyFunSuite {
     assert(copies.isEmpty,
       s"use the QueryHelpers fragment instead of a copy: ${copies.mkString("; ")}")
   }
+
+  test("per-query rankings and cosines are built only by SimilaritySearch's primitives") {
+    // one ranking contract (ties by id, which recallAtK/mrrAtK/ndcgAtK
+    // compare against), one query-side rename and one cosine (over norms
+    // of vectors that SimilaritySearch.vectors keeps non-zero): a
+    // hand-spelled copy is how one operator drifts from the others
+    import scala.jdk.CollectionConverters._
+    def code(line: String) = {
+      val t = line.trim
+      !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+    }
+    val root = Paths.get("src/main/scala/graft")
+    val lines = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex
+        .collect { case (l, i) if code(l) => (root.relativize(p).toString, i + 1, l) })
+    def at(piece: String, home: String) = {
+      val hits = lines.filter(_._3.contains(piece))
+      (hits.filter(_._1 == home), hits.filterNot(_._1 == home).map(h => s"${h._1}:${h._2}"))
+    }
+    // the ranking (rankPerQuery) and the query rename (querySide)
+    for (piece <- Seq("""partitionBy("query_id")""", """col("qv").as("qqv")""")) {
+      val (home, elsewhere) = at(piece, "operators/SimilaritySearch.scala")
+      assert(home.size == 1 && elsewhere.isEmpty,
+        s"$piece spelled ${home.size + elsewhere.size} times, once is SimilaritySearch's " +
+          s"primitive: ${home.map(h => s"${h._1}:${h._2}").mkString(", ")}" +
+          s" ${elsewhere.mkString(", ")}")
+    }
+    // the dot product only inside graft.functions' norm and cosine
+    val (_, dots) = at("quantizedDot(", "functions/package.scala")
+    assert(dots.isEmpty,
+      s"hand-spelled dot/norm/cosine (use quantizedNorm, quantizedCosine): ${dots.mkString(", ")}")
+  }
 }
