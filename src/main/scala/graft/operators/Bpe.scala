@@ -44,9 +44,8 @@ object Bpe {
 
   /** (enc, count) word-frequency table — the training working set. */
   private def vocab(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(TextAnalysis.words(col(textCol))).as("__word"))
+    TextAnalysis.termCounts(df, Nil, textCol, "__word", "__cnt")
       .filter(col("__word") =!= "")
-      .groupBy("__word").agg(count(lit(1)).as("__cnt"))
       .select(wrapWord(col("__word")).as("__enc"), col("__cnt"))
 
   /** Greedy BPE training: "count adjacent token pairs weighted by word

@@ -437,7 +437,9 @@ object SimilaritySearch {
     * the one-row broadcast centroid array — no corpus shuffle), then
     * re-center each cell on the elementwise mean, re-quantized to the
     * Long grid so [[quantizedDot]] stays exact integer math. Cells
-    * that capture no points disappear (standard Lloyd behavior). The
+    * that capture no points disappear (standard Lloyd behavior), and
+    * so does a cell whose mean rounds to the zero vector: it has no
+    * cosine ([[labelCentroids]]' rule). The
     * mean is a posexplode → (cell, pos) partial-aggregated avg — two
     * bounded shuffles of nCentroids×dims rows out, never a
     * per-cell collect of member vectors.
@@ -452,6 +454,7 @@ object SimilaritySearch {
       .select(col("cell"),
         transform(col("pm"), p => round(p.getField("m")).cast("long")).as("cv"))
       .withColumn("cnrm", quantizedNorm(col("cv")))
+      .filter(col("cnrm") > 0)
 
   /** Deterministic pseudo-random seed pick: the nCentroids corpus
     * vectors with smallest md5(id). orderBy+limit plans as a
@@ -715,7 +718,8 @@ object SimilaritySearch {
     * per-row projection (zero shuffle, codegen-friendly 64-term integer
     * sums), preserving pairwise geometry to O(1/√k). Output: the k
     * projected integer coordinates p0..p{k−1} plus the norm ratio
-    * ‖p‖/√k / ‖q‖, which JL concentrates near 1.
+    * ‖p‖/√k / ‖q‖, which JL concentrates near 1. A zero vector has
+    * no ratio and is dropped, as [[vectors]] drops it everywhere.
     */
   def jlProject(
       df: DataFrame,
@@ -723,19 +727,16 @@ object SimilaritySearch {
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     val signs = jlSigns(64, outDims)
-    val base = spread(df)
-      .select(col(idCol).as("id"), quantize(col(embCol)).as("qv"))
     val projCols = (0 until outDims).map { j =>
       (0 until 64).map { i =>
         val t = element_at(col("qv"), i + 1)
         if (signs(i)(j) == 1) t else -t
       }.reduce(_ + _).as(s"p$j")
     }
-    val projected = base.select(col("id") +: col("qv") +: projCols: _*)
+    val projected = vectors(df, idCol, embCol).select(col("id") +: col("nrm") +: projCols: _*)
     val sp = (0 until outDims).map(j => col(s"p$j") * col(s"p$j")).reduce(_ + _)
     projected
-      .withColumn("norm_ratio",
-        round(sqrt(sp.cast("double") / outDims) / quantizedNorm(col("qv")), 4))
+      .withColumn("norm_ratio", round(sqrt(sp.cast("double") / outDims) / col("nrm"), 4))
       .select(col("id").as(idCol) +:
         (0 until outDims).map(j => col(s"p$j")) :+ col("norm_ratio"): _*)
   }

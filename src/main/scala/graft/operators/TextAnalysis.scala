@@ -20,6 +20,63 @@ object TextAnalysis {
 
   def words(text: Column): Column = split(text, " ")
 
+  /** The word stream `(keys…, term)`: one row per word of each document
+    * — the one explode every corpus statistic below starts from.
+    * Oracle twin: `QueryHelpers.WordRowsSql`.
+    */
+  private[graft] def wordRows(
+      df: DataFrame, keys: Seq[Column], textCol: String, term: String): DataFrame =
+    df.select(keys :+ explode(words(col(textCol))).as(term): _*)
+
+  /** [[wordRows]] counted per `(keys…, term)` into `cnt`: the term
+    * frequencies, map-side combined before the one exchange on the key.
+    * Oracle twin: `QueryHelpers.TermCountsSql`.
+    */
+  private[graft] def termCounts(
+      df: DataFrame, keys: Seq[Column], textCol: String, term: String, cnt: String): DataFrame = {
+    val rows = wordRows(df, keys, textCol, term)
+    rows.groupBy(rows.columns.map(col): _*).agg(count(lit(1)).as(cnt))
+  }
+
+  /** The in-row word n-grams (width `fields.size`, 2 or 3) of every
+    * document with at least that many words: `keep` plus one struct
+    * column `as` per position, its words named `fields`. Zips shifted
+    * slices of the word array, so the corpus is never window-sorted.
+    * Oracle twin: `QueryHelpers.NgramsSql`.
+    */
+  private[operators] def ngrams(
+      df: DataFrame, textCol: String, fields: Seq[String], as: String, keep: Column*): DataFrame = {
+    val w = words(col(textCol))
+    val n = fields.size
+    def from(i: Int) = slice(w, lit(i + 1), size(w) - (n - 1))
+    val first = zip_with(from(0), from(1), (a, b) => struct(a.as(fields(0)), b.as(fields(1))))
+    val grams = (2 until n).foldLeft(first) { (acc, i) =>
+      zip_with(acc, from(i), (g, x) =>
+        struct(fields.take(i).map(f => g.getField(f).as(f)) :+ x.as(fields(i)): _*))
+    }
+    df.filter(size(w) >= n).select(keep :+ explode(grams).as(as): _*)
+  }
+
+  /** [[ngrams]] of width 2 counted per `(keep…, fields)` into `cnt`. */
+  private def bigramCounts(
+      df: DataFrame, textCol: String, fields: Seq[String], as: String, cnt: String,
+      keep: Column*): DataFrame =
+    ngrams(df, textCol, fields, as, keep: _*)
+      .groupBy(keep ++ fields.map(f => col(s"$as.$f").as(f)): _*)
+      .agg(count(lit(1)).as(cnt))
+
+  /** The per-document mean surprisal of a scored `(keys…, tf, …)` frame:
+    * `(keys…, n = Σtf, mean(−Σ tf·ln p / n))`, the mean rounded to a
+    * 4 dp `nll` unless `mean` finishes it otherwise. Oracle twin:
+    * `QueryHelpers.MeanSurprisalSql`.
+    */
+  private def meanSurprisal(
+      scored: DataFrame, keys: Seq[String], n: String, p: Column,
+      mean: Column => Column = m => round(m, 4).as("nll")): DataFrame =
+    scored.groupBy(keys.map(col): _*)
+      .agg(sum("tf").as(n), sum(d(col("tf")) * log(p)).as("__ll"))
+      .select(keys.map(col) ++ Seq(col(n), mean(-col("__ll") / d(col(n)))): _*)
+
   /** BPE-ish token count: letter runs, digit runs, and punctuation
     * runs, each optionally space-prefixed — the GPT-2 pretokenizer
     * shape reduced to ASCII classes. The regex is deliberately RE2-
@@ -278,9 +335,10 @@ object TextAnalysis {
     */
   def readability(df: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
-    // regexp_extract_all, not split: Spark's split drops trailing
-    // empty segments while DuckDB keeps them — match counts are the
-    // boundary-safe formulation both engines agree on
+    // regexp_extract_all, not split: a count is the number of matched
+    // runs, while a split counts the segments between them — one more
+    // whenever the text does not end in a match (both engines keep that
+    // empty trailing segment)
     def matches(c: Column, pat: String): Column =
       size(expr(s"regexp_extract_all($textCol, '$pat', 0)"))
     val sentences = greatest(matches(t, "[.!?]+"), lit(1)).cast("long")
@@ -370,8 +428,7 @@ object TextAnalysis {
       termCol: String = "term",
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val hits = spread(df)
-      .select(col(idCol), explode(words(col(textCol))).as("__w"))
+    val hits = wordRows(spread(df), Seq(col(idCol)), textCol, "__w")
       .join(broadcast(terms.select(col(termCol).as("__w")).distinct()), Seq("__w"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_hits"),
@@ -510,10 +567,7 @@ object TextAnalysis {
       df: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val tf = df
-      .select(col(idCol), explode(words(col(textCol))).as("word"))
-      .groupBy(col(idCol), col("word"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = termCounts(df, Seq(col(idCol)), textCol, "word", "tf")
     // corpus frequency via partial aggregation on the word key — a
     // word-partitioned window would funnel every occurrence of "the"
     // (≈ the whole corpus, under Zipf) into ONE task with no map-side
@@ -528,21 +582,17 @@ object TextAnalysis {
     // second pass over the exploded terms
     val total = broadcast(
       df.agg(sum(size(words(col(textCol)))).cast("long").as("t")))
-    tf.join(cf, "word")
-      .join(total)
-      .groupBy(col(idCol))
-      .agg(
-        sum("tf").as("n_words"),
-        sum(col("tf").cast("double") *
-          log(col("cf").cast("double") / col("t").cast("double"))).as("__ll"))
-      .select(
-        col(idCol),
-        col("n_words"),
-        round(-col("__ll") / col("n_words").cast("double"), 4).as("nll"))
+    meanSurprisal(tf.join(cf, "word").join(total), Seq(idCol), "n_words",
+      d(col("cf")) / d(col("t")))
   }
 
+  /** The number of doc-id checkpoints [[heapsLaw]] fits over (q328's
+    * oracle spells the same 10).
+    */
+  private val HeapsPoints = 10
+
   /** Heaps' law vocabulary-growth fit per slice — V(T) ≈ K·T^β over
-    * `points` doc-id-ordered checkpoints: the corpus-SCALING
+    * [[HeapsPoints]] doc-id-ordered checkpoints: the corpus-SCALING
     * diagnostic that [[vocabRichness]]'s point estimate can't give.
     * β ≈ 0.4–0.6 is natural language (collect 10× tokens → ~10^β×
     * vocabulary); β near 1 flags an id-like token stream (vocabulary
@@ -550,12 +600,12 @@ object TextAnalysis {
     * a saturated/templated slice.
     *
     * Rank-free by construction: checkpoints are doc-ID VALUE
-    * thresholds th_k = lo−1 + ((hi−lo+1)·k) div points (exact
+    * thresholds th_k = lo−1 + ((hi−lo+1)·k) div 10 (exact
     * positive-integer arithmetic, engine-identical), never an exact
     * decile — no doc-grain sort or per-slice row_number anywhere.
     * V_k counts words whose FIRST doc (min doc-id, a vocab-grain
     * combine) is ≤ th_k; T_k sums tokens over docs ≤ th_k. Both ride
-    * a ≤`points`-row-per-slice broadcast of thresholds and map-side
+    * a ≤10-row-per-slice broadcast of thresholds and map-side
     * combines; the fit is D9's exact-decimal trend over micro-nat
     * logs (the G60 pattern). Checkpoints with V or T = 0 drop.
     *
@@ -566,10 +616,8 @@ object TextAnalysis {
       df: DataFrame,
       sliceCol: String = "source",
       idCol: String = "doc_id",
-      textCol: String = "text",
-      points: Int = 10): DataFrame = {
-    require(points >= 2)
-    val ks = (1 to points).map(lit(_))
+      textCol: String = "text"): DataFrame = {
+    val ks = (1 to HeapsPoints).map(lit(_))
     val kdim = broadcast(df
       .groupBy(col(sliceCol))
       .agg(min(col(idCol)).as("__lo"), max(col(idCol)).as("__hi"))
@@ -578,10 +626,9 @@ object TextAnalysis {
       // positive-operand integer div — engine-identical (negatives are
       // not; doc ids are nonnegative by contract)
       .select(col(sliceCol), col("k"),
-        expr(s"__lo - 1 + ((__hi - __lo + 1) * k) div $points")
+        expr(s"__lo - 1 + ((__hi - __lo + 1) * k) div $HeapsPoints")
           .cast("long").as("__th")))
-    val firsts = df
-      .select(col(sliceCol), col(idCol), explode(words(col(textCol))).as("word"))
+    val firsts = wordRows(df, Seq(col(sliceCol), col(idCol)), textCol, "word")
       .groupBy(col(sliceCol), col("word"))
       .agg(min(col(idCol)).as("__fd"))
     val v = firsts.join(kdim, Seq(sliceCol))
@@ -628,11 +675,8 @@ object TextAnalysis {
       df: DataFrame,
       sliceCol: String = "source",
       textCol: String = "text"): DataFrame = {
-    val tf = df
-      .select(col(sliceCol), explode(words(col(textCol))).as("word"))
-      .groupBy(col(sliceCol), col("word"))
-      .agg(count(lit(1)).as("cf"))
-    tf.groupBy(col(sliceCol))
+    termCounts(df, Seq(col(sliceCol)), textCol, "word", "cf")
+      .groupBy(col(sliceCol))
       .agg(
         sum("cf").as("n_tokens"),
         count(lit(1)).as("vocab"),
@@ -681,23 +725,13 @@ object TextAnalysis {
       idCol: String = "doc_id",
       textCol: String = "text",
       langCol: String = "lang"): DataFrame = {
-    val tf = df
-      .select(col(idCol), col(langCol), explode(words(col(textCol))).as("word"))
-      .groupBy(col(idCol), col(langCol), col("word"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = termCounts(df, Seq(col(idCol), col(langCol)), textCol, "word", "tf")
     val cf = tf.groupBy(langCol, "word").agg(sum("tf").as("cf"))
     val tot = broadcast(cf.groupBy(langCol).agg(sum("cf").as("t")))
-    val nll = tf.join(cf, Seq(langCol, "word"))
-      .join(tot, Seq(langCol))
-      .groupBy(col(idCol), col(langCol))
-      .agg(
-        sum("tf").as("n_words"),
-        sum(col("tf").cast("double") *
-          log(col("cf").cast("double") / col("t").cast("double"))).as("__ll"))
-      .withColumn("nll_q",
-        round(-col("__ll") / col("n_words").cast("double") * 10000)
-          .cast("long"))
-      .drop("__ll")
+    val nll = meanSurprisal(
+      tf.join(cf, Seq(langCol, "word")).join(tot, Seq(langCol)),
+      Seq(idCol, langCol), "n_words", d(col("cf")) / d(col("t")),
+      m => round(m * 10000).cast("long").as("nll_q"))
     val byLang = Window.partitionBy(col(langCol))
     val run = byLang.orderBy(col("nll_q"))
     val hist = Rollups.grainGuarded(
@@ -803,7 +837,6 @@ object TextAnalysis {
       df: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val w = words(col(textCol))
     // (doc, bigram) grain feeds the scoring join AND both model
     // tables, so the corpus is exploded three times (8 scans in the
     // r17 before-plan) — MEASURED and left alone: at sf0.1 min-of-6
@@ -812,32 +845,19 @@ object TextAnalysis {
     // disallowed — CacheManager plan-matching leaks one bench rep's
     // cache into the next). The model tables are vocab-small and the
     // corpus explode is cheap relative to a materialization barrier.
-    val tf = df
-      .filter(size(w) >= 2)
-      .select(col(idCol), explode(zip_with(
-        slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => struct(a.as("p"), b.as("c")))).as("bg"))
-      .groupBy(col(idCol), col("bg.p").as("p"), col("bg.c").as("c"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = bigramCounts(df, textCol, Seq("p", "c"), "bg", "tf", col(idCol))
     val pc = tf.groupBy("p", "c").agg(sum("tf").as("pc"))
     val ctx = pc.groupBy("p").agg(sum("pc").as("ctx"))
     val vocab = broadcast(
-      df.select(explode(words(col(textCol))).as("word"))
-        .agg(count_distinct(col("word")).as("v")))
-    tf.join(pc, Seq("p", "c"))
-      .join(ctx, Seq("p"))
-      .join(vocab)
-      .groupBy(col(idCol))
-      .agg(
-        sum("tf").as("n_pairs"),
-        sum(col("tf").cast("double") *
-          log((col("pc") + 1).cast("double") /
-            (col("ctx") + col("v")).cast("double"))).as("__ll"))
-      .select(
-        col(idCol),
-        col("n_pairs"),
-        round(-col("__ll") / col("n_pairs").cast("double"), 4).as("nll"))
+      wordRows(df, Nil, textCol, "word").agg(count_distinct(col("word")).as("v")))
+    meanSurprisal(tf.join(pc, Seq("p", "c")).join(ctx, Seq("p")).join(vocab),
+      Seq(idCol), "n_pairs", d(col("pc") + 1) / d(col("ctx") + col("v")))
   }
+
+  /** [[knBigramLm]]'s absolute discount D (q401's oracle spells the
+    * same 0.75).
+    */
+  private val KnDiscount = 0.75
 
   /** Interpolated Kneser–Ney bigram LM scoring (G120, Kneser & Ney
     * 1995 / Chen & Goodman 1998's recommended smoothing) — the top
@@ -868,16 +888,8 @@ object TextAnalysis {
   def knBigramLm(
       df: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      discount: Double = 0.75): DataFrame = {
-    val w = words(col(textCol))
-    val tf = df
-      .filter(size(w) >= 2)
-      .select(col(idCol), explode(zip_with(
-        slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => struct(a.as("p"), b.as("c")))).as("bg"))
-      .groupBy(col(idCol), col("bg.p").as("p"), col("bg.c").as("c"))
-      .agg(count(lit(1)).as("tf"))
+      textCol: String = "text"): DataFrame = {
+    val tf = bigramCounts(df, textCol, Seq("p", "c"), "bg", "tf", col(idCol))
       .localCheckpoint() // feeds the model tables AND the scoring join
     val pc = tf.groupBy("p", "c").agg(sum("tf").as("pc"))
       .localCheckpoint() // feeds ctx/n1fwd/n1rev/types AND the join
@@ -885,22 +897,17 @@ object TextAnalysis {
       count(lit(1)).as("n1fwd"))
     val n1rev = pc.groupBy("c").agg(count(lit(1)).as("n1rev"))
     val types = broadcast(pc.agg(count(lit(1)).as("tt")))
-    tf.join(pc, Seq("p", "c"))
-      .join(ctx, Seq("p"))
-      .join(n1rev, Seq("c"))
-      .join(types)
-      .groupBy(col(idCol))
-      .agg(
-        sum("tf").as("n_pairs"),
-        sum(d(col("tf")) *
-          log(greatest(d(col("pc")) - discount, lit(0.0)) / col("ctx") +
-            (lit(discount) * col("n1fwd") / col("ctx")) *
-              (d(col("n1rev")) / col("tt")))).as("__ll"))
-      .select(
-        col(idCol),
-        col("n_pairs"),
-        round(-col("__ll") / col("n_pairs").cast("double"), 4).as("nll"))
+    val p = greatest(d(col("pc")) - KnDiscount, lit(0.0)) / col("ctx") +
+      (lit(KnDiscount) * col("n1fwd") / col("ctx")) * (d(col("n1rev")) / col("tt"))
+    meanSurprisal(
+      tf.join(pc, Seq("p", "c")).join(ctx, Seq("p")).join(n1rev, Seq("c")).join(types),
+      Seq(idCol), "n_pairs", p)
   }
+
+  /** [[stupidBackoff]]'s back-off weight α, Brants et al.'s value
+    * (q317's oracle spells the same 0.4).
+    */
+  private val BackoffAlpha = 0.4
 
   /** G47b stupid-backoff trigram LM scoring (Brants et al. 2007,
     * "Large Language Models in Machine Translation") — the rung of the
@@ -933,46 +940,27 @@ object TextAnalysis {
       df: DataFrame,
       refPred: Column,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      alpha: Double = 0.4): DataFrame = {
-    val w = words(col(textCol))
-    def tris(src: DataFrame, keep: Column*): DataFrame = src
-      .filter(size(w) >= 3)
-      .select(keep :+ explode(zip_with(
-        zip_with(
-          slice(w, lit(1), size(w) - 2), slice(w, lit(2), size(w) - 2),
-          (a, b) => struct(a.as("a"), b.as("b"))),
-        slice(w, lit(3), size(w) - 2),
-        (ab, c) => struct(ab.getField("a").as("a"), ab.getField("b").as("b"),
-          c.as("c")))).as("__t"): _*)
-      .select(keep ++ Seq(col("__t.a").as("a"), col("__t.b").as("b"),
-        col("__t.c").as("c")): _*)
+      textCol: String = "text"): DataFrame = {
+    def tris(src: DataFrame, keep: Column*): DataFrame =
+      ngrams(src, textCol, Seq("a", "b", "c"), "__t", keep: _*)
+        .select(keep ++ Seq(col("__t.a").as("a"), col("__t.b").as("b"),
+          col("__t.c").as("c")): _*)
     val ref = df.filter(refPred)
-    val uni = ref
-      .select(explode(words(col(textCol))).as("w1"))
-      .groupBy("w1").agg(count(lit(1)).as("c1"))
+    val uni = termCounts(ref, Nil, textCol, "w1", "c1")
     val nTot = broadcast(uni.agg(sum("c1").cast("long").as("n_tot")))
-    val bi = ref
-      .filter(size(w) >= 2)
-      .select(explode(zip_with(
-        slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => struct(a.as("a"), b.as("b")))).as("__b"))
-      .groupBy(col("__b.a").as("a"), col("__b.b").as("b"))
-      .agg(count(lit(1)).as("c2"))
+    val bi = bigramCounts(ref, textCol, Seq("a", "b"), "__b", "c2")
     val tri = tris(ref)
       .groupBy("a", "b", "c").agg(count(lit(1)).as("c3"))
     val docTri = tris(df, col(idCol))
       .groupBy(col(idCol), col("a"), col("b"), col("c"))
       .agg(count(lit(1)).as("tf"))
     val s =
-      when(col("c3").isNotNull,
-        col("c3").cast("double") / col("c2ab").cast("double"))
+      when(col("c3").isNotNull, d(col("c3")) / d(col("c2ab")))
         .when(col("c2bc").isNotNull,
-          lit(alpha) * (col("c2bc").cast("double") / col("c1b").cast("double")))
-        .otherwise(lit(alpha) * (lit(alpha) *
-          (greatest(coalesce(col("c1c"), lit(0L)), lit(1L)).cast("double") /
-            col("n_tot").cast("double"))))
-    docTri
+          lit(BackoffAlpha) * (d(col("c2bc")) / d(col("c1b"))))
+        .otherwise(lit(BackoffAlpha) * (lit(BackoffAlpha) *
+          (d(greatest(coalesce(col("c1c"), lit(0L)), lit(1L))) / d(col("n_tot")))))
+    val scored = docTri
       .join(tri, Seq("a", "b", "c"), "left")
       .join(bi.select(col("a"), col("b"), col("c2").as("c2ab")),
         Seq("a", "b"), "left")
@@ -981,11 +969,7 @@ object TextAnalysis {
       .join(uni.select(col("w1").as("b"), col("c1").as("c1b")), Seq("b"), "left")
       .join(uni.select(col("w1").as("c"), col("c1").as("c1c")), Seq("c"), "left")
       .join(nTot)
-      .groupBy(col(idCol))
-      .agg(sum("tf").cast("long").as("n_tris"),
-        sum(col("tf").cast("double") * log(s)).as("__ll"))
-      .select(col(idCol), col("n_tris"),
-        round(-col("__ll") / col("n_tris").cast("double"), 4).as("nll"))
+    meanSurprisal(scored, Seq(idCol), "n_tris", s)
   }
 
   /** Per-document TF-IDF keyword extraction: the top-k most
@@ -1006,10 +990,7 @@ object TextAnalysis {
       idCol: String = "doc_id",
       textCol: String = "text",
       k: Int = 3): DataFrame = {
-    val tf = df
-      .select(col(idCol), explode(words(col(textCol))).as("word"))
-      .groupBy(col(idCol), col("word"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = termCounts(df, Seq(col(idCol)), textCol, "word", "tf")
     // document frequency via partial aggregation on the word key —
     // same Zipf argument as [[unigramLm]]: a word-partitioned window
     // puts ~the whole corpus in the "the" partition, one task, no
@@ -1114,20 +1095,13 @@ object TextAnalysis {
       k: Int = 20,
       minCount: Int = 5): DataFrame = {
     val w = words(col(textCol))
-    val pairs = df
-      .filter(size(w) >= 2)
-      .select(explode(zip_with(
-        slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => struct(a.as("p"), b.as("c")))).as("bg"))
-      .groupBy(col("bg.p").as("p"), col("bg.c").as("c"))
-      .agg(count(lit(1)).as("n_ab"))
+    val pairs = bigramCounts(df, textCol, Seq("p", "c"), "bg", "n_ab")
     // the unigram table joins in twice (left and right word of each
     // surviving pair) — measured and left alone (r17): the word
     // explode recompute beats any materialization at sf0.1 (no cut
     // 0.515 s vs eager cut 0.830/lazy 0.789), and persist() is
     // disallowed on query paths (CacheManager cross-rep reuse).
-    val uni = df.select(explode(words(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n_w"))
+    val uni = termCounts(df, Nil, textCol, "word", "n_w")
     val totals = broadcast(df.agg(
       sum(size(w)).cast("long").as("tw"),
       sum(greatest(size(w) - 1, lit(0))).cast("long").as("tp")))
@@ -1158,10 +1132,8 @@ object TextAnalysis {
     */
   def bpePairCounts(df: DataFrame, textCol: String = "text",
       k: Int = 20): DataFrame = {
-    val wordFreq = df
-      .select(explode(words(col(textCol))).as("word"))
+    val wordFreq = termCounts(df, Nil, textCol, "word", "wf")
       .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("wf"))
     wordFreq
       .select(col("wf"),
         explode(transform(sequence(lit(1), length(col("word")) - 1),
@@ -1289,9 +1261,7 @@ object TextAnalysis {
       docs: DataFrame,
       catCol: String = "source",
       textCol: String = "text"): DataFrame = {
-    val counts = docs
-      .select(col(catCol).as("cat"), explode(words(col(textCol))).as("tok"))
-      .groupBy("cat", "tok").agg(count(lit(1)).as("c"))
+    val counts = termCounts(docs, Seq(col(catCol).as("cat")), textCol, "tok", "c")
     val totals = broadcast(counts.groupBy("cat").agg(sum(col("c")).as("t")))
     val withP = counts.join(totals, "cat")
       .select(col("cat"), col("tok"), (col("c").cast("double") / col("t")).as("p"))
@@ -1374,9 +1344,7 @@ object TextAnalysis {
       textCol: String = "text",
       maxRank: Int = 500,
       minFreq: Int = 2): DataFrame = {
-    val vocab = df
-      .select(col(groupCol), explode(words(col(textCol))).as("word"))
-      .groupBy(col(groupCol), col("word")).agg(count(lit(1)).as("n"))
+    val vocab = termCounts(df, Seq(col(groupCol)), textCol, "word", "n")
     // loud scale guard (r11 carried item): the per-group rank window
     // sorts the whole per-group VOCABULARY in one task before the
     // maxRank cut — bounded for natural language, but a degenerate
@@ -1433,9 +1401,7 @@ object TextAnalysis {
         "in one partition; shard the vocabulary build instead")
     // vocab-grain counts feed both the slice and the one-row total;
     // the eager cut keeps the corpus at ONE scan
-    val freq = df
-      .select(explode(words(col(textCol))).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
+    val freq = termCounts(df, Nil, textCol, "token", "n")
       .localCheckpoint()
     val total = freq.agg(sum(col("n")).as("__total"))
     val ord = Window.orderBy(col("n").desc, col("token"))
@@ -1586,9 +1552,9 @@ object TextAnalysis {
     *
     * Exactness: token counts are G86's exact sequential-replay
     * encoder counts; word counts are non-empty single-space splits
-    * (empty segments excluded on BOTH engines — Spark drops trailing
-    * empties, DuckDB keeps them; the filter pins the shared
-    * semantics); the two ratios are single divisions of exact longs.
+    * (both engines keep the empty segments that leading, doubled or
+    * trailing spaces leave, and the filter drops them on both sides);
+    * the two ratios are single divisions of exact longs.
     *
     * Output: one row per slice (sliceCol, n_docs, n_words, n_tokens,
     * n_chars, fertility 4dp, chars_per_token 4dp).

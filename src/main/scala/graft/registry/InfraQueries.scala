@@ -106,8 +106,8 @@ private[graft] object InfraQueries {
       val t = Tables(s, dir)
       import graft.functions.FreqSketch.freqSketch
       val k = 128
-      val words = t.documents.select(col("source"), col("lang"),
-        explode(TextAnalysis.words(col("text"))).as("word"))
+      val words =
+        TextAnalysis.wordRows(t.documents, Seq(col("source"), col("lang")), "text", "word")
       val rolled = words
         .groupBy("source", "lang")
         .agg(freqSketch(col("word"), lit(1L), k).as("st"))
@@ -303,8 +303,8 @@ private[graft] object InfraQueries {
       // global exact top-5 words are then pure projections over the
       // broadcast merged sketches.
       val t = Tables(s, dir)
-      val words = t.documents.select(col("source"), col("lang"),
-        explode(TextAnalysis.words(col("text"))).as("word"))
+      val words =
+        TextAnalysis.wordRows(t.documents, Seq(col("source"), col("lang")), "text", "word")
       val fine = words.groupBy("source", "lang")
         .agg(graft.functions.CmsSketch.cmsSketch(col("word")).as("sk"))
       val rolled = fine.groupBy("source")
@@ -400,8 +400,7 @@ private[graft] object InfraQueries {
       // oracle rebuilds the identical counters from the same md5
       // bucket arithmetic.
       val t = Tables(s, dir)
-      val words = t.documents
-        .select(explode(TextAnalysis.words(col("text"))).as("word"))
+      val words = TextAnalysis.wordRows(t.documents, Nil, "text", "word")
       val sk = words.agg(graft.functions.CmsSketch.cmsSketch(col("word")).as("sk"))
       val top = words.groupBy("word").agg(count(lit(1)).as("exact_n"))
         .orderBy(col("exact_n").desc, col("word")).limit(20)
@@ -708,12 +707,7 @@ private[graft] object InfraQueries {
     // source with all-true bound checks and zero guaranteed-misses —
     // a broken compress/merge/weight ledger flips est_ok or n_missed.
     "q336_heavy_hitters" ->
-      """WITH w AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS word
-        |  FROM documents
-        |),
-        |cnt AS (SELECT source, word, CAST(count(*) AS BIGINT) AS n_true
-        |        FROM w GROUP BY 1, 2),
+      s"""WITH ${TermCountsSql("cnt", "word", "n_true", Seq("source"))},
         |top AS (
         |  SELECT source, word, n_true,
         |         row_number() OVER (PARTITION BY source
@@ -856,9 +850,7 @@ private[graft] object InfraQueries {
         |       CAST(count(DISTINCT user_id) AS BIGINT) AS u_exact
         |FROM events GROUP BY 1""".stripMargin,
     "q137_cms_rollup" ->
-      s"""WITH wd AS (
-         |  SELECT source, unnest(string_split(text, ' ')) AS word FROM documents
-         |),
+      s"""WITH wd AS (${WordRowsSql("word", Seq("source"))}),
          |top AS (
          |  SELECT word FROM (
          |    SELECT word, count(*) AS n FROM wd GROUP BY word
@@ -988,9 +980,7 @@ private[graft] object InfraQueries {
     // md5(i ':' word) mod 1024), then min over rows at each top
     // word's buckets — identical counters, identical estimates.
     "q91_cms_topk" ->
-      s"""WITH wd AS (
-         |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
-         |),
+      s"""WITH wd AS (${WordRowsSql("word")}),
          |ex AS (SELECT word, CAST(count(*) AS BIGINT) AS exact_n FROM wd GROUP BY word),
          |top AS (SELECT word, exact_n FROM ex ORDER BY exact_n DESC, word LIMIT 20),
          |rows_i AS (SELECT unnest(range(0, 4)) AS ci),

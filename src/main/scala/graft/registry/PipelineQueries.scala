@@ -1322,9 +1322,7 @@ private[graft] object PipelineQueries {
     // the projection absorbs ln()/fold-order ulps.
     "q105_dsir_select" ->
       s"""WITH tok AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-         |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t
-         |  FROM documents
+         |  ${WordRowsSql("w", Seq("doc_id", "CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t"))}
          |),
          |b AS (SELECT doc_id, t, ${HexValSql("md5(w)", 1, 6)} % 64 AS bkt FROM tok),
          |cnt AS (
@@ -1440,7 +1438,7 @@ private[graft] object PipelineQueries {
       val pcols = (0 until 8).map(j => s"CAST(${ts(j)} AS BIGINT) AS p$j")
         .mkString(",\n|         ")
       val sp = (0 until 8).map(j => s"p$j*p$j").mkString(" + ")
-      s"""WITH $EmbSql,
+      s"""WITH $VectorsSql,
          |pj AS (
          |  SELECT vec_id, n,
          |         $pcols

@@ -126,6 +126,39 @@ private[graft] object QueryHelpers {
       |         CAST(count(*) AS BIGINT) AS y
       |  FROM lineitem GROUP BY 1, 2""".stripMargin
 
+  /** The closed-form least-squares fit of `y` on `x` per `keys` over CTE
+    * `src`, as CTE `trend(keys…, n_points, slope, intercept, r2)`: exact
+    * HUGEINT moment sums, then the same double expressions — mirrors
+    * graft.operators.Rollups.linearTrend.
+    */
+  private[graft] def LinearTrendSql(src: String, keys: Seq[String]): String = {
+    def sel(cols: String*) = (keys ++ cols).mkString(", ")
+    s"""trend_m AS (
+       |  SELECT ${sel("CAST(count(*) AS HUGEINT) AS n")},
+       |         CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
+       |         CAST(sum(x*y) AS HUGEINT) AS sxy, CAST(sum(x*x) AS HUGEINT) AS sxx,
+       |         CAST(sum(y*y) AS HUGEINT) AS syy
+       |  FROM $src GROUP BY ALL
+       |),
+       |trend_f AS (
+       |  SELECT ${sel("n", "n*sxy - sx*sy AS num", "n*sxx - sx*sx AS varx")},
+       |         n*syy - sy*sy AS vary, sx, sy
+       |  FROM trend_m WHERE n >= 2 AND n*sxx - sx*sx > 0
+       |),
+       |trend AS (
+       |  SELECT ${sel("CAST(n AS BIGINT) AS n_points")},
+       |         round(CAST(num AS DOUBLE) / CAST(varx AS DOUBLE), 4) AS slope,
+       |         round((CAST(sy AS DOUBLE)
+       |             - (CAST(num AS DOUBLE) / CAST(varx AS DOUBLE))
+       |               * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 4) AS intercept,
+       |         CASE WHEN vary > 0
+       |           THEN round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
+       |                  / (CAST(varx AS DOUBLE) * CAST(vary AS DOUBLE)), 4)
+       |         END AS r2
+       |  FROM trend_f
+       |)""".stripMargin
+  }
+
   /** Evidence rows per (datasourceId, year), `n` — twin of
     * [[EvidenceYearCountsSql]].
     */
@@ -260,9 +293,9 @@ private[graft] object QueryHelpers {
        |)""".stripMargin
 
   /** One Lloyd step for the IVF oracle: per-cell per-dim mean of the
-    * `keep`=1 assignment `assigned`, re-quantized — mirrors
-    * SimilaritySearch.lloydStep (integer sums are exact in doubles, so
-    * the mean and its round are engine-identical).
+    * `keep`=1 assignment `assigned`, re-quantized, a zero mean dropped —
+    * mirrors SimilaritySearch.lloydStep (integer sums are exact in
+    * doubles, so the mean and its round are engine-identical).
     */
   private[graft] def IvfLloydSql(assigned: String, out: String): String =
     s"""${out}_m AS (
@@ -274,6 +307,7 @@ private[graft] object QueryHelpers {
        |  SELECT cell, cv,
        |         sqrt(CAST(list_sum(list_transform(cv, x -> x * x)) AS DOUBLE)) AS cn
        |  FROM (SELECT cell, list(mv ORDER BY pos) AS cv FROM ${out}_m GROUP BY cell)
+       |  WHERE cn > 0
        |)""".stripMargin
 
   /** MinHash-LSH near-dup pair CTE chain (ends in `lshpairs`) —
@@ -957,6 +991,75 @@ private[graft] object QueryHelpers {
        |  FROM documents
        |)""".stripMargin
 
+  /** The word stream `(keys…, term)` of the `documents` (those matching
+    * `where`, if given), as a query — mirrors TextAnalysis.wordRows.
+    */
+  private[graft] def WordRowsSql(term: String, keys: Seq[String] = Nil, where: String = ""): String =
+    s"SELECT ${(keys :+ s"unnest(string_split(text, ' ')) AS $term").mkString(", ")} " +
+      s"FROM documents${if (where.isEmpty) "" else s" WHERE $where"}"
+
+  /** CTE `name(keys…, term, cnt)`: [[WordRowsSql]] counted per
+    * `(keys…, term)` — mirrors TextAnalysis.termCounts. A key may be
+    * renamed (`source AS cat`).
+    */
+  private[graft] def TermCountsSql(
+      name: String, term: String, cnt: String, keys: Seq[String] = Nil, where: String = ""): String =
+    s"""$name AS (
+       |  SELECT *, CAST(count(*) AS BIGINT) AS $cnt
+       |  FROM (${WordRowsSql(term, keys, where)})
+       |  GROUP BY ALL
+       |)""".stripMargin
+
+  /** CTE `wd(keys…, w)`: each document's word list — the input of
+    * [[NgramsSql]].
+    */
+  private[graft] def WordListsSql(keys: Seq[String]): String =
+    s"""wd AS (
+       |  SELECT ${(keys :+ "string_split(text, ' ') AS w").mkString(", ")} FROM documents
+       |)""".stripMargin
+
+  /** The in-row word n-grams `(keys…, fields…)` of the word lists `w` in
+    * `src` (width `fields.size`; one row per position, none for shorter
+    * lists), as a query — mirrors TextAnalysis's n-gram builder.
+    */
+  private[graft] def NgramsSql(src: String, fields: Seq[String], keys: Seq[String] = Nil): String = {
+    val grams = fields.zipWithIndex.map { case (f, j) =>
+      if (j == 0) s"w[i] AS $f" else s"w[i + $j] AS $f"
+    }
+    val end = if (fields.size == 2) "len(w)" else s"len(w) - ${fields.size - 2}"
+    s"SELECT ${(keys ++ grams).mkString(", ")} FROM (SELECT ${(keys :+ "w").mkString(", ")}, " +
+      s"unnest(range(1, $end)) AS i FROM $src)"
+  }
+
+  /** The select items `n = Σtf` and the mean surprisal −Σ tf·ln p / Σtf of
+    * a scored group, the mean rounded to a 4 dp `nll` unless `mean`
+    * finishes it otherwise — mirrors TextAnalysis.meanSurprisal.
+    */
+  private[graft] def MeanSurprisalSql(
+      n: String, p: String, tf: String = "tf",
+      mean: String => String = m => s"round($m, 4) AS nll"): String =
+    s"CAST(sum($tf) AS BIGINT) AS $n, ${mean(s"-sum($tf * ln($p)) / sum($tf)")}"
+
+  /** The self-trained unigram LM, per `model` slice (none: the corpus):
+    * CTEs `tf(doc_id, model…, word, tf)`, `cf(model…, word, cf)`,
+    * `tot(model…, t)` and `lm(doc_id, model…, n_words, <mean>)` —
+    * mirrors TextAnalysis.unigramLm (and perplexityBuckets per lang).
+    */
+  private[graft] def UnigramLmSql(
+      model: Seq[String], mean: String => String = m => s"round($m, 4) AS nll"): String = {
+    def sel(cols: String*) = (model ++ cols).mkString(", ")
+    val totJoin = if (model.isEmpty) "CROSS JOIN tot" else s"JOIN tot USING (${sel()})"
+    s"""${TermCountsSql("tf", "word", "tf", "doc_id" +: model)},
+       |cf AS (SELECT ${sel("word", "CAST(sum(tf) AS BIGINT) AS cf")} FROM tf GROUP BY ALL),
+       |tot AS (SELECT ${sel("CAST(sum(cf) AS BIGINT) AS t")} FROM cf GROUP BY ALL),
+       |lm AS (
+       |  SELECT ${("doc_id" +: model).mkString(", ")},
+       |         ${MeanSurprisalSql("n_words", "CAST(cf AS DOUBLE) / CAST(t AS DOUBLE)", mean = mean)}
+       |  FROM tf JOIN cf USING (${sel("word")}) $totJoin
+       |  GROUP BY ALL
+       |)""".stripMargin
+  }
+
   /** TextAnalysis.quality's score ×10000 over `base`'s `w`/`n_tokens`:
     * the rational rounded half-up in integer arithmetic (a BIGINT
     * quotient; the published double is it / 10000.0).
@@ -1217,12 +1320,12 @@ private[graft] object QueryHelpers {
     */
   private[graft] def BpeChainSql(n: Int): String = {
     val v0 =
-      """v0 AS MATERIALIZED (
+      s"""v0 AS MATERIALIZED (
         |  SELECT array_to_string(list_transform(string_split_regex(word, ''),
         |           c -> chr(2)||c||chr(3)), ' ') AS enc, cnt
         |  FROM (
         |    SELECT word, CAST(count(*) AS BIGINT) AS cnt
-        |    FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
+        |    FROM (${WordRowsSql("word")})
         |    WHERE word <> '' GROUP BY 1
         |  )
         |)""".stripMargin

@@ -832,36 +832,8 @@ private[graft] object RefQueries {
       s"""WITH series AS (
         |$EvidenceYearCountsSql
         |),
-        |m AS (
-        |  SELECT datasourceId,
-        |         CAST(count(*) AS HUGEINT) AS n,
-        |         CAST(sum(x) AS HUGEINT) AS sx,
-        |         CAST(sum(y) AS HUGEINT) AS sy,
-        |         CAST(sum(x*y) AS HUGEINT) AS sxy,
-        |         CAST(sum(x*x) AS HUGEINT) AS sxx,
-        |         CAST(sum(y*y) AS HUGEINT) AS syy
-        |  FROM series GROUP BY 1
-        |),
-        |f AS (
-        |  SELECT datasourceId, n,
-        |         n*sxy - sx*sy AS num,
-        |         n*sxx - sx*sx AS varx,
-        |         n*syy - sy*sy AS vary,
-        |         sx, sy
-        |  FROM m
-        |  WHERE n >= 2 AND n*sxx - sx*sx > 0
-        |)
-        |SELECT datasourceId,
-        |       CAST(n AS BIGINT) AS n_points,
-        |       round(CAST(num AS DOUBLE) / CAST(varx AS DOUBLE), 4) AS slope,
-        |       round((CAST(sy AS DOUBLE)
-        |           - (CAST(num AS DOUBLE) / CAST(varx AS DOUBLE))
-        |             * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 4) AS intercept,
-        |       CASE WHEN vary > 0
-        |         THEN round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
-        |                / (CAST(varx AS DOUBLE) * CAST(vary AS DOUBLE)), 4)
-        |       END AS r2
-        |FROM f""".stripMargin,
+        |${LinearTrendSql("series", Seq("datasourceId"))}
+        |SELECT * FROM trend""".stripMargin,
     "q165_growth" ->
       s"""WITH $EvSql,
          |series AS (
@@ -1219,31 +1191,18 @@ private[graft] object RefQueries {
         |SELECT event_type, CAST(n AS BIGINT) AS n_points, day AS split_x,
         |       round(gain, 4) AS gain
         |FROM rk WHERE rnk = 1""".stripMargin,
-    // DW replay: the q147 fit formulas verbatim (4dp slope/intercept),
+    // DW replay: the q147 fit (LinearTrendSql's 4dp slope/intercept),
     // residuals in integer micro-units, exact long DW sums.
     "q205_durbin_watson" ->
       s"""WITH series AS (
         |$EvidenceYearCountsSql
         |),
-        |m AS (
-        |  SELECT datasourceId, CAST(count(*) AS HUGEINT) AS n,
-        |         CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-        |         CAST(sum(x*y) AS HUGEINT) AS sxy, CAST(sum(x*x) AS HUGEINT) AS sxx
-        |  FROM series GROUP BY 1
-        |),
-        |f AS (
-        |  SELECT datasourceId,
-        |         round(CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE), 4) AS slope,
-        |         round((CAST(sy AS DOUBLE)
-        |             - (CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE))
-        |               * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 4) AS intercept
-        |  FROM m WHERE n >= 2 AND n*sxx - sx*sx > 0
-        |),
+        |${LinearTrendSql("series", Seq("datasourceId"))},
         |e AS (
         |  SELECT s.datasourceId, s.x,
         |         CAST(round((CAST(s.y AS DOUBLE)
         |               - (f.intercept + f.slope * CAST(s.x AS DOUBLE))) * 1e6) AS BIGINT) AS ei
-        |  FROM series s JOIN f USING (datasourceId)
+        |  FROM series s JOIN trend f USING (datasourceId)
         |),
         |w AS (
         |  SELECT datasourceId, ei,

@@ -191,9 +191,7 @@ private[graft] object TextQueries {
       // side) aggregation on the word key, then a TakeOrdered top-k,
       // never a global sort
       val t = Tables(s, dir)
-      t.documents
-        .select(explode(TextAnalysis.words(col("text"))).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("n"))
+      TextAnalysis.termCounts(t.documents, Nil, "text", "word", "n")
         .orderBy(col("n").desc, col("word")).limit(100)
     }),
     "q59_unigram_lm" -> ((s, dir) => {
@@ -377,6 +375,11 @@ private[graft] object TextQueries {
     }),
   )
 
+  /** q401's pinned KN probability: max(c(p,c) − D, 0)/c(p·) + λ(p)·P_cont(c), D = 0.75. */
+  private val KnProbSql =
+    "greatest(CAST(pc.pc AS DOUBLE) - 0.75, 0.0) / ctx.ctx" +
+      " + (0.75 * ctx.n1fwd / ctx.ctx) * (CAST(n1rev.n1rev AS DOUBLE) / ty.tt)"
+
   val oracles: Seq[(String, String)] = Seq(
     "q36_langid" ->
       s"""WITH $LangPredSql
@@ -449,9 +452,8 @@ private[graft] object TextQueries {
         |            ELSE CAST((a.dup * 20000 + a.total) // (a.total * 2) AS DOUBLE) / 10000 END AS dup_frac
         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
     "q57_token_freq" ->
-      """SELECT word, CAST(count(*) AS BIGINT) AS n
-        |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |GROUP BY 1 ORDER BY n DESC, word LIMIT 100""".stripMargin,
+      s"""WITH ${TermCountsSql("f", "word", "n")}
+         |SELECT word, n FROM f ORDER BY n DESC, word LIMIT 100""".stripMargin,
     "q146_bm25" ->
       """WITH d AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -503,12 +505,7 @@ private[graft] object TextQueries {
         |SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
         |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin,
     "q162_js_divergence" ->
-      """WITH c AS (
-        |  SELECT cat, tok, CAST(count(*) AS BIGINT) AS c FROM (
-        |    SELECT source AS cat, unnest(string_split(text, ' ')) AS tok
-        |    FROM documents)
-        |  GROUP BY 1, 2
-        |),
+      s"""WITH ${TermCountsSql("c", "tok", "c", Seq("source AS cat"))},
         |tt AS (SELECT cat, CAST(sum(c) AS BIGINT) AS t FROM c GROUP BY 1),
         |p AS (SELECT c.cat, c.tok, CAST(c.c AS DOUBLE) / tt.t AS p
         |      FROM c JOIN tt USING (cat)),
@@ -596,10 +593,8 @@ private[graft] object TextQueries {
          |         / sum(n) OVER (PARTITION BY lang), 4) AS share
          |FROM m""".stripMargin,
     "q160_vocab_overlap" ->
-      """WITH v AS (
-        |  SELECT DISTINCT cat, tok FROM (
-        |    SELECT source AS cat, unnest(string_split(text, ' ')) AS tok
-        |    FROM documents)
+      s"""WITH v AS (
+        |  SELECT DISTINCT cat, tok FROM (${WordRowsSql("tok", Seq("source AS cat"))})
         |),
         |sz AS (SELECT cat, CAST(count(*) AS BIGINT) AS sz FROM v GROUP BY 1),
         |i AS (
@@ -662,21 +657,12 @@ private[graft] object TextQueries {
         |       CAST(least(50, n - start) AS INT) AS n_tokens
         |FROM s""".stripMargin,
     "q145_pmi_collocations" ->
-      """WITH wd AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |),
-        |bg AS (
-        |  SELECT w[i-1] AS p, w[i] AS c
-        |  FROM (SELECT w, unnest(range(2, len(w) + 1)) AS i FROM wd)
-        |),
+      s"""WITH ${WordListsSql(Nil)},
         |pr AS (
         |  SELECT p, c, CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM bg GROUP BY 1, 2 HAVING count(*) >= 5
+        |  FROM (${NgramsSql("wd", Seq("p", "c"))}) GROUP BY 1, 2 HAVING count(*) >= 5
         |),
-        |uni AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS n_w
-        |  FROM (SELECT unnest(w) AS word FROM wd) GROUP BY 1
-        |),
+        |${TermCountsSql("uni", "word", "n_w")},
         |tot AS (
         |  SELECT CAST(sum(len(w)) AS BIGINT) AS tw,
         |         CAST(sum(greatest(len(w) - 1, 0)) AS BIGINT) AS tp
@@ -714,59 +700,37 @@ private[graft] object TextQueries {
         |)
         |SELECT idA, idB, dot, cos FROM c WHERE cos >= 0.8""".stripMargin,
     "q141_bigram_lm" ->
-      """WITH wd AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      s"""WITH ${WordListsSql(Seq("doc_id"))},
+        |tf AS (
+        |  SELECT doc_id, p, c, count(*) AS tf
+        |  FROM (${NgramsSql("wd", Seq("p", "c"), Seq("doc_id"))}) GROUP BY 1, 2, 3
         |),
-        |bg AS (
-        |  SELECT doc_id, w[i-1] AS p, w[i] AS c
-        |  FROM (SELECT doc_id, w, unnest(range(2, len(w) + 1)) AS i FROM wd)
-        |),
-        |tf AS (SELECT doc_id, p, c, count(*) AS tf FROM bg GROUP BY 1, 2, 3),
         |pc AS (SELECT p, c, sum(tf) AS pc FROM tf GROUP BY 1, 2),
         |ctx AS (SELECT p, sum(pc) AS ctx FROM pc GROUP BY 1),
-        |v AS (
-        |  SELECT count(DISTINCT word) AS v
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |)
-        |SELECT t.doc_id, CAST(sum(t.tf) AS BIGINT) AS n_pairs,
-        |       round(-sum(t.tf * ln(CAST(pc.pc + 1 AS DOUBLE)
-        |                / CAST(ctx.ctx + v.v AS DOUBLE))) / sum(t.tf), 4)
-        |         AS nll
+        |v AS (SELECT count(DISTINCT word) AS v FROM (${WordRowsSql("word")}))
+        |SELECT t.doc_id,
+        |       ${MeanSurprisalSql("n_pairs", "CAST(pc.pc + 1 AS DOUBLE) / CAST(ctx.ctx + v.v AS DOUBLE)", "t.tf")}
         |FROM tf t
         |JOIN pc USING (p, c) JOIN ctx USING (p) CROSS JOIN v
         |GROUP BY 1""".stripMargin,
     // BPE-pair replay: same vocabulary-weighted adjacent-pair counts
     // (substring(word, i, 2) for i in 1..len-1), top-20 by (n, pair).
     "q98_bpe_pairs" ->
-      """WITH wf AS (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS wf
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE length(word) >= 2 GROUP BY 1
-        |),
+      s"""WITH ${TermCountsSql("wf", "word", "wf")},
         |pairs AS (
         |  SELECT unnest(list_transform(range(1, length(word)),
         |           i -> substring(word, CAST(i AS INT), 2))) AS pair, wf
-        |  FROM wf
+        |  FROM wf WHERE length(word) >= 2
         |)
         |SELECT pair, CAST(sum(wf) AS BIGINT) AS n
         |FROM pairs GROUP BY 1 ORDER BY n DESC, pair LIMIT 20""".stripMargin,
     "q59_unigram_lm" ->
-      """WITH tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
-        |  GROUP BY 1, 2
-        |),
-        |cf AS (SELECT word, CAST(sum(tf) AS BIGINT) AS cf FROM tf GROUP BY 1),
-        |tot AS (SELECT CAST(sum(cf) AS BIGINT) AS t FROM cf)
-        |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_words,
-        |       round(-sum(tf * ln(CAST(cf AS DOUBLE) / CAST(t AS DOUBLE)))
-        |             / CAST(sum(tf) AS DOUBLE), 4) AS nll
-        |FROM tf JOIN cf USING (word) CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
+      s"""WITH ${UnigramLmSql(Nil)}
+         |SELECT doc_id, n_words, nll FROM lm""".stripMargin,
     // Heaps replay: same value thresholds (positive integer //), word
-    // first-occurrence joins, the q147 exact-HUGEINT fit tail.
+    // first-occurrence joins, the exact-HUGEINT fit (LinearTrendSql).
     "q328_heaps_law" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT source, min(doc_id) AS lo, max(doc_id) AS hi
         |  FROM documents GROUP BY 1
         |),
@@ -776,8 +740,7 @@ private[graft] object TextQueries {
         |),
         |fw AS (
         |  SELECT source, word, min(doc_id) AS fd
-        |  FROM (SELECT source, doc_id, unnest(string_split(text, ' ')) AS word
-        |        FROM documents)
+        |  FROM (${WordRowsSql("word", Seq("source", "doc_id"))})
         |  GROUP BY 1, 2
         |),
         |v AS (
@@ -798,39 +761,13 @@ private[graft] object TextQueries {
         |  FROM v JOIN tt ON v.source = tt.source AND v.k = tt.k
         |  WHERE v.v > 0 AND tt.t > 0
         |),
-        |m AS (
-        |  SELECT source, CAST(count(*) AS HUGEINT) AS n,
-        |         CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-        |         CAST(sum(x*y) AS HUGEINT) AS sxy,
-        |         CAST(sum(x*x) AS HUGEINT) AS sxx,
-        |         CAST(sum(y*y) AS HUGEINT) AS syy
-        |  FROM p GROUP BY 1
-        |),
-        |f AS (
-        |  SELECT source, n, n*sxy - sx*sy AS num, n*sxx - sx*sx AS varx,
-        |         n*syy - sy*sy AS vary, sx, sy
-        |  FROM m WHERE n >= 2 AND n*sxx - sx*sx > 0
-        |)
-        |SELECT source, CAST(n AS BIGINT) AS n_points,
-        |       round(CAST(num AS DOUBLE) / CAST(varx AS DOUBLE), 4)
-        |         AS heaps_beta,
-        |       round((CAST(sy AS DOUBLE)
-        |           - (CAST(num AS DOUBLE) / CAST(varx AS DOUBLE))
-        |             * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 4) AS intercept,
-        |       CASE WHEN vary > 0
-        |         THEN round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
-        |                / (CAST(varx AS DOUBLE) * CAST(vary AS DOUBLE)), 4)
-        |       END AS r2
-        |FROM f""".stripMargin,
+        |${LinearTrendSql("p", Seq("source"))}
+        |SELECT source, n_points, slope AS heaps_beta, intercept, r2
+        |FROM trend""".stripMargin,
     // Frequency-spectrum replay: same split, exact counts, identical
     // written form for the two ratios.
     "q324_vocab_richness" ->
-      """WITH tf AS (
-        |  SELECT source, word, count(*) AS cf
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-        |        FROM documents)
-        |  GROUP BY 1, 2
-        |)
+      s"""WITH ${TermCountsSql("tf", "word", "cf", Seq("source"))}
         |SELECT source,
         |       CAST(sum(cf) AS BIGINT) AS n_tokens,
         |       CAST(count(*) AS BIGINT) AS vocab,
@@ -848,23 +785,8 @@ private[graft] object TextQueries {
     // 10⁻⁴-nat units, tercile cuts off the value-grain cumulative
     // histogram; docs at a cut share its bucket.
     "q320_ppl_buckets" ->
-      """WITH tf AS (
-        |  SELECT doc_id, lang, word, count(*) AS tf
-        |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
-        |        FROM documents)
-        |  GROUP BY 1, 2, 3
-        |),
-        |cf AS (SELECT lang, word, CAST(sum(tf) AS BIGINT) AS cf
-        |       FROM tf GROUP BY 1, 2),
-        |tot AS (SELECT lang, CAST(sum(cf) AS BIGINT) AS t FROM cf GROUP BY 1),
-        |nll AS (
-        |  SELECT doc_id, lang, CAST(sum(tf) AS BIGINT) AS n_words,
-        |         CAST(round(-sum(tf * ln(CAST(cf AS DOUBLE) / CAST(t AS DOUBLE)))
-        |                    / CAST(sum(tf) AS DOUBLE) * 10000) AS BIGINT) AS nll_q
-        |  FROM tf JOIN cf USING (lang, word) JOIN tot USING (lang)
-        |  GROUP BY 1, 2
-        |),
-        |hist AS (SELECT lang, nll_q, count(*) AS c FROM nll GROUP BY 1, 2),
+      s"""WITH ${UnigramLmSql(Seq("lang"), m => s"CAST(round($m * 10000) AS BIGINT) AS nll_q")},
+        |hist AS (SELECT lang, nll_q, count(*) AS c FROM lm GROUP BY 1, 2),
         |cum AS (
         |  SELECT lang, nll_q,
         |         CAST(sum(c) OVER (PARTITION BY lang ORDER BY nll_q
@@ -882,13 +804,9 @@ private[graft] object TextQueries {
         |       round(CAST(nll_q AS DOUBLE) / 10000.0, 4) AS nll,
         |       CASE WHEN nll_q <= t1 THEN 'head'
         |            WHEN nll_q <= t2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM nll JOIN th USING (lang)""".stripMargin,
+        |FROM lm JOIN th USING (lang)""".stripMargin,
     "q72_tfidf" ->
-      """WITH tf AS (
-        |  SELECT doc_id, word, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
-        |  GROUP BY 1, 2
-        |),
+      s"""WITH ${TermCountsSql("tf", "word", "tf", Seq("doc_id"))},
         |dfreq AS (SELECT word, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
         |scored AS (
@@ -950,14 +868,9 @@ private[graft] object TextQueries {
         |SELECT doc_id, source, n_email, n_ip, n_phone, md5(t) AS redacted_md5
         |FROM r3""".stripMargin,
     // Zipf replay: same (freq DESC, word) total rank order, the same
-    // round(ln·10⁶) integerization, then q147's exact-sum closed form.
+    // round(ln·10⁶) integerization, then the exact-sum fit (LinearTrendSql).
     "q176_zipf" ->
-      """WITH vocab AS (
-        |  SELECT source, word, CAST(count(*) AS BIGINT) AS n
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-        |        FROM documents)
-        |  GROUP BY 1, 2
-        |),
+      s"""WITH ${TermCountsSql("vocab", "word", "n", Seq("source"))},
         |ranked AS (
         |  SELECT source, n,
         |         row_number() OVER (PARTITION BY source
@@ -970,31 +883,8 @@ private[graft] object TextQueries {
         |         CAST(round(ln(n) * 1000000) AS BIGINT) AS y
         |  FROM ranked WHERE rank <= 200 AND n >= 2
         |),
-        |m AS (
-        |  SELECT source,
-        |         CAST(count(*) AS HUGEINT) AS n,
-        |         CAST(sum(x) AS HUGEINT) AS sx,
-        |         CAST(sum(y) AS HUGEINT) AS sy,
-        |         CAST(sum(x*y) AS HUGEINT) AS sxy,
-        |         CAST(sum(x*x) AS HUGEINT) AS sxx,
-        |         CAST(sum(y*y) AS HUGEINT) AS syy
-        |  FROM pts GROUP BY 1
-        |),
-        |f AS (
-        |  SELECT source, n,
-        |         n*sxy - sx*sy AS num,
-        |         n*sxx - sx*sx AS varx,
-        |         n*syy - sy*sy AS vary
-        |  FROM m WHERE n >= 2 AND n*sxx - sx*sx > 0
-        |)
-        |SELECT source, CAST(n AS BIGINT) AS n_points,
-        |       round(CAST(num AS DOUBLE) / CAST(varx AS DOUBLE), 4)
-        |         AS zipf_slope,
-        |       CASE WHEN vary > 0
-        |         THEN round(CAST(num AS DOUBLE) * CAST(num AS DOUBLE)
-        |                / (CAST(varx AS DOUBLE) * CAST(vary AS DOUBLE)), 4)
-        |       END AS r2
-        |FROM f""".stripMargin,
+        |${LinearTrendSql("pts", Seq("source"))}
+        |SELECT source, n_points, slope AS zipf_slope, r2 FROM trend""".stripMargin,
     // Calibration replay: q37's exact-rational quality, q52's gopher
     // predicate, decile binning, exact-integer mean per bin.
     "q183_calibration" ->
@@ -1017,11 +907,7 @@ private[graft] object TextQueries {
     // Vocab-build replay: q57's tokenization; ids from the same
     // (n desc, token) total order; coverage vs the FULL corpus total.
     "q188_vocab_build" ->
-      """WITH f AS (
-        |  SELECT word AS token, CAST(count(*) AS BIGINT) AS n
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  GROUP BY 1
-        |),
+      s"""WITH ${TermCountsSql("f", "token", "n")},
         |tot AS (SELECT sum(n) AS total FROM f),
         |top AS (SELECT token, n FROM f ORDER BY n DESC, token LIMIT 500)
         |SELECT CAST(row_number() OVER (ORDER BY n DESC, token) - 1 AS BIGINT) AS token_id,
@@ -1128,10 +1014,8 @@ private[graft] object TextQueries {
     // Blocklist replay: same word split, same term table, same
     // left-join-back zero fill.
     "q274_blocklist" ->
-      """WITH terms(term) AS (VALUES ('slow'), ('error'), ('merge')),
-        |w AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-        |),
+      s"""WITH terms(term) AS (VALUES ('slow'), ('error'), ('merge')),
+        |w AS (${WordRowsSql("w", Seq("doc_id"))}),
         |h AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits,
         |         CAST(count(DISTINCT w) AS BIGINT) AS n_terms
@@ -1191,33 +1075,22 @@ private[graft] object TextQueries {
     // and 0.4·(0.4·(x)) — multiplication order matters in doubles),
     // ln only at the end, 4dp at the final projection (q141 contract).
     "q317_stupid_backoff" ->
-      """WITH wd AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-        |),
-        |uni AS (
-        |  SELECT w1, count(*) AS c1
-        |  FROM (SELECT unnest(w) AS w1 FROM wd WHERE lang = 'en')
-        |  GROUP BY 1
-        |),
+      s"""WITH ${WordListsSql(Seq("doc_id", "lang"))},
+        |${TermCountsSql("uni", "w1", "c1", where = "lang = 'en'")},
         |ntot AS (SELECT CAST(sum(c1) AS BIGINT) AS n_tot FROM uni),
         |bi AS (
         |  SELECT a, b, count(*) AS c2
-        |  FROM (SELECT w[i-1] AS a, w[i] AS b
-        |        FROM (SELECT w, unnest(range(2, len(w) + 1)) AS i
-        |              FROM wd WHERE lang = 'en'))
+        |  FROM (${NgramsSql("wd WHERE lang = 'en'", Seq("a", "b"))})
         |  GROUP BY 1, 2
         |),
         |tri AS (
         |  SELECT a, b, c, count(*) AS c3
-        |  FROM (SELECT w[i-2] AS a, w[i-1] AS b, w[i] AS c
-        |        FROM (SELECT w, unnest(range(3, len(w) + 1)) AS i
-        |              FROM wd WHERE lang = 'en'))
+        |  FROM (${NgramsSql("wd WHERE lang = 'en'", Seq("a", "b", "c"))})
         |  GROUP BY 1, 2, 3
         |),
         |dt AS (
         |  SELECT doc_id, a, b, c, count(*) AS tf
-        |  FROM (SELECT doc_id, w[i-2] AS a, w[i-1] AS b, w[i] AS c
-        |        FROM (SELECT doc_id, w, unnest(range(3, len(w) + 1)) AS i FROM wd))
+        |  FROM (${NgramsSql("wd", Seq("a", "b", "c"), Seq("doc_id"))})
         |  GROUP BY 1, 2, 3, 4
         |),
         |scored AS (
@@ -1237,8 +1110,7 @@ private[graft] object TextQueries {
         |  LEFT JOIN uni uc ON d.c = uc.w1
         |  CROSS JOIN ntot n
         |)
-        |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tris,
-        |       round(-sum(tf * ln(s)) / sum(tf), 4) AS nll
+        |SELECT doc_id, ${MeanSurprisalSql("n_tris", "s")}
         |FROM scored GROUP BY 1""".stripMargin,
     // Sketched distinct-n replay: identical shingle construction as
     // q294, then the HLL register rebuild (HllChainSql — same md5
@@ -1288,15 +1160,10 @@ private[graft] object TextQueries {
     // KN replay: the q141 bigram frame + continuation tables; D=0.75
     // is exact (3/4), one pinned probability expression.
     "q401_kn_bigram" ->
-      """WITH wd AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |),
-        |bg AS (
-        |  SELECT doc_id, w[i-1] AS p, w[i] AS c
-        |  FROM (SELECT doc_id, w, unnest(range(2, len(w) + 1)) AS i FROM wd)
-        |),
+      s"""WITH ${WordListsSql(Seq("doc_id"))},
         |tf AS MATERIALIZED (
-        |  SELECT doc_id, p, c, count(*) AS tf FROM bg GROUP BY 1, 2, 3
+        |  SELECT doc_id, p, c, count(*) AS tf
+        |  FROM (${NgramsSql("wd", Seq("p", "c"), Seq("doc_id"))}) GROUP BY 1, 2, 3
         |),
         |pc AS MATERIALIZED (SELECT p, c, sum(tf) AS pc FROM tf GROUP BY 1, 2),
         |ctx AS (
@@ -1305,12 +1172,8 @@ private[graft] object TextQueries {
         |),
         |n1rev AS (SELECT c, CAST(count(*) AS BIGINT) AS n1rev FROM pc GROUP BY 1),
         |ty AS (SELECT CAST(count(*) AS BIGINT) AS tt FROM pc)
-        |SELECT t.doc_id, CAST(sum(t.tf) AS BIGINT) AS n_pairs,
-        |       round(-sum(CAST(t.tf AS DOUBLE) *
-        |             ln(greatest(CAST(pc.pc AS DOUBLE) - 0.75, 0.0) / ctx.ctx
-        |                + (0.75 * ctx.n1fwd / ctx.ctx)
-        |                  * (CAST(n1rev.n1rev AS DOUBLE) / ty.tt)))
-        |             / sum(t.tf), 4) AS nll
+        |SELECT t.doc_id,
+        |       ${MeanSurprisalSql("n_pairs", KnProbSql, "t.tf")}
         |FROM tf t
         |JOIN pc USING (p, c) JOIN ctx USING (p) JOIN n1rev USING (c)
         |CROSS JOIN ty

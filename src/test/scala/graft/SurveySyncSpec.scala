@@ -178,4 +178,33 @@ class SurveySyncSpec extends AnyFunSuite {
     assert(dots.isEmpty,
       s"hand-spelled dot/norm/cosine (use quantizedNorm, quantizedCosine): ${dots.mkString(", ")}")
   }
+
+  test("text word streams and n-grams are built only by their shared primitives") {
+    // one tokenisation and one n-gram window per engine: a hand-spelled
+    // copy in one operator or oracle is how it drifts from the others
+    import scala.jdk.CollectionConverters._
+    def code(line: String) = {
+      val t = line.trim
+      !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+    }
+    def hits(file: String, piece: String) =
+      Files.readAllLines(Paths.get(s"src/main/scala/graft/$file")).asScala.zipWithIndex
+        .collect { case (l, i) if code(l) && l.contains(piece) => s"$file:${i + 1}" }.toSeq
+    val registry = Files.list(Paths.get("src/main/scala/graft/registry")).iterator().asScala
+      .map(p => s"registry/${p.getFileName}").filter(_.endsWith(".scala")).toSeq.sorted
+    def once(piece: String, home: String, files: Seq[String]) = {
+      val at = files.flatMap(hits(_, piece))
+      assert(at.size == 1 && at.head.startsWith(s"$home:"),
+        s"$piece spelled ${at.size} times, once is $home's primitive: ${at.mkString(", ")}")
+    }
+    // TextAnalysis.wordRows and TextAnalysis.ngrams
+    once("explode(words(", "operators/TextAnalysis.scala", "operators/TextAnalysis.scala" +: registry)
+    once("slice(w, lit(", "operators/TextAnalysis.scala", Seq("operators/TextAnalysis.scala"))
+    // QueryHelpers.WordRowsSql (TermCountsSql's too); NgramsSql replays no w[i-1]
+    once("unnest(string_split(text, ' '))", "registry/QueryHelpers.scala", registry)
+    for (piece <- Seq("explode(TextAnalysis.words(", "w[i-1]", "w[i-2]")) {
+      val at = registry.flatMap(hits(_, piece))
+      assert(at.isEmpty, s"use the shared primitive instead of $piece: ${at.mkString(", ")}")
+    }
+  }
 }

@@ -99,4 +99,24 @@ class SimilarityPrimitivesSpec extends SparkSpec {
       }
     }
   }
+
+  test("jlProject drops an all-zero embedding instead of dividing by its norm") {
+    val df = Seq((1L, Array.fill(64)(0f)), (2L, Array.fill(64)(0.5f))).toDF("vec_id", "embedding")
+    val out = SimilaritySearch.jlProject(df).collect()
+    assert(out.map(_.getAs[Long]("vec_id")).toSeq == Seq(2L))
+    // a constant vector projects onto ±1 sums of equal terms: the ratio is finite
+    assert(out.head.getAs[Double]("norm_ratio") > 0)
+  }
+
+  test("ivfTopK drops a Lloyd centroid whose cell mean rounds to zero") {
+    // one cell holding v, -v, v, -v: its Lloyd mean is the zero vector,
+    // which has no cosine, so no cell is left to probe
+    val v = Array.tabulate(64)(i => ((i % 7) - 3) * 0.1f)
+    val df = Seq((1L, v), (2L, v.map(-_)), (3L, v), (4L, v.map(-_))).toDF("vec_id", "embedding")
+    val out = SimilaritySearch.ivfTopK(df, df, k = 2, nCentroids = 1, nProbe = 1, lloydIters = 1)
+    assert(out.collect().isEmpty)
+    // without the Lloyd step the seed cell stands and every query is answered
+    val seeded = SimilaritySearch.ivfTopK(df, df, k = 2, nCentroids = 1, nProbe = 1)
+    assert(seeded.select("query_id").distinct().count() == 4)
+  }
 }
