@@ -24,17 +24,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // windowed-top-k de-skew rewrite for k <= 1000;
-    // spark.graft.rewriteWindowTopK=false turns it off
+    // windowed-top-k de-skew rewrite for k <= 1000; Spark's
+    // spark.sql.optimizer.excludedRules=graft.plans.RewriteWindowTopK
+    // turns it off
     ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)
-    // scale-form repairs for two PlanLint classes:
-    // distinct-over-window → keyGrainAttach shape (default ON;
-    // spark.graft.rewriteDistinctOverWindow=false to disable) and
-    // multi-distinct Expand → joined single-distinct aggregates
-    // (default OFF; spark.graft.rewriteMultiDistinct=true to enable —
-    // the q127/q182 sanctions prove the Expand sometimes wins)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteDistinctOverWindow)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteMultiDistinct)
   }
 }
 

@@ -340,7 +340,7 @@ object TextAnalysis {
     // whenever the text does not end in a match (both engines keep that
     // empty trailing segment)
     def matches(c: Column, pat: String): Column =
-      size(expr(s"regexp_extract_all($textCol, '$pat', 0)"))
+      size(regexp_extract_all(c, lit(pat), lit(0)))
     val sentences = greatest(matches(t, "[.!?]+"), lit(1)).cast("long")
     val nWords = tokenCount(t).cast("long")
     val syllables = greatest(matches(t, "[aeiouyAEIOUY]+"), lit(1)).cast("long")

@@ -153,12 +153,13 @@ final class TopKRowsBuffer(k: Int, cmpKeys: (Any, Any) => Int) extends KBestHeap
   * Guards: exactly one window expression (a row_number), single
   * deterministic ORDER BY expression, non-empty PARTITION BY, batch
   * child, k ≤ 1000 (beyond that the heap state stops being "bounded"
-  * in any useful sense). Disable with
-  * `spark.graft.rewriteWindowTopK=false`, the rule's one setting.
+  * in any useful sense). Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.RewriteWindowTopK`
+  * removes the rule, and Spark's `InferWindowGroupLimit` then plans
+  * the filter.
   */
 object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val ConfKey = "spark.graft.rewriteWindowTopK"
   private val MaxK = 1000
 
   private def limitOf(e: Expression, rn: Attribute): Option[Int] = e match {
@@ -169,8 +170,7 @@ object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f @ Filter(cond,
             Window(Seq(alias @ Alias(WindowExpression(_: RowNumber,
@@ -203,5 +203,4 @@ object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
           if (rest.isEmpty) project else Filter(rest.reduce(And), project)
         }
     }
-  }
 }

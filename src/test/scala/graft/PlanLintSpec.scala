@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * PRE-FIX shapes must flag, their rewritten forms must not, and each
   * detector's sanction path (broadcast hint, bounded side, raise
   * guard, grain collapse) must hold. The enforcing sweep over every
-  * registered query runs in QueriesSmokeSpec.
+  * registered query runs in QueriesSmokeSpec. No optimizer rule
+  * repairs a flagged shape: the hand forms (`Rollups.keyGrainAttach`,
+  * `Rollups.distinctCascade`) are the fix.
   */
 class PlanLintSpec extends SparkSpec {
 
@@ -19,16 +21,6 @@ class PlanLintSpec extends SparkSpec {
   private def rules(df: org.apache.spark.sql.DataFrame): Set[String] =
     PlanLint.lint(df).map(_.rule).toSet
 
-  private def withConf(k: String, v: String)(f: => Unit): Unit = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try f
-    finally old match {
-      case Some(o) => spark.conf.set(k, o)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   private def q12Shape = ev.select(col("targetId"), col("datasourceId"),
       min("year").over(Window.partitionBy("targetId")).as("first_year"),
       round(max("score").over(
@@ -36,95 +28,7 @@ class PlanLintSpec extends SparkSpec {
     .distinct()
 
   test("pre-fix q12 shape (window-attach chain ending in distinct) flags") {
-    // with the repair rule disabled the shape must still reach the
-    // linter un-rewritten and flag
-    withConf("spark.graft.rewriteDistinctOverWindow", "false") {
-      assert(rules(q12Shape).contains("distinct-over-window"), rules(q12Shape))
-    }
-  }
-
-  test("repair: pre-fix q12 optimizes into the keyGrainAttach join, results identical") {
-    // default-ON RewriteDistinctOverWindow: the window stack collapses
-    // into per-grain aggregates joined at the union grain — no Window
-    // node survives, the lint is clean, and the rows are identical to
-    // the un-rewritten plan (min/max are order-insensitive)
-    val opt = q12Shape.queryExecution.optimizedPlan
-    assert(opt.collectFirst {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-    }.isEmpty, opt.treeString)
-    assert(opt.collectFirst {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }.nonEmpty, opt.treeString)
-    assert(rules(q12Shape).isEmpty)
-    val fixed = q12Shape.orderBy("targetId", "datasourceId")
-      .collect().map(_.toString).toSeq
-    withConf("spark.graft.rewriteDistinctOverWindow", "false") {
-      val orig = q12Shape.orderBy("targetId", "datasourceId")
-        .collect().map(_.toString).toSeq
-      assert(fixed == orig)
-    }
-  }
-
-  test("repair guard: data-grain references below the distinct block the rewrite") {
-    // the q15-style self-filter (window value compared to a raw
-    // column) references data grain — the rewrite must NOT fire
-    val guarded = ev
-      .withColumn("first_year", min("year").over(Window.partitionBy("targetId")))
-      .filter(col("first_year") === col("year"))
-      .select("targetId", "first_year").distinct()
-    val opt = guarded.queryExecution.optimizedPlan
-    assert(opt.collectFirst {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-    }.nonEmpty, opt.treeString)
-    // float sums are order-sensitive across the window→groupBy move —
-    // the allowlist must also block those
-    val floatSum = ev.select(col("targetId"),
-        sum("score").over(Window.partitionBy("targetId")).as("s")).distinct()
-    assert(floatSum.queryExecution.optimizedPlan.collectFirst {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-    }.nonEmpty)
-  }
-
-  test("repair: multi-distinct decomposes into joined single-distinct aggregates when enabled") {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    def shape = ev.groupBy("year", "datasourceId")
-      .agg(countDistinct("targetId").as("n_targets"),
-        countDistinct(concat_ws("|", col("diseaseId"), col("targetId")))
-          .as("n_pairs"),
-        sum(col("year").cast("long")).as("sy"))
-    val orig = shape.orderBy("year", "datasourceId").collect().map(_.toString).toSeq
-    withConf("spark.graft.rewriteMultiDistinct", "true") {
-      val opt = shape.queryExecution.optimizedPlan
-      // every optimized Aggregate carries at most ONE distinct group
-      opt.foreach {
-        case a: Aggregate =>
-          val groups = a.aggregateExpressions.flatMap(_.collect {
-            case ae: AggregateExpression if ae.isDistinct =>
-              (ae.aggregateFunction.children.map(_.canonicalized),
-                ae.filter.map(_.canonicalized))
-          }).distinct
-          assert(groups.size <= 1, a.treeString)
-        case _ =>
-      }
-      assert(opt.collectFirst {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.nonEmpty, opt.treeString)
-      val fixed = shape.orderBy("year", "datasourceId").collect().map(_.toString).toSeq
-      assert(fixed == orig)
-      // the detector reads the ANALYZED plan, so the finding stays
-      // visible even when the repair is on — detection and repair are
-      // independently testable
-      assert(rules(shape).contains("multi-distinct-expand"))
-    }
-    // global (no grouping keys) decomposition: cross join of one-row
-    // aggregates, still exact
-    def global = ev.agg(countDistinct("targetId").as("nt"),
-      countDistinct("diseaseId").as("nd"))
-    val goff = global.collect().map(_.toString).toSeq
-    withConf("spark.graft.rewriteMultiDistinct", "true") {
-      assert(global.collect().map(_.toString).toSeq == goff)
-    }
+    assert(rules(q12Shape).contains("distinct-over-window"), rules(q12Shape))
   }
 
   test("rewritten q12 (keyGrainAttach) and q13 (distinctCascade) are clean") {

@@ -918,7 +918,7 @@ class ScaleDesignSpec extends SparkSpec {
     assert(df.queryExecution.executedPlan.toString.contains("graft_topk_rows"),
       "the bounded aggregate must carry the top-k")
     val on = df.orderBy("source", "rank").collect().toSeq
-    spark.conf.set("spark.graft.rewriteWindowTopK", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.RewriteWindowTopK")
     try {
       val off = SparkEntry.queries("q126_window_topk_rewrite")(spark, sfDir)
       assert(off.queryExecution.optimizedPlan.collect {
@@ -926,7 +926,7 @@ class ScaleDesignSpec extends SparkSpec {
       }.nonEmpty, "with the rule off, the window formulation must survive")
       assert(off.orderBy("source", "rank").collect().toSeq == on,
         "rewritten and window plans must agree row for row")
-    } finally spark.conf.set("spark.graft.rewriteWindowTopK", "true")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("RewriteWindowTopK: desc/nulls order and extra conjuncts survive the rewrite") {

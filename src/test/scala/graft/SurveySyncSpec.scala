@@ -54,6 +54,20 @@ class SurveySyncSpec extends AnyFunSuite {
       s"files over the 3k cap (split at a family seam): ${over.mkString(", ")}")
   }
 
+  test("graft owns no conf key in src/main") {
+    // a rule is switched off through Spark's own excludedRules, so a
+    // graft-owned key is one more settable value that nothing needs
+    import scala.jdk.CollectionConverters._
+    val key = """"(spark\.graft\.[^"]*)"""".r
+    val keys = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap(p => key.findAllMatchIn(Files.readString(p)).map(m => s"${m.group(1)} ($p)"))
+      .toSeq.sorted
+    assert(keys.isEmpty,
+      "spark.graft.* conf keys in src/main (a rule is turned off with " +
+        s"spark.sql.optimizer.excludedRules=<rule class>): ${keys.mkString(", ")}")
+  }
+
   test("cap guards are built only by PairForms.capDrop") {
     // one cap shape, one metric shape: a hand-rolled cap observe() is
     // how a cap ends up unreported or under a second naming scheme

@@ -73,4 +73,13 @@ class TextPrimitivesSpec extends SparkSpec {
       (5L, "en", 1L, 1.0986, "middle"), (6L, "en", 1L, 1.7918, "tail"),
       (7L, "de", 2L, 0.6931, "head"), (8L, "de", 2L, 0.6931, "head")))
   }
+
+  test("readability reads a text column whose name needs quoting") {
+    // "Hi there. Go home!": 2 sentences, 4 words, 6 vowel groups (i,
+    // e, e, o, o, e), so flesch = 206.835 − 1.015·2 − 84.6·1.5
+    val got = TextAnalysis.readability(Seq("Hi there. Go home!").toDF("body text"), "body text")
+      .select("n_sentences", "n_words", "n_syllables", "flesch")
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(got == Seq((2L, 4L, 6L, 77.905)))
+  }
 }
